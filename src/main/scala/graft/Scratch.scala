@@ -70,17 +70,22 @@ object Scratch {
     * a committed table's history; r17 review), drop the done marker,
     * and ATOMIC_MOVE the whole dir into place: a reader sees the
     * complete artifact or none, never a partial one. The one home of
-    * the staging discipline, shared by the index rebuild
-    * (llm/Similarity.rebuildInto) and the transactional demo tables
-    * (sources/TxTable.ensureDemoTable) so the crash-safety behavior
-    * can never fork again. Returns `root`. */
+    * the staging discipline, shared by every IVF-PQ index build
+    * (llm/Similarity.rebuildInto: the persisted index, the incremental
+    * artifact's day-1 build, rebuilds and versions) and the
+    * transactional demo tables (sources/TxTable.ensureDemoTable) so the
+    * crash-safety behavior can never fork again. The marker holds a
+    * fresh [[buildId]], so a reader can tell a rebuilt artifact from the
+    * one it replaced at the same path. Returns `root`. */
   def buildOnce(root: String)(build: String => Unit): String = {
     if (!new java.io.File(root, "_GRAFT_DONE").exists()) {
       val staging = root + ".staging"
       deleteRec(new java.io.File(staging))
       new java.io.File(staging).mkdirs(): Unit
       build(staging)
-      new java.io.File(staging, "_GRAFT_DONE").createNewFile(): Unit
+      java.nio.file.Files.write(
+        java.nio.file.Paths.get(staging, "_GRAFT_DONE"),
+        java.util.UUID.randomUUID().toString.getBytes("UTF-8")): Unit
       java.nio.file.Files.move(
         java.nio.file.Paths.get(staging),
         java.nio.file.Paths.get(root),
@@ -88,6 +93,12 @@ object Scratch {
     }
     root
   }
+
+  /** Identity of the build that committed the artifact at `root` (the
+    * id [[buildOnce]] wrote into its done marker). */
+  def buildId(root: String): String =
+    new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(root, "_GRAFT_DONE")), "UTF-8")
 
   /** Fingerprint of source tables' files (name, size, mtime) — the key
     * for scratch layouts/artifacts derived from testdata (bucketed

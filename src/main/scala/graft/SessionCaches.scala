@@ -6,13 +6,25 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.SparkSession
 
 /** Registry for static per-session caches (broadcast Hadoop confs, CBO
-  * child sessions, layout-ready markers) so they are EVICTED when the
-  * owning SparkContext stops, instead of accumulating forever in a
-  * long-lived JVM (test suites and repeated bench invocations share one
-  * JVM — round-9 advice). Every such cache keys its entries by
-  * [[graft.sessionKey]] (or a sessionKey-prefixed string), which starts
-  * with the application id — so one ApplicationEnd listener per app can
-  * sweep every registered cache by key prefix.
+  * child sessions, layout-ready markers, resident retrieval state) so
+  * they are EVICTED when the owning SparkContext stops, instead of
+  * accumulating forever in a long-lived JVM (test suites and repeated
+  * bench invocations share one JVM — round-9 advice). Every such cache
+  * keys its entries by [[graft.sessionKey]] (or a sessionKey-prefixed
+  * string), which starts with the application id — so one
+  * ApplicationEnd listener per app can sweep every registered cache by
+  * key prefix.
+  *
+  * Exactly one registered cache holds DATA rather than handles:
+  * `graft.llm.RetrievalState`, the sanctioned exception to Q's
+  * cache-ownership contract (graft/package.scala). It holds only
+  * query-independent retrieval state (normalized corpus, IVF-PQ serving
+  * state, LSH model + hashed corpus) as persisted RDDs outside the SQL
+  * cache, keyed by `sessionKey/kind/dir/stamp` (embeddings fingerprint,
+  * plus the artifact build id for index state); a refill of a key
+  * unpersists the entry it supersedes, and this sweep drops the app's
+  * entries at application end. It never holds results or anything
+  * derived from a query set.
   */
 object SessionCaches {
 
@@ -39,5 +51,14 @@ object SessionCaches {
         }
       })
     }
+  }
+
+  /** Entries that registered caches still hold for application `appId`. */
+  private[graft] def held(appId: String): Int = {
+    var n = 0
+    caches.forEach(_.keySet.forEach { k =>
+      if (k.startsWith(appId + "@")) n += 1
+    })
+    n
   }
 }

@@ -1,11 +1,90 @@
 package graft.llm
 
-import org.apache.spark.ml.feature.BucketedRandomProjectionLSH
+import java.util.concurrent.ConcurrentHashMap
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.ml.feature.{BucketedRandomProjectionLSH,
+  BucketedRandomProjectionLSHModel}
 import org.apache.spark.ml.functions.array_to_vector
+import org.apache.spark.ml.linalg.Vector
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import graft.{Q, Tables}
+
+/** Session-resident retrieval state: the ONE sanctioned holder of state
+  * across query-fn calls under Q's cache-ownership contract
+  * (graft/package.scala).
+  *
+  * What it may hold: QUERY-INDEPENDENT state a retrieval key would
+  * otherwise rebuild per request — the normalized embedding corpus, the
+  * IVF-PQ serving state read back from a persisted artifact (quantizers
+  * on the driver, ~20 KB; postings on executors), the LSH model and the
+  * hashed corpus. Never a result, and never anything derived from the
+  * query set: every request selects its queries, probes, ADC tables and
+  * hashes afresh.
+  *
+  * Key: `sessionKey/kind/dir/stamp`, where the stamp is the embeddings
+  * fingerprint (plus the artifact's build id for index state). Data
+  * rows are persisted RDDs (MEMORY_AND_DISK, lineage kept) outside the
+  * SQL CacheManager, so `clearCache()` leaves them alone and a lost
+  * block recomputes from its source.
+  *
+  * Eviction: filling a key releases (unpersists) every other entry of
+  * the same `sessionKey/kind/dir` — a regenerated corpus or a rebuilt
+  * artifact supersedes its predecessor, so at most one entry per
+  * (session, kind, dir) is live. An entry whose blocks were unpersisted
+  * from outside is refilled on its next use. Application end drops the
+  * app's entries ([[graft.SessionCaches]]). */
+private[graft] object RetrievalState {
+
+  private final class Entry(val value: AnyRef, rdds: Seq[RDD[_]]) {
+    def live: Boolean = rdds.forall(_.getStorageLevel != StorageLevel.NONE)
+    def release(): Unit = rdds.foreach(_.unpersist(blocking = false))
+  }
+
+  private val entries = new ConcurrentHashMap[String, Entry]()
+
+  /** Persists frames for one entry while it is being filled. */
+  final class Fill private[RetrievalState] {
+    private[RetrievalState] val rdds =
+      scala.collection.mutable.ArrayBuffer[RDD[_]]()
+
+    /** `df` materialized as resident blocks (one job, at fill time). */
+    def persist(df: DataFrame, what: String): DataFrame = {
+      val (frame, rdd) = org.apache.spark.sql.graft.PlanBridge
+        .persisted(df, StorageLevel.MEMORY_AND_DISK)
+      rdds += rdd.setName(s"graft.resident $what")
+      rdd.count(): Unit
+      frame
+    }
+  }
+
+  /** The live entry for (session, kind, dir, stamp), filled on a miss. */
+  def get[T <: AnyRef](s: SparkSession, kind: String, dir: String,
+      stamp: String)(fill: Fill => T): T = {
+    graft.SessionCaches.evictOnStop(s, entries)
+    val scope = s"${graft.sessionKey(s)}/$kind/$dir/"
+    def hit = Option(entries.get(scope + stamp)).filter(_.live)
+    hit.getOrElse(synchronized {
+      hit.getOrElse {
+        entries.keySet.asScala.filter(_.startsWith(scope)).foreach { k =>
+          Option(entries.remove(k)).foreach(_.release())
+        }
+        val f = new Fill
+        val value =
+          try fill(f)
+          catch { case e: Throwable => f.rdds.foreach(_.unpersist()); throw e }
+        val e = new Entry(value, f.rdds.toSeq)
+        entries.put(scope + stamp, e)
+        e
+      }
+    }).value.asInstanceOf[T]
+  }
+}
 
 /** Similarity search over the embedding column (SURVEY §2.10).
   *
@@ -15,8 +94,15 @@ import graft.{Q, Tables}
   * rank. Cost is O(|queries| · n); it exists to calibrate the approximate
   * path. q_sim_lsh is the at-scale variant: random-projection bucketing
   * turns the quadratic pair space into per-bucket joins; recall vs the
-  * exact baseline is asserted in tests (≥ 0.8). Norms are computed once
-  * per side before the join, not per pair.
+  * exact baseline is asserted in tests (≥ 0.8).
+  *
+  * Serving keys (q_sim_topk, q_sim_lsh, q_knn_classify,
+  * q_sim_index_persist) keep their corpus-side state resident per
+  * session ([[RetrievalState]]): the normalized corpus (norms computed
+  * once per corpus, not per call or pair), the LSH model and hashed
+  * corpus, the persisted index's serving state. A request runs only its
+  * query-dependent work — select the queries, probe, scan candidates,
+  * shortlist, re-rank, top-k.
   */
 object Similarity {
 
@@ -46,62 +132,134 @@ object Similarity {
   private def dot(a: Column, b: Column): Column =
     call_function("array_dot", a, b)
 
-  /** Exact cosine top-k of the first `nQueries` vectors against the whole
-    * embedding table; k+tie-broken by neighbor id on the 6dp-rounded score. */
-  private def cosineTopK(s: SparkSession, dir: String, nQueries: Int, k: Int)
-      : DataFrame = {
+  /** The resident normalized corpus (vec_id, label, emb, nrm, unit):
+    * the embedding table cast to double, its L2 norm, and the unit
+    * vector (NULL where nrm ≤ 0), spread across defaultParallelism —
+    * the single-row-group fixture scan is one task, and every consumer
+    * (candidate scans, encodes, UDF kernels) would otherwise run on ONE
+    * core (guide §2.5; no-op at scale). Built once per session and
+    * embeddings fingerprint ([[RetrievalState]]); every retrieval key
+    * reads it instead of rescanning and renormalizing the table. */
+  private[graft] def corpus(s: SparkSession, dir: String): DataFrame =
+    RetrievalState.get(s, "corpus", dir,
+        graft.Scratch.fingerprint(dir, "embeddings")) { fill =>
+      fill.persist(Tables.spread(Tables.embeddings(s, dir)
+          .select(col("vec_id"), col("label"), col("embedding")))
+        .select(col("vec_id"), col("label"),
+          asDouble(col("embedding")).as("emb"))
+        .withColumn("nrm", l2norm(col("emb")))
+        .withColumn("unit", when(col("nrm") > 0,
+          transform(col("emb"), x => x / col("nrm")))), "corpus")
+    }
+
+  /** Per-query rank `rn` of `pairs` by `order`, keeping rn ≤ k. */
+  private def rankPerQuery(pairs: DataFrame, k: Int, order: Column*)
+      : DataFrame =
+    pairs.withColumn("rn", row_number().over(
+      Window.partitionBy("qid").orderBy(order: _*))).filter(col("rn") <= k)
+
+  /** A per-query top-k (|queries|·k rows) gathered into one partition:
+    * the (qid, …) output order is then a sort within it — one small
+    * exchange instead of orderBy's range-sampling job plus shuffle. */
+  private def gathered(topk: DataFrame): DataFrame = topk.repartition(1)
+
+  /** The standard query set of the retrieval keys: the first 20
+    * vectors. Internal entry points take the query set as a predicate
+    * over the corpus, so specs can serve other query sets from the same
+    * resident state. */
+  private def standardQueries: Column = col("vec_id") < 20
+
+  /** Exact cosine top-k of the `queries` vectors against the resident
+    * corpus; k+tie-broken by neighbor id on the 6dp-rounded score.
+    * Carries the neighbor's label. One partition. */
+  private def cosineTopK(s: SparkSession, dir: String, queries: Column,
+      k: Int): DataFrame = {
     graft.functions.NativeFunctions.register(s)
-    val e = Tables.embeddings(s, dir)
-      .select(col("vec_id"), asDouble(col("embedding")).as("emb"))
-      .withColumn("nrm", l2norm(col("emb")))
-    val q = e.filter(col("vec_id") < nQueries)
+    val e = corpus(s, dir)
+    val q = e.filter(queries)
       .select(col("vec_id").as("qid"), col("emb").as("qemb"),
         col("nrm").as("qnrm"))
     val pairs = e.join(broadcast(q), col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id").as("cid"),
+      .select(col("qid"), col("vec_id").as("cid"), col("label"),
         round(dot(col("qemb"), col("emb")) / (col("qnrm") * col("nrm")), 6)
           .as("cos_sim"))
-    val w = Window.partitionBy("qid")
-      .orderBy(col("cos_sim").desc, col("cid").asc)
-    pairs.withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
+    gathered(rankPerQuery(pairs, k, col("cos_sim").desc, col("cid").asc))
   }
 
   /** q_sim_topk — brute-force cosine top-5 per query vector. */
   def qSimTopk(s: SparkSession, dir: String): DataFrame =
-    cosineTopK(s, dir, nQueries = 20, k = 5)
+    simTopk(s, dir, standardQueries)
+
+  private[graft] def simTopk(s: SparkSession, dir: String, queries: Column)
+      : DataFrame =
+    cosineTopK(s, dir, queries, k = 5)
       .select("qid", "cid", "rn", "cos_sim")
-      .orderBy("qid", "rn")
+      .sortWithinPartitions("qid", "rn")
+
+  /** Resident LSH state: the random-projection model (fit once per
+    * corpus — the projection is a data-independent function of the
+    * pinned seed and the dimension) and the hashed corpus
+    * (vec_id, features, hs), hs holding one bucket id per hash table. */
+  private def lshIndex(s: SparkSession, dir: String)
+      : (BucketedRandomProjectionLSHModel, DataFrame) =
+    RetrievalState.get(s, "lsh", dir,
+        graft.Scratch.fingerprint(dir, "embeddings")) { fill =>
+      val feats = corpus(s, dir)
+        .select(col("vec_id"), array_to_vector(col("emb")).as("features"))
+      val model = new BucketedRandomProjectionLSH()
+        .setInputCol("features").setOutputCol("hashes")
+        .setBucketLength(1.0).setNumHashTables(4).setSeed(42L)
+        .fit(feats)
+      val buckets = udf((hs: Seq[Vector]) => hs.map(_(0)))
+      (model, fill.persist(model.transform(feats)
+        .select(col("vec_id"), col("features"),
+          buckets(col("hashes")).as("hs")), "lsh hashed corpus"))
+    }
 
   /** q_sim_lsh — approximate neighbors via random-projection LSH: the
     * 100 TB path for q_sim_topk. Euclidean-distance based; pinned seed and
     * bucket length. No oracle (bucketing is engine-specific); tests assert
-    * recall ≥ 0.8 against the exact baseline. */
-  def qSimLsh(s: SparkSession, dir: String): DataFrame = {
-    // spread: per-row projection hashing above the unsplittable one-task
-    // scan (round 22, guide §2.5). Output-safe: the random-projection
-    // model is a data-independent function of the pinned seed, and the
-    // bucket assignment/distances are per-row — partitioning cannot
-    // change the candidate set (unlike q_sim_ivf's KMeans fit, whose
-    // k-means|| init samples BY PARTITION and is left un-spread).
-    val e = Tables.spread(Tables.embeddings(s, dir)
-        .select(col("vec_id"), col("embedding")))
-      .select(col("vec_id"),
-        array_to_vector(asDouble(col("embedding"))).as("features"))
-    val q = e.filter(col("vec_id") < 20)
-      .select(col("vec_id").as("qid"), col("features").as("qf"))
-    val lsh = new BucketedRandomProjectionLSH()
-      .setInputCol("features").setOutputCol("hashes")
-      .setBucketLength(1.0).setNumHashTables(4).setSeed(42L)
-    val model = lsh.fit(e)
-    val joined = model.approxSimilarityJoin(
-      q.withColumnRenamed("qf", "features"), e, 3.0, "dist")
-      .select(col("datasetA.qid").as("qid"),
-        col("datasetB.vec_id").as("cid"),
-        round(col("dist"), 6).as("dist"))
+    * recall ≥ 0.8 against the exact baseline, and row identity with
+    * MLlib's `approxSimilarityJoin(queries, corpus, 3.0)`.
+    *
+    * The model and the hashed corpus are resident ([[lshIndex]]). Per
+    * request, the query rows' bucket ids are collected (bounded: the
+    * query set) and each corpus row looks up the queries sharing any of
+    * its (table, bucket) cells — the per-row form of MLlib's exploded
+    * bucket equi-join, yielding each (qid, cid) once, so the candidate
+    * DISTINCT needs no shuffle (MLlib's dedups whole rows carrying
+    * 64-dim vectors through an exchange). The distance is the model's
+    * own keyDistance and the `< 3.0` filter precedes rounding, as in
+    * MLlib, so rows are identical. */
+  def qSimLsh(s: SparkSession, dir: String): DataFrame =
+    simLsh(s, dir, standardQueries)
+
+  private[graft] def simLsh(s: SparkSession, dir: String, queries: Column)
+      : DataFrame = {
+    val (model, hashed) = lshIndex(s, dir)
+    val qs = hashed.filter(queries)
+      .select("vec_id", "features", "hs").collect()
+    // bucket ids compare as join keys do: -0.0 == 0.0, NaN == NaN
+    def cell(j: Int, h: Double) =
+      (j, java.lang.Double.doubleToLongBits(if (h == 0.0) 0.0 else h))
+    val byCell = qs.toSeq.flatMap { r =>
+      r.getSeq[Double](2).zipWithIndex.map { case (h, j) =>
+        cell(j, h) -> r.getLong(0) }
+    }.groupMap(_._1)(_._2)
+    val qf = qs.map(r => r.getLong(0) -> r.getAs[Vector](1)).toMap
+    val probe = udf((hs: Seq[Double]) => hs.indices.flatMap(j =>
+      byCell.getOrElse(cell(j, hs(j)), Nil)).distinct: Seq[Long])
+    val dist = udf((qid: Long, y: Vector) =>
+      org.apache.spark.ml.graft.LshBridge.euclideanDistance(model, qf(qid), y))
+    val pairs = hashed
+      .select(col("vec_id").as("cid"), col("features"),
+        explode(probe(col("hs"))).as("qid"))
+      .withColumn("dist", dist(col("qid"), col("features")))
+      .filter(col("dist") < 3.0)
+      .select(col("qid"), col("cid"), round(col("dist"), 6).as("dist"))
       .filter(col("qid") =!= col("cid"))
-    val w = Window.partitionBy("qid").orderBy(col("dist").asc, col("cid").asc)
-    joined.withColumn("rn", row_number().over(w)).filter(col("rn") <= 5)
-      .orderBy("qid", "rn")
+    gathered(rankPerQuery(pairs, 5, col("dist").asc, col("cid").asc))
+      .sortWithinPartitions("qid", "rn")
   }
 
   /** q_sim_ivf — IVF (inverted-file) approximate neighbors: a seeded
@@ -158,25 +316,11 @@ object Similarity {
   private val PqCent = 16  // centroids per codebook (4-bit codes)
 
   /** vec_id + L2-normalized `unit` vector (L2 ordering == cosine
-    * ordering on units), checkpointed LAZILY (round 21 — materializes
-    * inside the first consuming job instead of adding a serialized
-    * setup job): codebook fits, encode, and query build all re-read
-    * this narrow projection (cache-ownership contract,
-    * graft/package.scala). */
+    * ordering on units) of every nonzero vector — a projection of the
+    * resident [[corpus]]: codebook fits, encode, query selection and
+    * re-rank all read it without renormalizing the table. */
   private[graft] def unitVectors(s: SparkSession, dir: String): DataFrame =
-    // spread BEFORE the checkpoint (round 22): the single-row-group
-    // fixture scan is one task, and the checkpointed RDD inherits that
-    // partitioning — every consumer's encode/probe compute (the UDF
-    // kernels, the centroid cross joins) would otherwise run on ONE core
-    // (guide §2.5 unsplittable-input repartition; no-op at scale)
-    Tables.spread(Tables.embeddings(s, dir)
-        .select(col("vec_id"), col("embedding")))
-      .select(col("vec_id"), asDouble(col("embedding")).as("emb"))
-      .withColumn("nrm", l2norm(col("emb")))
-      .filter(col("nrm") > 0)
-      .select(col("vec_id"),
-        transform(col("emb"), x => x / col("nrm")).as("unit"))
-      .localCheckpoint(false)
+    corpus(s, dir).filter(col("nrm") > 0).select("vec_id", "unit")
 
   /** Bounded, deterministic training sample for quantizer fits: the
     * first 4096 vectors in vec_id order via TakeOrdered (distributed
@@ -308,9 +452,62 @@ object Similarity {
       lloyd(sub, PqCent, 10).map(_.toSeq).toSeq
     }.toSeq
 
-  private def pqD2(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)),
-      lit(0.0), (acc, x) => acc + x)
+  /** One 4-bit code per subspace (argmin centroid; strict < keeps the
+    * FIRST minimum — deterministic under ties, same as array_position).
+    * `cb` is [sub][cent][dim]. */
+  private def pqCodes(cb: Array[Array[Array[Double]]], u: Array[Double])
+      : Array[Int] =
+    Array.tabulate(PqSub) { i =>
+      val cents = cb(i)
+      var best = 0; var bestD = Double.MaxValue; var c = 0
+      while (c < PqCent) {
+        var d = 0.0; var k = 0
+        while (k < PqDim) {
+          val t = cents(c)(k) - u(i * PqDim + k); d += t * t; k += 1
+        }
+        if (d < bestD) { bestD = d; best = c }
+        c += 1
+      }
+      best
+    }
+
+  /** ADC lookup table: lut[i*16 + c] = ||q_sub_i − cent_{i,c}||² — 256
+    * doubles per query. */
+  private def pqLut(cb: Array[Array[Array[Double]]], u: Array[Double])
+      : Array[Double] = {
+    val out = new Array[Double](PqSub * PqCent)
+    var i = 0
+    while (i < PqSub) {
+      var c = 0
+      while (c < PqCent) {
+        var d = 0.0; var k = 0
+        while (k < PqDim) {
+          val t = cb(i)(c)(k) - u(i * PqDim + k); d += t * t; k += 1
+        }
+        out(i * PqCent + c) = d; c += 1
+      }
+      i += 1
+    }
+    out
+  }
+
+  /** The `n` coarse cells nearest `u`, ordered by (squared euclidean
+    * distance, cell) — on units, euclidean order == cosine order. The
+    * distance is the left fold Σ (u_j − c_j)² from 0.0, and doubles
+    * compare as Spark sorts them (-0.0 == 0.0, NaN last). */
+  private def probeCells(coarse: Array[Array[Double]], u: Array[Double],
+      n: Int): Seq[Int] = {
+    val d2 = coarse.map { c =>
+      var d = 0.0; var j = 0
+      while (j < u.length) { val t = u(j) - c(j); d += t * t; j += 1 }
+      d
+    }
+    coarse.indices.sortWith { (a, b) =>
+      val c = org.apache.spark.sql.catalyst.util.SQLOrderingUtil
+        .compareDoubles(d2(a), d2(b))
+      c < 0 || (c == 0 && a < b)
+    }.take(n)
+  }
 
   /** PQ train-side kernels (encode / query LUT) as UDFs closing over
     * the BROADCAST codebooks — deliberately not plan-literal
@@ -330,48 +527,13 @@ object Similarity {
   private def pqKernels(s: SparkSession, cb: Seq[Seq[Seq[Double]]]): (
       org.apache.spark.sql.expressions.UserDefinedFunction,
       org.apache.spark.sql.expressions.UserDefinedFunction) = {
-    val bc = s.sparkContext.broadcast(
-      cb.map(_.map(_.toArray).toArray).toArray) // [sub][cent][dim]
-    val (nSub, dSub, nCent) = (PqSub, PqDim, PqCent)
-    // one 4-bit code per subspace (argmin centroid; strict < keeps the
-    // FIRST minimum — deterministic under ties, same as array_position)
-    val encode = udf((unit: Seq[Double]) => {
-      val u = unit.toArray
-      Array.tabulate(nSub) { i =>
-        val cents = bc.value(i)
-        var best = 0; var bestD = Double.MaxValue; var c = 0
-        while (c < nCent) {
-          var d = 0.0; var k = 0
-          while (k < dSub) {
-            val t = cents(c)(k) - u(i * dSub + k); d += t * t; k += 1
-          }
-          if (d < bestD) { bestD = d; best = c }
-          c += 1
-        }
-        best
-      }
-    })
-    // lut[i*16 + c] = ||q_sub_i − cent_{i,c}||² — 256 doubles per query,
-    // broadcast with the query row
-    val lutF = udf((unit: Seq[Double]) => {
-      val u = unit.toArray
-      val out = new Array[Double](nSub * nCent)
-      var i = 0
-      while (i < nSub) {
-        var c = 0
-        while (c < nCent) {
-          var d = 0.0; var k = 0
-          while (k < dSub) {
-            val t = bc.value(i)(c)(k) - u(i * dSub + k); d += t * t; k += 1
-          }
-          out(i * nCent + c) = d; c += 1
-        }
-        i += 1
-      }
-      out
-    })
-    (encode, lutF)
+    val bc = s.sparkContext.broadcast(books(cb))
+    (udf((unit: Seq[Double]) => pqCodes(bc.value, unit.toArray)),
+      udf((unit: Seq[Double]) => pqLut(bc.value, unit.toArray)))
   }
+
+  private def books(cb: Seq[Seq[Seq[Double]]]): Array[Array[Array[Double]]] =
+    cb.map(_.map(_.toArray).toArray).toArray
 
   /** Approximate candidate distance: table lookups + adds over the
     * stored codes (never a raw-vector read) — the codegen'd
@@ -382,23 +544,20 @@ object Similarity {
   /** ADC top-50 shortlist per query, re-ranked with TRUE cosine (dot of
     * unit vectors, codegen'd) — emitted scores are exact over the
     * PQ-recalled candidate set. `cand` must carry (qid, vec_id, adc);
-    * `q` must map qid → qunit uniquely. */
+    * `q` must map qid → qunit uniquely. The shortlist (|queries|·50
+    * rows) is broadcast into a scan of `e`, so the vector table never
+    * moves; output is one partition sorted by (qid, rn). */
   private def pqRerank(e: DataFrame, cand: DataFrame, q: DataFrame,
       k: Int): DataFrame = {
-    val wAdc = Window.partitionBy("qid")
-      .orderBy(col("adc").asc, col("vec_id").asc)
-    val shortlist = cand.withColumn("rs", row_number().over(wAdc))
-      .filter(col("rs") <= 50)
+    val shortlist = rankPerQuery(cand, 50, col("adc").asc, col("vec_id").asc)
       .select("qid", "vec_id")
-    val rer = shortlist
-      .join(e, Seq("vec_id"))
       .join(broadcast(q.select("qid", "qunit")), Seq("qid"))
+    val rer = e.join(broadcast(shortlist), Seq("vec_id"))
       .select(col("qid"), col("vec_id").as("cid"),
         round(dot(col("qunit"), col("unit")), 6).as("cos_sim"))
-    val w = Window.partitionBy("qid")
-      .orderBy(col("cos_sim").desc, col("cid").asc)
-    rer.withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
+    rankPerQuery(gathered(rer), k, col("cos_sim").desc, col("cid").asc)
       .select("qid", "cid", "rn", "cos_sim")
+      .sortWithinPartitions("qid", "rn")
   }
 
   /** q_sim_pq — product-quantization ANN with asymmetric-distance
@@ -427,7 +586,7 @@ object Similarity {
         lutF(col("unit")).as("lut"))
     val adc = enc.join(broadcast(q), col("vec_id") =!= col("qid"))
       .withColumn("adc", adcDist(col("codes"), col("lut")))
-    pqRerank(e, adc, q, k = 5).orderBy("qid", "rn")
+    pqRerank(e, adc, q, k = 5)
   }
 
   /** q_sim_ivfpq — the composed IVF×PQ index (round 11): IVF prunes
@@ -485,57 +644,36 @@ object Similarity {
       encode(col("unit")).as("codes"))
   }
 
-  /** IVF-PQ serve: answer the standard query set (vec_id < 20) against
-    * an ALREADY-BUILT index — (coarse, cb) trained state plus the coded
-    * rows `enc` (vec_id, bucket, codes) — without touching the trainer.
-    * Each query probes its nprobe nearest coarse cells (centroids
-    * broadcast; euclidean on units == cosine order), scans only those
-    * cells' 8-byte code rows via the ADC table, and the top-50 shortlist
-    * is re-ranked with true cosine against the base vector table `e` —
-    * the only point raw vectors are read, ~50 rows per query. */
+  /** IVF-PQ serve: answer a query set (default: the standard one)
+    * against an ALREADY-BUILT index — (coarse, cb) trained state plus
+    * the coded rows `enc` (vec_id, bucket, codes) — without touching
+    * the trainer.
+    * The query set is bounded, so its vectors are collected once and
+    * each query's nprobe=6 nearest coarse cells and ADC table are
+    * computed on the driver in one pass over them (the quantizers are
+    * ~20 KB there). The postings are scanned once against the broadcast
+    * (qid, cell, lut) probes — only probed cells' 8-byte code rows pass
+    * the join — and the top-50 shortlist is re-ranked with true cosine
+    * against the base vector table `e`, the only point raw vectors are
+    * read, ~50 rows per query. */
   private[graft] def ivfPqServe(s: SparkSession, e: DataFrame,
       coarse: Array[Array[Double]], cb: Seq[Seq[Seq[Double]]],
-      enc: DataFrame): DataFrame = {
-    val (_, lutF) = pqKernels(s, cb)
-    val cents = s.createDataFrame(
-      coarse.toSeq.zipWithIndex.map { case (c, i) => (i, c.toSeq) })
-      .toDF("bucket", "cemb")
-    val q = e.filter(col("vec_id") < 20)
-      .select(col("vec_id").as("qid"), col("unit").as("qunit"),
-        lutF(col("unit")).as("lut"))
-    val qProbe = q.crossJoin(broadcast(cents))
-      .withColumn("d2", pqD2(col("qunit"), col("cemb")))
-      .withColumn("rb", row_number().over(
-        Window.partitionBy("qid").orderBy(col("d2").asc, col("bucket").asc)))
-      .filter(col("rb") <= 6)
-      .select("qid", "qunit", "lut", "bucket")
-    val adc = enc.join(broadcast(qProbe), Seq("bucket"))
+      enc: DataFrame, queries: Column = standardQueries): DataFrame = {
+    val book = books(cb)
+    val qs = e.filter(queries).select("vec_id", "unit").collect()
+      .map(r => r.getLong(0) -> r.getSeq[Double](1).toArray).toSeq
+    val probes = s.createDataFrame(qs.flatMap { case (qid, u) =>
+      val lut = pqLut(book, u).toSeq
+      probeCells(coarse, u, 6).map(b => (qid, b, lut))
+    }).toDF("qid", "bucket", "lut")
+    val q = s.createDataFrame(qs.map { case (qid, u) => (qid, u.toSeq) })
+      .toDF("qid", "qunit")
+    val adc = enc.join(broadcast(probes), Seq("bucket"))
       .filter(col("vec_id") =!= col("qid"))
       .withColumn("adc", adcDist(col("codes"), col("lut")))
-    pqRerank(e, adc, q, k = 5).orderBy("qid", "rn")
+    pqRerank(e, adc, q, k = 5)
   }
 
-  /** q_sim_index_persist — the PERSISTED ANN index (round 13): closes
-    * the build-once/serve-forever loop for the vector store the way
-    * q_agg_sketch_persist does for sketches and q_dedup_manifest_update
-    * for dedup manifests. The [[qSimIvfPq]] index is built once —
-    * trained state + coded rows — and WRITTEN to parquet as three
-    * tables: coarse centroids (16 rows), PQ codebooks (16×16 rows), and
-    * the per-vector (bucket, codes) postings (8 B of code per vector —
-    * the 32× compressed form that makes a 100 TB corpus's index fit a
-    * cluster's memory). The standard query set is then answered entirely
-    * FROM THE READ-BACK artifact: centroids and codebooks (a bounded
-    * ~20 KB, collected and re-broadcast) plus the distributed coded-row
-    * table — ZERO refit, no re-encode; raw vectors are touched only by
-    * the 50-row-per-query re-rank against the base table, exactly like
-    * the in-memory index. At 100 TB this is every production vector
-    * store's lifecycle: index build is a scheduled pipeline writing
-    * parquet; query serving reads the artifact and never sees the
-    * trainer. No oracle (two trained quantizers — engine-specific by
-    * design); ApproxSpec pins the from-disk answers row-for-row equal to
-    * the in-memory [[qSimIvfPq]] AND recall ≥ the q_sim_ivfpq floor vs
-    * exact. Doubles round-trip parquet bit-exactly, so equality is
-    * structural, not approximate. */
   /** Write the trained IVF-PQ state (coarse centroids + PQ codebooks)
     * under `base` — the bounded ~20 KB half of the index artifact. */
   private[graft] def writeIvfPqState(s: SparkSession, base: String,
@@ -583,33 +721,83 @@ object Similarity {
     (coarse, cb)
   }
 
-  def qSimIndexPersist(s: SparkSession, dir: String): DataFrame = {
+  /** q_sim_index_persist — the PERSISTED ANN index (round 13): closes
+    * the build-once/serve-forever loop for the vector store the way
+    * q_agg_sketch_persist does for sketches and q_dedup_manifest_update
+    * for dedup manifests. The [[qSimIvfPq]] index is built once —
+    * trained state + coded rows — and WRITTEN to parquet as three
+    * tables: coarse centroids (16 rows), PQ codebooks (16×16 rows), and
+    * the per-vector (bucket, codes) postings (8 B of code per vector —
+    * the 32× compressed form that makes a 100 TB corpus's index fit a
+    * cluster's memory). The standard query set is then answered entirely
+    * FROM THE READ-BACK artifact: centroids and codebooks (a bounded
+    * ~20 KB, collected once per build) plus the distributed coded-row
+    * table — ZERO refit, no re-encode; raw vectors are touched only by
+    * the 50-row-per-query re-rank against the base table, exactly like
+    * the in-memory index. At 100 TB this is every production vector
+    * store's lifecycle: index build is a scheduled pipeline writing
+    * parquet; query serving reads the artifact and never sees the
+    * trainer. No oracle (two trained quantizers — engine-specific by
+    * design); ApproxSpec pins the from-disk answers row-for-row equal to
+    * the in-memory [[qSimIvfPq]] AND recall ≥ the q_sim_ivfpq floor vs
+    * exact. Doubles round-trip parquet bit-exactly, so equality is
+    * structural, not approximate. */
+  def qSimIndexPersist(s: SparkSession, dir: String): DataFrame =
+    simIndexPersist(s, dir, standardQueries)
+
+  private[graft] def simIndexPersist(s: SparkSession, dir: String,
+      queries: Column): DataFrame = {
     graft.functions.NativeFunctions.register(s)
     val e = unitVectors(s, dir)
     // build phase: train + encode + write the artifact (the one-time
-    // index-build pipeline). Fingerprint-keyed with a done-marker, so
-    // repeated invocations in one JVM run serve from the existing
-    // artifact instead of rebuilding — at scale the build is a separate
-    // scheduled job; what a query workload repeatedly pays is SERVING
-    // (same warm-up treatment as the CBO/bucketed layouts and the
-    // binary fixture). Training is deterministic for a fixed corpus, so
-    // reuse cannot diverge from a fresh build (ApproxSpec pins this).
-    val base = graft.Scratch.dir("sim",
-      s"ivfpq_${dir.replaceAll("[^a-zA-Z0-9]", "_")}_" +
-        graft.Scratch.fingerprint(dir, "embeddings"))
-    val marker = new java.io.File(base, "_GRAFT_DONE")
-    if (!marker.exists()) {
-      val (coarse, cb) = ivfPqTrain(e)
-      writeIvfPqState(s, base, coarse, cb)
-      ivfPqEncode(s, e, coarse, cb)
-        .write.mode("overwrite").parquet(s"$base/coded")
-      marker.createNewFile()
+    // index-build pipeline), staged and committed by buildOnce — keyed
+    // by the embeddings fingerprint, so repeated invocations serve the
+    // existing artifact instead of rebuilding. At scale the build is a
+    // separate scheduled job; what a query workload repeatedly pays is
+    // SERVING. Training is deterministic for a fixed corpus, so reuse
+    // cannot diverge from a fresh build (ApproxSpec pins this).
+    val fp = graft.Scratch.fingerprint(dir, "embeddings")
+    val base = rebuildInto(s, e, graft.Scratch.dir("sim",
+      s"ivfpq_${dir.replaceAll("[^a-zA-Z0-9]", "_")}_$fp"))
+    // serve phase: reads ONLY the committed artifact, through the
+    // serving state kept resident per build of it
+    val (coarse, cb, postings) = RetrievalState.get(s, "ivfpq", dir,
+        s"$fp/${graft.Scratch.buildId(base)}") { fill =>
+      val (coarse, cb) = readIvfPqState(s, base)
+      (coarse, cb, fill.persist(Tables.spread(
+        s.read.parquet(s"$base/coded").select("vec_id", "bucket", "codes")),
+        "ivfpq postings"))
     }
-    // serve phase: everything below this line reads ONLY the artifact —
-    // the trained state above is deliberately not referenced again
+    ivfPqServe(s, e, coarse, cb, postings, queries)
+  }
+
+  /** Scratch base of the incremental-index artifact — shared address for
+    * build ([[ensureUpdateArtifact]]), the no-ingest monitor read
+    * ([[qIndexDrift]]) and the rebuild ([[qIndexRebuild]]). */
+  private[graft] def updateArtifactBase(dir: String): String =
+    graft.Scratch.dir("sim",
+      s"ivfpq_upd_${dir.replaceAll("[^a-zA-Z0-9]", "_")}_" +
+        graft.Scratch.fingerprint(dir, "embeddings"))
+
+  /** The incremental-index artifact shared by [[qSimIndexUpdate]] and
+    * [[qIndexDrift]]: day-1 trained state + day-1 postings written once
+    * (fingerprint-keyed), today's arrivals encoded under the FROZEN
+    * read-back state and idempotently overwritten as the day-2
+    * partition. Returns (artifact base, read-back coarse centroids,
+    * read-back codebooks). */
+  private[graft] def ensureUpdateArtifact(s: SparkSession, dir: String)
+      : (String, Array[Array[Double]], Seq[Seq[Seq[Double]]]) = {
+    val e = unitVectors(s, dir)
+    val day1 = e.filter(col("vec_id") % 4 =!= 3)
+    val day2 = e.filter(col("vec_id") % 4 === 3)
+    // day-1 build: quantizers see ONLY the prior corpus
+    val base = rebuildInto(s, day1, updateArtifactBase(dir), "coded/day=1")
+    // day-2 ingest: encode under the FROZEN artifact state and append
+    // as the day-2 partition (overwrite = idempotent re-ingest)
     val (coarse2, cb2) = readIvfPqState(s, base)
-    val enc2 = s.read.parquet(s"$base/coded")
-    ivfPqServe(s, e, coarse2, cb2, enc2)
+    ivfPqEncode(s, day2, coarse2, cb2)
+      .write.mode("overwrite").parquet(s"$base/coded/day=2")
+    (base, coarse2, cb2)
   }
 
   /** q_sim_index_update — INCREMENTAL index append with frozen
@@ -632,43 +820,6 @@ object Similarity {
     * encode under the SAME day-1-trained state, row-for-row (append
     * changes WHERE code rows live, never their values), plus the recall
     * floor vs exact. No oracle (trained quantizers). */
-  /** The incremental-index artifact shared by [[qSimIndexUpdate]] and
-    * [[qIndexDrift]]: day-1 trained state + day-1 postings written once
-    * (fingerprint-keyed), today's arrivals encoded under the FROZEN
-    * read-back state and idempotently overwritten as the day-2
-    * partition. Returns (artifact base, read-back coarse centroids,
-    * read-back codebooks). */
-  /** Scratch base of the incremental-index artifact — shared address for
-    * build ([[ensureUpdateArtifact]]), the no-ingest monitor read
-    * ([[qIndexDrift]]) and the rebuild ([[qIndexRebuild]]). */
-  private[graft] def updateArtifactBase(dir: String): String =
-    graft.Scratch.dir("sim",
-      s"ivfpq_upd_${dir.replaceAll("[^a-zA-Z0-9]", "_")}_" +
-        graft.Scratch.fingerprint(dir, "embeddings"))
-
-  private[graft] def ensureUpdateArtifact(s: SparkSession, dir: String)
-      : (String, Array[Array[Double]], Seq[Seq[Seq[Double]]]) = {
-    val e = unitVectors(s, dir)
-    val day1 = e.filter(col("vec_id") % 4 =!= 3)
-    val day2 = e.filter(col("vec_id") % 4 === 3)
-    val base = updateArtifactBase(dir)
-    val marker = new java.io.File(base, "_GRAFT_DONE")
-    if (!marker.exists()) {
-      // day-1 build: quantizers see ONLY the prior corpus
-      val (coarse, cb) = ivfPqTrain(day1)
-      writeIvfPqState(s, base, coarse, cb)
-      ivfPqEncode(s, day1, coarse, cb)
-        .write.mode("overwrite").parquet(s"$base/coded/day=1")
-      marker.createNewFile()
-    }
-    // day-2 ingest: encode under the FROZEN artifact state and append
-    // as the day-2 partition (overwrite = idempotent re-ingest)
-    val (coarse2, cb2) = readIvfPqState(s, base)
-    ivfPqEncode(s, day2, coarse2, cb2)
-      .write.mode("overwrite").parquet(s"$base/coded/day=2")
-    (base, coarse2, cb2)
-  }
-
   def qSimIndexUpdate(s: SparkSession, dir: String): DataFrame = {
     graft.functions.NativeFunctions.register(s)
     val e = unitVectors(s, dir)
@@ -731,6 +882,21 @@ object Similarity {
       .orderBy("bucket")
   }
 
+  /** Read-path guard for the incremental artifact: build it (day-1
+    * train+persist + first day-2 ingest) ONLY if no ingest has landed
+    * yet; an existing artifact is served as-is, with no re-encode.
+    * Used by the monitor and the rebuild, which only READ the old
+    * index — re-ingesting is q_sim_index_update's semantics. */
+  private[graft] def ensureUpdateArtifactOnce(s: SparkSession,
+      dir: String): String = {
+    val base = updateArtifactBase(dir)
+    val day2 = new java.io.File(base, "coded/day=2")
+    val haveIngest = day2.isDirectory &&
+      Option(day2.list()).exists(_.exists(_.endsWith(".parquet")))
+    if (!haveIngest) ensureUpdateArtifact(s, dir): Unit
+    base
+  }
+
   /** q_index_drift — frozen-quantizer drift monitor (round 14): the
     * rebuild-trigger metric [[qSimIndexUpdate]]'s contract promises.
     * Between scheduled rebuilds a production vector store ingests under
@@ -756,21 +922,6 @@ object Similarity {
     * day-2 is ingest's job and is timed under q_sim_index_update, not
     * here (VERDICT r14 wart 2). The build runs once only when the
     * monitor is invoked before any ingest has happened. */
-  /** Read-path guard for the incremental artifact: build it (day-1
-    * train+persist + first day-2 ingest) ONLY if no ingest has landed
-    * yet; an existing artifact is served as-is, with no re-encode.
-    * Used by the monitor and the rebuild, which only READ the old
-    * index — re-ingesting is q_sim_index_update's semantics. */
-  private[graft] def ensureUpdateArtifactOnce(s: SparkSession,
-      dir: String): String = {
-    val base = updateArtifactBase(dir)
-    val day2 = new java.io.File(base, "coded/day=2")
-    val haveIngest = day2.isDirectory &&
-      Option(day2.list()).exists(_.exists(_.endsWith(".parquet")))
-    if (!haveIngest) ensureUpdateArtifact(s, dir): Unit
-    base
-  }
-
   def qIndexDrift(s: SparkSession, dir: String): DataFrame = {
     graft.functions.NativeFunctions.register(s)
     val base = ensureUpdateArtifactOnce(s, dir)
@@ -780,17 +931,18 @@ object Similarity {
       unitVectors(s, dir).select("vec_id", "unit"))
   }
 
-  /** Rebuild core shared by [[qIndexRebuild]] and ApproxSpec's
-    * drifted-corpus pin: retrain BOTH quantizers on `corpus` (the data
-    * the frozen state no longer spans), re-encode every vector under
-    * the new state, and land the whole artifact at `serving` via one
-    * ATOMIC directory rename from a staging build — the
-    * q_delete_execute swap discipline lifted to whole-artifact
-    * granularity: a reader sees the old complete artifact or the new
-    * complete artifact, never a half-written one. Idempotent per
-    * serving path (done-marker). */
+  /** Index build core shared by every IVF-PQ artifact — the persisted
+    * index, the incremental artifact's day-1 build, [[qIndexRebuild]],
+    * the rollback store's versions and ApproxSpec's drifted-corpus pin:
+    * train BOTH quantizers on `corpus`, encode every vector under the
+    * new state into `serving/coded`, and land the whole artifact at
+    * `serving` via one ATOMIC directory rename from a staging build
+    * ([[graft.Scratch.buildOnce]]) — the q_delete_execute swap
+    * discipline lifted to whole-artifact granularity: a reader sees the
+    * old complete artifact or the new complete artifact, never a
+    * half-written one. Idempotent per serving path (done-marker). */
   private[graft] def rebuildInto(s: SparkSession, corpus: DataFrame,
-      serving: String): String =
+      serving: String, coded: String = "coded"): String =
     graft.Scratch.buildOnce(serving) { staging =>
       val (coarse, cb) = ivfPqTrain(corpus)
       // the three artifact writes (centroids, codebooks, coded rows) are
@@ -803,9 +955,21 @@ object Similarity {
       parTabulate(2) {
         case 0 => writeIvfPqState(s, staging, coarse, cb)
         case 1 => ivfPqEncode(s, corpus, coarse, cb)
-          .write.mode("overwrite").parquet(s"$staging/coded")
+          .write.mode("overwrite").parquet(s"$staging/$coded")
       }: Unit
     }
+
+  // PER-DIR invocation counts: a JVM-global counter with per-dir paths
+  // would let interleaved rebuilds over two data dirs prune a dir's
+  // immediately-previous artifact (r16 review finding)
+  private val rebuildInvocations = new java.util.concurrent.ConcurrentHashMap[
+    String, java.util.concurrent.atomic.AtomicInteger]
+
+  /** Serving dir of the most recent [[qIndexRebuild]] — each invocation
+    * rebuilds into a fresh versioned dir (see below), so specs that need
+    * the landed artifact read this instead of a fixed path. */
+  private[graft] val lastRebuilt =
+    new java.util.concurrent.atomic.AtomicReference[String]()
 
   /** q_index_rebuild — the scheduled rebuild [[qIndexDrift]]'s
     * threshold triggers (round 15): the last step of the index
@@ -830,18 +994,6 @@ object Similarity {
     * design); ApproxSpec pins post-rebuild recall on an injected
     * drifted corpus ≥ the frozen-state serve's recall, and
     * old-artifact immutability. */
-  // PER-DIR invocation counts: a JVM-global counter with per-dir paths
-  // would let interleaved rebuilds over two data dirs prune a dir's
-  // immediately-previous artifact (r16 review finding)
-  private val rebuildInvocations = new java.util.concurrent.ConcurrentHashMap[
-    String, java.util.concurrent.atomic.AtomicInteger]
-
-  /** Serving dir of the most recent [[qIndexRebuild]] — each invocation
-    * rebuilds into a fresh versioned dir (see below), so specs that need
-    * the landed artifact read this instead of a fixed path. */
-  private[graft] val lastRebuilt =
-    new java.util.concurrent.atomic.AtomicReference[String]()
-
   def qIndexRebuild(s: SparkSession, dir: String): DataFrame = {
     graft.functions.NativeFunctions.register(s)
     // the index being replaced must exist (read-only guard: no
@@ -999,6 +1151,11 @@ object Similarity {
     s"$root/v$prev"
   }
 
+  /** Version-store root of the most recent [[qIndexRollback]] (the
+    * store is per-invocation, like the rebuild dirs). */
+  private[graft] val lastStore =
+    new java.util.concurrent.atomic.AtomicReference[String]()
+
   /** q_index_rollback — version retention + rollback over the rebuild
     * discipline (round 16, VERDICT r15 item 6): the atomic swap left
     * no way back once a bad rebuild landed. The store keeps the last
@@ -1020,11 +1177,6 @@ object Similarity {
     * rollback serves the prior artifact row-identically, that the bad
     * version really served different rows, and that the retention
     * window prunes. */
-  /** Version-store root of the most recent [[qIndexRollback]] (the
-    * store is per-invocation, like the rebuild dirs). */
-  private[graft] val lastStore =
-    new java.util.concurrent.atomic.AtomicReference[String]()
-
   def qIndexRollback(s: SparkSession, dir: String): DataFrame = {
     graft.functions.NativeFunctions.register(s)
     val e = unitVectors(s, dir)
@@ -1053,18 +1205,19 @@ object Similarity {
   }
 
   /** q_knn_classify — majority label among the 5 cosine-nearest neighbors
-    * (tie → smallest label). Stacks on the exact top-k operator. */
-  def qKnnClassify(s: SparkSession, dir: String): DataFrame = {
-    val labels = Tables.embeddings(s, dir)
-      .select(col("vec_id").as("cid"), col("label"))
-    val votes = cosineTopK(s, dir, nQueries = 20, k = 5)
-      .join(broadcast(labels), Seq("cid"))
+    * (tie → smallest label). Stacks on the exact top-k operator, whose
+    * rows carry the neighbor's label from the resident corpus; the vote
+    * runs inside its single partition. */
+  def qKnnClassify(s: SparkSession, dir: String): DataFrame =
+    knnClassify(s, dir, standardQueries)
+
+  private[graft] def knnClassify(s: SparkSession, dir: String,
+      queries: Column): DataFrame = {
+    val votes = cosineTopK(s, dir, queries, k = 5)
       .groupBy("qid", "label").agg(count(lit(1)).as("votes"))
-    val w = Window.partitionBy("qid")
-      .orderBy(col("votes").desc, col("label").asc)
-    votes.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
+    rankPerQuery(votes, 1, col("votes").desc, col("label").asc)
       .select(col("qid"), col("label").as("pred_label"), col("votes"))
-      .orderBy("qid")
+      .sortWithinPartitions("qid")
   }
 
   /** q_embed_stats — per-label vector-column statistics: mean L2 norm and

@@ -328,8 +328,11 @@ object TxTable {
     // writer per round of progress (LayoutSpec's 8-writer stress)
     var attempt = 0
     // footer-read cache across retry rounds: a lost race re-runs only
-    // the tiny manifest write, never the stats reads
+    // the tiny manifest write, never the stats reads — including the
+    // failed ones (an unreadable footer stays unreadable: files are
+    // immutable)
     val statsCache = scala.collection.mutable.Map.empty[String, FileStats]
+    val noStats = scala.collection.mutable.Set.empty[String]
     while (attempt < 1000) {
       val cur = currentVersion(root)
       val parent = if (cur == 0) None else Some(readManifest(root, cur))
@@ -369,8 +372,8 @@ object TxTable {
       // (they're tiny independent metadata I/Os; a large init commit
       // over hundreds of files would otherwise serialize its plan-time
       // savings into commit-time latency).
-      val missing = dataEntries(newFiles)
-        .filterNot(f => curStats.contains(f) || statsCache.contains(f))
+      val missing = dataEntries(newFiles).filterNot(f =>
+        curStats.contains(f) || statsCache.contains(f) || noStats(f))
       if (missing.nonEmpty) {
         import scala.jdk.CollectionConverters._
         val computed =
@@ -380,6 +383,7 @@ object TxTable {
             .foreach(computed.put(f, _)): Unit
         }
         statsCache ++= computed.asScala
+        noStats ++= missing.filterNot(computed.containsKey)
       }
       val stats = dataEntries(newFiles).flatMap { f =>
         curStats.get(f).orElse(statsCache.get(f)).map(f -> _)

@@ -1,8 +1,12 @@
 package org.apache.spark.sql.graft
 
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.storage.StorageLevel
 
 /** The one `private[sql]` doorway a library-level custom operator needs:
   * wrapping a hand-built [[LogicalPlan]] back into a user-facing
@@ -13,6 +17,20 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object PlanBridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** `df`'s rows as a persisted RDD, plus a DataFrame over it that keeps
+    * `df`'s statistics and output partitioning — the relation
+    * `Dataset.localCheckpoint` builds (`LogicalRDD.fromDataset`), but
+    * with the lineage intact, so a lost or unpersisted block recomputes
+    * instead of failing the read, and outside the SQL CacheManager. The
+    * caller owns the RDD: it materializes and unpersists it. */
+  def persisted(df: DataFrame, level: StorageLevel)
+      : (DataFrame, RDD[InternalRow]) = {
+    val ds = df.asInstanceOf[classic.Dataset[Row]]
+    val rdd = ds.queryExecution.toRdd.map(_.copy()).persist(level)
+    (classic.Dataset.ofRows(ds.sparkSession,
+      LogicalRDD.fromDataset(rdd, ds, isStreaming = false)), rdd)
+  }
 
   /** Column ⇄ Expression doorway (Spark 4's Column wraps a ColumnNode;
     * both converters are `private[sql]`). Needed by expressions that are

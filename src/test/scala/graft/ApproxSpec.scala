@@ -83,6 +83,43 @@ class ApproxSpec extends AnyFunSuite with SparkFixture {
     assert(recall >= 0.8, s"recall=$recall")
   }
 
+  test("q_sim_lsh rows equal MLlib's fit + approxSimilarityJoin " +
+      "(sf0.001 and sf0.01)") {
+    // the reference is the MLlib pipeline q_sim_lsh replaced: a fresh fit
+    // per call and approxSimilarityJoin's exploded bucket join with its
+    // full-row distinct. The resident rewrite must emit the same rows —
+    // the recall floor above alone would let it drift silently.
+    import org.apache.spark.ml.feature.BucketedRandomProjectionLSH
+    import org.apache.spark.ml.functions.array_to_vector
+    import org.apache.spark.sql.expressions.Window
+    def reference(dir: String) = {
+      val e = Tables.embeddings(spark, dir)
+        .select(col("vec_id"),
+          array_to_vector(col("embedding").cast("array<double>"))
+            .as("features"))
+      val q = e.filter(col("vec_id") < 20)
+        .select(col("vec_id").as("qid"), col("features"))
+      val model = new BucketedRandomProjectionLSH()
+        .setInputCol("features").setOutputCol("hashes")
+        .setBucketLength(1.0).setNumHashTables(4).setSeed(42L).fit(e)
+      val joined = model.approxSimilarityJoin(q, e, 3.0, "dist")
+        .select(col("datasetA.qid").as("qid"),
+          col("datasetB.vec_id").as("cid"), round(col("dist"), 6).as("dist"))
+        .filter(col("qid") =!= col("cid"))
+      val w = Window.partitionBy("qid")
+        .orderBy(col("dist").asc, col("cid").asc)
+      joined.withColumn("rn", row_number().over(w)).filter(col("rn") <= 5)
+        .orderBy("qid", "rn")
+    }
+    Seq(sf0001, sf001).foreach { dir =>
+      val got = llm.Similarity.qSimLsh(spark, dir).collect().map(_.toSeq).toSeq
+      val want = reference(dir).collect().map(_.toSeq).toSeq
+      assert(got.nonEmpty && got == want,
+        s"$dir: ${got.length} rows vs MLlib's ${want.length}; first diff: " +
+          s"${got.zip(want).find { case (a, b) => a != b }}")
+    }
+  }
+
   test("exact dedup is idempotent and survivors cover the corpus") {
     val survivors = llm.Dedup.qDedupExact(spark, sf001).collect()
     val nDocs = Tables.documents(spark, sf001).count()

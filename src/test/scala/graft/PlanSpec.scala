@@ -228,18 +228,62 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     // operators that legitimately materialize an intermediate must not
     // leak it into the session's SQL cache — 95 keys share one session
     // under Verify/Bench, and leaked entries pile into a GC benchmark.
+    // The retrieval keys keep resident state (llm.RetrievalState), but
+    // as persisted RDDs outside the SQL cache: they must leave it empty
+    // too.
     spark.catalog.clearCache()
     val fns: Seq[(String, graft.Q)] = Seq(
       "q_dedup_near" -> (llm.Dedup.qDedupNear _),
       "q_dedup_cluster" -> (llm.DedupVariants.qDedupCluster _),
       "q_ml_eval" -> (ml.Pipelines.qMlEval _),
-      "q_ml_cv" -> (ml.Pipelines.qMlCv _))
+      "q_ml_cv" -> (ml.Pipelines.qMlCv _),
+      "q_sim_topk" -> (llm.Similarity.qSimTopk _),
+      "q_sim_lsh" -> (llm.Similarity.qSimLsh _),
+      "q_knn_classify" -> (llm.Similarity.qKnnClassify _),
+      "q_sim_index_persist" -> (llm.Similarity.qSimIndexPersist _))
     fns.foreach { case (name, fn) =>
       fn(spark, sf0001).count()
       assert(
         org.apache.spark.sql.graftprobe.CacheProbe.sqlCacheEmpty(spark),
         s"$name left a plan in the SQL cache")
     }
+  }
+
+  test("retrieval keys: a warm call stays within its Spark-job cap") {
+    // corpus-side state is resident per session (llm.RetrievalState), so
+    // a warm request runs only its query-dependent jobs; a per-call
+    // rescan, refit or artifact re-read shows up here as extra jobs
+    import org.apache.spark.scheduler._
+    import org.apache.spark.sql.graftprobe.BusProbe
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val shuffle = new java.util.concurrent.atomic.AtomicLong
+    val counter = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet(): Unit
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach(m =>
+          shuffle.addAndGet(m.shuffleWriteMetrics.bytesWritten))
+    }
+    // (key, max jobs, max shuffle bytes) per warm call
+    val caps = Seq(
+      ("q_sim_index_persist", 8, Long.MaxValue),
+      ("q_sim_lsh", 6, 2500000L),
+      ("q_sim_topk", 6, Long.MaxValue),
+      ("q_knn_classify", 8, Long.MaxValue))
+    sc.addSparkListener(counter)
+    try caps.foreach { case (key, maxJobs, maxShuffle) =>
+      val fn = SparkEntry.queries(key)
+      fn(spark, sf001).collect()
+      BusProbe.drain(sc)
+      jobs.set(0); shuffle.set(0)
+      fn(spark, sf001).collect()
+      BusProbe.drain(sc)
+      info(s"$key: ${jobs.get} jobs, ${shuffle.get} shuffle bytes")
+      assert(jobs.get <= maxJobs, s"$key ran ${jobs.get} jobs (cap $maxJobs)")
+      assert(shuffle.get <= maxShuffle,
+        s"$key shuffled ${shuffle.get} bytes (cap $maxShuffle)")
+    } finally sc.removeSparkListener(counter)
   }
 
   test("dynamic partition pruning fires on a partitioned layout") {
