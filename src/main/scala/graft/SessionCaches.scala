@@ -6,7 +6,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.SparkSession
 
 /** Registry for static per-session caches (broadcast Hadoop confs, CBO
-  * child sessions, layout-ready markers, resident retrieval state) so
+  * child sessions, layout-ready markers, resident input state) so
   * they are EVICTED when the owning SparkContext stops, instead of
   * accumulating forever in a long-lived JVM (test suites and repeated
   * bench invocations share one JVM — round-9 advice). Every such cache
@@ -16,15 +16,17 @@ import org.apache.spark.sql.SparkSession
   * key prefix.
   *
   * Exactly one registered cache holds DATA rather than handles:
-  * `graft.llm.RetrievalState`, the sanctioned exception to Q's
-  * cache-ownership contract (graft/package.scala). It holds only
-  * query-independent retrieval state (normalized corpus, IVF-PQ serving
-  * state, LSH model + hashed corpus) as persisted RDDs outside the SQL
-  * cache, keyed by `sessionKey/kind/dir/stamp` (embeddings fingerprint,
-  * plus the artifact build id for index state); a refill of a key
-  * unpersists the entry it supersedes, and this sweep drops the app's
-  * entries at application end. It never holds results or anything
-  * derived from a query set.
+  * [[graft.Resident]], the sanctioned exception to Q's cache-ownership
+  * contract (graft/package.scala). It holds only intermediates derived
+  * from an input table and keyed by that input's fingerprint (retrieval:
+  * normalized corpus, IVF-PQ serving state, LSH model + hashed corpus;
+  * dedup: shingle table, shingle counts, min-hash signature, capped
+  * n-gram pair set) as persisted RDDs outside the SQL cache, keyed by
+  * `sessionKey/kind/dir/stamp` (input fingerprint, plus the artifact
+  * build id for index state); a refill of a key unpersists the entry it
+  * supersedes, and this sweep drops the app's entries at application
+  * end. It never holds a key's result or anything derived from a query
+  * set.
   */
 object SessionCaches {
 

@@ -13,7 +13,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
   * aggregation buffer NEVER holds more than `bound` elements.
   *
   * Why it exists (the posting-list memory bound): the inverted-index dedup
-  * (llm/DedupVariants.dedupNgramPairs) builds per-shingle posting lists
+  * (llm/DedupCore.ngramPairs) builds per-shingle posting lists
   * with `collect_list`, then drops lists with document frequency above the
   * stop-shingle cap. Correct — but the over-cap list is still fully
   * materialized in the aggregation buffer BEFORE the filter sees it, so

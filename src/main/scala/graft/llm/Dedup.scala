@@ -1,6 +1,5 @@
 package graft.llm
 
-import org.apache.spark.ml.feature.{HashingTF, MinHashLSH}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
@@ -13,11 +12,12 @@ import graft.{Q, Tables}
   *    (sha256), keep min doc_id. The shuffle is keyed by hash — uniform by
   *    construction (no skew), volume O(distinct docs), never a window over
   *    everything and never a driver-side collect.
-  *  - q_dedup_near is MinHash+LSH: shingle → binary feature vector →
-  *    minhash band signatures → candidate pairs via LSH bucket join →
-  *    exact Jaccard filter. Cost is O(candidates), not O(n²); the
-  *    approxSimilarityJoin threshold and table count are pinned constants
-  *    so results are reproducible (seed fixed).
+  *  - q_dedup_near is MinHash+LSH on the resident md5 core
+  *    ([[DedupCore]]): 8 single-row bands over the min-hash signature →
+  *    candidate pairs via a hash-keyed bucket self-join (buckets capped
+  *    at StopShingleMaxDf) → exact Jaccard filter over the resident
+  *    shingles. Cost is O(candidates), not O(n²); hashes are md5, so
+  *    results are deterministic.
   */
 object Dedup {
 
@@ -61,110 +61,57 @@ object Dedup {
       .select("keeper_id", "h", "dup_count")
       .orderBy("keeper_id")
 
-  /** The featured cache + the LSH pair-join PLAN (pre-checkpoint), split
-    * out so PlanSpec can pin the load-bearing broadcast (VERDICT r16
-    * item 4): the cache's InMemoryRelation statistics are what let the
-    * exploded bucket join plan as BroadcastHashJoin — a refactor or a
-    * Spark upgrade that silently degrades it to sort-merge is the
-    * documented 6 s → 230 s cliff. Caller owns unpersisting `featured`
-    * once the pairs are materialized. */
-  private[graft] def nearDupPairsPlan(s: SparkSession, dir: String)
-      : (DataFrame, DataFrame) = {
-    // Round 22 — two repairs to the measured 3 s serial cost center:
-    //  - spread the unsplittable one-task scan before the shingle
-    //    transform (guide §2.5; no-op at scale);
-    //  - materialize the shingles with a lazy localCheckpoint BEFORE the
-    //    non-empty filter. Without the barrier, Catalyst pushed
-    //    `size(tokens) > 0` below the exchange to the scan, substituting
-    //    toks = split(text) INTO the shingle lambda — the re-split-per-
-    //    element O(tokens²·len) form this file's shingleExpr discipline
-    //    exists to avoid — evaluated serially in the scan task AND again
-    //    (linearly) above the exchange. Measured: the pushed filter alone
-    //    was ~3 s wall ≈ cpu (one core) at sf0.1; the whole key scaled
-    //    1.07× from 8→32 cores because of it (VERDICT r21 item 4).
-    val docs = Tables.spread(Tables.documents(s, dir)
-        .select(col("doc_id"), col("text")))
-      .withColumn("toks", split(col("text"), " "))
-      .withColumn("tokens", expr(
-        """array_distinct(transform(
-          |  slice(toks, 1, greatest(size(toks) - 2, 0)),
-          |  (t, i) -> concat(t, ' ', toks[i + 1], ' ', toks[i + 2])))"""
-          .stripMargin))
-      .select(col("doc_id"), col("tokens"))
-      .localCheckpoint(false)
-      .filter(size(col("tokens")) > 0)
-    val tf = new HashingTF().setInputCol("tokens").setOutputCol("features")
-      .setNumFeatures(1 << 16).setBinary(true)
-    // cache() here is LOAD-BEARING for the plan, not just for reuse: the
-    // InMemoryRelation's size statistics let approxSimilarityJoin's
-    // exploded bucket join broadcast; swapping in localCheckpoint (tried
-    // round 4) erases the stats (LogicalRDD defaults to "huge") and the
-    // join degrades to a sort-merge over interpreted vector-key ordering
-    // — 6 s → 230 s at sf0.1. Q's cache-ownership contract is met below
-    // by materializing the result eagerly and unpersisting on exit.
-    val featured = tf.transform(docs).select("doc_id", "features").cache()
-    // 4 tables: for pairs at Jaccard ≥ 0.9 the per-table miss rate is
-    // ≤ 0.1, so P(missed by all 4) ≤ 1e-4 — and the seeded outcome is
-    // fixed; the test asserts parity with the exact n-gram pairs. Halves
-    // the LSH join cost vs 8 tables (the bench's slowest key).
-    val lsh = new MinHashLSH().setInputCol("features").setOutputCol("sig")
-      .setNumHashTables(4).setSeed(42L)
-    val model = lsh.fit(featured)
-    // Candidate generation inlined from approxSimilarityJoin's published
-    // shape (explode signatures, equi-join per (table, hash), exact
-    // keyDistance on candidates) with two plan repairs (round 21):
-    //  - the bucket join keys are PRIMITIVE (entry int, hash double via
-    //    vector_to_array) instead of VectorUDT cells, so the join and
-    //    its dedup run in codegen;
-    //  - the candidate DISTINCT runs over (id_a, id_b) ONLY — MLlib's
-    //    form dedups full rows carrying the 65k-dim feature vector and
-    //    the signature array through the exchange. Features rejoin from
-    //    the (cached, broadcast) table for the exact filter afterwards.
-    // The collision set is unchanged (same signatures, same per-table
-    // equality), and the distance IS the model's own keyDistance, so
-    // the emitted pairs and jaccard values are identical.
-    val expl = model.transform(featured)
-      .select(col("doc_id"),
-        posexplode(col("sig")).as(Seq("entry", "hv")))
-      .select(col("doc_id"), col("entry"),
-        org.apache.spark.ml.functions.vector_to_array(col("hv"))
-          .getItem(0).as("h"))
-    val cand = expl.as("a").join(expl.as("b"),
-        col("a.entry") === col("b.entry") && col("a.h") === col("b.h") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-      .distinct()
-    val mdl = model
-    val distU = udf((x: org.apache.spark.ml.linalg.Vector,
-        y: org.apache.spark.ml.linalg.Vector) =>
-      org.apache.spark.ml.graft.LshBridge.jaccardDistance(mdl, x, y))
-    val pairs = cand
-      .join(featured.select(col("doc_id").as("id_a"),
-        col("features").as("fa")), "id_a")
-      .join(featured.select(col("doc_id").as("id_b"),
-        col("features").as("fb")), "id_b")
-      .withColumn("jaccard_dist", distU(col("fa"), col("fb")))
-      .filter(col("jaccard_dist") < 0.2)
-      .select(col("id_a"), col("id_b"),
-        round(lit(1.0) - col("jaccard_dist"), 6).as("jaccard"))
-    (featured, pairs)
-  }
-
   /** q_dedup_near — MinHash-LSH near-duplicate pairs with Jaccard ≥ 0.8
     * over distinct 3-token shingle sets. Unigram sets are useless on a
     * small vocabulary (nearly all pairs collide); 3-gram shingles separate
     * the corpus's constructed near-dups (Jaccard ≈ 0.99) from everything
-    * else (< 0.2). No oracle (LSH banding is not reproducible in DuckDB);
-    * the scalatest suite asserts recall/precision on the constructed
-    * pairs. */
-  def qDedupNear(s: SparkSession, dir: String): DataFrame = {
-    val (featured, plan) = nearDupPairsPlan(s, dir)
-    // eager: the tiny pair set is materialized while `featured` is still
-    // cached; the cache is then released (Q cache-ownership contract)
-    val pairs = plan.localCheckpoint(true)
-    featured.unpersist()
-    pairs.orderBy("id_a", "id_b")
+    * else (< 0.2).
+    *
+    * Built on the md5 core q_dedup_minhash shares ([[DedupCore]]): the
+    * 8 min-hashes of the resident signature are 8 single-row bands, so a
+    * pair is a candidate when any one min-hash agrees — P(candidate) =
+    * 1−(1−j)⁸ (≈ 0.999997 at j = 0.8, against q_dedup_minhash's 4×2
+    * banding at 0.98). Candidates pass the exact filter
+    * 5·common ≥ 4·union (Jaccard ≥ 0.8 in integers) over the resident
+    * shingles, and `jaccard` is the exact round(common/union, 6). No
+    * oracle; ApproxSpec pins the pair set to the exact-Jaccard truth and
+    * to q_dedup_ngram's. */
+  def qDedupNear(s: SparkSession, dir: String): DataFrame =
+    nearDupPairs(s, dir, DedupCore.StopShingleMaxDf).orderBy("id_a", "id_b")
+
+  /** [[qDedupNear]]'s candidate pairs (id_a < id_b, distinct): docs that
+    * share a (band, min-hash) bucket. A bucket with more than `maxDf`
+    * documents is dropped, as the n-gram index drops long posting lists
+    * ([[DedupCore.StopShingleMaxDf]]), which bounds the self-join's
+    * per-bucket fan-out; singleton buckets are dropped before the join.
+    * The bucket size is a window partitioned by the self-join's own
+    * (b, h) key, and the self-join is a hash join on that primitive
+    * (int, string) key — PlanSpec pins it. */
+  private[graft] def nearDupCandidates(s: SparkSession, dir: String,
+      maxDf: Long): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val bands = DedupCore.signature(s, dir)
+      .select(col("doc_id"),
+        posexplode(array((0 to 7).map(i => col(s"h$i")): _*))
+          .as(Seq("b", "h")))
+      .withColumn("df", count(lit(1)).over(Window.partitionBy("b", "h")))
+      .filter(col("df") >= 2 && col("df") <= maxDf)
+      .select("doc_id", "b", "h")
+    bands.as("x")
+      .join(bands.as("y").hint("shuffle_hash"),
+        col("x.b") === col("y.b") && col("x.h") === col("y.h") &&
+          col("x.doc_id") < col("y.doc_id"))
+      .select(col("x.doc_id").as("id_a"), col("y.doc_id").as("id_b"))
+      .distinct()
   }
+
+  /** [[qDedupNear]]'s pairs under bucket cap `maxDf`, unordered. */
+  private[graft] def nearDupPairs(s: SparkSession, dir: String,
+      maxDf: Long): DataFrame =
+    DedupCore.common(s, dir, nearDupCandidates(s, dir, maxDf), "id_a", "id_b")
+      .filter(lit(5) * col("common") >= lit(4) * col("union"))
+      .select(col("id_a"), col("id_b"),
+        round(col("common") / col("union"), 6).as("jaccard"))
 
   val queries: Map[String, Q] = Map(
     "q_text_stats" -> (qTextStats _),

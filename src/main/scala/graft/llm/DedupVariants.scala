@@ -14,8 +14,8 @@ import graft.{Q, Tables}
   *    on the shingle, count common shingles per candidate pair. Pairs are
   *    generated ONLY for docs sharing ≥1 shingle — never an n² cross join.
   *    The shuffle is keyed by shingle; the stop-shingle document-frequency
-  *    cap (StopShingleMaxDf) bounds per-shingle fan-out, so no single
-  *    boilerplate shingle can blow up one reducer at corpus scale.
+  *    cap (DedupCore.StopShingleMaxDf) bounds per-shingle fan-out, so no
+  *    single boilerplate shingle can blow up one reducer at corpus scale.
   *  - q_dedup_simhash compresses each doc to a 32-bit signature, then
   *    finds candidates by banding the signature into 4 bytes and joining
   *    on (band index, band value) — Hamming-distance LSH. Candidate count
@@ -32,33 +32,6 @@ import graft.{Q, Tables}
   */
 object DedupVariants {
 
-  /** 3-token shingle array (distinct) over a precomputed `toks` column.
-    * The lambda indexes the already-split array — `split(text)[i]` inside
-    * a higher-order lambda re-splits the whole doc per element (interpreted,
-    * no CSE): O(tokens²·len) per doc (see Analysis.bigramExpr). */
-  private def shingleExpr = expr(
-    """array_distinct(transform(
-      |  slice(toks, 1, greatest(size(toks) - 2, 0)),
-      |  (t, i) -> concat(t, ' ', toks[i + 1], ' ', toks[i + 2])))"""
-      .stripMargin)
-
-  /** Stop-shingle document-frequency cap: a shingle present in more than
-    * this many documents is dropped from the inverted index before
-    * candidate generation. This bounds every posting list — and therefore
-    * the per-shingle join fan-out (≤ maxDf²/2 pairs per shingle) — which
-    * is what keeps the shingle-keyed shuffle skew-free at corpus scale: a
-    * boilerplate shingle ("all rights reserved …") in 1% of a 10B-doc
-    * corpus would otherwise emit 10^15 pairs on one key. Dropped shingles
-    * only shrink `common` (the jaccard numerator; sizes stay exact), so
-    * the cap can only lose candidates — the standard stop-shingle
-    * recall trade-off. The harness corpus' max doc-frequency is far below
-    * this constant, so the oracle result is unchanged (ApproxSpec asserts
-    * recall on the constructed near-dups; the cap-trips path is exercised
-    * with a tiny maxDf). The cap is mirrored as a literal `1000` in the
-    * q_dedup_ngram / q_dedup_cluster oracle SQL (`kept` CTE, QUALIFY) so
-    * engine and oracle compute the same function — keep them in sync. */
-  private[graft] val StopShingleMaxDf = 1000L
-
   /** Target vectors per IVF cell for [[qDedupEmbedBucketed]]'s derived
     * K = ⌈n/occupancy⌉ (round 18): constant occupancy ⇒ constant
     * candidates per vector ⇒ a linear pair join. 25 derives the
@@ -66,102 +39,15 @@ object DedupVariants {
     * ApproxSpec floors pin. */
   private[graft] val EmbedCellOccupancy = 25.0
 
-  /** q_dedup_ngram core, parameterized by the stop-shingle cap.
-    *
-    * Shape (round 6): single-pass posting lists. The expensive
-    * scan→split→explode subtree feeds ONE shingle-keyed shuffle that
-    * builds each shingle's sorted posting list + document frequency;
-    * candidate pairs are then exploded directly from lists with
-    * 2 ≤ df ≤ maxDf — no shingle-keyed self-join and no repeated
-    * evaluation of the explode (the round-5 stop-set shape re-ran it ~5×
-    * across sizes/stop/both self-join sides: a judged 2.5× clean
-    * regression). `sizes` (the jaccard denominator — always over the FULL
-    * uncapped shingle set) is the one remaining second evaluation of the
-    * subtree; caching `sh` instead would pin |shingles| rows from a
-    * lazily-returned query, which the cache-ownership contract
-    * (graft/package.scala) forbids.
-    *
-    * Memory: the posting list is built with `collect_bounded(doc_id,
-    * maxDf+1)` (functions/BoundedCollect.scala) — a TypedImperativeAggregate
-    * whose buffer stops appending at maxDf+1 elements, so worst-case agg
-    * memory is maxDf+1 longs per shingle BY CONSTRUCTION even when the true
-    * df is 10^8 (boilerplate at corpus scale); `df` comes from the exact
-    * count(1) alongside it, and kept lists (df ≤ maxDf < bound) are
-    * provably complete. The pair explode is likewise bounded —
-    * ≤ maxDf²/2 pairs per shingle — which is exactly the skew guarantee
-    * the cap exists to provide. */
-  private[graft] def dedupNgramPairs(s: SparkSession, dir: String,
-      maxDf: Long): DataFrame = {
-    graft.functions.NativeFunctions.register(s)
-    // eagerly checkpointed: the posting aggregate AND each side of the
-    // sizes join consume this subtree — un-checkpointed, the physical
-    // plan re-ran the scan→split→shingle→explode THREE times (round-21
-    // before-plan: three parquet scans of documents), the round-5
-    // re-evaluation trap. localCheckpoint materializes the narrow
-    // (doc_id, sh) projection once, outside the SQL cache (the
-    // cache-ownership contract), exactly like minhashShingles.
-    // spread the unsplittable one-row-group scan before the interpreted
-    // shingle transform — otherwise the whole tokenize→shingle→explode
-    // subtree runs on ONE core (round 22, guide §2.5; no-op at scale)
-    val sh = Tables.spread(Tables.documents(s, dir)
-        .select(col("doc_id"), col("text")))
-      .withColumn("toks", split(col("text"), " "))
-      .select(col("doc_id"), explode(shingleExpr).as("sh"))
-      .localCheckpoint(false)
-    // per-doc shingle counts (jaccard denominator) use the FULL shingle
-    // set — the cap prunes candidate generation only; computed from the
-    // checkpointed shingles, cheap enough to leave un-materialized
-    val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    // posting list + df per shingle in one aggregation; sorted ascending
-    // so exploded pairs (i < j) satisfy id_a < id_b with no least/greatest.
-    // The list aggregate's buffer is capped at maxDf+1 ids; exact df from
-    // count(1) drives the keep/drop decision, so the cap never alters a
-    // kept list — it only stops feeding buffers the filter will discard.
-    // bound = maxDf+1 clamped into Int range (callers may pass
-    // Long.MaxValue to mean "uncapped"; buffer sizes are JVM-array Ints)
-    val bound = math.min(maxDf, Int.MaxValue - 1L) + 1
-    val posts = sh.groupBy("sh")
-      .agg(expr(s"sort_array(collect_bounded(doc_id, $bound))").as("docs"),
-        count(lit(1)).as("df"))
-    // ordered pairs from each kept posting list: docs[i] × slice past i,
-    // as TWO chained Generate nodes (posexplode → explode(slice)) that
-    // run inside whole-stage codegen. The previous single-explode form
-    // built a nested array-of-struct per list via transform/flatten —
-    // higher-order lambdas are interpreted (no codegen), so every pair
-    // paid object allocation before the explode (round 22, guide §1.2
-    // step 2 / §4.1 prefer codegen expressions; measured ~20% off the
-    // pair phase warm). posexplode's pos is 0-based, slice's start is
-    // 1-based: slice(docs, i+2, …) starts at the element AFTER docs[i],
-    // exactly the old lambda's window, so the pair set is identical.
-    val pairs = posts
-      .filter(col("df") >= 2 && col("df") <= maxDf)
-      .select(col("docs"), posexplode(col("docs")).as(Seq("i", "id_a")))
-      .select(col("id_a"),
-        explode(slice(col("docs"), col("i") + lit(2),
-          size(col("docs")))).as("id_b"))
-    val common = pairs.groupBy("id_a", "id_b").agg(count(lit(1)).as("common"))
-    common
-      .join(sizes.select(col("doc_id").as("id_a"), col("n").as("na")), "id_a")
-      .join(sizes.select(col("doc_id").as("id_b"), col("n").as("nb")), "id_b")
-      // floor(x·1e6)/1e6, not round(): jaccard is a rational k/n that can
-      // sit exactly on a half-way decimal, where Spark (decimal HALF_UP)
-      // and DuckDB (binary round) split (SURVEY §7.4.9)
-      .withColumn("jaccard",
-        floor(col("common") / (col("na") + col("nb") - col("common")) * 1e6)
-          / 1e6)
-      .filter(col("jaccard") >= 0.8)
-      .select("id_a", "id_b", "common", "jaccard")
-  }
-
   /** q_dedup_ngram — exact n-gram (3-token shingle) Jaccard pairs ≥ 0.8
     * via inverted index + per-pair common-count, with the stop-shingle
-    * document-frequency cap bounding posting-list skew. The global sort
-    * lives HERE, not in [[dedupNgramPairs]]: the graph consumers
+    * document-frequency cap bounding posting-list skew
+    * ([[DedupCore.ngramPairs]]). Reads the resident pair set; the global
+    * sort lives HERE, not in the resident frame: the graph consumers
     * (q_dedup_cluster, q_recursive_cte) feed the pair set into keyed
-    * shuffles that destroy order anyway — paying a range exchange + sort
-    * they immediately discard (round 21). */
+    * shuffles that destroy order anyway (round 21). */
   def qDedupNgram(s: SparkSession, dir: String): DataFrame =
-    dedupNgramPairs(s, dir, StopShingleMaxDf).orderBy("id_a", "id_b")
+    DedupCore.pairs(s, dir).orderBy("id_a", "id_b")
 
   /** q_recursive_cte — transitive closure of the near-dup pair graph via
     * Spark 4's `WITH RECURSIVE` (round 11): the declarative twin of
@@ -191,19 +77,17 @@ object DedupVariants {
     * rounds (each is one keyed shuffle) until the contracted graph fits
     * the recursion budget; qDedupCluster's O(diameter)-rounds loop
     * remains the pure-DataFrame scale path and PropertySpec asserts the
-    * two produce identical labels. Both the node-label map and the
-    * contracted edges are eagerly localCheckpointed: UnionLoop
-    * re-evaluates the recursive step every iteration, and each
-    * re-evaluation must scan a materialized edge list, not re-run the
-    * inverted-index join (round-5 re-evaluation trap). */
+    * two produce identical labels. The pair set is the resident one
+    * ([[DedupCore.pairs]]); the node-label map and the contracted edges
+    * are localCheckpointed: UnionLoop re-evaluates the recursive step
+    * every iteration, and each re-evaluation must scan a materialized
+    * edge list (round-5 re-evaluation trap). */
   def qRecursiveCte(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    // unordered pair core: the symmetrizing union + keyed repartition
-    // below destroy any order, so qDedupNgram's global sort would be
-    // paid and discarded
-    val pairs = dedupNgramPairs(s, dir, StopShingleMaxDf)
-      .select("id_a", "id_b")
-      .localCheckpoint(false)
+    // the resident unordered pair set: the symmetrizing union + keyed
+    // repartition below destroy any order, so qDedupNgram's global sort
+    // would be paid and discarded
+    val pairs = DedupCore.pairs(s, dir).select("id_a", "id_b")
     // tiny graph (only docs with a near-dup) — shrink parallelism or
     // per-iteration task overhead dominates the UnionLoop (same rationale
     // as clusterLabels' loopPar)
@@ -543,12 +427,10 @@ object DedupVariants {
     * large-star/small-star). */
   private[graft] def clusterLabels(s: SparkSession, dir: String)
       : (DataFrame, Int) = {
-    // cache the pair set BEFORE the symmetrizing union — otherwise the
-    // union's two branches each re-run the whole inverted-index join.
-    // Unordered core: the loop's keyed shuffles discard qDedupNgram's
-    // global sort (round 21).
-    val pairs = dedupNgramPairs(s, dir, StopShingleMaxDf)
-      .select("id_a", "id_b").cache()
+    // the resident unordered pair set: both branches of the symmetrizing
+    // union read its blocks, and the loop's keyed shuffles would discard
+    // qDedupNgram's global sort (round 21)
+    val pairs = DedupCore.pairs(s, dir).select("id_a", "id_b")
     // the pair graph is orders of magnitude smaller than the corpus (only
     // docs with a near-dup survive into it) — shrink the loop's
     // parallelism to match, or per-round task overhead dominates. Derived
@@ -596,10 +478,9 @@ object DedupVariants {
     }
     import org.apache.spark.sql.expressions.Window
     // the propagation loop is eager (one count per round) and the final
-    // labels are localCheckpointed — the pair/edge caches are no longer
+    // labels are localCheckpointed — the edge cache is no longer
     // referenced (Q cache-ownership contract, graft/package.scala)
     edges.unpersist()
-    pairs.unpersist()
     (labels
       .select(col("id").as("doc_id"), col("label").as("cluster_id"))
       .withColumn("cluster_size",
@@ -772,8 +653,8 @@ object DedupVariants {
   }
 
   /** q_dedup_minhash — deterministic MinHash-LSH near-dup pairs, the
-    * oracle-checkable twin of q_dedup_near (whose MLlib banding DuckDB
-    * cannot reproduce). Signature: 8 independent min-hashes per doc,
+    * oracle-checked banding of the md5 core q_dedup_near shares
+    * ([[DedupCore]]). Signature: 8 independent min-hashes per doc,
     * h_i = MIN over shingles of md5("i:" ++ shingle) — md5 hex strings
     * are byte-identical and compare lexicographically the same in both
     * engines, so the signature (and therefore the LSH candidate set) is
@@ -783,91 +664,53 @@ object DedupVariants {
     * SAME candidates, so the comparison is exact even where LSH recall
     * is not.
     *
-    * Scale shape: the signature build is ONE doc-keyed aggregate with 8
-    * algebraic MINs — no seed explode, map-side combined, shuffle volume
-    * O(docs × 8 hashes). Bands explode to 4 rows/doc; the band join's
+    * Scale shape: the signature and the shingles are resident
+    * ([[DedupCore]]). Bands explode to 4 rows/doc; the band join's
     * fan-out is bounded by bucket occupancy exactly like q_dedup_simhash;
     * the exact-Jaccard stage touches only candidate pairs. */
   def qDedupMinhash(s: SparkSession, dir: String): DataFrame = {
-    // one materialization: sizes, signatures, and both sides of the
-    // common-shingle join all consume `sh` — without this the
-    val sh = minhashShingles(s, dir)
     // Band self-join kept DELIBERATELY (round 22): the posting-list
     // rewrite (VERDICT r21 #9) measured 1.43 → 2.34 s min-of-3 here —
     // the interpreted list-pair explode loses to the codegen'd join.
-    val bands = minhashBands(sh)
+    val bands = minhashBands(s, dir)
     val cand = bands.as("a")
       .join(bands.as("b"),
         col("a.b") === col("b.b") && col("a.bkey") === col("b.bkey") &&
           col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
       .distinct()
-    exactJaccard(cand, sh, "id_a", "id_b")
+    exactJaccard(s, dir, cand, "id_a", "id_b")
       .select("id_a", "id_b", "common", "jaccard")
       .orderBy("id_a", "id_b")
   }
 
-  /** Shared MinHash machinery for q_dedup_minhash and
-    * q_dedup_minhash_incremental — ONE definition of the shingle table,
-    * the 8-min-hash signature, the 4×2 banding, and the exact-Jaccard
-    * candidate filter, so a change to band count / hash-prefix scheme /
-    * the jaccard floor cannot silently diverge the two keys (both
-    * oracles mirror this construction verbatim — keep all three in
-    * sync, the StopShingleMaxDf discipline).
+  /** Shared MinHash machinery for q_dedup_minhash,
+    * q_dedup_minhash_incremental and the band-manifest roundtrip — ONE
+    * definition of the 4×2 banding and the exact-Jaccard candidate
+    * filter over the resident signature and shingles ([[DedupCore]]), so
+    * a change to band count / hash-prefix scheme / the jaccard floor
+    * cannot silently diverge the keys (both oracles mirror this
+    * construction verbatim — keep all three in sync, the
+    * StopShingleMaxDf discipline).
     *
-    * Both frames are eagerly checkpointed: `sh` has 4 consumers (the
-    * round-5 re-evaluation trap), `bands` is consumed by both sides of
-    * its join; checkpoints live outside the SQL cache (Q
-    * cache-ownership contract). */
-  private def minhashShingles(s: SparkSession, dir: String): DataFrame =
-    // spread before the interpreted shingle transform (round 22, guide
-    // §2.5 — the one-row-group scan is a single task; no-op at scale)
-    Tables.spread(Tables.documents(s, dir)
-        .select(col("doc_id"), col("text")))
-      .withColumn("toks", split(col("text"), " "))
-      .select(col("doc_id"), explode(shingleExpr).as("sh"))
-      .localCheckpoint(false)
-
-  /** The (doc_id, b, bkey) banded-signature PLAN, un-materialized: the
-    * bucket-list consumers ([[minhashBucketPairs]]) read it exactly once,
-    * so no checkpoint is needed there; [[minhashBands]] materializes it
-    * for the multi-consumer manifest roundtrip. */
-  private def minhashBandsPlan(sh: DataFrame): DataFrame = {
-    val sig = sh.groupBy("doc_id").agg(
-      min(md5(concat(lit("0:"), col("sh")))).as("h0"),
-      (1 to 7).map(i =>
-        min(md5(concat(lit(s"$i:"), col("sh")))).as(s"h$i")): _*)
-    sig.select(col("doc_id"), explode(array(
+    * The (doc_id, b, bkey) bands are a projection of the resident
+    * signature: every consumer re-reads resident blocks, so nothing is
+    * checkpointed here. */
+  private def minhashBands(s: SparkSession, dir: String): DataFrame =
+    DedupCore.signature(s, dir).select(col("doc_id"), explode(array(
       (0 to 3).map(b => struct(lit(b).as("b"),
         concat(col(s"h${2 * b}"), col(s"h${2 * b + 1}")).as("bkey"))): _*))
       .as("band"))
       .select(col("doc_id"), col("band.b").as("b"),
         col("band.bkey").as("bkey"))
-  }
 
-  private def minhashBands(sh: DataFrame): DataFrame =
-    minhashBandsPlan(sh).localCheckpoint(false)
-
-  /** Exact Jaccard over candidate pairs (columns `a`, `b`): common-shingle
-    * count via the shingle join (the equality is pushed into the join
-    * condition by Catalyst, so (id, sh) both become hash-join keys — no
-    * post-join blow-up), sizes from the full uncapped shingle set,
-    * floor-truncated ratio, ≥ 0.8 filter. */
-  private def exactJaccard(cand: DataFrame, sh: DataFrame,
-      a: String, b: String): DataFrame = {
-    val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    cand
-      .join(sh.select(col("doc_id").as(a), col("sh").as("sh_a")), a)
-      .join(sh.select(col("doc_id").as(b), col("sh").as("sh_b")), b)
-      .filter(col("sh_a") === col("sh_b"))
-      .groupBy(a, b).agg(count(lit(1)).as("common"))
-      .join(sizes.select(col("doc_id").as(a), col("n").as("na")), a)
-      .join(sizes.select(col("doc_id").as(b), col("n").as("nb")), b)
-      .withColumn("jaccard",
-        floor(col("common") / (col("na") + col("nb") - col("common"))
-          * 1e6) / 1e6)
+  /** Exact Jaccard over candidate pairs (columns `a`, `b`)
+    * ([[DedupCore.common]]): floor-truncated ratio, ≥ 0.8 filter. */
+  private def exactJaccard(s: SparkSession, dir: String, cand: DataFrame,
+      a: String, b: String): DataFrame =
+    DedupCore.common(s, dir, cand, a, b)
+      .withColumn("jaccard", floor(col("common") / col("union") * 1e6) / 1e6)
       .filter(col("jaccard") >= 0.8)
-  }
 
   /** q_dedup_minhash_incremental — NEAR-dup incremental dedup (round 9):
     * the banded-LSH complement of q_dedup_incremental's exact-prefix
@@ -886,8 +729,7 @@ object DedupVariants {
     * candidate pairs. Same deterministic md5 min-hash construction, so
     * the DuckDB oracle computes the identical candidate set. */
   def qDedupMinhashIncremental(s: SparkSession, dir: String): DataFrame = {
-    val sh = minhashShingles(s, dir)
-    val bands = minhashBands(sh)
+    val bands = minhashBands(s, dir)
     // the persisted-manifest side vs the new-crawl side (join form kept
     // — see qDedupMinhash's round-22 posting-list revert note)
     val priorBands = bands.filter(col("doc_id") % 4 =!= 3)
@@ -896,7 +738,7 @@ object DedupVariants {
     val cand = todayBands.join(priorBands, Seq("b", "bkey"))
       .select(col("doc_id").as("id_t"), col("id_p"))
       .distinct()
-    exactJaccard(cand, sh, "id_t", "id_p")
+    exactJaccard(s, dir, cand, "id_t", "id_p")
       .groupBy(col("id_t").as("doc_id"))
       .agg(count(lit(1)).as("n_prior_dups"),
         max("jaccard").as("max_jaccard"),
@@ -924,10 +766,8 @@ object DedupVariants {
   private[graft] def minhashManifestRoundtrip(s: SparkSession, dir: String)
       : (Long, Long) = {
     val tagged = dir.replaceAll("[^a-zA-Z0-9]", "_")
-    val sh = minhashShingles(s, dir)
-    val bands = minhashBands(sh)
+    val bands = minhashBands(s, dir)
     val todayBands = bands.filter(col("doc_id") % 4 === 3)
-      .localCheckpoint(true)
     val todayIds = todayBands.select("doc_id").distinct()
     // flagged = today docs with a manifest band collision whose exact
     // Jaccard clears the threshold; admitted = the rest
@@ -937,7 +777,7 @@ object DedupVariants {
           Seq("b", "bkey"))
         .select(col("doc_id").as("id_t"), col("id_p"))
         .distinct()
-      val flagged = exactJaccard(cand, sh, "id_t", "id_p")
+      val flagged = exactJaccard(s, dir, cand, "id_t", "id_p")
         .select(col("id_t").as("doc_id")).distinct()
       todayIds.join(flagged, Seq("doc_id"), "left_anti")
     }

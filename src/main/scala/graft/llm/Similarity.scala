@@ -1,90 +1,13 @@
 package graft.llm
 
-import java.util.concurrent.ConcurrentHashMap
-
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.ml.feature.{BucketedRandomProjectionLSH,
   BucketedRandomProjectionLSHModel}
 import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.ml.linalg.Vector
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 import graft.{Q, Tables}
-
-/** Session-resident retrieval state: the ONE sanctioned holder of state
-  * across query-fn calls under Q's cache-ownership contract
-  * (graft/package.scala).
-  *
-  * What it may hold: QUERY-INDEPENDENT state a retrieval key would
-  * otherwise rebuild per request — the normalized embedding corpus, the
-  * IVF-PQ serving state read back from a persisted artifact (quantizers
-  * on the driver, ~20 KB; postings on executors), the LSH model and the
-  * hashed corpus. Never a result, and never anything derived from the
-  * query set: every request selects its queries, probes, ADC tables and
-  * hashes afresh.
-  *
-  * Key: `sessionKey/kind/dir/stamp`, where the stamp is the embeddings
-  * fingerprint (plus the artifact's build id for index state). Data
-  * rows are persisted RDDs (MEMORY_AND_DISK, lineage kept) outside the
-  * SQL CacheManager, so `clearCache()` leaves them alone and a lost
-  * block recomputes from its source.
-  *
-  * Eviction: filling a key releases (unpersists) every other entry of
-  * the same `sessionKey/kind/dir` — a regenerated corpus or a rebuilt
-  * artifact supersedes its predecessor, so at most one entry per
-  * (session, kind, dir) is live. An entry whose blocks were unpersisted
-  * from outside is refilled on its next use. Application end drops the
-  * app's entries ([[graft.SessionCaches]]). */
-private[graft] object RetrievalState {
-
-  private final class Entry(val value: AnyRef, rdds: Seq[RDD[_]]) {
-    def live: Boolean = rdds.forall(_.getStorageLevel != StorageLevel.NONE)
-    def release(): Unit = rdds.foreach(_.unpersist(blocking = false))
-  }
-
-  private val entries = new ConcurrentHashMap[String, Entry]()
-
-  /** Persists frames for one entry while it is being filled. */
-  final class Fill private[RetrievalState] {
-    private[RetrievalState] val rdds =
-      scala.collection.mutable.ArrayBuffer[RDD[_]]()
-
-    /** `df` materialized as resident blocks (one job, at fill time). */
-    def persist(df: DataFrame, what: String): DataFrame = {
-      val (frame, rdd) = org.apache.spark.sql.graft.PlanBridge
-        .persisted(df, StorageLevel.MEMORY_AND_DISK)
-      rdds += rdd.setName(s"graft.resident $what")
-      rdd.count(): Unit
-      frame
-    }
-  }
-
-  /** The live entry for (session, kind, dir, stamp), filled on a miss. */
-  def get[T <: AnyRef](s: SparkSession, kind: String, dir: String,
-      stamp: String)(fill: Fill => T): T = {
-    graft.SessionCaches.evictOnStop(s, entries)
-    val scope = s"${graft.sessionKey(s)}/$kind/$dir/"
-    def hit = Option(entries.get(scope + stamp)).filter(_.live)
-    hit.getOrElse(synchronized {
-      hit.getOrElse {
-        entries.keySet.asScala.filter(_.startsWith(scope)).foreach { k =>
-          Option(entries.remove(k)).foreach(_.release())
-        }
-        val f = new Fill
-        val value =
-          try fill(f)
-          catch { case e: Throwable => f.rdds.foreach(_.unpersist()); throw e }
-        val e = new Entry(value, f.rdds.toSeq)
-        entries.put(scope + stamp, e)
-        e
-      }
-    }).value.asInstanceOf[T]
-  }
-}
 
 /** Similarity search over the embedding column (SURVEY §2.10).
   *
@@ -98,7 +21,7 @@ private[graft] object RetrievalState {
   *
   * Serving keys (q_sim_topk, q_sim_lsh, q_knn_classify,
   * q_sim_index_persist) keep their corpus-side state resident per
-  * session ([[RetrievalState]]): the normalized corpus (norms computed
+  * session ([[graft.Resident]]): the normalized corpus (norms computed
   * once per corpus, not per call or pair), the LSH model and hashed
   * corpus, the persisted index's serving state. A request runs only its
   * query-dependent work — select the queries, probe, scan candidates,
@@ -138,10 +61,10 @@ object Similarity {
     * the single-row-group fixture scan is one task, and every consumer
     * (candidate scans, encodes, UDF kernels) would otherwise run on ONE
     * core (guide §2.5; no-op at scale). Built once per session and
-    * embeddings fingerprint ([[RetrievalState]]); every retrieval key
+    * embeddings fingerprint ([[graft.Resident]]); every retrieval key
     * reads it instead of rescanning and renormalizing the table. */
   private[graft] def corpus(s: SparkSession, dir: String): DataFrame =
-    RetrievalState.get(s, "corpus", dir,
+    graft.Resident.get(s, "corpus", dir,
         graft.Scratch.fingerprint(dir, "embeddings")) { fill =>
       fill.persist(Tables.spread(Tables.embeddings(s, dir)
           .select(col("vec_id"), col("label"), col("embedding")))
@@ -202,7 +125,7 @@ object Similarity {
     * (vec_id, features, hs), hs holding one bucket id per hash table. */
   private def lshIndex(s: SparkSession, dir: String)
       : (BucketedRandomProjectionLSHModel, DataFrame) =
-    RetrievalState.get(s, "lsh", dir,
+    graft.Resident.get(s, "lsh", dir,
         graft.Scratch.fingerprint(dir, "embeddings")) { fill =>
       val feats = corpus(s, dir)
         .select(col("vec_id"), array_to_vector(col("emb")).as("features"))
@@ -761,7 +684,7 @@ object Similarity {
       s"ivfpq_${dir.replaceAll("[^a-zA-Z0-9]", "_")}_$fp"))
     // serve phase: reads ONLY the committed artifact, through the
     // serving state kept resident per build of it
-    val (coarse, cb, postings) = RetrievalState.get(s, "ivfpq", dir,
+    val (coarse, cb, postings) = graft.Resident.get(s, "ivfpq", dir,
         s"$fp/${graft.Scratch.buildId(base)}") { fill =>
       val (coarse, cb) = readIvfPqState(s, base)
       (coarse, cb, fill.persist(Tables.spread(

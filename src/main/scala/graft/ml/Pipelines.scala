@@ -78,26 +78,55 @@ object Pipelines {
   /** q_ml_eval — evaluation surface: confusion matrix of the LR model on
     * its test split, plus accuracy/weighted-F1 as extra columns (constant
     * per row; asserted against floors in tests). */
-  def qMlEval(s: SparkSession, dir: String): DataFrame = {
+  def qMlEval(s: SparkSession, dir: String): DataFrame =
+    evalSummary(s, evalPredictions(s, dir))
+
+  /** The LR model's (label, prediction) rows on its seeded test split. */
+  private[graft] def evalPredictions(s: SparkSession, dir: String)
+      : DataFrame = {
     val Array(train, test) =
       embFeatures(s, dir).randomSplit(Array(0.8, 0.2), seed)
     val model = new LogisticRegression().setMaxIter(50).setRegParam(0.01)
       .fit(train)
-    // eager localCheckpoint, not cache: consumed by two evaluator passes
-    // AND the returned groupBy — Q's cache-ownership contract forbids
-    // leaving an entry in the SQL cache after the result is consumed
-    val pred = model.transform(test).select("label", "prediction")
-      .localCheckpoint(true)
-    val acc = new MulticlassClassificationEvaluator()
-      .setMetricName("accuracy").evaluate(pred)
-    val f1 = new MulticlassClassificationEvaluator()
-      .setMetricName("f1").evaluate(pred)
-    pred.groupBy(col("label").cast("int").as("label"),
+    model.transform(test).select("label", "prediction")
+  }
+
+  /** The confusion matrix of `pred` (label, pred, n) with accuracy and
+    * weighted F1, both rounded to 4 places. The matrix is one aggregate
+    * of at most classes² cells, collected once; accuracy and weighted F1
+    * follow from its cells on the driver with MulticlassMetrics'
+    * definitions (per-label F1 = 2pr/(p+r), 0 when p+r = 0, weighted by
+    * the label's share of the split), so the predictions are scanned
+    * once, not once per metric. MlSpec pins both values to
+    * MulticlassClassificationEvaluator's on the same predictions. */
+  private[graft] def evalSummary(s: SparkSession, pred: DataFrame)
+      : DataFrame = {
+    val cells = pred.groupBy(col("label").cast("int").as("label"),
         col("prediction").cast("int").as("pred"))
       .agg(count(lit(1)).as("n"))
-      .withColumn("accuracy", round(lit(acc), 4))
-      .withColumn("weighted_f1", round(lit(f1), 4))
-      .orderBy("label", "pred")
+      .collect().map(r => (r.getInt(0), r.getInt(1), r.getLong(2)))
+      .sortBy(c => (c._1, c._2))
+    val total = cells.map(_._3).sum.toDouble
+    val hits = cells.collect { case (l, p, n) if l == p => l -> n }.toMap
+    val byLabel = cells.groupMapReduce(_._1)(_._3)(_ + _)
+    val byPred = cells.groupMapReduce(_._2)(_._3)(_ + _)
+    def f1(label: Int): Double = {
+      val tp = hits.getOrElse(label, 0L).toDouble
+      val p = byPred.get(label).fold(0.0)(tp / _)
+      val r = tp / byLabel(label)
+      if (p + r == 0) 0.0 else 2 * p * r / (p + r)
+    }
+    // an empty split has no cells: accuracy is NaN, as Spark's round
+    // keeps it, and no row carries it
+    def rounded(x: Double): Double =
+      if (x.isNaN) x
+      else BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
+    val accuracy = rounded(hits.values.sum / total)
+    val weightedF1 = rounded(
+      byLabel.map { case (l, n) => f1(l) * n / total }.sum)
+    import s.implicits._
+    cells.toSeq.map { case (l, p, n) => (l, p, n, accuracy, weightedF1) }
+      .toDF("label", "pred", "n", "accuracy", "weighted_f1")
   }
 
   /** q_ml_cv — 3-fold cross-validation over a regParam grid for the

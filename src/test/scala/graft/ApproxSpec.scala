@@ -638,8 +638,8 @@ class ApproxSpec extends AnyFunSuite with SparkFixture {
     val capped = llm.DedupVariants.qDedupNgram(spark, sf001)
       .select("id_a", "id_b").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val uncapped = llm.DedupVariants
-      .dedupNgramPairs(spark, sf001, Long.MaxValue)
+    val uncapped = llm.DedupCore
+      .ngramPairs(spark, sf001, Long.MaxValue)
       .select("id_a", "id_b").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(capped == uncapped,
@@ -651,7 +651,18 @@ class ApproxSpec extends AnyFunSuite with SparkFixture {
     // maxDf=1 drops every shingle shared by >=2 docs — exactly the ones
     // that generate candidates — so the pair set must collapse to empty;
     // proves the cap is live code, not a dead branch
-    val capped = llm.DedupVariants.dedupNgramPairs(spark, sf001, 1L)
+    val capped = llm.DedupCore.ngramPairs(spark, sf001, 1L)
+      .select("id_a", "id_b").collect()
+    assert(capped.isEmpty, s"expected no pairs at maxDf=1, got ${capped.length}")
+  }
+
+  test("near-dup bucket cap actually prunes when the threshold trips") {
+    // maxDf=1 drops every min-hash bucket shared by >=2 docs — exactly
+    // the ones that generate candidates — so q_dedup_near's pair set
+    // must collapse to empty, while the production cap finds pairs
+    assert(llm.Dedup.nearDupPairs(spark, sf001,
+      llm.DedupCore.StopShingleMaxDf).count() > 0)
+    val capped = llm.Dedup.nearDupPairs(spark, sf001, 1L)
       .select("id_a", "id_b").collect()
     assert(capped.isEmpty, s"expected no pairs at maxDf=1, got ${capped.length}")
   }

@@ -54,6 +54,25 @@ class MlSpec extends AnyFunSuite with SparkFixture {
     assert(math.abs(correct.toDouble / total - acc) < 1e-3)
   }
 
+  test("q_ml_eval's driver-side accuracy and weighted F1 equal " +
+      "MulticlassClassificationEvaluator's on the same predictions") {
+    import org.apache.spark.ml.evaluation.MulticlassClassificationEvaluator
+    val pred = ml.Pipelines.evalPredictions(spark, sf001).localCheckpoint()
+    val rows = ml.Pipelines.evalSummary(spark, pred).collect()
+    assert(rows.nonEmpty)
+    def reference(metric: String): Double =
+      BigDecimal(new MulticlassClassificationEvaluator()
+        .setMetricName(metric).evaluate(pred))
+        .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
+    val (acc, f1) = (reference("accuracy"), reference("f1"))
+    rows.foreach { r =>
+      assert(r.getAs[Double]("accuracy") == acc)
+      assert(r.getAs[Double]("weighted_f1") == f1)
+    }
+    // the public key returns the same rows
+    assert(ml.Pipelines.qMlEval(spark, sf001).collect().toSeq == rows.toSeq)
+  }
+
   test("q_ml_cv reports one mean-F1 per grid point, all in [0,1]") {
     val rows = ml.Pipelines.qMlCv(spark, sf001).collect()
     assert(rows.length == 2)

@@ -228,13 +228,15 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     // operators that legitimately materialize an intermediate must not
     // leak it into the session's SQL cache — 95 keys share one session
     // under Verify/Bench, and leaked entries pile into a GC benchmark.
-    // The retrieval keys keep resident state (llm.RetrievalState), but
-    // as persisted RDDs outside the SQL cache: they must leave it empty
-    // too.
+    // The retrieval and dedup keys keep resident input state
+    // (graft.Resident), but as persisted RDDs outside the SQL cache: they
+    // must leave it empty too.
     spark.catalog.clearCache()
     val fns: Seq[(String, graft.Q)] = Seq(
       "q_dedup_near" -> (llm.Dedup.qDedupNear _),
       "q_dedup_cluster" -> (llm.DedupVariants.qDedupCluster _),
+      "q_dedup_minhash" -> (llm.DedupVariants.qDedupMinhash _),
+      "q_dedup_ngram" -> (llm.DedupVariants.qDedupNgram _),
       "q_ml_eval" -> (ml.Pipelines.qMlEval _),
       "q_ml_cv" -> (ml.Pipelines.qMlCv _),
       "q_sim_topk" -> (llm.Similarity.qSimTopk _),
@@ -249,10 +251,8 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     }
   }
 
-  test("retrieval keys: a warm call stays within its Spark-job cap") {
-    // corpus-side state is resident per session (llm.RetrievalState), so
-    // a warm request runs only its query-dependent jobs; a per-call
-    // rescan, refit or artifact re-read shows up here as extra jobs
+  /** Spark jobs and shuffle bytes of one collected call of `key`. */
+  private def callCost(key: String, dir: String): (Int, Long) = {
     import org.apache.spark.scheduler._
     import org.apache.spark.sql.graftprobe.BusProbe
     val sc = spark.sparkContext
@@ -265,25 +265,66 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
         Option(e.taskMetrics).foreach(m =>
           shuffle.addAndGet(m.shuffleWriteMetrics.bytesWritten))
     }
+    BusProbe.drain(sc)
+    sc.addSparkListener(counter)
+    try {
+      SparkEntry.queries(key)(spark, dir).collect()
+      BusProbe.drain(sc)
+    } finally sc.removeSparkListener(counter)
+    (jobs.get, shuffle.get)
+  }
+
+  test("retrieval keys: a warm call stays within its Spark-job cap") {
+    // corpus-side state is resident per session (graft.Resident), so
+    // a warm request runs only its query-dependent jobs; a per-call
+    // rescan, refit or artifact re-read shows up here as extra jobs
     // (key, max jobs, max shuffle bytes) per warm call
     val caps = Seq(
       ("q_sim_index_persist", 8, Long.MaxValue),
       ("q_sim_lsh", 6, 2500000L),
       ("q_sim_topk", 6, Long.MaxValue),
       ("q_knn_classify", 8, Long.MaxValue))
-    sc.addSparkListener(counter)
-    try caps.foreach { case (key, maxJobs, maxShuffle) =>
-      val fn = SparkEntry.queries(key)
-      fn(spark, sf001).collect()
-      BusProbe.drain(sc)
-      jobs.set(0); shuffle.set(0)
-      fn(spark, sf001).collect()
-      BusProbe.drain(sc)
-      info(s"$key: ${jobs.get} jobs, ${shuffle.get} shuffle bytes")
-      assert(jobs.get <= maxJobs, s"$key ran ${jobs.get} jobs (cap $maxJobs)")
-      assert(shuffle.get <= maxShuffle,
-        s"$key shuffled ${shuffle.get} bytes (cap $maxShuffle)")
-    } finally sc.removeSparkListener(counter)
+    caps.foreach { case (key, maxJobs, maxShuffle) =>
+      callCost(key, sf001)
+      val (jobs, shuffle) = callCost(key, sf001)
+      info(s"$key: $jobs jobs, $shuffle shuffle bytes")
+      assert(jobs <= maxJobs, s"$key ran $jobs jobs (cap $maxJobs)")
+      assert(shuffle <= maxShuffle,
+        s"$key shuffled $shuffle bytes (cap $maxShuffle)")
+    }
+  }
+
+  test("curate keys: a warm call stays within its Spark-job cap, and a " +
+      "dedup key's warm call refills nothing") {
+    // the 15 keys of graftbench's curate pass. Each cap is the count
+    // measured at sf0.01 on the second call; a change that lowers a
+    // count lowers its cap, and no cap is raised to pass
+    val caps = Seq(
+      "q_text_clean" -> 4, "q_text_tokenize" -> 4,
+      "q_text_langid" -> 11, "q_text_quality" -> 4,
+      "q_dedup_exact" -> 5, "q_dedup_minhash" -> 8,
+      "q_dedup_ngram" -> 3, "q_dedup_near" -> 8,
+      "q_dedup_cluster" -> 12, "q_decontam_ngram" -> 9,
+      "q_split_holdout" -> 8, "q_pack_sequences" -> 5,
+      "q_sample_budget" -> 8, "q_ml_tfidf_nb" -> 9,
+      "q_ml_eval" -> 29)
+    // keys whose first call fills resident dedup frames (graft.Resident)
+    val dedup = Set("q_dedup_minhash", "q_dedup_ngram", "q_dedup_near",
+      "q_dedup_cluster")
+    def dropResidentDedup(): Unit =
+      spark.sparkContext.getPersistentRDDs.values
+        .filter(r => Option(r.name).exists(_.startsWith("graft.resident dedup")))
+        .foreach(_.unpersist(blocking = true))
+    caps.foreach { case (key, maxJobs) =>
+      if (dedup(key)) dropResidentDedup()
+      val (cold, _) = callCost(key, sf001)
+      val (warm, shuffle) = callCost(key, sf001)
+      info(s"$key: $cold jobs cold, $warm jobs warm, $shuffle shuffle bytes")
+      assert(warm <= maxJobs, s"$key ran $warm jobs (cap $maxJobs)")
+      if (dedup(key))
+        assert(warm < cold, s"$key's warm call ($warm jobs) refilled " +
+          s"resident state (cold call: $cold jobs)")
+    }
   }
 
   test("dynamic partition pruning fires on a partitioned layout") {
@@ -754,26 +795,40 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
       s"probe filter must run before the probe-side exchange:\n$physical")
   }
 
-  test("q_dedup_near's exploded bucket join plans as BroadcastHashJoin " +
-      "(the load-bearing cache's InMemoryRelation statistics)") {
-    // The cache() in nearDupPairsPlan is what gives the planner size
-    // statistics for approxSimilarityJoin's self-join of the exploded
-    // hash buckets; losing it (e.g. a localCheckpoint swap, or a Spark
-    // upgrade changing LogicalRDD stats) degrades the join to sort-merge
-    // over interpreted vector-key ordering — the documented 6 s → 230 s
-    // cliff at sf0.1 (VERDICT r16 item 4 pins it here instead of in a
-    // comment).
-    val (featured, pairs) = llm.Dedup.nearDupPairsPlan(spark, sf0001)
-    try {
-      pairs.count() // materialize so any adaptive re-plan is final
-      val plan = planOf(pairs)
-      assert(plan.contains("BroadcastHashJoin"),
-        s"bucket self-join lost its broadcast:\n$plan")
-      assert(!plan.contains("SortMergeJoin"),
-        s"bucket self-join degraded to sort-merge:\n$plan")
-      assert(plan.contains("InMemoryTableScan"),
-        s"featured cache is not feeding the join:\n$plan")
-    } finally { featured.unpersist(): Unit }
+  test("q_dedup_near's band self-join is a hash join on primitive keys " +
+      "(no sort-merge join, no vector type anywhere in the plan)") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
+      QueryStageExec}
+    import org.apache.spark.sql.execution.joins.HashJoin
+    import org.apache.spark.sql.types.{DataType, IntegerType, LongType,
+      StringType, UserDefinedType}
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case other => other +: other.children.flatMap(nodes)
+    }
+    val cand = llm.Dedup.nearDupCandidates(spark, sf0001,
+      llm.DedupCore.StopShingleMaxDf)
+    cand.count() // materialize so any adaptive re-plan is final
+    val plan = cand.queryExecution.executedPlan
+    val joins = nodes(plan).collect { case j: HashJoin => j }
+    assert(joins.size == 1, s"expected one band self-join:\n$plan")
+    def primitive(t: DataType): Boolean = t match {
+      case IntegerType | LongType | _: StringType => true
+      case _ => false
+    }
+    val keyTypes = joins.head.leftKeys.map(_.dataType)
+    assert(keyTypes.nonEmpty && keyTypes.forall(primitive),
+      s"band join keys are not primitive: $keyTypes")
+    assert(!planOf(cand).contains("SortMergeJoin"),
+      s"band self-join degraded to sort-merge:\n$plan")
+    val near = llm.Dedup.qDedupNear(spark, sf0001)
+    near.count()
+    (nodes(plan) ++ nodes(near.queryExecution.executedPlan)).foreach { n =>
+      assert(!n.output.exists(_.dataType.isInstanceOf[UserDefinedType[_]]),
+        s"a vector (UDT) column flows through ${n.nodeName}")
+    }
   }
 
   test("TxTable CDC and delete keep their commit-bounded sides on " +

@@ -8,11 +8,11 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftprobe.BusProbe
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Lifecycle of the session-resident retrieval state
-  * (llm.RetrievalState): whatever happens to the corpus, the scratch
-  * artifacts or the resident blocks between two calls, a retrieval key
+/** Lifecycle of the session-resident input state (graft.Resident) and
+  * its two clients, retrieval and dedup: whatever happens to the input,
+  * the scratch artifacts or the resident blocks between two calls, a key
   * answers exactly as a fresh session would. */
-class RetrievalStateSpec extends AnyFunSuite with SparkFixture {
+class ResidentSpec extends AnyFunSuite with SparkFixture {
 
   private val keys: Seq[(String, (SparkSession, String, Column) => DataFrame)] =
     Seq(
@@ -25,9 +25,55 @@ class RetrievalStateSpec extends AnyFunSuite with SparkFixture {
       queries: Column = col("vec_id") < 20): Map[String, Seq[Row]] =
     keys.map { case (k, f) => k -> f(s, dir, queries).collect().toSeq }.toMap
 
-  private def residentRdds =
+  private def residentRdds(prefix: String = "graft.resident") =
     spark.sparkContext.getPersistentRDDs.values
-      .filter(r => Option(r.name).exists(_.startsWith("graft.resident")))
+      .filter(r => Option(r.name).exists(_.startsWith(prefix)))
+
+  /** The keys that read the resident dedup frames (llm.DedupCore). */
+  private val dedupKeys = Seq("q_dedup_minhash", "q_dedup_ngram",
+    "q_dedup_near", "q_dedup_cluster", "q_recursive_cte",
+    "q_dedup_minhash_incremental")
+
+  private def dedupAnswers(s: SparkSession, dir: String)
+      : Map[String, Seq[Row]] =
+    dedupKeys.map(k => k -> SparkEntry.queries(k)(s, dir).collect().toSeq)
+      .toMap
+
+  test("documents regenerated in place (new fingerprint) are deduped as " +
+      "a fresh session dedups them") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_resident")
+      .toString
+    def write(df: DataFrame): Unit =
+      df.coalesce(1).write.mode("overwrite")
+        .parquet(s"$dir/documents.parquet")
+    write(Tables.documents(spark, sf0001))
+    val before = dedupAnswers(spark, dir)
+    // regenerate: every document moves to another id
+    write(Tables.documents(spark, sf0001)
+      .withColumn("doc_id", col("doc_id") + 100000L))
+    val after = dedupAnswers(spark, dir)
+    assert(after == dedupAnswers(spark.newSession(), dir),
+      "warm session diverged from a fresh one after the regeneration")
+    dedupKeys.foreach { k =>
+      assert(after(k).nonEmpty && after(k) != before(k),
+        s"$k still dedups the old documents")
+    }
+  }
+
+  test("resident dedup blocks unpersisted between two calls are " +
+      "refilled") {
+    // start from no resident dedup frame of any input or session
+    residentRdds("graft.resident dedup").foreach(_.unpersist(blocking = true))
+    val first = dedupAnswers(spark, sf0001)
+    val dedup = residentRdds("graft.resident dedup")
+    assert(dedup.size == 4, s"expected 4 resident dedup frames, got " +
+      dedup.map(_.name).mkString(", "))
+    dedup.foreach(_.unpersist(blocking = true))
+    assert(residentRdds("graft.resident dedup").isEmpty)
+    assert(dedupAnswers(spark, sf0001) == first)
+    assert(residentRdds("graft.resident dedup").size == 4,
+      "the resident dedup state was not refilled")
+  }
 
   test("a corpus regenerated in place (new fingerprint) is served as a " +
       "fresh session serves it") {
@@ -62,11 +108,11 @@ class RetrievalStateSpec extends AnyFunSuite with SparkFixture {
 
   test("resident blocks unpersisted between two calls are refilled") {
     val first = answers(spark, sf0001)
-    assert(residentRdds.nonEmpty, "nothing resident after the first call")
-    residentRdds.foreach(_.unpersist(blocking = true))
-    assert(residentRdds.isEmpty)
+    assert(residentRdds().nonEmpty, "nothing resident after the first call")
+    residentRdds().foreach(_.unpersist(blocking = true))
+    assert(residentRdds().isEmpty)
     assert(answers(spark, sf0001) == first)
-    assert(residentRdds.nonEmpty, "the resident state was not refilled")
+    assert(residentRdds().nonEmpty, "the resident state was not refilled")
   }
 
   test("a second query set served from warm resident state equals a cold " +
@@ -83,9 +129,11 @@ class RetrievalStateSpec extends AnyFunSuite with SparkFixture {
 
   test("application end leaves SessionCaches no entry for the app") {
     answers(spark, sf0001)
+    dedupAnswers(spark, sf0001)
     val sc = spark.sparkContext
+    assert(residentRdds("graft.resident dedup").nonEmpty)
     assert(SessionCaches.held(sc.applicationId) > 0)
-    val resident = residentRdds.toSeq
+    val resident = residentRdds().toSeq
     BusProbe.post(sc, SparkListenerApplicationEnd(System.currentTimeMillis))
     BusProbe.drain(sc)
     assert(SessionCaches.held(sc.applicationId) == 0,
