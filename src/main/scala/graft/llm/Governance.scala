@@ -382,13 +382,15 @@ object Governance {
   }
 
   /** Wrap a pristine flat layout as a fresh [[graft.sources.TxTable]]:
-    * hardlink its parquet parts in as the v1 commit. Shared by
-    * [[qDeleteExecute]] and the specs' stream/batch twins. */
-  private[graft] def layoutAsTable(pristine: String, root: String)
-      : String = {
+    * hardlink its parquet parts in as the v1 commit, with the schema of
+    * one footer. Shared by [[qDeleteExecute]] and the specs' stream/batch
+    * twins. */
+  private[graft] def layoutAsTable(s: SparkSession, pristine: String,
+      root: String): String = {
     graft.sources.TxTable.init(root)
     graft.sources.TxTable.commitInit(root,
-      linkSnapshot(pristine, s"$root/data")): Unit
+      linkSnapshot(pristine, s"$root/data"),
+      s.read.parquet(pristine).schema): Unit
     root
   }
 
@@ -405,24 +407,24 @@ object Governance {
     * rewrite of ownership-clustered copies of orders and lineitem, each
     * wrapped as a [[graft.sources.TxTable]]: v1 commits the pristine
     * layout's parts (hardlinked in — O(files) metadata), the delete is
-    * ONE rewrite commit per table (discover affected files via a
-    * broadcast semi-probe on the owner column, rewrite exactly those
-    * with the owner's rows anti-joined out, publish survivors + rewrites
-    * atomically), and a second pass over the NEW snapshot must find zero
-    * affected files and commit nothing — "audit first, rewrite once",
-    * proven on every run. A concurrent reader pinned on v1 sees the
-    * complete pre-delete table throughout; one that opens after the
-    * commit sees the complete post-delete table; a torn layout is
+    * ONE rewrite commit per table (SQL `DELETE … WHERE owner IN (SELECT
+    * owner FROM <request view>)`: the runtime group filter finds the
+    * affected files with a broadcast probe of the manifest and only
+    * those are rewritten), and a second identical DELETE must leave the
+    * version unchanged — "audit first, rewrite once", proven on every
+    * run. A concurrent reader pinned on v1 sees the complete pre-delete
+    * table throughout; one that opens after the commit sees the
+    * complete post-delete table; a torn layout is
     * unobservable by construction (closing the r14–r16 caveat that the
     * per-file delete-then-rename swap was non-transactional).
     *
     * Scale shape: the request manifest is privacy-queue-bounded →
     * broadcast everywhere; discovery is one owner-column scan per table
     * (collect bounded by FILE count); the rewrite reads and writes only
-    * O(requests) files with no shuffle at all; the commit itself is O(1)
-    * data. At 100 TB this is the GDPR compliance pass a table format
-    * runs: audit signs off the counts, one commit rewrites the files,
-    * the second discovery proves convergence, and vacuum retires the
+    * O(requests) files; the commit itself is O(1) data. At 100 TB this
+    * is the GDPR compliance pass a table format runs: audit signs off
+    * the counts, one commit rewrites the files, the second discovery
+    * proves convergence, and vacuum retires the
     * pre-delete snapshot once its retention lease expires. Oracle: the
     * survivor key sets read back from the final snapshots must equal
     * DuckDB's NOT-IN recompute over the source tables. */
@@ -434,10 +436,15 @@ object Governance {
     // not a no-op
     val (ordPristine, liPristine) = ensureDeletableLayouts(s, dir)
     val inv = execInvocation.incrementAndGet()
-    val del = Tables.customer(s, dir)
+    // the request manifest for both tables' DELETEs; without CBO its
+    // size estimate is the customer table's, so only the hint keeps the
+    // probe a broadcast at scale (PlanSpec pins it)
+    val delView = s"graft_delete_exec_req_$inv"
+    broadcast(Tables.customer(s, dir)
       .filter(col("c_custkey") % 97 === 0)
       .select(col("c_custkey").as("owner"))
-      .localCheckpoint(true)
+      .localCheckpoint(true))
+      .createOrReplaceTempView(delView)
     // the two tables are INDEPENDENT (own roots, own commit logs): their
     // snapshot→delete→convergence sequences run as two concurrent driver
     // threads so each table's scheduling tail back-fills the other's
@@ -448,16 +455,20 @@ object Governance {
     val outcome = Similarity.parTabulate(2) { i =>
       val (pristine, name) =
         if (i == 0) (ordPristine, "orders") else (liPristine, "lineitem")
-      val root = layoutAsTable(pristine,
+      val root = layoutAsTable(s, pristine,
         graft.Scratch.dir("deleteexec", s"inv${inv}_$name"))
-      TxTable.deleteMatching(s, root, del, "owner"): Unit
-      (root, TxTable.deleteMatching(s, root, del, "owner")._2)
+      val delete = s"DELETE FROM ${TxTable.pathTable(s, root)} " +
+        s"WHERE owner IN (SELECT owner FROM $delView)"
+      s.sql(delete)
+      val v = TxTable.currentVersion(root)
+      s.sql(delete)
+      require(TxTable.currentVersion(root) == v,
+        s"delete did not converge: the second pass committed at $root")
+      root
     }
-    val (ordRoot, liRoot) = (outcome(0)._1, outcome(1)._1)
+    s.catalog.dropTempView(delView): Unit
+    val Array(ordRoot, liRoot) = outcome
     lastDeleteRoots.set((ordRoot, liRoot))
-    val second = outcome(0)._2 ++ outcome(1)._2
-    require(second.isEmpty,
-      s"delete did not converge: ${second.length} files still affected")
     // bound scratch growth across invocations (ADVICE r16): the two-back
     // invocation's tables can no longer be referenced by any spec or
     // in-flight reader — mirror the index rebuild's retention discipline

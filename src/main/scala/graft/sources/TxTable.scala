@@ -302,10 +302,11 @@ object TxTable {
 
   /** Commit with optimistic-concurrency retry: `update` maps the current
     * snapshot's file list to the new COMPLETE list (and may `require` its
-    * own conflict invariants — a rewrite asserts its victims are still
-    * current, [[rewriteCommit]]). On a lost race only the tiny manifest
-    * write repeats; already-staged data files in data/ stay valid because
-    * their names are collision-free. Returns the committed version. */
+    * own conflict invariants — row-level DML asserts the files it read
+    * are still current, [[graft.streaming.TxGroupReplaceWrite]]). On a
+    * lost race only the tiny manifest write repeats; already-staged
+    * data files in data/ stay valid because their names are
+    * collision-free. Returns the committed version. */
   private[graft] def commit(root: String, op: String,
       update: Seq[String] => Seq[String],
       extraProps: Map[String, String] = Map.empty): Int =
@@ -847,7 +848,7 @@ object TxTable {
   //     the reader capability Delta's type-widening feature rides), and
   //     post-promotion appends write the wide type natively.
   // Tables whose history predates the prop (or whose files were staged
-  // outside [[append]], e.g. [[commitInit]]) keep the legacy
+  // outside [[append]] and [[commitInit]]) keep the legacy
   // footer-derived read path — the prop only ever attaches at v1 or
   // inherits forward, so it can never claim LESS schema than the files
   // hold.
@@ -1584,99 +1585,15 @@ object TxTable {
   }
 
   /** First commit over pre-staged files (e.g. hardlinked-in snapshots of
-    * an existing layout — the GDPR delete's v1). */
-  private[graft] def commitInit(root: String, files: Seq[String]): Int =
+    * an existing layout — the GDPR delete's v1). `schema` is the files'
+    * physical schema, recorded as `tblschema` so the table serves SQL
+    * (catalog loads and row-level DML need it). */
+  private[graft] def commitInit(root: String, files: Seq[String],
+      schema: StructType): Int =
     commit(root, "init", { prev =>
       require(prev.isEmpty, s"commitInit on a non-empty table at $root")
       files
-    })
-
-  /** Rewrite-commit core (the delete): `matching` filters a snapshot
-    * frame to the rows being removed, `surviving` is its complement.
-    * Discovers the files holding ≥1 matching row via the scan's
-    * `_metadata.file_path` (collect bounded by FILE count), rewrites ONLY
-    * those without the matching rows, and commits (prev − affected) ∪
-    * rewritten. The affected files are NOT unlinked — a reader pinned on
-    * the pre-delete snapshot keeps reading them until [[vacuum]]; the
-    * update closure asserts the victims are still current, so a
-    * concurrent rewrite of the same files fails loudly instead of losing
-    * a delete (the table-format conflict check). Returns (version,
-    * affected relative names); no matching rows → no commit, version
-    * unchanged. */
-  private[graft] def rewriteCommit(s: SparkSession, root: String,
-      matching: DataFrame => DataFrame,
-      surviving: DataFrame => DataFrame): (Int, Seq[String]) = {
-    // the hidden _metadata column resolves only against the file-source
-    // relation itself — materialize the path BEFORE `matching` wraps the
-    // scan in joins/filters
-    val v0 = currentVersion(root)
-    // the position-delete set the rewrite input applies: if a concurrent
-    // delete-dv lands before our commit, the rewritten files would
-    // republish its freshly-deleted rows — the closure requires the set
-    // is unchanged (r17 review: a DV commit removes no data file, so the
-    // affected-files check alone cannot see this race). Captured ONCE
-    // and passed to the input read, so input and check see one version.
-    val dvAtRead =
-      if (v0 == 0) Seq.empty[String]
-      else deleteEntries(readManifest(root, v0).files)
-    val affAbs = matching(snapshotCore(s, root, v0,
-        mergeSchema = false, withAddress = true))
-      .select(col("__tx_file").as("f")).distinct()
-      .collect().map(r => decodePath(r.getString(0))).sorted.toSeq
-    if (affAbs.isEmpty) (currentVersion(root), Seq.empty)
-    else {
-      val affRel = affAbs.map(relOf(root, _))
-      // partition-preserving rewrite (round 18): survivors of a
-      // partitioned table re-stage under their own partition dirs (the
-      // basePath read re-derives the column, partitionBy lays it back).
-      // The rewrite input is the LOGICAL view (`surviving` is a
-      // user-facing predicate) and re-stages physical — which also
-      // physically sheds DROPPED columns, the Delta rewrite behavior.
-      val m0 = readManifest(root, v0)
-      val partCols = partColsOf(dataEntries(m0.files))
-      val cm0 = colMapOf(m0)
-      val rewritten = writeDataLike(s, root,
-        toPhysical(surviving(applyColMap(
-          readDataWithDeletes(s, root, affAbs, dvAtRead), cm0)), cm0),
-        partCols, bucketSpecOf(m0))
-      val affSet = affRel.toSet
-      val v =
-        try commit(root, "delete", { prev =>
-          require(affRel.forall(prev.toSet),
-            s"concurrent rewrite conflict at $root: an affected file " +
-              "is no longer in the current snapshot")
-          require(deleteEntries(prev) == dvAtRead,
-            s"concurrent position-delete conflict at $root: the delete " +
-              "set changed since the rewrite input was read — " +
-              "committing would republish freshly-deleted rows")
-          prev.filterNot(affSet) ++ rewritten
-        })
-        catch { case e: Throwable =>
-          discardStaged(root, rewritten); throw e
-        }
-      (v, affRel)
-    }
-  }
-
-  /** Read specific data files with the GIVEN position deletes applied —
-    * the rewrite/merge input: a file rewrite must not resurrect
-    * DV-deleted rows (the merge-on-read contract; LayoutSpec pins it).
-    * The caller passes the delete-entry set it captured at its read
-    * version — the SAME set its commit closure then requires unchanged,
-    * so the input and the conflict check can never disagree about which
-    * deletes the rewrite absorbed (r17 review: reading "current" here
-    * while checking v0's set let a mid-flight DV commit make the two
-    * diverge). */
-  private def readDataWithDeletes(s: SparkSession, root: String,
-      absFiles: Seq[String], dvs: Seq[String]): DataFrame = {
-    // basePath: partitioned files re-derive their directory column, so
-    // a rewrite input carries it (inert for flat layouts)
-    val rd = s.read.option("basePath", s"$root/data")
-    if (dvs.isEmpty) rd.parquet(absFiles: _*)
-    else applyDeletes(s, root,
-      withAddressCols(rd.parquet(absFiles: _*)), dvs)
-      .drop("__tx_file", "__tx_pos")
-  }
+    }, encodeSchemaProp(mergeTblSchema(StructType(Nil), schema)))
 
   /** Delete freshly-staged (never-listed) files after an aborted
     * commit: vacuum can only reclaim files some dropped manifest
@@ -1688,27 +1605,6 @@ object TxTable {
       java.nio.file.Files.deleteIfExists(
         java.nio.file.Paths.get(root, f)): Unit
     }
-
-  /** Delete-under-commit by predicate: rows where `pred` is TRUE go;
-    * everything else — including rows where `pred` evaluates to NULL —
-    * survives (the SQL DELETE WHERE contract). The survivor filter must
-    * therefore be NOT(coalesce(pred, false)), not `!pred`: a bare
-    * negation is also NULL on NULL, which would silently drop any
-    * NULL-predicate row that shares a file with a matching one (r17
-    * review; LayoutSpec pins the NULL-row survival). */
-  private[graft] def deleteWhere(s: SparkSession, root: String,
-      pred: Column): (Int, Seq[String]) =
-    rewriteCommit(s, root, _.filter(pred),
-      _.filter(!coalesce(pred, lit(false))))
-
-  /** Delete-under-commit by key manifest (the privacy-queue shape): the
-    * bounded key set rides a broadcast for both the file discovery
-    * (left_semi) and the survivor rewrite (left_anti). */
-  private[graft] def deleteMatching(s: SparkSession, root: String,
-      keys: DataFrame, keyCol: String): (Int, Seq[String]) =
-    rewriteCommit(s, root,
-      _.join(broadcast(keys), Seq(keyCol), "left_semi"),
-      _.join(broadcast(keys), Seq(keyCol), "left_anti"))
 
   /** MERGE-ON-READ delete (the deletion-vector / Iceberg-v2
     * position-delete shape): instead of rewriting every file that holds
@@ -1933,7 +1829,7 @@ object TxTable {
   private[graft] def buildDemoHistory(s: SparkSession, root: String,
       dir: String): Unit = {
     appendDemoLoads(s, root, dir)
-    deleteWhere(s, root, col("o_custkey") % 97 === 0): Unit
+    s.sql(s"DELETE FROM ${pathTable(s, root)} WHERE o_custkey % 97 = 0"): Unit
   }
 
   // per-dir invocation counters (a global counter with per-dir paths
@@ -1947,10 +1843,13 @@ object TxTable {
 
   /** q_table_commit — the transactional commit lifecycle (round 17):
     * append, append, DELETE-UNDER-COMMIT, then read the current
-    * snapshot. Every invocation replays the full history into a fresh
-    * root (the commits ARE the semantics, so re-runs repay the real
-    * work — the q_delete_execute min-of-reruns discipline), pruning the
-    * two-back invocation's root. Oracle: the final snapshot must equal
+    * snapshot. The delete is SQL DML whose modulo predicate converts to
+    * no source filter, so it rewrites the affected files (`op=delete`)
+    * — the copy-on-write twin of [[qTableDeleteVector]]. Every
+    * invocation replays the full history into a fresh root (the
+    * commits ARE the semantics, so re-runs repay the real work — the
+    * q_delete_execute min-of-reruns discipline), pruning the two-back
+    * invocation's root. Oracle: the final snapshot must equal
     * DuckDB's recompute of (load ∪ ingest) − deleted from the source
     * table. The structural halves an identity oracle can't see —
     * old-or-new reader isolation, commit-race exclusion, affected-file
@@ -2292,130 +2191,31 @@ object TxTable {
       .orderBy("o_orderkey")
   }
 
-  /** MERGE under ONE commit: matched table rows take the source's
-    * payload (rewrite of only their files), unmatched source rows
-    * append, and — when `deleteWhen` is given — matched rows whose
-    * source row satisfies the clause predicate are DELETED (WHEN MATCHED
-    * AND cond THEN DELETE): update + insert + expiry land atomically in
-    * a single manifest, so a reader never sees any one without the
-    * others (the MERGE INTO contract). Discovery is one table scan with
-    * a broadcast semi-probe on the source keys (doubling as
-    * affected-file listing); everything else — matched keys, rewrite
-    * inputs, appends, tombstone keys — is commit-bounded and rides
-    * broadcasts. The update closure requires the victims are still
-    * current (conflict check). Returns (version, affected files,
-    * inserted-row count). */
-  private[graft] def mergeCommit(s: SparkSession, root: String,
-      source: DataFrame, keyCol: String, payloadCol: String,
-      deleteWhen: Option[Column] = None)
-      : (Int, Seq[String], Long) = {
-    val v0 = currentVersion(root)
-    // captured once, passed to the rewrite input AND required unchanged
-    // at commit — input and conflict check see one version (r17 review)
-    val dvAtRead =
-      if (v0 == 0) Seq.empty[String]
-      else deleteEntries(readManifest(root, v0).files)
-    val snap = snapshotCore(s, root, v0,
-      mergeSchema = false, withAddress = true)
-    // materialize the caller's source ONCE (ADVICE r17): the raw frame
-    // is otherwise evaluated by the semi-probe, the insert count, the
-    // insert write, and the payload join separately — a
-    // non-deterministic or re-read-unstable source could split one key
-    // into both the update and insert paths, or make nIns disagree with
-    // the appended rows. Delta materializes the merge source for exactly
-    // this reason; merge sources are commit-sized, so the checkpoint is
-    // bounded.
-    val src = source.localCheckpoint(true)
-    val srcKeys = src.select(keyCol)
-    // one scan: matched keys + the files that hold them
-    val matched = snap
-      .join(broadcast(srcKeys), Seq(keyCol), "left_semi")
-      .select(col(keyCol), col("__tx_file"))
-      .localCheckpoint(true)
-    val affAbs = matched.select(col("__tx_file").as("f")).distinct()
-      .collect().map(r => decodePath(r.getString(0))).sorted.toSeq
-    // partition-preserving merge (round 18): rewrites AND appends of a
-    // partitioned table land under their partition dirs; logical view
-    // in, physical names out (column mapping)
-    val m0 = readManifest(root, v0)
-    val partCols0 = partColsOf(dataEntries(m0.files))
-    val bucket0 = bucketSpecOf(m0)
-    val cm0 = colMapOf(m0)
-    val matchedKeys = matched.select(keyCol).distinct()
-    // WHEN MATCHED [AND deleteWhen] THEN DELETE (VERDICT r17 item 7):
-    // source rows where the clause predicate is TRUE are tombstones —
-    // their matched table rows are DROPPED from the rewrite output
-    // instead of updated, in the SAME atomic commit as the updates and
-    // inserts (the CDC-apply shape: upsert + expiry in one manifest). A
-    // NULL predicate row is NOT a tombstone (the coalesce discipline of
-    // [[deleteWhere]]); a tombstone for an absent key is a no-op (WHEN
-    // NOT MATCHED only inserts — the MERGE INTO contract).
-    val isDel = deleteWhen
-      .map(c => coalesce(c, lit(false))).getOrElse(lit(false))
-    val srcLive = deleteWhen.fold(src)(_ => src.filter(!isDel))
-    val delKeys = deleteWhen.map(_ =>
-      src.filter(isDel).select(keyCol).distinct())
-    val inserts = srcLive
-      .join(broadcast(matchedKeys), Seq(keyCol), "left_anti")
-    val nIns = inserts.count()
-    val cols = snapshot(s, root, v0).columns
-    val newPayload = srcLive
-      .select(col(keyCol), col(payloadCol).as("__tx_new"))
-    val rewritten =
-      if (affAbs.isEmpty) Seq.empty[String]
-      else writeDataLike(s, root, toPhysical({
-        val base = applyColMap(
-          readDataWithDeletes(s, root, affAbs, dvAtRead), cm0)
-        val kept = delKeys.fold(base)(dk =>
-          base.join(broadcast(dk), Seq(keyCol), "left_anti"))
-        kept.join(broadcast(newPayload), Seq(keyCol), "left")
-          .withColumn(payloadCol,
-            coalesce(col("__tx_new"), col(payloadCol)))
-          .select(cols.map(col): _*)
-      }, cm0), partCols0, bucket0)
-    val appended =
-      if (nIns == 0) Seq.empty[String]
-      else writeDataLike(s, root,
-        toPhysical(inserts.select(cols.map(col): _*), cm0), partCols0,
-        bucket0)
-    val affRel = affAbs.map(relOf(root, _))
-    val affSet = affRel.toSet
-    val v =
-      try commit(root, "merge", { prev =>
-        require(affRel.forall(prev.toSet),
-          s"concurrent rewrite conflict at $root: a merge victim is no " +
-            "longer in the current snapshot")
-        require(deleteEntries(prev) == dvAtRead,
-          s"concurrent position-delete conflict at $root: the delete " +
-            "set changed since the merge input was read")
-        prev.filterNot(affSet) ++ rewritten ++ appended
-      })
-      catch { case e: Throwable =>
-        discardStaged(root, rewritten ++ appended); throw e
-      }
-    (v, affRel, nIns)
-  }
-
   /** q_table_merge — MERGE INTO under one atomic commit (round 17): the
     * headline table-format write op. The source batch carries an
     * idempotent payload (price := f(key), a pure key function, so the
     * final state is invocation-count-independent): keys already in the
     * table update in place (their files rewritten), new keys append —
     * published together in ONE manifest, so no reader can observe the
-    * update without the insert. Each invocation re-merges the same
-    * batch (real rewrite work — upserts re-applied are the at-least-
-    * once delivery case a MERGE sink absorbs) and vacuums to the
-    * retention window. Oracle: base LEFT JOIN source for the updates ∪
-    * source anti base for the inserts. */
+    * update without the insert (SQL `MERGE INTO` on the root's path
+    * table). Each invocation re-merges the same batch (real rewrite work
+    * — upserts re-applied are the at-least-once delivery case a MERGE
+    * sink absorbs) and vacuums to the retention window. Oracle: base
+    * LEFT JOIN source for the updates ∪ source anti base for the
+    * inserts. */
   def qTableMerge(s: SparkSession, dir: String): DataFrame = {
     val root = ensureDemoTable(s, dir, "mergetbl")
-    val source = Tables.orders(s, dir)
+    Tables.orders(s, dir)
       .filter(col("o_orderkey") % 3 === 2 ||
         (col("o_orderkey") % 3 === 0 && col("o_orderkey") % 30 === 0))
       .select(col("o_orderkey"), col("o_custkey"),
         ((col("o_orderkey") % 1000).cast("double") + 0.5)
           .as("o_totalprice"))
-    mergeCommit(s, root, source, "o_orderkey", "o_totalprice"): Unit
+      .createOrReplaceTempView("graft_table_merge_src")
+    s.sql(s"""MERGE INTO ${pathTable(s, root)} t
+            |USING graft_table_merge_src m ON t.o_orderkey = m.o_orderkey
+            |WHEN MATCHED THEN UPDATE SET o_totalprice = m.o_totalprice
+            |WHEN NOT MATCHED THEN INSERT *""".stripMargin): Unit
     vacuum(root, CompactRetain): Unit
     snapshot(s, root).orderBy("o_orderkey")
   }
@@ -2805,6 +2605,14 @@ object TxTable {
       classOf[graft.streaming.TxTableCatalog].getName)
     s.conf.set("spark.sql.catalog.graft_tx.warehouse", wh)
     s.sql("CREATE NAMESPACE IF NOT EXISTS graft_tx.db")
+  }
+
+  /** SQL name of the table at `root` in the `graft_tx` catalog's
+    * path-table form ([[graft.streaming.TxTableCatalog.loadTable]]). */
+  private[graft] def pathTable(s: SparkSession, root: String): String = {
+    if (s.conf.getOption("spark.sql.catalog.graft_tx").isEmpty) sqlCatalog(s)
+    val abs = new java.io.File(root).getAbsolutePath
+    s"graft_tx.`${abs.replace("`", "``")}`"
   }
 
   def qTableSql(s: SparkSession, dir: String): DataFrame = {

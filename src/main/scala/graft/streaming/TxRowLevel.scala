@@ -11,7 +11,9 @@ import graft.sources.TxTable
 /** SQL row-level DML (round 19, VERDICT r18 item 3): `DELETE FROM`,
   * `UPDATE` and `MERGE INTO` over catalog-addressed txtable tables,
   * via Spark's GROUP-BASED row-level-operation hooks — the same
-  * machinery Iceberg's copy-on-write mode rides:
+  * machinery Iceberg's copy-on-write mode rides. This is the format's
+  * one row-level write engine; library keys address a table by its
+  * path name (`graft_tx.`/abs/root``).
   *
   *  - Catalyst's analyzer rewrites the DML into a ReplaceData plan:
   *    a scan of the table plus a query RECOMPUTING the surviving /
@@ -21,28 +23,30 @@ import graft.sources.TxTable
   *    the source skip whole groups — which for this format is exactly
   *    the manifest-stats file skipping the batch scan already does. A
   *    selective `DELETE FROM t WHERE k = 5` therefore rewrites only the
-  *    files whose min/max may hold k=5, never the table. (A MERGE's ON
-  *    condition references the source relation, so nothing is pushable
-  *    and every file is a group — the documented copy-on-write MERGE
-  *    cost without runtime group filtering.)
+  *    files whose min/max may hold k=5, never the table. A MERGE's ON
+  *    condition references the source relation, so nothing is pushable;
+  *    the runtime group filter ([[TxRuntimeFilteredScan]]) then keeps
+  *    only the files holding a matched row.
   *  - THE SCAN AND THE WRITE SHARE THIS OPERATION INSTANCE: the scan
   *    records the files it planned (the groups), the version it read,
   *    and the position-delete set its recomputation absorbed; the
   *    write's commit replaces exactly those files with the staged
-  *    recomputation — `prev − planned ++ staged` — under the same OCC
-  *    conflict checks as the library rewrite paths ([[TxTable
-  *    .rewriteCommit]]): planned files must still be current (no
-  *    concurrent rewrite), the DV set must be unchanged (a concurrent
-  *    merge-on-read delete must not be resurrected), and the
-  *    schema/colmap props must match what the write planned against.
+  *    recomputation — `prev − planned ++ staged` — under three OCC
+  *    checks on every commit attempt: every planned file is still
+  *    current (else `concurrent rewrite conflict`); the position-delete
+  *    set is the one the scan applied (else `concurrent position-delete
+  *    conflict` — a DV commit removes no data file, so only this check
+  *    stops the rewrite resurrecting its rows); and the schema props
+  *    are still compatible with the staged files
+  *    ([[TxTableBatchWrite.checkMeta]]). The two conflicts are
+  *    retryable: re-run the statement on the new snapshot.
   *  - METADATA-DELETE FAST PATH. [[TxTableTable]] also implements
   *    SupportsDelete: a `DELETE FROM … WHERE` whose condition converts
   *    entirely to source filters never rewrites a file — the optimizer
-  *    swaps the ReplaceData plan back to [[TxTable.deleteVector]]'s
+  *    swaps the ReplaceData plan for [[TxTable.deleteVector]]'s
   *    position-delete commit (O(matching rows) merge-on-read, the
   *    Iceberg/Delta DV shape). Subquery or otherwise unconvertible
-  *    conditions keep the group-based copy-on-write path. Both engines
-  *    pre-date this surface; SQL is a third door onto them.
+  *    conditions (`%`, `IN (SELECT …)`) keep the group rewrite.
   *
   * Scale shape: group planning is driver-side manifest arithmetic; the
   * recomputation is a distributed scan+write of ONLY the affected

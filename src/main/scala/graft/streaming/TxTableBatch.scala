@@ -528,7 +528,7 @@ private[streaming] class TxTableScan(required: StructType,
         if (parsed.isEmpty || parsed.exists(_._2.isEmpty)) None
         else Some(parsed.groupBy(_._2.get).toSeq
           .map { case (k, fs) => (k, fs.map(_._1)) }
-          .sortBy(_._1.mkString(" ")))
+          .sortBy(_._1.mkString("\u0000")))
       }
 
   /** Storage-partitioned joins (round 20, VERDICT r19 item 1): with
@@ -1003,10 +1003,19 @@ private[streaming] class TxTableDataWriter(plan: TxWritePlan,
           PT.optional(BOOLEAN).named(c.phys))
         case StringType => b.addField(PT.optional(BINARY)
           .as(LogicalTypeAnnotation.stringType()).named(c.phys))
+        // the annotations Spark's own parquet writer emits, so the
+        // vectorized reader maps them back to the declared type
+        case DateType => b.addField(PT.optional(INT32)
+          .as(LogicalTypeAnnotation.dateType()).named(c.phys))
+        case TimestampType | TimestampNTZType =>
+          b.addField(PT.optional(INT64)
+            .as(LogicalTypeAnnotation.timestampType(
+              c.declared == TimestampType,
+              LogicalTypeAnnotation.TimeUnit.MICROS)).named(c.phys))
         case dt => sys.error(
           s"txtable DSv2 writer: unsupported column type $dt for " +
             s"${c.phys} (supported: long/int/double/float/boolean/" +
-            "string)")
+            "string/date/timestamp/timestamp_ntz)")
       }
     }
     b.named("spark_schema")
@@ -1126,6 +1135,10 @@ private[streaming] class TxTableDataWriter(plan: TxWritePlan,
           case (StringType, _) => g.add(c.phys,
             org.apache.parquet.io.api.Binary.fromString(
               row.getUTF8String(i).toString))
+          // internal rows already hold days / microseconds
+          case (DateType, _) => g.add(c.phys, row.getInt(i))
+          case (TimestampType | TimestampNTZType, _) =>
+            g.add(c.phys, row.getLong(i))
           case (dt, _) =>
             sys.error(s"unreachable: $dt passed schema check")
         }

@@ -81,8 +81,15 @@ class TxTableCatalog extends TableCatalog with SupportsNamespaces
       .map(f => Identifier.of(namespace, f.getName)).toArray
   }
 
+  /** Also takes the PATH-TABLE form (Delta's and Iceberg's): a
+    * one-part identifier that is an absolute path, `tx.`/abs/root``,
+    * loads the table at that root, wherever the library built it. Only
+    * this load takes it; every other identifier stays under [[checkSeg]]. */
   override def loadTable(ident: Identifier): Table = {
-    val root = rootOf(ident)
+    val root =
+      if (ident.namespace.isEmpty && new java.io.File(ident.name).isAbsolute)
+        ident.name
+      else rootOf(ident)
     if (!isTable(root)) noSuchTable(ident)
     val v = TxTable.currentVersion(root)
     val m = TxTable.readManifest(root, v)

@@ -662,10 +662,14 @@ private[streaming] class TxFilePartitionReader(part: TxFilePartition,
           case (BooleanType, _) =>
             java.lang.Boolean.valueOf(row.getBoolean(i))
           case (StringType, _) => row.getUTF8String(i).copy()
+          // the vectors already hold days / microseconds
+          case (DateType, _) => java.lang.Integer.valueOf(row.getInt(i))
+          case (TimestampType | TimestampNTZType, _) =>
+            java.lang.Long.valueOf(row.getLong(i))
           case (dt, _) => sys.error(
             s"txtable streaming reader: unsupported field type $dt " +
               s"for ${f.name} (supported: long/int/double/float/" +
-              "boolean/string)")
+              "boolean/string/date/timestamp/timestamp_ntz)")
         }
       }
     }

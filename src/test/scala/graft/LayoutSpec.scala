@@ -145,6 +145,19 @@ class LayoutSpec extends AnyFunSuite with SparkFixture {
     root
   }
 
+  /** SQL MERGE of temp view `src` into the table at `root` on
+    * o_orderkey: matched rows take the source o_totalprice, unmatched
+    * source rows insert. Returns (version, affected files, inserted
+    * rows = the row-count delta). */
+  private def mergeSql(root: String, src: String): (Int, Seq[String], Long) = {
+    val n0 = sources.TxTable.snapshot(spark, root).count()
+    val (v, aff) = txDml(root)(tbl => s"""MERGE INTO $tbl t USING $src m
+        |ON t.o_orderkey = m.o_orderkey
+        |WHEN MATCHED THEN UPDATE SET o_totalprice = m.o_totalprice
+        |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
+    (v, aff, sources.TxTable.snapshot(spark, root).count() - n0)
+  }
+
   test("TxTable: staged data files are invisible until the commit lands, " +
       "and a reader pinned on an old version sees it unchanged across a " +
       "later delete commit (old-or-new, never torn)") {
@@ -169,8 +182,8 @@ class LayoutSpec extends AnyFunSuite with SparkFixture {
       .orderBy("o_orderkey").collect().map(_.toSeq).toSeq
     // a delete commit lands v3; the pinned v2 reader is untouched:
     // same manifest, all files still on disk, identical rows on re-read
-    val (v3, affected) = sources.TxTable.deleteWhere(spark, root,
-      col("o_custkey") % 97 === 0)
+    val (v3, affected) = txDml(root)(tbl =>
+      s"DELETE FROM $tbl WHERE o_custkey % 97 = 0")
     assert(v3 == 3 && affected.nonEmpty)
     assert(sources.TxTable.readManifest(root, 2).files == v2Files)
     assert(v2Files.forall(f => new java.io.File(root, f).isFile),
@@ -192,7 +205,12 @@ class LayoutSpec extends AnyFunSuite with SparkFixture {
     val root = mkTable("minimal")
     sources.TxTable.buildDemoHistory(spark, root, sf0001)
     val v2 = sources.TxTable.readManifest(root, 2).files.toSet
-    val v3 = sources.TxTable.readManifest(root, 3).files.toSet
+    val m3 = sources.TxTable.readManifest(root, 3)
+    val v3 = m3.files.toSet
+    // the v3 delete is a rewrite: op delete, no position-delete entries
+    assert(m3.props.get("op").contains("delete") &&
+      sources.TxTable.deleteEntries(m3.files).isEmpty,
+      s"v3 must be a copy-on-write rewrite, got ${m3.props.get("op")}")
     val dropped = v2 -- v3
     // affected-files-only: the owner clustering keeps the delete's file
     // footprint a strict minority of the snapshot
@@ -203,8 +221,8 @@ class LayoutSpec extends AnyFunSuite with SparkFixture {
     // untouched by identity
     assert((v3 -- (v3 -- v2)) == (v2 -- dropped))
     // convergence: re-running the delete finds nothing and commits nothing
-    val (vAgain, affAgain) = sources.TxTable.deleteWhere(spark, root,
-      col("o_custkey") % 97 === 0)
+    val (vAgain, affAgain) = txDml(root)(tbl =>
+      s"DELETE FROM $tbl WHERE o_custkey % 97 = 0")
     assert(vAgain == 3 && affAgain.isEmpty,
       "second delete pass was not a no-op")
   }
@@ -317,8 +335,8 @@ class LayoutSpec extends AnyFunSuite with SparkFixture {
       .select(col("o_orderkey"), col("o_custkey"),
         ((col("o_orderkey") % 1000).cast("double") + 0.5)
           .as("o_totalprice"))
-    val (v, aff, nIns) = sources.TxTable.mergeCommit(spark, root, src,
-      "o_orderkey", "o_totalprice")
+    src.createOrReplaceTempView("spec_merge_src")
+    val (v, aff, nIns) = mergeSql(root, "spec_merge_src")
     // exactly one commit carries BOTH halves: no intermediate version
     // where the updates exist without the inserts
     assert(v == 4, s"merge landed as version $v, expected one commit (4)")
@@ -335,8 +353,7 @@ class LayoutSpec extends AnyFunSuite with SparkFixture {
       "a matched row did not take the source payload")
     // re-merge: the at-least-once redelivery case — zero inserts, the
     // state is unchanged (payload is a pure key function)
-    val (v2, _, nIns2) = sources.TxTable.mergeCommit(spark, root, src,
-      "o_orderkey", "o_totalprice")
+    val (v2, _, nIns2) = mergeSql(root, "spec_merge_src")
     assert(v2 == 5 && nIns2 == 0,
       s"re-merge must insert nothing (v=$v2, inserts=$nIns2)")
     assert(sources.TxTable.snapshot(spark, root)
@@ -374,8 +391,7 @@ class LayoutSpec extends AnyFunSuite with SparkFixture {
       spark.range(10).select(col("id").as("k"),
         when(col("id") % 2 === 0, col("id")).as("v"))
         .repartition(1))
-    val (v, aff) = sources.TxTable.deleteWhere(spark, root,
-      col("v") % 2 === 0)
+    val (v, aff) = txDml(root)(tbl => s"DELETE FROM $tbl WHERE v % 2 = 0")
     assert(v == 2 && aff.nonEmpty)
     val left = sources.TxTable.snapshot(spark, root)
       .orderBy("k").collect()
@@ -392,20 +408,25 @@ class LayoutSpec extends AnyFunSuite with SparkFixture {
       .select("o_orderkey", "o_custkey", "o_totalprice").limit(20)
     sources.TxTable.append(spark, root, orders.repartition(1))
     val schema0 = sources.TxTable.snapshot(spark, root).schema
-    val (v, _) = sources.TxTable.deleteWhere(spark, root, lit(true))
+    // true on every row, yet no source filter: the group rewrite, which
+    // drops every data file from the manifest (no DV keeps them)
+    val deleteAll: String => String =
+      tbl => s"DELETE FROM $tbl WHERE o_orderkey % 1 = 0"
+    val (v, _) = txDml(root)(deleteAll)
     assert(v == 2)
+    assert(sources.TxTable.readManifest(root, v).files.isEmpty,
+      "an emptying rewrite must list no files")
     // the empty current version reads as zero rows, same schema — not an
     // exception (empty is a legitimate post-delete state)
     val empty = sources.TxTable.snapshot(spark, root)
     assert(empty.count() == 0 && empty.schema == schema0)
     // rewrites on the empty table are no-ops, not crashes
-    val (vNoop, affNoop) = sources.TxTable.deleteWhere(spark, root,
-      lit(true))
-    assert(vNoop == sources.TxTable.currentVersion(root) && affNoop.isEmpty)
+    val (vNoop, affNoop) = txDml(root)(deleteAll)
+    assert(vNoop == v && affNoop.isEmpty)
     // a merge into the empty table appends every source row in one commit
-    val (vM, affM, nIns) = sources.TxTable.mergeCommit(spark, root,
-      orders, "o_orderkey", "o_totalprice")
-    assert(affM.isEmpty && nIns == orders.count(),
+    orders.createOrReplaceTempView("spec_empty_src")
+    val (vM, affM, nIns) = mergeSql(root, "spec_empty_src")
+    assert(vM == v + 1 && affM.isEmpty && nIns == orders.count(),
       s"merge-into-empty must be pure insert (aff=$affM ins=$nIns)")
     assert(sources.TxTable.snapshot(spark, root, vM).count() == nIns)
   }
@@ -518,8 +539,8 @@ class LayoutSpec extends AnyFunSuite with SparkFixture {
       .filter(col("o_orderkey") % 30 === 0)
       .select(col("o_orderkey"), col("o_custkey"),
         lit(1.5).as("o_totalprice"))
-    sources.TxTable.mergeCommit(spark, root, src,
-      "o_orderkey", "o_totalprice"): Unit
+    src.createOrReplaceTempView("spec_dv_merge_src")
+    mergeSql(root, "spec_dv_merge_src"): Unit
     assert(sources.TxTable.snapshot(spark, root)
       .filter(col("o_custkey") % 97 === 0 &&
         col("o_orderkey") % 30 =!= 0).count() == 0,
@@ -718,8 +739,8 @@ class LayoutSpec extends AnyFunSuite with SparkFixture {
       .filter(col("o_orderpriority") === "1-URGENT" &&
         col("o_custkey") % 7 === 0).count()
     assert(nDel > 0, "fixture must delete something")
-    val (dv1, affected) = sources.TxTable.deleteWhere(spark, root,
-      col("o_orderpriority") === "1-URGENT" && col("o_custkey") % 7 === 0)
+    val (dv1, affected) = txDml(root)(tbl => s"DELETE FROM $tbl WHERE " +
+      "o_orderpriority = '1-URGENT' AND o_custkey % 7 = 0")
     assert(affected.nonEmpty &&
       affected.forall(_.startsWith(urgent)),
       s"a single-partition delete touched other partitions: $affected")
@@ -756,8 +777,8 @@ class LayoutSpec extends AnyFunSuite with SparkFixture {
         .filter(col("o_orderkey") % 3 === 2 && col("o_orderkey") % 5 === 0)
         .select(col("o_orderkey"), col("o_custkey"),
           lit(9.75).as("o_totalprice"), col("o_orderpriority")))
-    val (mv, mAff, mIns) = sources.TxTable.mergeCommit(spark, root,
-      mSrc, "o_orderkey", "o_totalprice")
+    mSrc.createOrReplaceTempView("spec_part_merge_src")
+    val (mv, mAff, mIns) = mergeSql(root, "spec_part_merge_src")
     assert(mIns > 0 && mAff.nonEmpty,
       s"partitioned merge must exercise both paths ($mAff, $mIns)")
     val mData = sources.TxTable.dataEntries(
@@ -857,8 +878,8 @@ class LayoutSpec extends AnyFunSuite with SparkFixture {
       .exists(_.startsWith("o_totalprice__r")),
       "a re-added dropped column must write under a fresh physical name")
     // v7: a rewrite DELETE sheds the dropped column physically
-    val (v7, aff) = sources.TxTable.deleteWhere(spark, root,
-      col("owner_id") % 13 === 0)
+    val (v7, aff) = txDml(root)(tbl =>
+      s"DELETE FROM $tbl WHERE owner_id % 13 = 0")
     assert(aff.nonEmpty)
     val v7new = (sources.TxTable.dataEntries(
         sources.TxTable.readManifest(root, v7).files).toSet --
@@ -898,13 +919,24 @@ class LayoutSpec extends AnyFunSuite with SparkFixture {
     val wantDel = live.join(src.filter(col("expire")), Seq("o_orderkey"),
       "left_semi").select("o_orderkey").collect().map(_.getLong(0)).toSet
     assert(wantDel.nonEmpty, "fixture must exercise the delete clause")
-    val (v, aff, nIns) = sources.TxTable.mergeCommit(spark, root,
-      src.drop("expire"), "o_orderkey", "o_totalprice",
-      deleteWhen = Some(col("o_orderkey") % 30 === 0))
+    src.drop("expire").createOrReplaceTempView("spec_merge_del_src")
+    // a tombstone (expiring source row) deletes its match and is never
+    // inserted: an absent key's tombstone is a no-op
+    val mergeDel: String => String = tbl =>
+      s"""MERGE INTO $tbl t USING spec_merge_del_src m
+         |ON t.o_orderkey = m.o_orderkey
+         |WHEN MATCHED AND m.o_orderkey % 30 = 0 THEN DELETE
+         |WHEN MATCHED THEN UPDATE SET o_totalprice = m.o_totalprice
+         |WHEN NOT MATCHED AND m.o_orderkey % 30 != 0 THEN INSERT *
+         |""".stripMargin
+    def keys(df: org.apache.spark.sql.DataFrame) = df.select("o_orderkey")
+    val (v, aff) = txDml(root)(mergeDel)
     // ONE commit: no intermediate version where any half is missing
     assert(v == v0 + 1, s"merge landed as $v, expected one commit")
-    assert(aff.nonEmpty && nIns > 0, "fixture must exercise all 3 paths")
     val after = sources.TxTable.snapshot(spark, root).cache()
+    // inserted rows = keys present after the merge and absent before
+    val nIns = keys(after).except(keys(live)).count()
+    assert(aff.nonEmpty && nIns > 0, "fixture must exercise all 3 paths")
     // expired keys are gone…
     assert(after.filter(col("o_orderkey").isin(wantDel.toSeq: _*))
       .count() == 0, "a WHEN MATCHED DELETE row survived")
@@ -935,9 +967,9 @@ class LayoutSpec extends AnyFunSuite with SparkFixture {
     // changes nothing — tombstones for absent keys are no-ops and the
     // delete clause keeps their rows out of the insert path
     val rows1 = after.orderBy("o_orderkey").collect().map(_.toSeq).toSeq
-    val (_, _, nIns2) = sources.TxTable.mergeCommit(spark, root,
-      src.drop("expire"), "o_orderkey", "o_totalprice",
-      deleteWhen = Some(col("o_orderkey") % 30 === 0))
+    txDml(root)(mergeDel): Unit
+    val nIns2 = keys(sources.TxTable.snapshot(spark, root))
+      .except(keys(after)).count()
     assert(nIns2 == 0, s"re-merge must insert nothing (got $nIns2)")
     assert(sources.TxTable.snapshot(spark, root)
       .orderBy("o_orderkey").collect().map(_.toSeq).toSeq == rows1,
@@ -1592,10 +1624,42 @@ class LayoutSpec extends AnyFunSuite with SparkFixture {
     assert(sources.TxTable.snapshot(spark, root).count() == 1L)
   }
 
+  test("path-table identifiers: graft_tx.`<absolute root>` serves " +
+      "SELECT and row-level DML on a library-built table; a relative " +
+      "path is still refused by the segment check") {
+    import org.apache.spark.sql.functions._
+    val root = mkTable("pathident")
+    sources.TxTable.appendDemoLoads(spark, root, sf0001)
+    val tbl = sources.TxTable.pathTable(spark, root)
+    assert(tbl == s"graft_tx.`$root`")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("o_orderkey").collect().map(_.toSeq).toSeq
+    assert(rows(spark.sql(s"SELECT * FROM $tbl")) ==
+      rows(sources.TxTable.snapshot(spark, root)))
+    val before = sources.TxTable.snapshot(spark, root).cache()
+    spark.sql(s"UPDATE $tbl SET o_totalprice = -1.0 WHERE o_orderkey % 5 = 0")
+    spark.sql(s"DELETE FROM $tbl WHERE o_custkey % 11 = 0")
+    assert(sources.TxTable.versions(root) == Seq(1, 2, 3, 4))
+    assert((3 to 4).map(v => sources.TxTable.readManifest(root, v)
+      .props("op")) == Seq("update", "delete"))
+    val want = before.filter(col("o_custkey") % 11 =!= 0)
+      .withColumn("o_totalprice", when(col("o_orderkey") % 5 === 0,
+        lit(-1.0)).otherwise(col("o_totalprice")))
+    assert(rows(spark.sql(s"SELECT * FROM $tbl")) == rows(want))
+    before.unpersist(): Unit
+    // only an ABSOLUTE one-part name is a path; anything else is a
+    // warehouse identifier and keeps the segment check
+    val e = intercept[Exception](
+      spark.sql("SELECT * FROM graft_tx.`txtable/spec_pathident`")
+        .collect())
+    assert(e.getMessage.contains("[A-Za-z0-9_]+ segments"),
+      s"a relative path escaped the segment check: ${e.getMessage}")
+  }
+
   test("SQL row-level DML: DELETE takes the metadata DV fast path on " +
       "convertible predicates and the group rewrite on subqueries, " +
       "UPDATE rewrites only stats-matching files, MERGE INTO equals " +
-      "the library merge, TRUNCATE is one commit (round 19)") {
+      "the driver-side expected state, TRUNCATE is one commit (round 19)") {
     import org.apache.spark.sql.functions._
     val wh = graft.Scratch.dir("txtable", "spec_dml")
     graft.Scratch.deleteRec(new java.io.File(wh))

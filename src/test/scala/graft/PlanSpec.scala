@@ -842,9 +842,59 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
       s"CDC anti-joins lost their broadcast:\n$changes")
     assert(!changes.contains("SortMergeJoin"),
       s"CDC anti-join degraded to sort-merge:\n$changes")
-    // the delete/merge rewrites execute eagerly inside their commits, so
-    // their join plans are pinned structurally in LayoutSpec instead;
-    // their broadcast() hints are explicit in rewriteCommit/mergeCommit
+    // the key-manifest delete is SQL DML; its plan is pinned by the
+    // q_delete_execute test below
+  }
+
+  test("q_delete_execute's key-manifest DELETE keeps the request " +
+      "manifest on a broadcast even when statistics cannot size it") {
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
+      QueryStageExec}
+    import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec,
+      SortMergeJoinExec}
+    import org.apache.spark.sql.graftprobe.BusProbe
+    import org.apache.spark.sql.util.QueryExecutionListener
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case other => other +: (other.children ++ other.subqueries)
+        .flatMap(nodes)
+    }
+    // the DELETE commands' executed plans, runtime group filter included
+    val deletes = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(fn: String, qe: QueryExecution,
+          ns: Long): Unit =
+        if (qe.executedPlan.nodeName.startsWith("ReplaceData"))
+          deletes.add(qe.executedPlan): Unit
+      override def onFailure(fn: String, qe: QueryExecution,
+          e: Exception): Unit = ()
+    }
+    // at scale the manifest's size estimate is its source table's (no
+    // selectivity without CBO), so only an explicit hint keeps it on a
+    // broadcast: disabling size-based broadcasts models exactly that
+    val threshold = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.getOption(threshold)
+    spark.listenerManager.register(listener)
+    spark.conf.set(threshold, "-1")
+    try llm.Governance.qDeleteExecute(spark, sf0001).count()
+    finally {
+      BusProbe.drain(spark.sparkContext)
+      spark.listenerManager.unregister(listener)
+      prev.fold(spark.conf.unset(threshold))(spark.conf.set(threshold, _))
+    }
+    import scala.jdk.CollectionConverters._
+    val plans = deletes.asScala.toSeq
+    // two tables, two passes each (the second is the convergence proof)
+    assert(plans.size == 4, s"expected 4 DELETE plans, got ${plans.size}")
+    plans.foreach { p =>
+      val ns = nodes(p)
+      assert(!ns.exists(_.isInstanceOf[SortMergeJoinExec]),
+        s"the key-manifest probe degraded to sort-merge:\n$p")
+      assert(ns.exists(_.isInstanceOf[BroadcastHashJoinExec]),
+        s"the key-manifest probe lost its broadcast:\n$p")
+    }
   }
 
   test("TxTable DSv2 scan statistics drive the optimizer: a stats-" +

@@ -15,6 +15,23 @@ trait SparkFixture extends BeforeAndAfterAll { self: Suite =>
 
   lazy val spark: SparkSession = SparkFixture.session
 
+  /** Run one SQL statement against the table at `root`, addressed by
+    * its path-table name (`stmt` receives that name). Returns the
+    * current version afterwards and the affected files: the data
+    * entries of the version before minus those after (empty when the
+    * statement committed nothing). */
+  def txDml(root: String, s: SparkSession = spark)(
+      stmt: String => String): (Int, Seq[String]) = {
+    import graft.sources.TxTable
+    def data(v: Int): Set[String] =
+      if (v == 0) Set.empty
+      else TxTable.dataEntries(TxTable.readManifest(root, v).files).toSet
+    val v0 = TxTable.currentVersion(root)
+    s.sql(stmt(TxTable.pathTable(s, root)))
+    val v = TxTable.currentVersion(root)
+    (v, if (v == v0) Nil else (data(v0) -- data(v)).toSeq.sorted)
+  }
+
   override def afterAll(): Unit = super.afterAll()
 }
 

@@ -847,24 +847,30 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
     implicit val sqlCtx = spark.sqlContext
     // a production privacy queue arrives as a STREAM of deletion
     // requests; each micro-batch manifest is applied through the same
-    // affected-files-only rewrite commit the batch key runs (round 17:
-    // TxTable.deleteMatching — each micro-batch lands one atomic
-    // version). The properties under test: at-least-once safety
-    // (re-delivering an already-applied manifest rewrites ZERO files and
+    // affected-files-only rewrite commit the batch key runs (a SQL
+    // `DELETE … WHERE owner IN (SELECT owner FROM <manifest>)` — each
+    // micro-batch lands one atomic version). The properties under test:
+    // at-least-once safety (re-delivering an already-applied manifest rewrites ZERO files and
     // commits NOTHING — the discovery over the new snapshot finds
     // nothing, the q_dedup_manifest_update replay discipline) and
     // batch-boundary irrelevance (survivors after N micro-batches ==
     // one-shot delete of the union manifest).
     val (ordP, liP) =
       llm.Governance.ensureDeletableLayouts(spark, sf0001, "specstream_")
-    val ordS = llm.Governance.layoutAsTable(ordP,
+    val ordS = llm.Governance.layoutAsTable(spark, ordP,
       graft.Scratch.dir("txtable", "specstream_orders"))
-    val liS = llm.Governance.layoutAsTable(liP,
+    val liS = llm.Governance.layoutAsTable(spark, liP,
       graft.Scratch.dir("txtable", "specstream_lineitem"))
-    val ordB = llm.Governance.layoutAsTable(ordP,
+    val ordB = llm.Governance.layoutAsTable(spark, ordP,
       graft.Scratch.dir("txtable", "specbatch_orders"))
-    val liB = llm.Governance.layoutAsTable(liP,
+    val liB = llm.Governance.layoutAsTable(spark, liP,
       graft.Scratch.dir("txtable", "specbatch_lineitem"))
+    // affected files of one key-manifest delete through SQL DML
+    def deleteOwners(s: org.apache.spark.sql.SparkSession, root: String,
+        view: String): Int =
+      txDml(root, s)(tbl =>
+        s"DELETE FROM $tbl WHERE owner IN (SELECT owner FROM $view)")
+        ._2.length
     // %29 keeps ~5 requests at sf0.001 (the %97 batch-key manifest has
     // only one owner here — not enough to micro-batch)
     val owners = Tables.customer(spark, sf0001)
@@ -877,11 +883,11 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
     val q = mem.toDF().toDF("owner")
       .writeStream
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        val del = batch.select("owner").localCheckpoint(true)
+        batch.select("owner").localCheckpoint(true)
+          .createOrReplaceTempView("spec_stream_del")
         val bs = batch.sparkSession
-        rewrites += (
-          sources.TxTable.deleteMatching(bs, ordS, del, "owner")._2.length +
-          sources.TxTable.deleteMatching(bs, liS, del, "owner")._2.length)
+        rewrites += (deleteOwners(bs, ordS, "spec_stream_del") +
+          deleteOwners(bs, liS, "spec_stream_del"))
         ()
       }
       .start()
@@ -897,11 +903,12 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
       s"replayed manifest rewrote ${rewrites(2)} files (not replay-safe)")
     // batch-boundary irrelevance: one-shot delete of the union manifest
     // on the reference layout pair must leave the same survivors
-    val delAll = Tables.customer(spark, sf0001)
+    Tables.customer(spark, sf0001)
       .filter(col("c_custkey") % 29 === 0)
       .select(col("c_custkey").as("owner")).localCheckpoint(true)
-    sources.TxTable.deleteMatching(spark, ordB, delAll, "owner")
-    sources.TxTable.deleteMatching(spark, liB, delAll, "owner")
+      .createOrReplaceTempView("spec_batch_del")
+    deleteOwners(spark, ordB, "spec_batch_del"): Unit
+    deleteOwners(spark, liB, "spec_batch_del"): Unit
     def keysOf(ordRoot: String, liRoot: String): Set[(String, Long, Long)] =
       sources.TxTable.snapshot(spark, ordRoot)
         .select(lit("o"), col("o_orderkey"), lit(0L)).collect()

@@ -66,9 +66,13 @@ class ManifestPagingSpec extends AnyFunSuite with graft.SparkFixture {
       assert(TxTable.snapshot(spark, root).count() == 1600)
       assert(TxTable.snapshotWhere(spark, root,
         col("k") < 100).count() == 100)
-      // v3 rewrite (delete): only the pages holding victims drop
-      val (_, affected) = TxTable.deleteWhere(spark, root,
-        col("k") < 100) // victims live in the low-range files
+      // v3 rewrite (delete): only the pages holding victims drop. The
+      // victims live in the low-range files; the modulo conjunct converts
+      // to no source filter, so this is the group rewrite, not a DV
+      val (_, affected) = txDml(root)(tbl =>
+        s"DELETE FROM $tbl WHERE k < 100 AND k % 1 = 0")
+      assert(TxTable.readManifest(root, 3).props.get("op")
+        .contains("delete"))
       val m3 = TxTable.readManifest(root, 3)
       val p3 = m3.pages.map(_._1).toSet
       val droppedPages = p2 -- p3
