@@ -543,132 +543,28 @@ object TxTable {
   private[graft] def writeDeletes(s: SparkSession, root: String,
       df: DataFrame): Seq[String] = writeStaged(s, root, df, "deletes")
 
-  /** Snapshot read pinned at `version` (−1 = current). The manifest's
+  /** Snapshot read pinned at `version` (−1 = the current version, pinned
+    * at call time): a `versionAsOf` load of the DSv2 scan, the table's
+    * one batch reader ([[graft.streaming.TxTableScan]]). The manifest's
     * complete file list IS the table: immutable files + complete lists
-    * isolate a pinned reader from every later commit. `mergeSchema =
-    * true` unions footer schemas across the listed files — schema
-    * EVOLUTION on read: pre-drift files NULL-backfill columns added by
-    * later commits, while a version pinned before the drift keeps the
-    * base schema (its manifest only lists base-schema files). The
-    * footer union costs a planning-time read per file at real file
-    * counts; a format tracks schema in table metadata instead (honest
-    * limit, [[qTableSchemaEvolution]]). An EMPTY file list
-    * is a legitimate state (a delete can remove every row); it reads as
-    * zero rows with the schema of the nearest retained version that
-    * still lists files (schema lives in parquet footers here — honest
-    * limit: an empty table ALL of whose ancestors were vacuumed away is
-    * unreadable, where a real format would consult its schema metadata). */
+    * isolate a pinned reader from every later commit. The read serves
+    * the version's LOGICAL schema from its tracked `tblschema` and
+    * column mapping — a file that predates an added column reads it as
+    * NULL, a pre-promotion file read-widens, and an EMPTY file list (a
+    * delete can remove every row) reads as zero rows of that schema.
+    * Position deletes apply inside the reader, and a `.filter` on the
+    * result pushes into the scan's stats skipping. */
   private[graft] def snapshot(s: SparkSession, root: String,
-      version: Int = -1, mergeSchema: Boolean = false): DataFrame =
-    snapshotCore(s, root,
-      if (version < 0) currentVersion(root) else version,
-      mergeSchema, withAddress = false)
+      version: Int = -1): DataFrame =
+    s.read.format("txtable").option("versionAsOf",
+      if (version < 0) currentVersion(root) else version).load(root)
 
-  /** Core read behind [[snapshot]] and the rewrite/merge/DV discovery
-    * paths. Reads the manifest's `data/` entries, applies its position
-    * deletes if any (anti-join on the (file name, row index) address —
-    * delete sets are commit-sized, so they ride a broadcast; a format
-    * additionally indexes them per file), and optionally KEEPS the
-    * `__tx_file`/`__tx_pos` address columns — they must be attached at
-    * the scan (`_metadata` resolves only against a file-source
-    * relation), so a caller cannot bolt them on after the DV join. */
-  private def snapshotCore(s: SparkSession, root: String, v: Int,
-      mergeSchema: Boolean, withAddress: Boolean): DataFrame = {
-    require(v > 0, s"no committed version at $root")
-    val m = readManifest(root, v)
-    val data = dataEntries(m.files)
-    val dvs = deleteEntries(m.files)
-    // schema-tracking manifests (round 18): the manifest IS the schema —
-    // O(1) planning instead of a per-file footer union, and the declared
-    // (possibly promotion-widened) types drive the scan, with narrow
-    // physical pages read-widened by the vectorized reader
-    val declared = schemaOf(m)
-    if (data.isEmpty) {
-      // schema donor: THIS manifest's tracked schema when present;
-      // otherwise nearest version AT-OR-BEFORE v first (descending), so
-      // a pinned historical empty snapshot can never borrow columns a
-      // LATER schema-evolved commit added (ADVICE r17); later versions
-      // are the fallback only when every earlier schema-bearing manifest
-      // was vacuumed away
-      val schema = declared.getOrElse {
-        val vs = versions(root)
-        val donorOrder = vs.filter(_ <= v).sorted.reverse ++
-          vs.filter(_ > v).sorted
-        val donor = donorOrder
-          .map(readManifest(root, _))
-          .find(dm => dataEntries(dm.files).nonEmpty)
-          .getOrElse(sys.error(s"snapshot v$v of $root is empty and no " +
-            "retained version carries a schema-bearing file"))
-        s.read.option("basePath", s"$root/data")
-          .parquet(dataEntries(donor.files).map(f => s"$root/$f"): _*)
-          .schema
-      }
-      val empty = applyColMap(s.createDataFrame(
-        java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-        schema), colMapOf(m))
-      if (!withAddress) empty
-      else empty.withColumn("__tx_file", lit(null).cast("string"))
-        .withColumn("__tx_pos", lit(null).cast("long"))
-    } else {
-      // basePath: a partitioned table's entries live under
-      // data/<col>=<v>/ — partition discovery re-derives the column;
-      // for flat layouts the option is inert. The colmap of THIS
-      // manifest maps physical file columns to the version's logical
-      // names — time travel across a rename for free.
-      val rd0 = s.read.option("basePath", s"$root/data")
-      val raw0 = declared match {
-        case Some(st) => rd0.schema(st)
-          .parquet(data.map(f => s"$root/$f"): _*)
-        case None => rd0.option("mergeSchema", mergeSchema)
-          .parquet(data.map(f => s"$root/$f"): _*)
-      }
-      // a BUCKETED table's __bucket routing directory is layout, not
-      // data — partition discovery re-derives it even under an explicit
-      // schema, so strip it (the bucket COLUMN itself lives in the files)
-      val raw = if (bucketSpecOf(m).isDefined) raw0.drop("__bucket")
-        else raw0
-      val cm = colMapOf(m)
-      if (dvs.isEmpty && !withAddress) applyColMap(raw, cm)
-      else {
-        // addresses attach at the SCAN (before any projection —
-        // `_metadata` resolves only against the file-source relation);
-        // the colmap projection then carries the __tx_* columns through
-        val applied = applyDeletes(s, root,
-          applyColMap(withAddressCols(raw), cm), dvs)
-        if (withAddress) applied else applied.drop("__tx_file", "__tx_pos")
-      }
-    }
-  }
-
-  /** THE address scheme, in one place (r17 review): rows are addressed
-    * by (file basename, row index). The basename is unique (Spark
-    * embeds a per-job UUID in part names), so a table whose root moved
-    * still resolves its own deletes. Attach at the scan — `_metadata`
-    * resolves only against a file-source relation. */
-  private def withAddressCols(df: DataFrame): DataFrame =
-    df.withColumn("__tx_file", col("_metadata.file_path"))
-      .withColumn("__tx_pos", col("_metadata.row_index"))
+  /** Basename of a row's `_tx_file` path: the position-delete address
+    * names the file by basename, unique because Spark embeds a per-job
+    * UUID in part names — so a table whose root moved still resolves
+    * its own deletes. */
   private def fnameOf(c: Column): Column =
     regexp_extract(c, "[^/]+$", 0)
-
-  /** Plain filesystem path of a scan-observed `_metadata.file_path`
-    * URI: decodes the `file:` scheme AND its %-escapes — a partition
-    * value with a space reads back `%20`-encoded, and feeding that
-    * string to a Hadoop Path would look for a literal `%20` directory
-    * (partitionBy does NOT escape spaces on disk). */
-  private def decodePath(abs: String): String =
-    if (abs.startsWith("file:")) new java.net.URI(abs).getPath else abs
-
-  /** Root-relative manifest path of a scan-observed absolute file path
-    * (`_metadata.file_path`, `file:`-schemed). Basename mapping broke
-    * for partitioned entries (`data/k=v/part-…`), so this strips the
-    * root prefix instead (round 18). */
-  private def relOf(root: String, abs: String): String = {
-    val p = decodePath(abs)
-    val r = new java.io.File(root).getAbsolutePath
-    require(p.startsWith(r + "/"), s"scan path $abs is not under $root")
-    p.substring(r.length + 1)
-  }
 
   // --- column mapping: rename/drop as metadata-only commits ----------
   //
@@ -680,17 +576,14 @@ object TxTable {
   // later re-add of the same logical name writes under a FRESH physical
   // name instead of resurrecting the dropped data. Time travel is
   // automatic: each manifest carries its own mapping, so a pinned
-  // pre-rename snapshot reads with pre-rename names. Remaining honest
-  // limit: no type promotion (int→long across files needs a per-file
-  // read-schema override vanilla `spark.read.parquet` can't express —
-  // a format's own reader mediates it).
+  // pre-rename snapshot reads with pre-rename names (the DSv2 reader
+  // resolves each logical name to its physical column per version).
 
   /** Manifest props that carry TABLE STATE rather than per-commit
-    * metadata, inherited across commits by [[commit]]: the column
-    * mapping, and the streaming sink's high-water batch id
-    * ([[commitBatch]] — carrying it forward makes the replay check O(1)
-    * and vacuum-proof instead of an O(versions) scan over retained
-    * manifests). */
+    * metadata, inherited across commits by [[commit]]: the schema, the
+    * column mapping, the partition/bucket spec, and the streaming sink's
+    * high-water batch id ([[commitEpoch]] — carrying it forward makes
+    * the replay check O(1) and vacuum-proof). */
   private val ColMapProps: Set[String] =
     Set("colmap", "colmapdrop", "lastbatch", "tblschema", "partcol",
       "bucketcol", "bucketn")
@@ -735,20 +628,6 @@ object TxTable {
   private def requireIdent(n: String): Unit =
     require(n.matches("[A-Za-z_][A-Za-z0-9_]*"),
       s"column-mapping names must be identifiers, got '$n'")
-
-  /** PHYSICAL view → LOGICAL view: alias renamed columns, hide dropped
-    * physical columns; everything else (incl. the `__tx_*` address
-    * columns) passes through. */
-  private def applyColMap(df: DataFrame, cm: Option[ColMapping])
-      : DataFrame = cm match {
-    case None => df
-    case Some(m) =>
-      val cols = df.columns.toSeq.flatMap { c =>
-        if (m.droppedPhys.contains(c)) None
-        else Some(m.physToLog.get(c).fold(col(c))(l => col(c).as(l)))
-      }
-      df.select(cols: _*)
-  }
 
   /** LOGICAL view → PHYSICAL names for staging (the write boundary). */
   private def toPhysical(df: DataFrame, cm: Option[ColMapping])
@@ -814,7 +693,7 @@ object TxTable {
     * tombstoned so a re-added logical column of the same name writes
     * under a fresh physical name — dropped data can never resurrect
     * (the Delta column-mapping drop contract). Rewrites after the drop
-    * physically shed the column (applyColMap runs before re-staging). */
+    * physically shed the column (the read hides it before re-staging). */
   private[graft] def dropColumn(s: SparkSession, root: String,
       name: String): Int = {
     requireIdent(name)
@@ -847,11 +726,10 @@ object TxTable {
   //     reader (requested LongType over an int32 page decodes widened —
   //     the reader capability Delta's type-widening feature rides), and
   //     post-promotion appends write the wide type natively.
-  // Tables whose history predates the prop (or whose files were staged
-  // outside [[append]] and [[commitInit]]) keep the legacy
-  // footer-derived read path — the prop only ever attaches at v1 or
-  // inherits forward, so it can never claim LESS schema than the files
-  // hold.
+  // Every writer records the prop on a table's first commit ([[append]],
+  // [[createEmpty]], [[commitInit]]) and every later commit inherits
+  // it, so the reader never consults a footer for the schema; a table
+  // without it (files committed by hand) fails loudly at read.
 
   private[graft] def schemaOf(m: Manifest): Option[StructType] =
     m.props.get("tblschema").map(j =>
@@ -902,22 +780,16 @@ object TxTable {
   }
 
   /** Attach/advance the `tblschema` prop for an append of physical
-    * frame `phys` on top of version `v`: returns the frame with
-    * narrower-than-declared numeric columns cast UP (files stay
-    * uniform) and the schema props to commit. A v>0 parent WITHOUT the
-    * prop (pre-prop history or externally staged files) stays legacy —
-    * attaching mid-history could claim less schema than old files
-    * hold. */
-  private def withTblSchema(root: String, v: Int, phys: DataFrame)
-      : (DataFrame, Map[String, String]) = {
-    val parent = if (v == 0) None else Some(readManifest(root, v))
-    val cur = parent.flatMap(schemaOf)
-    (parent, cur) match {
-      case (Some(_), None) => (phys, Map.empty) // legacy table: stay legacy
-      case (None, _) =>
-        (phys, encodeSchemaProp(mergeTblSchema(
-          StructType(Nil), phys.schema)))
-      case (Some(_), Some(c)) =>
+    * frame `phys` on top of manifest `parent` (None = the first commit):
+    * returns the frame with narrower-than-declared numeric columns cast
+    * UP (files stay uniform) and the schema props to commit. */
+  private def withTblSchema(parent: Option[Manifest], phys: DataFrame)
+      : (DataFrame, Map[String, String]) =
+    parent.flatMap(schemaOf) match {
+      case None =>
+        (phys, encodeSchemaProp(mergeTblSchema(StructType(Nil),
+          phys.schema)))
+      case Some(c) =>
         val merged = mergeTblSchema(c, phys.schema)
         val cast = phys.select(phys.columns.toSeq.map { cn =>
           val tgt = merged(cn).dataType
@@ -926,7 +798,6 @@ object TxTable {
         }: _*)
         (cast, encodeSchemaProp(merged))
     }
-  }
 
   /** CREATE TABLE as a metadata-only commit (round 18, the SQL
     * catalog's create): v1 lists ZERO files and carries the declared
@@ -1140,25 +1011,11 @@ object TxTable {
       Seq("__bucket"))
   }
 
-  /** Anti-join an addressed frame (`__tx_file`/`__tx_pos`) against the
-    * given position-delete entries. */
-  private def applyDeletes(s: SparkSession, root: String,
-      addressed: DataFrame, dvs: Seq[String]): DataFrame =
-    if (dvs.isEmpty) addressed
-    else {
-      val dv = s.read.parquet(dvs.map(f => s"$root/$f"): _*)
-        .select(col("fname").as("__tx_fname"), col("pos").as("__tx_pos"))
-      addressed
-        .withColumn("__tx_fname", fnameOf(col("__tx_file")))
-        .join(broadcast(dv), Seq("__tx_fname", "__tx_pos"), "left_anti")
-        .drop("__tx_fname")
-    }
-
   // --- data skipping (round 18, VERDICT r17 item 1) -------------------
 
   /** Can a file with these stats possibly hold a row matching `e`?
     * Sound may-match pruning over the normalized predicate tree
-    * (PlanBridge.predTree — Spark 4's ColumnNode is `private[sql]`):
+    * (the scan's pushed filters, [[graft.streaming.TxFilterTree]]):
     * `false` ONLY when the min/max ranges PROVE no row can match;
     * anything the evaluator doesn't understand — unknown expression
     * shapes, columns without stats, type mismatches a cast would
@@ -1252,19 +1109,13 @@ object TxTable {
   }
 
   /** Plan-time file pruning: the manifest's data entries that MAY hold
-    * a row matching `pred`, per their recorded stats. Entries without
-    * stats are kept. Returns (kept, all-data-entries) — the spec's
-    * files-planned < files-listed evidence. */
-  private[graft] def pruneDataFiles(m: Manifest, pred: Column)
-      : (Seq[String], Seq[String]) =
-    pruneDataFilesTree(m,
-      org.apache.spark.sql.graft.PlanBridge.predTree(pred))
-
-  /** Tree-level twin of [[pruneDataFiles]] — the entry the DSv2 batch
-    * scan uses, where the predicate arrives as Catalyst-pushed
-    * `sources.Filter`s already normalized to a [[PlanBridge.PredNode]]
-    * tree rather than a Column. */
-  private[graft] def pruneDataFilesTree(m: Manifest,
+    * a row matching `tree0` (the DSv2 scan's pushed filters), per their
+    * recorded stats. Entries without stats are kept. A `_tx_file` leaf
+    * is an EXACT file selection: the path is constant within a file, so
+    * it is matched as a min = max = `<root>/<entry>` string stat. Returns
+    * (kept, all-data-entries) — the files-planned/files-listed counts
+    * the scan's description reports. */
+  private[graft] def pruneDataFilesTree(root: String, m: Manifest,
       tree0: org.apache.spark.sql.graft.PlanBridge.PredNode)
       : (Seq[String], Seq[String]) = {
     val data = dataEntries(m.files)
@@ -1272,15 +1123,20 @@ object TxTable {
     // predicate speaks logical — translate before range-checking
     val tree = colMapOf(m).fold(tree0)(cmm =>
       mapPredCols(tree0, c => cmm.logToPhys.getOrElse(c, c)))
-    (data.filter(f => m.stats.get(f).forall(mayMatch(_, tree))), data)
+    (data.filter { f =>
+      val path = s"$root/$f"
+      val fs = m.stats.getOrElse(f, FileStats(0L, Map.empty))
+      mayMatch(fs.copy(cols =
+        fs.cols + ("_tx_file" -> ColStats("string", path, path))), tree)
+    }, data)
   }
 
   /** The LOGICAL schema of version `v` per its manifest alone — the
     * tracked physical schema with the version's column mapping applied
-    * (renames aliased, dropped columns hidden). None when the table
-    * predates schema-tracking manifests (schema then lives only in
-    * parquet footers). This is what lets the DSv2 batch read infer a
-    * schema without touching a single data file. */
+    * (renames aliased, dropped columns hidden). None when the manifest
+    * carries no tracked schema (files committed by hand). This is what
+    * lets the DSv2 batch read infer a schema without touching a single
+    * data file. */
   private[graft] def inferLogicalSchema(root: String, v: Int)
       : Option[StructType] =
     if (v <= 0) None
@@ -1310,70 +1166,6 @@ object TxTable {
     }
   }
 
-  /** (kept, listed) data-file counts of the most recent
-    * [[snapshotWhere]] (spec/bench observability hook). */
-  private[graft] val lastSkip =
-    new java.util.concurrent.atomic.AtomicReference[(Int, Int)]((0, 0))
-
-  /** Predicate-pushed snapshot read: plan ONLY the data files whose
-    * manifest stats may hold a matching row, then apply the predicate
-    * residually (stats prune whole files; rows inside a kept file still
-    * filter — exactly Delta/Iceberg's split between skipping and scan
-    * filters). Identical results to `snapshot(...).filter(pred)` by
-    * construction ([[mayMatch]] is sound); at 100 TB this is the
-    * difference between planning every file of a committed table and
-    * planning the handful a selective predicate touches. Position
-    * deletes still apply — addresses of pruned-away rows simply never
-    * match. */
-  def snapshotWhere(s: SparkSession, root: String, pred: Column,
-      version: Int = -1): DataFrame = {
-    val v = if (version < 0) currentVersion(root) else version
-    require(v > 0, s"no committed version at $root")
-    val m = readManifest(root, v)
-    val dvs = deleteEntries(m.files)
-    val (kept, all) = pruneDataFiles(m, pred)
-    lastSkip.set((kept.size, all.size))
-    val cmv = colMapOf(m)
-    // read KEPT files under the manifest-tracked schema when present
-    // (mirrors snapshotCore): a pruned-file read must not re-infer its
-    // schema from one arbitrary surviving file — on a schema-evolved
-    // table that silently drops later-added columns, and on a
-    // type-promoted table mixed int32/int64 files mis-type. Legacy
-    // (pre-tblschema) tables fall back to a mergeSchema footer union
-    // so the kept subset still surfaces every column it carries.
-    def readFiles(fs: Seq[String]): DataFrame = {
-      val rd0 = s.read.option("basePath", s"$root/data")
-      val raw = schemaOf(m) match {
-        case Some(st) => rd0.schema(st).parquet(fs.map(f => s"$root/$f"): _*)
-        case None => rd0.option("mergeSchema", true)
-          .parquet(fs.map(f => s"$root/$f"): _*)
-      }
-      // bucket routing dirs are layout, not data (see snapshotCore)
-      if (bucketSpecOf(m).isDefined) raw.drop("__bucket") else raw
-    }
-    if (all.isEmpty) snapshot(s, root, v).filter(pred)
-    else if (kept.isEmpty) {
-      // every file provably predicate-free: zero rows, real schema
-      val schema = applyColMap(readFiles(all), cmv).schema
-      s.createDataFrame(
-        java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-        schema)
-    } else {
-      val raw = readFiles(kept)
-      val applied =
-        if (dvs.isEmpty) applyColMap(raw, cmv)
-        else applyDeletes(s, root, applyColMap(withAddressCols(raw), cmv),
-          dvs).drop("__tx_file", "__tx_pos")
-      applied.filter(pred)
-    }
-  }
-
-  /** Append commit: stage df, publish prev ++ staged. The caller's
-    * frame carries LOGICAL names; staging converts to physical. A
-    * logical name colliding with a TOMBSTONED physical name (re-add
-    * after drop) writes under a fresh `<name>__r<version>` physical
-    * name registered in the same commit — dropped data never
-    * resurrects. */
   /** Thrown by the append paths' metadata conflict check when a
     * rename/drop/promote landed between schema planning and the winning
     * OCC attempt — the staged files carry the PLANNED physical names
@@ -1383,6 +1175,22 @@ object TxTable {
   private class MetaRaceRetry extends RuntimeException(
     "txtable append: schema/column-mapping changed under the planned " +
       "write — replanning")
+
+  /** Resolve `name` as the LOGICAL column name of ANY retained version,
+    * newest first, to its stable PHYSICAL column (round 20, OCC
+    * auto-retry): a write analyzed against one snapshot can arrive at
+    * plan time after a concurrent rename changed the logical view —
+    * the name it carries is some era's alias of a physical column that
+    * never moved. O(retained versions) manifest metadata, and only on
+    * the race path (current-name resolution failed). */
+  private[graft] def resolveHistoricalLogical(root: String,
+      name: String): Option[String] =
+    versions(root).reverse.view.flatMap { v =>
+      inferLogicalSchema(root, v)
+        .filter(_.fieldNames.contains(name))
+        .map(_ => colMapOf(readManifest(root, v))
+          .flatMap(_.logToPhys.get(name)).getOrElse(name))
+    }.headOption
 
   /** Is an APPEND whose files were staged as `stagedCols` (physical
     * name, stored type) safe to land under the CURRENT schema props —
@@ -1400,22 +1208,6 @@ object TxTable {
     * is free: [[commitChecked]] inherits schema/colmap props from the
     * CURRENT manifest, so landing the file list adopts the new
     * metadata. */
-  /** Resolve `name` as the LOGICAL column name of ANY retained version,
-    * newest first, to its stable PHYSICAL column (round 20, OCC
-    * auto-retry): a write analyzed against one snapshot can arrive at
-    * plan time after a concurrent rename changed the logical view —
-    * the name it carries is some era's alias of a physical column that
-    * never moved. O(retained versions) manifest metadata, and only on
-    * the race path (current-name resolution failed). */
-  private[graft] def resolveHistoricalLogical(root: String,
-      name: String): Option[String] =
-    versions(root).reverse.view.flatMap { v =>
-      inferLogicalSchema(root, v)
-        .filter(_.fieldNames.contains(name))
-        .map(_ => colMapOf(readManifest(root, v))
-          .flatMap(_.logToPhys.get(name)).getOrElse(name))
-    }.headOption
-
   private[graft] def appendRebaseCompatible(
       stagedCols: Seq[(String, DataType)],
       cur: Map[String, String]): Boolean = {
@@ -1432,87 +1224,33 @@ object TxTable {
     }
   }
 
-  private def schemaMetaOf(root: String, v: Int): Map[String, String] =
-    if (v == 0) Map.empty
-    else readManifest(root, v).props.filter {
-      case (k, _) => SchemaProps(k)
-    }
-
+  /** Append commit: stage df, publish prev ++ staged. The caller's
+    * frame carries LOGICAL names; staging converts to physical. A
+    * logical name colliding with a TOMBSTONED physical name (re-add
+    * after drop) writes under a fresh `<name>__r<version>` physical
+    * name registered in the same commit — dropped data never
+    * resurrects. A bucketed table's rows route under
+    * `data/__bucket=<b>/` with the shared hash. */
   private[graft] def append(s: SparkSession, root: String, df: DataFrame,
-      extraProps: Map[String, String] = Map.empty): Int = {
-    // metadata-race replan loop (ADVICE r18): the schema/colmap props
-    // are computed from the CURRENT manifest, but commit runs its own
-    // OCC loop — without a check, a promote/rename landing in between
-    // would be silently reverted by these stale props. The check aborts
-    // the commit; this loop re-stages under the NEW metadata. Bounded:
-    // each retry means some other writer's METADATA commit won.
-    var round = 0
-    while (true) {
-      val v = currentVersion(root)
-      val planned = schemaMetaOf(root, v)
-      val cm = if (v == 0) None else colMapOf(readManifest(root, v))
-      val (phys, cmProps) = cm match {
-        case None => (df, Map.empty[String, String])
-        case Some(m) =>
-          val fresh = df.columns.toSeq.filter(c =>
-            !m.logToPhys.contains(c) && m.droppedPhys.contains(c))
-          val m2 =
-            if (fresh.isEmpty) m
-            else m.copy(renames =
-              m.renames ++ fresh.map(c => c -> s"${c}__r${v + 1}"))
-          (toPhysical(df, Some(m2)),
-            if (fresh.isEmpty) Map.empty[String, String]
-            else encodeColMapProps(m2))
-      }
-      // schema tracking: merge this append's physical schema into the
-      // recorded table schema (adds evolve, narrower numerics cast up,
-      // wider ones fail loudly pointing at promoteColumnType)
-      val (physCast, schemaProps) = withTblSchema(root, v, phys)
-      // a BUCKETED table's append routes rows under data/__bucket=<b>/
-      // with the shared hash — a flat stage would corrupt the layout
-      val bucket =
-        if (v == 0) None else bucketSpecOf(readManifest(root, v))
-      val added = bucket match {
-        case Some((bc, n)) => stageBucketed(s, root, physCast, bc, n)
-        case None => writeData(s, root, physCast)
-      }
-      try {
-        return commitChecked(root, "append", _ ++ added,
-          extraProps ++ cmProps ++ schemaProps,
-          cur => {
-            val now = cur.filter { case (k, _) => SchemaProps(k) }
-            if (now != planned) throw new MetaRaceRetry
-          })
-      } catch {
-        case _: MetaRaceRetry =>
-          added.foreach(f => java.nio.file.Files.deleteIfExists(
-            new java.io.File(root, f).toPath): Unit)
-          round += 1
-          if (round >= 20) sys.error(
-            s"txtable append at $root lost 20 consecutive metadata " +
-              "races (rename/drop/promote storm) — giving up")
-      }
-    }
-    -1 // unreachable
-  }
+      extraProps: Map[String, String] = Map.empty): Int =
+    appendLike(s, root, df, Nil, extraProps)
 
   /** Append commit of a PARTITIONED drop (round 18, VERDICT r17 item
     * 2): rows land under `data/<col>=<value>/…`, the manifest entry
     * carries the partition directory in its path, and [[computeStats]]
     * lifts the path segment into exact min = max stats — so partition
-    * pruning IS stats skipping ([[snapshotWhere]] plans only matching
-    * partitions' files with zero extra machinery). Reads re-derive the
-    * partition column from the directory via Spark's partition
-    * discovery (`basePath`), same as every layout-partitioned source.
+    * pruning IS stats skipping (a partition predicate on [[snapshot]]
+    * plans only matching partitions' files with zero extra machinery).
+    * The reader fills the partition column from the directory segment.
     * The rewrite paths (delete/merge/compact) re-stage survivors
-    * PARTITION-PRESERVING ([[writeDataLike]]): the basePath read
-    * carries the directory column in, `partitionBy` lays it back out,
+    * PARTITION-PRESERVING ([[writeDataLike]]): the read carries the
+    * directory column in, `partitionBy` lays it back out,
     * and a single-partition predicate's rewrite touches only that
     * partition's files (LayoutSpec pins it). */
   private[graft] def appendPartitioned(s: SparkSession, root: String,
       df: DataFrame, partCol: String,
       extraProps: Map[String, String] = Map.empty): Int =
-    appendPartitionedCols(s, root, df, Seq(partCol), extraProps)
+    appendLike(s, root, df, Seq(partCol), extraProps)
 
   /** Multi-column twin of [[appendPartitioned]] (round 20): rows land
     * under nested `data/a=…/b=…/` directories, outermost column
@@ -1523,32 +1261,62 @@ object TxTable {
       df: DataFrame, partCols: Seq[String],
       extraProps: Map[String, String] = Map.empty): Int = {
     require(partCols.nonEmpty)
-    // same metadata-race replan loop as [[append]] (ADVICE r18)
+    appendLike(s, root, df, partCols, extraProps)
+  }
+
+  /** The one append loop behind [[append]] and [[appendPartitionedCols]]
+    * (`partCols` LOGICAL, outermost first; Nil = flat or bucketed).
+    * Metadata-race replan (ADVICE r18): the schema/colmap props are
+    * computed from the CURRENT manifest, but commit runs its own OCC
+    * loop — without a check, a promote/rename landing in between would
+    * be silently reverted by these stale props. The check aborts the
+    * commit; this loop re-stages under the NEW metadata. Bounded: each
+    * retry means some other writer's METADATA commit won. */
+  private def appendLike(s: SparkSession, root: String, df: DataFrame,
+      partCols: Seq[String], extraProps: Map[String, String]): Int = {
     var round = 0
     while (true) {
       val v = currentVersion(root)
-      val planned = schemaMetaOf(root, v)
-      val cm = if (v == 0) None else colMapOf(readManifest(root, v))
+      val m = if (v == 0) None else Some(readManifest(root, v))
+      val planned = m.fold(Map.empty[String, String])(_.props.filter {
+        case (k, _) => SchemaProps(k)
+      })
+      val cm = m.flatMap(colMapOf)
+      val (phys, cmProps) = cm match {
+        case None => (df, Map.empty[String, String])
+        case Some(c) =>
+          val fresh = df.columns.toSeq.filter(n =>
+            !c.logToPhys.contains(n) && c.droppedPhys.contains(n))
+          val c2 =
+            if (fresh.isEmpty) c
+            else c.copy(renames =
+              c.renames ++ fresh.map(n => n -> s"${n}__r${v + 1}"))
+          (toPhysical(df, Some(c2)),
+            if (fresh.isEmpty) Map.empty[String, String]
+            else encodeColMapProps(c2))
+      }
       val physParts = partCols.map(c =>
         cm.flatMap(_.logToPhys.get(c)).getOrElse(c))
-      val (physCast, schemaProps) =
-        withTblSchema(root, v, toPhysical(df, cm))
-      val added = stagePartitioned(s, root, physCast, physParts)
+      // schema tracking: merge this append's physical schema into the
+      // recorded table schema (adds evolve, narrower numerics cast up,
+      // wider ones fail loudly pointing at promoteColumnType)
+      val (physCast, schemaProps) = withTblSchema(m, phys)
+      val added = writeDataLike(s, root, physCast, physParts,
+        m.flatMap(bucketSpecOf))
       try {
         return commitChecked(root, "append", _ ++ added,
-          extraProps ++ schemaProps,
+          extraProps ++ cmProps ++ schemaProps,
           cur => {
             val now = cur.filter { case (k, _) => SchemaProps(k) }
             if (now != planned) throw new MetaRaceRetry
           })
       } catch {
         case _: MetaRaceRetry =>
-          added.foreach(f => java.nio.file.Files.deleteIfExists(
-            new java.io.File(root, f).toPath): Unit)
+          discardStaged(root, added)
           round += 1
           if (round >= 20) sys.error(
-            s"txtable appendPartitioned at $root lost 20 consecutive " +
-              "metadata races — giving up")
+            s"txtable append at $root lost 20 consecutive metadata " +
+              "races (rename/drop/promote storm) — giving up")
       }
     }
     -1 // unreachable
@@ -1614,13 +1382,15 @@ object TxTable {
     * O(1) publish, against the copy-on-write delete's O(affected
     * files) rewrite — at 100 TB a GDPR delete touches KBs of addresses
     * instead of rewriting TBs of survivors, which is why every modern
-    * format grew this mode. Readers pay the balancing cost: every
-    * snapshot anti-joins the (broadcast, commit-sized) delete set until
-    * a compaction materializes it away ([[qTableCompact]]'s rewrite
-    * publishes a data-only manifest). Matching is evaluated on the
-    * DV-applied snapshot, so a second pass over the same predicate
-    * addresses nothing and commits nothing (convergent, like the
-    * rewrite delete). Conflict check: the commit closure requires every
+    * format grew this mode. Readers pay the balancing cost: every scan
+    * task reads its file's delete entries and skips those row indexes
+    * until a compaction materializes them away ([[qTableCompact]]'s
+    * rewrite publishes a data-only manifest). The addresses are the
+    * scan's own `_tx_pos` numbering, so the address written here and
+    * the delete the reader applies can never disagree. Matching is
+    * evaluated on the DV-applied snapshot, so a second pass over the
+    * same predicate addresses nothing and commits nothing (convergent,
+    * like the rewrite delete). Conflict check: the commit closure requires every
     * TARGET file is still a listed data entry — a concurrent rewrite
     * that replaced a target would otherwise carry the matching rows
     * into a new file our addresses don't cover, silently losing the
@@ -1650,18 +1420,19 @@ object TxTable {
     var attempt = 0
     while (true) {
       val cur = currentVersion(root)
-      val matching = snapshotCore(s, root, cur,
-          mergeSchema = false, withAddress = true)
-        .filter(pred)
-        .select(fnameOf(col("__tx_file")).as("fname"),
-          col("__tx_pos").as("pos"), col("__tx_file").as("file"))
+      // addresses come from the scan's own row numbering (`_tx_pos`,
+      // counted before deletes — the ordinal the reader skips), read on
+      // the DV-applied snapshot
+      val matching = snapshot(s, root, cur).filter(pred)
+        .select(fnameOf(col("_tx_file")).as("fname"),
+          col("_tx_pos").as("pos"), col("_tx_file").as("file"))
         .localCheckpoint(true) // bounded by the delete size; one eval
       if (matching.isEmpty) return (currentVersion(root), Seq.empty)
       // conflict-check targets by their FULL manifest path (a
       // partitioned entry is data/k=v/name); the DV address itself
       // stays the basename — unique via Spark's per-job UUID
       val targets = matching.select("file").distinct()
-        .collect().map(r => relOf(root, r.getString(0))).toSet
+        .collect().map(r => r.getString(0).stripPrefix(s"$root/")).toSet
       val dvFiles = writeDeletes(s, root, matching.select("fname", "pos"))
       hook(); hook = () => ()
       try {
@@ -1729,11 +1500,16 @@ object TxTable {
     * as one `batch=`-tagged append commit, or — when the epoch is at or
     * below the table's `lastbatch` high-water mark (a replay: failure
     * after the commit landed but before the checkpoint recorded it) —
-    * are DISCARDED and the call no-ops, returning false. Same single-
-    * writer-per-checkpoint contract as [[commitBatch]] (Structured
-    * Streaming delivers epoch ids monotonically per checkpoint); the
-    * difference is the files already exist when the replay is detected,
-    * so idempotence must reclaim them rather than skip a write. */
+    * are DISCARDED and the call no-ops, returning false. Together with
+    * the checkpoint's offset log this closes the sink half of the
+    * exactly-once contract (StreamingSpec). The high-water mark rides
+    * the inherited `lastbatch` prop — O(1), and vacuum-proof because the
+    * prop carries forward after the manifest that committed batch K is
+    * pruned (Delta's per-writer `txn` action plays the same role).
+    * Structured Streaming runs ONE active query per checkpoint and
+    * delivers epoch ids monotonically, so replayed == not above the
+    * high-water mark by construction. The files already exist when the
+    * replay is detected, so idempotence reclaims them. */
   private[graft] def commitEpoch(root: String, epochId: Long,
       staged: Seq[String],
       checkProps: Map[String, String] => Unit = _ => ()): Boolean = {
@@ -1748,51 +1524,6 @@ object TxTable {
           "lastbatch" -> math.max(epochId,
             hw.getOrElse(Long.MinValue)).toString), checkProps): Unit
       catch { case e: Throwable => discardStaged(root, staged); throw e }
-      true
-    }
-  }
-
-  /** Idempotent micro-batch append for a Structured Streaming
-    * foreachBatch sink: the commit carries batch=<id>; a REPLAYED batch
-    * (failure after the commit landed but before the checkpoint's commit
-    * log recorded it) finds its id already in the log and becomes a
-    * no-op — zero new files, zero new versions. Together with the
-    * checkpoint's offset log this closes the sink half of the
-    * exactly-once contract (StreamingSpec). The replay check reads the
-    * HIGH-WATER batch id from the current manifest's inherited
-    * `lastbatch` prop — O(1), and vacuum-proof because the prop carries
-    * forward even after the manifest that committed batch K is pruned
-    * (this retires the r17 retention caveat for the prop-based path;
-    * Delta's per-writer `txn` action plays the same role). Structured
-    * Streaming runs ONE active query per checkpoint and delivers batch
-    * ids monotonically, so the check-then-commit pair has a single
-    * writer and replayed == not-above-high-water by construction. An
-    * O(versions) scan over `batch=` props remains as the fallback for
-    * tables whose manifests predate the prop. */
-  private[graft] def commitBatch(s: SparkSession, root: String,
-      batchId: Long, df: DataFrame): Boolean = {
-    // O(1) replay check (round 18, closing the documented O(versions)
-    // scan): the high-water batch id rides the inherited `lastbatch`
-    // prop, surviving vacuum — which also retires the retention-window
-    // caveat for the PROP-based path (the scan fallback covers tables
-    // whose manifests predate the prop). Structured Streaming delivers
-    // batch ids monotonically per checkpoint (single writer per
-    // checkpoint by construction), so replayed == not above the
-    // high-water mark.
-    val cur = currentVersion(root)
-    val lastBatch =
-      if (cur == 0) None
-      else readManifest(root, cur).props.get("lastbatch").map(_.toLong)
-    val seen = lastBatch match {
-      case Some(hw) => batchId <= hw
-      case None => versions(root).exists(v =>
-        readManifest(root, v).props.get("batch").contains(batchId.toString))
-    }
-    if (seen) false
-    else {
-      append(s, root, df, Map("batch" -> batchId.toString,
-        "lastbatch" -> math.max(batchId,
-          lastBatch.getOrElse(Long.MinValue)).toString)): Unit
       true
     }
   }
@@ -1882,8 +1613,8 @@ object TxTable {
     * the same load/ingest/delete lifecycle as [[qTableCommit]], but v3
     * is a [[deleteVector]] position-delete commit — the matching rows'
     * (file, row-index) addresses land under deletes/, every data file
-    * stays byte-identical, and the snapshot read applies the broadcast
-    * delete set. The copy-on-write twin (q_table_commit) rewrites
+    * stays byte-identical, and the snapshot read skips the addressed
+    * rows inside the scan. The copy-on-write twin (q_table_commit) rewrites
     * affected files; this key is the write-cheap/read-cost trade every
     * modern format offers, and at 100 TB it is the difference between
     * committing KBs of addresses and rewriting TBs of survivors.
@@ -1955,63 +1686,54 @@ object TxTable {
     * both sides cancel, while a key present on both sides with a
     * CHANGED payload is an UPDATE (a merge commit rewrote it) and is
     * emitted as such — key-only cancellation silently swallowed updates.
-    * All diff joins are broadcast: both sides are COMMIT-sized, never
-    * table-sized. Assumes the table is keyed (≤1 row per o_orderkey —
-    * true of every commit op here); a multiset table would need
-    * exceptAll semantics. Returns (inserts, deletes, updates) as
-    * optional frames carrying at least (o_orderkey, o_custkey); updates
-    * are POST-images (the Delta-CDF update_postimage row — the
-    * pre-image is recoverable from the prior version's snapshot). */
+    * Each side is a snapshot read narrowed by a `_tx_file` IN predicate,
+    * which the scan plans as an exact file selection — so a side plans
+    * ONLY its changed files, and reads them under its version's column
+    * mapping and schema. All diff joins are broadcast: both sides are
+    * COMMIT-sized, never table-sized. Assumes the table is keyed (≤1
+    * row per o_orderkey — true of every commit op here); a multiset
+    * table would need exceptAll semantics. Returns (inserts, deletes,
+    * updates) as optional frames carrying at least (o_orderkey,
+    * o_custkey); updates are POST-images (the Delta-CDF
+    * update_postimage row — the pre-image is recoverable from the prior
+    * version's snapshot). */
   private[graft] def changeSets(s: SparkSession, root: String,
       prev: Int, cur: Int)
       : (Option[DataFrame], Option[DataFrame], Option[DataFrame]) = {
-    val prevM = readManifest(root, prev)
-    val curM = readManifest(root, cur)
-    val pm = prevM.files
-    val cm = curM.files
+    val pm = readManifest(root, prev).files
+    val cm = readManifest(root, cur).files
     val pf = dataEntries(pm).toSet
     val cf = dataEntries(cm).toSet
-    // added files carry fresh names no prior delete entry can address,
-    // so they read raw; removed files must read with the PREV manifest's
-    // position deletes applied — otherwise a rewrite/compaction after a
-    // DV delete re-reports the DV-deleted rows as deletes a second time
-    // (r17 review: the rewrite input was DV-applied, so they are absent
-    // from `added` and the anti-join cannot cancel them)
-    // each side reads under ITS version's column mapping, so the diff
-    // compares logical views even across a rename commit
-    val added = {
-      val fs = (cf -- pf).toSeq.sorted
-      if (fs.isEmpty) None
-      else Some(applyColMap(
-        s.read.parquet(fs.map(f => s"$root/$f"): _*), colMapOf(curM)))
-    }
-    val removed = {
-      val fs = (pf -- cf).toSeq.sorted
-      if (fs.isEmpty) None
-      else Some(applyColMap(applyDeletes(s, root,
-        withAddressCols(s.read.parquet(fs.map(f => s"$root/$f"): _*)),
-        deleteEntries(pm))
-        .drop("__tx_file", "__tx_pos"), colMapOf(prevM)))
-    }
+    // the version-`v` read of exactly `files`, None when there are none
+    def filesAt(v: Int, files: Iterable[String]): Option[DataFrame] =
+      if (files.isEmpty) None
+      else Some(snapshot(s, root, v).filter(col("_tx_file").isin(
+        files.toSeq.sorted.map(f => s"$root/$f"): _*)))
+    // added files carry fresh names no prior delete entry can address;
+    // removed files read at PREV, so prev's position deletes apply —
+    // otherwise a rewrite/compaction after a DV delete re-reports the
+    // DV-deleted rows as deletes a second time (r17 review: the rewrite
+    // input was DV-applied, so they are absent from `added` and the
+    // anti-join cannot cancel them)
+    val added = filesAt(cur, cf -- pf)
+    val removed = filesAt(prev, pf -- cf)
     // position-delete entries added by this commit address rows by
     // (file name, row index): those rows are CDC deletes — read ONLY
-    // their target files, semi-join the broadcast address set
+    // their target files at prev, semi-join the broadcast address set
     val addedDv = (deleteEntries(cm).toSet -- deleteEntries(pm)).toSeq.sorted
     val dvDeletes =
       if (addedDv.isEmpty) None
       else {
         val dv = s.read.parquet(addedDv.map(f => s"$root/$f"): _*)
-          .select(col("fname").as("__tx_fname"), col("pos").as("__tx_pos"))
+          .select(col("fname").as("__tx_fname"), col("pos").as("_tx_pos"))
         val targets = dv.select("__tx_fname").distinct()
           .collect().map(_.getString(0)).toSet
-        val targetFiles = cf.filter(f => targets(f.stripPrefix("data/")))
-          .toSeq.sorted
-        if (targetFiles.isEmpty) None
-        else Some(withAddressCols(
-            s.read.parquet(targetFiles.map(f => s"$root/$f"): _*))
-          .withColumn("__tx_fname", fnameOf(col("__tx_file")))
-          .join(broadcast(dv), Seq("__tx_fname", "__tx_pos"), "left_semi")
-          .select("o_orderkey", "o_custkey"))
+        filesAt(prev, pf.filter(f =>
+            targets(f.substring(f.lastIndexOf('/') + 1))))
+          .map(_.select(col("o_orderkey"), col("o_custkey"),
+              fnameOf(col("_tx_file")).as("__tx_fname"), col("_tx_pos"))
+            .join(broadcast(dv), Seq("__tx_fname", "_tx_pos"), "left_semi")
+            .select("o_orderkey", "o_custkey"))
       }
     val (ins, rewriteDel, upd) = (added, removed) match {
       case (Some(a0), Some(r0)) =>
@@ -2187,7 +1909,7 @@ object TxTable {
     val root = ensureDemoTable(s, dir, "clustbl", buildClusterHistory)
     val cut = Tables.orders(s, dir).agg(max("o_custkey")).head()
       .getAs[Number](0).longValue / 10
-    snapshotWhere(s, root, col("o_custkey") <= cut)
+    snapshot(s, root).filter(col("o_custkey") <= cut)
       .orderBy("o_orderkey")
   }
 
@@ -2240,20 +1962,17 @@ object TxTable {
     ensureDemoTable(s, dir, "evotbl", buildEvoHistory)
 
   /** q_table_schema_evolution — schema evolution under commits (round
-    * 17): a later commit appends files carrying an ADDED column, and the
-    * current snapshot reads with a footer-union (`mergeSchema`) so
-    * pre-drift files NULL-backfill the new column — while a reader
-    * pinned BEFORE the drift still sees the base schema, because its
-    * manifest lists only base-schema files (time travel across a schema
-    * change; LayoutSpec pins both). This is the add-column half of what
-    * a table format's schema metadata provides; the residual limits
-    * stay honest: no rename/drop tracking, no type promotion policy,
-    * and the footer union is a planning-time read per file at real file
-    * counts where a format consults its metadata once. Oracle
-    * recomputes the union + CASE-NULL backfill from the source table. */
+    * 17): a later commit appends files carrying an ADDED column; the
+    * append widens the manifest-tracked schema, and the current snapshot
+    * reads under it, so pre-drift files NULL-backfill the new column —
+    * while a reader pinned BEFORE the drift still sees the base schema,
+    * because its manifest carries the base schema (time travel across a
+    * schema change; LayoutSpec pins both). Planning consults the
+    * manifest once, never a per-file footer union. Oracle recomputes the
+    * union + CASE-NULL backfill from the source table. */
   def qTableSchemaEvolution(s: SparkSession, dir: String): DataFrame = {
     val root = ensureEvoTable(s, dir)
-    snapshot(s, root, mergeSchema = true).orderBy("o_orderkey")
+    snapshot(s, root).orderBy("o_orderkey")
   }
 
   // memory-sink views are per-invocation (a name can't be reused while
@@ -2328,8 +2047,9 @@ object TxTable {
   /** q_table_skipping — data-skipping snapshot reads (round 18, VERDICT
     * r17 item 1): the commit protocol records per-file column min/max
     * in each manifest ([[computeStats]], lifted from parquet footers at
-    * commit time), and [[snapshotWhere]] plans ONLY the files whose
-    * ranges may hold a matching row. The demo table is owner-clustered
+    * commit time), and the predicate on the snapshot read pushes into
+    * the scan, which plans ONLY the files whose ranges may hold a
+    * matching row. The demo table is owner-clustered
     * (range-partitioned by o_custkey, 8 files per commit), so a
     * selective custkey predicate proves out: most files' spans are
     * disjoint from the cut and never enter the plan — at 100 TB the
@@ -2337,13 +2057,12 @@ object TxTable {
     * is derived from the source's max (max/10), so selectivity is
     * SF-independent. Oracle: identity semantics — the pruned read must
     * equal the full recompute under the same predicate; LayoutSpec pins
-    * the structural half (files-planned < files-listed, pruned ==
-    * unpruned). */
+    * the structural half (files-planned < files-listed). */
   def qTableSkipping(s: SparkSession, dir: String): DataFrame = {
     val root = ensureDemoTable(s, dir, "skiptbl")
     val cut = Tables.orders(s, dir).agg(max("o_custkey")).head()
       .getAs[Number](0).longValue / 10
-    snapshotWhere(s, root, col("o_custkey") <= cut)
+    snapshot(s, root).filter(col("o_custkey") <= cut)
       .orderBy("o_orderkey")
   }
 
@@ -2369,15 +2088,14 @@ object TxTable {
     * partition directory (`data/o_orderpriority=<v>/part-…`),
     * [[computeStats]] lifts the path segment into exact min = max
     * stats, and a partition-column predicate prunes to exactly the
-    * matching partition's files through the SAME [[snapshotWhere]]
-    * mechanism as value skipping — one pruning layer, two evidence
-    * sources, the Iceberg partition-field-as-stats design. The read
-    * re-derives the partition column via Spark partition discovery
-    * (basePath). Oracle: recompute of both loads filtered to the
-    * partition. */
+    * matching partition's files through the SAME scan pruning as value
+    * skipping — one pruning layer, two evidence sources, the Iceberg
+    * partition-field-as-stats design. The reader fills the partition
+    * column from the directory segment. Oracle: recompute of both loads
+    * filtered to the partition. */
   def qTablePartitioned(s: SparkSession, dir: String): DataFrame = {
     val root = ensureDemoTable(s, dir, "parttbl", buildPartHistory)
-    snapshotWhere(s, root, col("o_orderpriority") === "1-URGENT")
+    snapshot(s, root).filter(col("o_orderpriority") === "1-URGENT")
       .select("o_orderkey", "o_custkey", "o_totalprice",
         "o_orderpriority")
       .orderBy("o_orderkey")
@@ -2470,23 +2188,20 @@ object TxTable {
       .orderBy("o_orderkey")
   }
 
-  /** q_table_scan_pushdown — the DSv2 BATCH read (round 18): the same
-    * `txtable` format that streams the commit log serves
-    * `spark.read.format("txtable").load(root)`, and CATALYST drives the
-    * format's pruning instead of a library helper — the query's filter
-    * is pushed into the scan ([[graft.streaming.TxTableScanBuilder]]),
-    * converted to the same normalized predicate tree
-    * [[snapshotWhere]] prunes with, and only the data files whose
-    * manifest min/max stats may match are planned (each kept file = one
-    * input partition; the plan's scan description carries the
+  /** q_table_scan_pushdown — the DSv2 BATCH read (round 18) addressed
+    * by path: `spark.read.format("txtable").load(root)`, the scan every
+    * snapshot read plans through. CATALYST drives the format's pruning —
+    * the query's filter is pushed into the scan
+    * ([[graft.streaming.TxTableScanBuilder]]) and only the data files
+    * whose manifest min/max stats may match are planned (each kept file
+    * = one input partition; the plan's scan description carries the
     * files-planned/files-listed evidence). Columns prune into the
     * per-file vectorized reader, schema is INFERRED from the
     * manifest-tracked tblschema (O(1), zero footers), position deletes
     * apply inside the reader, and the scan reports post-skipping row
     * counts to the optimizer ([[org.apache.spark.sql.connector.read
     * .SupportsReportStatistics]]). Same owner-clustered table shape and
-    * predicate as q_table_skipping, so the two keys pin that the
-    * Catalyst-driven path and the library path are ONE mechanism.
+    * predicate as q_table_skipping, reached without the library.
     * Oracle: identity — the pushed-down read equals the full recompute
     * under the same predicate; LayoutSpec pins partitions-planned <
     * files-listed, DV application, time travel, and schema inference. */
@@ -2545,9 +2260,9 @@ object TxTable {
     * `writeStream.format("txtable")` lands each micro-batch through
     * [[commitEpoch]] — executor-staged files published as one
     * `batch=`-tagged append commit, replayed epochs discarding their
-    * staging (the exactly-once contract the foreachBatch+commitBatch
-    * pattern pins, now engine-driven; StreamingSpec pins checkpoint
-    * resume streams only NEW commits and the replay-discard path).
+    * staging (the exactly-once sink contract, engine-driven;
+    * StreamingSpec pins checkpoint resume streams only NEW commits and
+    * the replay-discard path).
     * Per-invocation sink root + checkpoint: the stream IS the
     * semantics. Oracle: the drained sink equals the source recompute. */
   def qTableStreamSink(s: SparkSession, dir: String): DataFrame = {
@@ -2583,8 +2298,9 @@ object TxTable {
     * validates each frame against the table schema before our DSv2
     * writer stages a byte), and the final SELECT runs through the
     * pushdown batch scan (stats skipping, column pruning, post-skipping
-    * statistics). One format, three surfaces: the SAME root is
-    * readable by the library snapshot and `spark.read.format`.
+    * statistics). One format, three surfaces, one reader: the SAME root
+    * is readable by SQL, the library snapshot and `spark.read.format`,
+    * all through the DSv2 scan.
     * Per-invocation warehouse: the DDL+DML ARE the semantics.
     * LayoutSpec pins VERSION AS OF time-travel SQL, engine-side INSERT
     * validation, DROP/list, and the ALTER refusal. Oracle: recompute

@@ -99,12 +99,22 @@ private[streaming] class TxRowLevelOperation(root: String,
     Array(org.apache.spark.sql.connector.expressions.Expressions
       .column("_tx_file"))
 
+  /** The ONE version every scan of this operation reads. Spark plans
+    * two scans for a command with a runtime group filter — the
+    * matching-rows subquery and the rewrite's input — and each would
+    * otherwise resolve "current" on its own: a concurrent rewrite
+    * landing between them made the subquery admit a file the input
+    * scan no longer lists, so a MERGE saw its matches vanish and
+    * re-inserted them as new rows. Pinned, both scans agree, and the
+    * commit's file check catches the concurrent rewrite. */
+  private lazy val readVersion: Int = TxTable.currentVersion(root)
+
   override def newScanBuilder(options: CaseInsensitiveStringMap)
       : ScanBuilder = {
-    val v = TxTable.currentVersion(root)
+    val v = readVersion
     val schema = TxTable.inferLogicalSchema(root, v).getOrElse(
       sys.error(s"row-level DML needs a schema-tracking table at $root"))
-    new TxTableScanBuilder(schema, root, versionAsOf = None,
+    new TxTableScanBuilder(schema, root, versionAsOf = Some(v),
       skipChange = false, maxVersions = Int.MaxValue,
       startingVersion = None, recorder = Some(this),
       runtimeFileFilter = true)

@@ -14,39 +14,40 @@ import org.apache.spark.sql.types.StructType
 
 import graft.sources.TxTable
 
-/** DSv2 BATCH read over the transactional table (round 18): the same
-  * `txtable` format that already streams the commit log now serves
-  * `spark.read.format("txtable").load(root)` — and because it is a real
-  * DataSource V2 scan, CATALYST drives the table format's own pruning
-  * machinery instead of a library-side helper:
+/** DSv2 BATCH read over the transactional table — the ONE batch reader
+  * of a txtable. `spark.read.format("txtable").load(root)`, the SQL
+  * catalog's SELECT, the library's [[TxTable.snapshot]] (a
+  * `versionAsOf`-pinned load), the DV address read and the change feed
+  * all plan through this scan, so CATALYST drives the table format's
+  * pruning machinery:
   *
   *  - FILTER PUSHDOWN → DATA SKIPPING. Catalyst pushes the query's
   *    `sources.Filter`s into [[TxTableScanBuilder.pushFilters]]; the
   *    convertible subtree (=, <, <=, >, >=, IN, AND, OR over
-  *    attr-vs-literal) becomes the same normalized predicate tree
-  *    [[TxTable.snapshotWhere]] prunes with, and `planInputPartitions`
-  *    plans ONLY the data files whose manifest min/max stats may hold a
-  *    matching row. Every filter is ALSO returned as residual, so Spark
-  *    re-evaluates rows inside kept files — files prune, rows filter,
-  *    exactly the Delta/Iceberg split, and soundness never depends on
-  *    the skipping layer. Partition pruning rides for free (partition
-  *    path segments are min=max "part" stats — one mechanism).
+  *    attr-vs-literal) becomes a normalized predicate tree, and
+  *    `planInputPartitions` plans ONLY the data files whose manifest
+  *    min/max stats may hold a matching row. Every filter is ALSO
+  *    returned as residual, so Spark re-evaluates rows inside kept
+  *    files — files prune, rows filter, exactly the Delta/Iceberg split,
+  *    and soundness never depends on the skipping layer. Partition
+  *    pruning rides for free (partition path segments are min=max
+  *    "part" stats — one mechanism), and a `_tx_file` `=`/`IN` leaf
+  *    selects files exactly (the path is constant within a file).
   *  - COLUMN PRUNING. `pruneColumns` narrows the read schema; the
   *    per-file reader projects each parquet file to exactly the
   *    surviving columns it physically carries (footer-resolved), so an
   *    unused column's pages are never decoded.
   *  - MERGE-ON-READ deletes apply IN THE READER: each planned file's
-  *    position-delete addresses ride its [[TxFilePartition]] (sorted
-  *    row indexes, commit-bounded — the Iceberg/Delta shape of shipping
-  *    per-file delete vectors to the scan), and the reader skips those
-  *    ordinals while iterating. No join above the scan.
+  *    position-delete files ride its [[TxFilePartition]], and the
+  *    reader skips the addressed ordinals while iterating (the
+  *    `_tx_pos` numbering). No join above the scan.
   *  - TIME TRAVEL via `option("versionAsOf", v)`; each version reads
   *    under its own column mapping and tracked schema (a pre-rename
   *    snapshot serves pre-rename names, a pre-promotion snapshot the
-  *    narrow types).
-  *  - SCHEMA INFERENCE from the manifest-tracked schema (`tblschema`) —
-  *    `.load(root)` needs no `.schema(...)` on a schema-tracking table,
-  *    and inference is O(1) manifest metadata, zero file footers.
+  *    narrow types, a pre-evolution file NULL-fills later columns).
+  *  - SCHEMA from the manifest-tracked schema (`tblschema`) — O(1)
+  *    manifest metadata, zero file footers; an empty table reads as
+  *    zero rows of its declared schema.
   *  - [[SupportsReportStatistics]] hands Catalyst the manifest's row
   *    counts and file sizes FOR THE PRUNED file set, so the optimizer
   *    sizes joins (e.g. broadcast decisions) from post-skipping
@@ -347,11 +348,12 @@ private[streaming] class TxTableScan(required: StructType,
   /** (kept, all-data-entries) under the pushed predicate tree — the
     * files-planned < files-listed evidence, surfaced in
     * [[description]] for plan audits. */
-  private lazy val pruned: (Seq[String], Seq[String]) = manifest match {
-    case None => (Nil, Nil)
-    case Some(m) =>
-      TxTable.pruneDataFilesTree(m, TxFilterTree.treeOf(pushed))
-  }
+  private[streaming] lazy val pruned: (Seq[String], Seq[String]) =
+    manifest match {
+      case None => (Nil, Nil)
+      case Some(m) =>
+        TxTable.pruneDataFilesTree(root, m, TxFilterTree.treeOf(pushed))
+    }
 
   override def description(): String = {
     val (kept, all) = pruned
@@ -732,8 +734,7 @@ private[streaming] class TxTableBatchWrite(root: String,
   override def useCommitCoordinator(): Boolean = true
 
   /** The DSv2 STREAMING sink (round 18): `writeStream.format("txtable")`
-    * — the native twin of the foreachBatch+[[TxTable.commitBatch]]
-    * pattern, same exactly-once contract, no user glue code. Each
+    * — the table's exactly-once streaming sink, no user glue code. Each
     * micro-batch's tasks stage hidden files exactly like the batch
     * writer; the epoch commit is [[TxTable.commitEpoch]]: a replayed
     * epoch (≤ the table's `lastbatch` high-water) DISCARDS its staged
@@ -1283,9 +1284,9 @@ private[streaming] object TxFilterToColumn {
 }
 
 /** `sources.Filter` → [[PlanBridge.PredNode]]: the normalization that
-  * lets Catalyst-pushed batch filters drive the SAME sound may-match
-  * evaluator as the library-side `snapshotWhere`. Unconvertible shapes
-  * become Opaque/None — the file is kept, never wrongly pruned. */
+  * lets Catalyst-pushed batch filters drive the sound may-match
+  * evaluator [[TxTable.mayMatch]]. Unconvertible shapes become
+  * Opaque/None — the file is kept, never wrongly pruned. */
 private[streaming] object TxFilterTree {
   import PlanBridge._
 

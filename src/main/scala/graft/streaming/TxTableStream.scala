@@ -17,7 +17,7 @@ import graft.sources.TxTable
 
 /** Structured Streaming SOURCE over the transactional table's commit log
   * (round 17) — the read side of the exactly-once contract whose sink
-  * half is [[TxTable.commitBatch]]: `spark.readStream.format("txtable")`
+  * half is [[TxTable.commitEpoch]]: `spark.readStream.format("txtable")`
   * turns the table into a subscription, so incremental consumers (the
   * day-2 dedup / decontamination keys) receive "what was appended since
   * my checkpoint" instead of re-scanning the corpus — the Delta-style
@@ -125,22 +125,24 @@ private[streaming] class TxTableTable(userSchema: StructType,
     with org.apache.spark.sql.connector.catalog.SupportsMetadataColumns {
   override def name(): String = defaultRoot.getOrElse("txtable")
 
-  /** `_tx_file` — the file-provenance metadata column (round 19; the
-    * `_metadata.file_path` analogue for this format): user-selectable
-    * (`SELECT _tx_file, … FROM tx.db.t`) and, because it is constant
-    * across every row of a file, the EXACT runtime group-filter
-    * attribute row-level DML prunes with (the role Iceberg's `_file`
-    * plays). Nullable: a MERGE's inserted rows come from no file. */
+  /** The row-address metadata columns (the `_metadata.file_path` /
+    * `row_index` analogues for this format), user-selectable
+    * (`SELECT _tx_file, _tx_pos, … FROM tx.db.t`):
+    *  - `_tx_file` — the data file's path. Constant across every row of
+    *    a file, so it is the EXACT runtime group-filter attribute
+    *    row-level DML prunes with (the role Iceberg's `_file` plays), and
+    *    an `=`/`IN` predicate on it selects files exactly at planning.
+    *  - `_tx_pos` — the row's index in its file BEFORE position deletes:
+    *    the ordinal the reader counts to apply deletes, so an address
+    *    read here and a delete applied there use ONE numbering.
+    * Nullable: a MERGE's inserted rows come from no file. */
   override def metadataColumns()
       : Array[org.apache.spark.sql.connector.catalog.MetadataColumn] =
-    Array(new org.apache.spark.sql.connector.catalog.MetadataColumn {
-      override def name(): String = "_tx_file"
-      override def dataType(): org.apache.spark.sql.types.DataType =
-        StringType
-      override def isNullable: Boolean = true
-      override def comment(): String =
-        "absolute path of the data file this row was read from"
-    })
+    Array(
+      TxTableTable.metaCol("_tx_file", StringType,
+        "path of the data file this row was read from"),
+      TxTableTable.metaCol("_tx_pos", LongType,
+        "index of this row in its data file, before position deletes"))
 
   private def dmlRoot(what: String): String = {
     require(pinnedVersion.isEmpty,
@@ -224,6 +226,17 @@ private[streaming] class TxTableTable(userSchema: StructType,
     new TxTableScanBuilder(userSchema, root, versionAsOf, skipChange,
       maxVersions, startingVersion, startingTimestamp)
   }
+}
+
+private[streaming] object TxTableTable {
+  def metaCol(n: String, t: DataType, doc: String)
+      : org.apache.spark.sql.connector.catalog.MetadataColumn =
+    new org.apache.spark.sql.connector.catalog.MetadataColumn {
+      override def name(): String = n
+      override def dataType(): DataType = t
+      override def isNullable: Boolean = true
+      override def comment(): String = doc
+    }
 }
 
 /** Version-number offset: the commit log IS the stream's clock. */
@@ -548,7 +561,8 @@ private[streaming] class TxFilePartitionReader(part: TxFilePartition,
   private val fileFields: Seq[String] = fileSchema.map(_._1)
   private val filePrimTypes: Map[String, String] = fileSchema.toMap
   private val declared = schema.fields.filter(f =>
-    f.name != "_commit_version" && f.name != "_tx_file")
+    f.name != "_commit_version" && f.name != "_tx_file" &&
+      f.name != "_tx_pos")
   // declared names are LOGICAL; files carry PHYSICAL columns — resolve
   // through the commit's column mapping (identity when unmapped)
   private def physOf(logical: String): String =
@@ -584,7 +598,7 @@ private[streaming] class TxFilePartitionReader(part: TxFilePartition,
           case DoubleType => java.lang.Double.valueOf(v.toDouble)
           case StringType => UTF8String.fromString(v)
           case other => sys.error(
-            s"txtable streaming reader: partition column $k declared " +
+            s"txtable reader: partition column $k declared " +
               s"as unsupported type $other (supported: int/long/" +
               "double/string)")
         })
@@ -600,8 +614,8 @@ private[streaming] class TxFilePartitionReader(part: TxFilePartition,
   // merge-on-read: skip this file's position-delete ordinals while
   // iterating (the batch scan ships DELETE-FILE PATHS in the partition,
   // resolved to sorted ordinals HERE on the executor; the vectorized
-  // reader emits rows in file order, so a running row index IS the
-  // `_metadata.row_index` the delete vector addresses)
+  // reader emits rows in file order, so the running row index is the
+  // `_tx_pos` address [[TxTable.deleteVector]] wrote)
   private val deleted: Array[Long] =
     if (part.dvFiles.isEmpty) part.deleted
     else (part.deleted ++ TxFilePartition.readDeleted(part.dvFiles,
@@ -630,7 +644,7 @@ private[streaming] class TxFilePartitionReader(part: TxFilePartition,
         case IntegerType => java.lang.Integer.valueOf(part.version)
         case LongType => java.lang.Long.valueOf(part.version.toLong)
         case dt => sys.error(
-          s"txtable streaming reader: _commit_version must be declared " +
+          s"txtable reader: _commit_version must be declared " +
             s"int or bigint, got $dt")
       }
       // file-provenance metadata column (round 19): the absolute path
@@ -641,6 +655,12 @@ private[streaming] class TxFilePartitionReader(part: TxFilePartition,
         case StringType => UTF8String.fromString(part.path)
         case dt => sys.error(
           s"txtable reader: _tx_file must be declared string, got $dt")
+      }
+      // row address (the index the delete vector above is matched on)
+      else if (f.name == "_tx_pos") f.dataType match {
+        case LongType => java.lang.Long.valueOf(rowIdx)
+        case dt => sys.error(
+          s"txtable reader: _tx_pos must be declared bigint, got $dt")
       }
       else presentIdx.get(physOf(f.name)) match {
         case None => partValues.getOrElse(f.name, null) // partition dir value, or pre-evolution file
@@ -667,7 +687,7 @@ private[streaming] class TxFilePartitionReader(part: TxFilePartition,
           case (TimestampType | TimestampNTZType, _) =>
             java.lang.Long.valueOf(row.getLong(i))
           case (dt, _) => sys.error(
-            s"txtable streaming reader: unsupported field type $dt " +
+            s"txtable reader: unsupported field type $dt " +
               s"for ${f.name} (supported: long/int/double/float/" +
               "boolean/string/date/timestamp/timestamp_ntz)")
         }

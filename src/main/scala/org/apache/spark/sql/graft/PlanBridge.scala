@@ -46,52 +46,17 @@ object PlanBridge {
     classic.ExpressionUtils.expression(c)
 
   /** Neutral predicate tree for TxTable's data-skipping layer
-    * (graft.sources.TxTable). Spark 4's Column wraps a `private[sql]`
-    * ColumnNode tree, so the walk that normalizes it lives here; the
-    * skipping evaluator consumes this ADT and never sees sql.internal.
-    * Anything beyond attribute-vs-literal comparisons, AND/OR, and IN
-    * collapses to [[Opaque]] — the evaluator's keep-the-file default. */
+    * (graft.sources.TxTable.mayMatch), normalized from the
+    * `sources.Filter`s Catalyst pushes into the txtable scan
+    * (graft.streaming.TxFilterTree). Anything beyond attribute-vs-literal
+    * comparisons, AND/OR, and IN collapses to [[Opaque]] — the
+    * evaluator's keep-the-file default. */
   sealed trait PredNode
   final case class PredAnd(l: PredNode, r: PredNode) extends PredNode
   final case class PredOr(l: PredNode, r: PredNode) extends PredNode
-  /** `col op value` with op ∈ =, <, <=, >, >= (already flipped when the
-    * literal was on the left). */
+  /** `col op value` with op ∈ =, <, <=, >, >=. */
   final case class PredCmp(op: String, col: String, value: Any)
       extends PredNode
   final case class PredIn(col: String, values: Seq[Any]) extends PredNode
   case object Opaque extends PredNode
-
-  def predTree(c: org.apache.spark.sql.Column): PredNode = {
-    import org.apache.spark.sql.{internal => ci}
-    object Attr {
-      def unapply(x: ci.ColumnNode): Option[String] = x match {
-        case a: ci.UnresolvedAttribute => Some(a.nameParts.last)
-        case _ => None
-      }
-    }
-    def flip(op: String): String = op match {
-      case "<" => ">"
-      case "<=" => ">="
-      case ">" => "<"
-      case ">=" => "<="
-      case other => other
-    }
-    def walk(x: ci.ColumnNode): PredNode = x match {
-      case f: ci.UnresolvedFunction =>
-        (f.functionName, f.arguments) match {
-          case ("and", Seq(l, r)) => PredAnd(walk(l), walk(r))
-          case ("or", Seq(l, r)) => PredOr(walk(l), walk(r))
-          case (op @ ("=" | "<" | "<=" | ">" | ">="),
-              Seq(Attr(a), l: ci.Literal)) => PredCmp(op, a, l.value)
-          case (op @ ("=" | "<" | "<=" | ">" | ">="),
-              Seq(l: ci.Literal, Attr(a))) => PredCmp(flip(op), a, l.value)
-          case ("in", Attr(a) +: vs)
-              if vs.forall(_.isInstanceOf[ci.Literal]) =>
-            PredIn(a, vs.map(_.asInstanceOf[ci.Literal].value))
-          case _ => Opaque
-        }
-      case _ => Opaque
-    }
-    walk(c.node)
-  }
 }

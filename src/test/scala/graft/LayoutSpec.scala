@@ -2,6 +2,8 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.streaming.TxScanProbe
+
 /** Write-side layout operators (sources/Layout.scala): compaction
   * file-count bound + schema-evolution merge semantics — the structural
   * halves the identity oracles can't see. */
@@ -144,6 +146,12 @@ class LayoutSpec extends AnyFunSuite with SparkFixture {
     sources.TxTable.init(root)
     root
   }
+
+  /** (planned, listed) data files of the version-`v` snapshot read of
+    * `root` filtered by `pred` — what the scan's stats skipping plans. */
+  private def plannedAt(root: String, v: Int,
+      pred: org.apache.spark.sql.Column): (Seq[String], Seq[String]) =
+    TxScanProbe.planned(sources.TxTable.snapshot(spark, root, v).filter(pred))
 
   /** SQL MERGE of temp view `src` into the table at `root` on
     * o_orderkey: matched rows take the source o_totalprice, unmatched
@@ -440,8 +448,17 @@ class LayoutSpec extends AnyFunSuite with SparkFixture {
     // not grow it — its manifest lists only base-schema files
     assert(sources.TxTable.snapshot(spark, root, 1).columns.toSeq ==
       Seq("o_orderkey", "o_custkey", "o_totalprice"))
-    val cur = sources.TxTable.snapshot(spark, root, mergeSchema = true)
-    assert(cur.columns.contains("o_prio"))
+    val cur = sources.TxTable.snapshot(spark, root)
+    assert(cur.columns.toSeq ==
+      Seq("o_orderkey", "o_custkey", "o_totalprice", "o_prio"))
+    // driver-side recompute: both drops, o_prio only on the odd keys
+    val want = Tables.orders(spark, sf0001)
+      .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
+        when(col("o_orderkey") % 2 === 1,
+          (col("o_orderkey") % 5).cast("int")).as("o_prio"))
+    assert(cur.orderBy("o_orderkey").collect().map(_.toSeq).toSeq ==
+      want.orderBy("o_orderkey").collect().map(_.toSeq).toSeq,
+      "evolved read diverged from the source recompute")
     // the backfill lands exactly on the pre-drift drop: NULL iff even key
     assert(cur.filter(col("o_orderkey") % 2 === 0 &&
       col("o_prio").isNotNull).count() == 0,
@@ -639,39 +656,42 @@ class LayoutSpec extends AnyFunSuite with SparkFixture {
     val cut = Tables.orders(spark, sf0001)
       .agg(max("o_custkey")).head().getAs[Number](0).longValue / 10
     val pred = col("o_custkey") <= cut
-    val (kept, all) = sources.TxTable.pruneDataFiles(m, pred)
+    val (kept, all) = plannedAt(root, m.version, pred)
     assert(kept.nonEmpty && kept.size < all.size,
       s"skipping planned ${kept.size}/${all.size} files — the " +
         "owner-clustered layout must prune most of them")
-    // identity: the pruned read == full read + filter, row for row
+    // identity: the pruned read == the source recompute, row for row
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.orderBy("o_orderkey").collect().map(_.toSeq).toSeq
-    assert(rows(sources.TxTable.snapshotWhere(spark, root, pred)) ==
-      rows(sources.TxTable.snapshot(spark, root).filter(pred)),
-      "pruned read diverged from the unpruned recompute")
+    val want = Tables.orders(spark, sf0001)
+      .filter(col("o_orderkey") % 3 < 2 && col("o_custkey") % 97 =!= 0)
+      .filter(pred)
+      .select("o_orderkey", "o_custkey", "o_totalprice")
+    assert(rows(sources.TxTable.snapshot(spark, root).filter(pred)) ==
+      rows(want), "pruned read diverged from the source recompute")
     // composes with merge-on-read: a DV commit's deletes still apply
     // on the pruned read path
     sources.TxTable.deleteVector(spark, root,
       col("o_orderkey") % 10 === 0): Unit
-    assert(rows(sources.TxTable.snapshotWhere(spark, root, pred)) ==
-      rows(sources.TxTable.snapshot(spark, root).filter(pred)),
+    assert(rows(sources.TxTable.snapshot(spark, root).filter(pred)) ==
+      rows(want.filter(col("o_orderkey") % 10 =!= 0)),
       "pruned read diverged after a position-delete commit")
     // the evaluator is conservative: a predicate it can't reason about
     // (expression over the column) keeps every file
-    val (keptOpaque, _) = sources.TxTable.pruneDataFiles(m,
+    val (keptOpaque, _) = plannedAt(root, m.version,
       abs(col("o_custkey")) <= cut)
     assert(keptOpaque.size == all.size,
       "an un-analyzable predicate must not prune")
     // OR widens, AND narrows
-    val (keptOr, _) = sources.TxTable.pruneDataFiles(m,
+    val (keptOr, _) = plannedAt(root, m.version,
       pred || col("o_custkey") > lit(Long.MaxValue - 1))
     assert(keptOr.size >= kept.size)
-    val (keptAnd, _) = sources.TxTable.pruneDataFiles(m,
+    val (keptAnd, _) = plannedAt(root, m.version,
       pred && col("o_custkey") <= lit(-1L))
     assert(keptAnd.isEmpty, "an unsatisfiable AND must prune everything")
     // kept.isEmpty still reads: zero rows, real schema
-    val none = sources.TxTable.snapshotWhere(spark, root,
-      col("o_custkey") <= lit(-1L))
+    val none = sources.TxTable.snapshot(spark, root)
+      .filter(col("o_custkey") <= lit(-1L))
     assert(none.count() == 0 &&
       none.columns.toSeq == Seq("o_orderkey", "o_custkey", "o_totalprice"))
   }
@@ -690,7 +710,7 @@ class LayoutSpec extends AnyFunSuite with SparkFixture {
       _.matches("data/o_orderpriority=[^/]+/part-.*\\.parquet")),
       s"partitioned entries must carry their directory: $data")
     val urgent = "data/o_orderpriority=1-URGENT/"
-    val (kept, all) = sources.TxTable.pruneDataFiles(m,
+    val (kept, all) = plannedAt(root, m.version,
       col("o_orderpriority") === "1-URGENT")
     assert(kept.nonEmpty && kept.size < all.size)
     assert(kept.forall(_.startsWith(urgent)) &&
@@ -698,8 +718,8 @@ class LayoutSpec extends AnyFunSuite with SparkFixture {
       "partition pruning must keep exactly the matching partition's files")
     // the read re-derives the partition column and equals the source
     // recompute of both loads
-    val got = sources.TxTable.snapshotWhere(spark, root,
-        col("o_orderpriority") === "1-URGENT")
+    val got = sources.TxTable.snapshot(spark, root)
+      .filter(col("o_orderpriority") === "1-URGENT")
       .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority")
       .orderBy("o_orderkey").collect().map(_.toSeq).toSeq
     val want = Tables.orders(spark, sf0001)
@@ -710,8 +730,8 @@ class LayoutSpec extends AnyFunSuite with SparkFixture {
     assert(got == want, s"partitioned read diverged (${got.size} vs " +
       s"${want.size} rows)")
     // time travel: v1 (first load only) prunes and reads the same way
-    val v1 = sources.TxTable.snapshotWhere(spark, root,
-      col("o_orderpriority") === "1-URGENT", version = 1)
+    val v1 = sources.TxTable.snapshot(spark, root, 1)
+      .filter(col("o_orderpriority") === "1-URGENT")
     assert(v1.count() == Tables.orders(spark, sf0001)
       .filter(col("o_orderkey") % 3 === 0 &&
         col("o_orderpriority") === "1-URGENT").count())
@@ -719,9 +739,9 @@ class LayoutSpec extends AnyFunSuite with SparkFixture {
     // stats live in the same manifest entry)
     val cut = Tables.orders(spark, sf0001)
       .agg(max("o_custkey")).head().getAs[Number](0).longValue / 10
-    val both = sources.TxTable.snapshotWhere(spark, root,
-      col("o_orderpriority") === "1-URGENT" && col("o_custkey") <= cut)
-    val (keptBoth, _) = sources.TxTable.pruneDataFiles(m,
+    val both = sources.TxTable.snapshot(spark, root)
+      .filter(col("o_orderpriority") === "1-URGENT" && col("o_custkey") <= cut)
+    val (keptBoth, _) = plannedAt(root, m.version,
       col("o_orderpriority") === "1-URGENT" && col("o_custkey") <= cut)
     assert(keptBoth.size <= kept.size)
     assert(both.count() == Tables.orders(spark, sf0001)
@@ -757,7 +777,7 @@ class LayoutSpec extends AnyFunSuite with SparkFixture {
     assert(post.filter(col("o_orderpriority") === "1-URGENT" &&
       col("o_custkey") % 7 === 0).count() == 0)
     // rewritten files still carry partition stats → still prune exactly
-    val (keptPost, allPost) = sources.TxTable.pruneDataFiles(postM,
+    val (keptPost, allPost) = plannedAt(root, postM.version,
       col("o_orderpriority") === "1-URGENT")
     assert(keptPost.nonEmpty &&
       keptPost.size == allPost.count(_.startsWith(urgent)))
@@ -823,7 +843,7 @@ class LayoutSpec extends AnyFunSuite with SparkFixture {
         "o_orderkey", "owner_id"): Unit
     }
     // v4: an append SPEAKING the new schema stages under the physical
-    // name (one uniform file schema — no mergeSchema needed)
+    // name (one uniform file schema)
     sources.TxTable.append(spark, root,
       Tables.orders(spark, sf0001).filter(col("o_orderkey") % 3 === 2)
         .select(col("o_orderkey"), col("o_custkey").as("owner_id"),
@@ -838,15 +858,12 @@ class LayoutSpec extends AnyFunSuite with SparkFixture {
     // stats pruning translates the renamed predicate name
     val cut = Tables.orders(spark, sf0001)
       .agg(max("o_custkey")).head().getAs[Number](0).longValue / 10
-    val m4 = sources.TxTable.readManifest(root, 4)
-    val (kept, all) = sources.TxTable.pruneDataFiles(m4,
-      col("owner_id") <= cut)
+    val (kept, all) = plannedAt(root, 4, col("owner_id") <= cut)
     assert(kept.nonEmpty && kept.size < all.size,
       s"pruning through the rename planned ${kept.size}/${all.size}")
-    assert(sources.TxTable.snapshotWhere(spark, root,
-        col("owner_id") <= cut).count() ==
-      sources.TxTable.snapshot(spark, root)
-        .filter(col("owner_id") <= cut).count())
+    assert(sources.TxTable.snapshot(spark, root, 4)
+        .filter(col("owner_id") <= cut).count() ==
+      Tables.orders(spark, sf0001).filter(col("o_custkey") <= cut).count())
     // v5: DROP o_totalprice — metadata-only, old snapshots unaffected
     val v5 = sources.TxTable.dropColumn(spark, root, "o_totalprice")
     assert(sources.TxTable.readManifest(root, v5).files ==
@@ -861,11 +878,13 @@ class LayoutSpec extends AnyFunSuite with SparkFixture {
     sources.TxTable.append(spark, root,
       spark.range(1).select(lit(-1L).as("o_orderkey"),
         lit(-1L).as("owner_id"), lit(123.25).as("o_totalprice"))): Unit
-    val mergedSnap = sources.TxTable.snapshot(spark, root,
-      mergeSchema = true)
-    val readded = mergedSnap.filter(col("o_totalprice").isNotNull)
-    assert(readded.count() == 1 &&
-      readded.select("o_totalprice").head().getDouble(0) == 123.25,
+    val cur6 = sources.TxTable.snapshot(spark, root)
+    assert(cur6.columns.toSeq == Seq("o_orderkey", "owner_id", "o_totalprice"))
+    val readded = cur6.filter(col("o_totalprice").isNotNull)
+    assert(cur6.count() == Tables.orders(spark, sf0001).count() + 1 &&
+      readded.count() == 1 &&
+      readded.select("o_orderkey", "owner_id", "o_totalprice").head()
+        .toSeq == Seq[Any](-1L, -1L, 123.25),
       "the re-added column must carry ONLY the new commit's data — " +
         "old dropped values must stay invisible")
     // the new file's PHYSICAL schema uses the tombstone-avoiding name
@@ -1056,9 +1075,7 @@ class LayoutSpec extends AnyFunSuite with SparkFixture {
     // stats skipping still prunes on the promoted column (the stats
     // codec records int32 and int64 pages both as "long", so pre- and
     // post-promotion stats compare numerically in one domain)
-    val m = sources.TxTable.readManifest(root,
-      sources.TxTable.currentVersion(root))
-    val (kept, all) = sources.TxTable.pruneDataFiles(m,
+    val (kept, all) = plannedAt(root, sources.TxTable.currentVersion(root),
       col("units") > lit(Int.MaxValue.toLong))
     assert(kept.size < all.size,
       s"promoted-column predicate pruned nothing: ${kept.size}/${all.size}")
@@ -1081,14 +1098,20 @@ class LayoutSpec extends AnyFunSuite with SparkFixture {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.orderBy("o_orderkey").collect().map(_.toSeq).toSeq
 
+    // the demo history's states, recomputed from the source table
+    val orders = Tables.orders(spark, sf0001)
+      .select("o_orderkey", "o_custkey", "o_totalprice")
+    val wantV2 = orders.filter(col("o_orderkey") % 3 < 2)
+    val wantV3 = wantV2.filter(col("o_custkey") % 97 =!= 0)
+
     // schema inference from the manifest-tracked tblschema (no .schema)
     val full = spark.read.format("txtable").load(root)
     assert(full.columns.toSeq ==
       Seq("o_orderkey", "o_custkey", "o_totalprice"))
-    assert(rows(full) == rows(sources.TxTable.snapshot(spark, root)),
-      "DSv2 batch read diverged from the library snapshot")
+    assert(rows(full) == rows(wantV3),
+      "DSv2 batch read diverged from the source recompute")
     // count() prunes every column; the reader must still count rows
-    assert(full.count() == sources.TxTable.snapshot(spark, root).count())
+    assert(full.count() == wantV3.count())
 
     // filter pushdown → file skipping: the filtered scan plans fewer
     // partitions than the table lists data files
@@ -1106,9 +1129,8 @@ class LayoutSpec extends AnyFunSuite with SparkFixture {
     val planned = filtered.rdd.getNumPartitions
     assert(planned > 0 && planned < nData,
       s"pushdown planned $planned of $nData files — must prune")
-    assert(rows(filtered) ==
-      rows(sources.TxTable.snapshotWhere(spark, root, pred)),
-      "pushed-down read diverged from the library snapshotWhere")
+    assert(rows(filtered) == rows(wantV3.filter(pred)),
+      "pushed-down read diverged from the source recompute")
 
     // column pruning narrows the scan's read schema
     val twoCol = spark.read.format("txtable").load(root)
@@ -1122,7 +1144,7 @@ class LayoutSpec extends AnyFunSuite with SparkFixture {
     val st = batchScansOf(filtered).head.scan
       .asInstanceOf[SupportsReportStatistics].estimateStatistics()
     assert(st.numRows().isPresent && st.sizeInBytes().isPresent)
-    val keptRows = sources.TxTable.pruneDataFiles(m, pred)._1
+    val keptRows = TxScanProbe.planned(filtered)._1
       .map(f => m.stats(f).rows).sum
     assert(st.numRows().getAsLong == keptRows,
       s"scan stats ${st.numRows()} != planned-file row sum $keptRows")
@@ -1133,14 +1155,15 @@ class LayoutSpec extends AnyFunSuite with SparkFixture {
     val afterDv = spark.read.format("txtable").load(root)
     assert(afterDv.filter(col("o_orderkey") % 10 === 0).count() == 0,
       "reader served position-deleted rows")
-    assert(rows(afterDv) == rows(sources.TxTable.snapshot(spark, root)),
-      "DV-applied DSv2 read diverged from the library snapshot")
+    assert(rows(afterDv) ==
+      rows(wantV3.filter(col("o_orderkey") % 10 =!= 0)),
+      "DV-applied DSv2 read diverged from the source recompute")
 
     // versionAsOf: each version reads under its own manifest
     val v2 = spark.read.format("txtable").option("versionAsOf", "2")
       .load(root)
-    assert(rows(v2) == rows(sources.TxTable.snapshot(spark, root, 2)),
-      "versionAsOf read diverged from the library time travel")
+    assert(rows(v2) == rows(wantV2),
+      "versionAsOf read diverged from the v2 recompute")
 
     // _commit_version is streaming provenance; batch rejects it loudly
     val e = intercept[Exception] {
@@ -1190,8 +1213,7 @@ class LayoutSpec extends AnyFunSuite with SparkFixture {
     assert(rows(spark.read.format("txtable").load(root)) ==
       rows(orders.filter(col("o_orderkey") % 3 <= 1)))
     // skipping stats on the written files actually prune
-    val (kept, all) = sources.TxTable.pruneDataFiles(m2,
-      col("o_orderkey") <= lit(-1L))
+    val (kept, all) = plannedAt(root, 2, col("o_orderkey") <= lit(-1L))
     assert(kept.isEmpty && all.nonEmpty,
       "written-file stats must support pruning")
 
@@ -1300,7 +1322,7 @@ class LayoutSpec extends AnyFunSuite with SparkFixture {
     val before = rows(sources.TxTable.snapshot(spark, root))
     val mBefore = sources.TxTable.readManifest(root,
       sources.TxTable.currentVersion(root))
-    val (keptB, allB) = sources.TxTable.pruneDataFiles(mBefore, pred)
+    val (keptB, allB) = plannedAt(root, mBefore.version, pred)
     // ingest order scatters custkey: the predicate prunes (almost)
     // nothing before the optimize
     assert(keptB.size >= allB.size - 1,
@@ -1316,7 +1338,7 @@ class LayoutSpec extends AnyFunSuite with SparkFixture {
     assert(rows(sources.TxTable.snapshot(spark, root)) == before,
       "OPTIMIZE changed table content")
     // the scattered dimension now prunes: strictly better fraction
-    val (keptA, allA) = sources.TxTable.pruneDataFiles(mAfter, pred)
+    val (keptA, allA) = plannedAt(root, mAfter.version, pred)
     assert(keptA.size.toDouble / allA.size <
       0.5 * keptB.size.toDouble / allB.size,
       s"clustering must improve custkey pruning: " +
@@ -1324,7 +1346,7 @@ class LayoutSpec extends AnyFunSuite with SparkFixture {
     // the Z-curve keeps BOTH dimensions: an orderkey slice still prunes
     val okCut = orders.agg(max("o_orderkey")).head()
       .getAs[Number](0).longValue / 10
-    val (keptOk, allOk) = sources.TxTable.pruneDataFiles(mAfter,
+    val (keptOk, allOk) = plannedAt(root, mAfter.version,
       col("o_orderkey") <= okCut)
     assert(keptOk.size < allOk.size,
       s"Z-order lost the orderkey dimension: ${keptOk.size}/${allOk.size}")
@@ -1511,9 +1533,9 @@ class LayoutSpec extends AnyFunSuite with SparkFixture {
     }.getMessage != null)
   }
 
-  test("snapshotWhere reads kept files under the manifest-tracked " +
-      "schema: identical to snapshot().filter across schema evolution " +
-      "and type promotion (ADVICE r18)") {
+  test("a pruned snapshot read serves the manifest-tracked schema: " +
+      "kept files read evolved and promoted, and the all-pruned read " +
+      "keeps the same schema (ADVICE r18)") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
     val root = graft.Scratch.dir("txtable", "spec_swschema")
@@ -1531,15 +1553,21 @@ class LayoutSpec extends AnyFunSuite with SparkFixture {
     val pred = col("k") <= 3
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.orderBy("k").collect().map(_.toSeq).toSeq
-    val full = sources.TxTable.snapshot(spark, root).filter(pred)
-    val pruned = sources.TxTable.snapshotWhere(spark, root, pred)
-    assert(pruned.schema == full.schema,
-      s"pruned-read schema drifted: ${pruned.schema.catalogString} vs " +
-        full.schema.catalogString)
-    assert(rows(pruned) == rows(full))
-    // the all-pruned branch serves the SAME (evolved, promoted) schema
-    val none = sources.TxTable.snapshotWhere(spark, root, col("k") > 99)
-    assert(none.schema == full.schema && none.count() == 0)
+    val v = sources.TxTable.currentVersion(root)
+    val pruned = sources.TxTable.snapshot(spark, root).filter(pred)
+    // the evolved, promoted schema — driver-side expected values
+    import org.apache.spark.sql.types._
+    val want = StructType(Seq(StructField("k", LongType),
+      StructField("x", DoubleType), StructField("lang", StringType)))
+    assert(pruned.schema == want,
+      s"pruned-read schema drifted: ${pruned.schema.catalogString}")
+    assert(rows(pruned) == Seq(Seq[Any](1L, 10.0, null),
+      Seq[Any](2L, 20.0, null), Seq[Any](3L, 30.0, "en")))
+    // the all-pruned read serves the SAME (evolved, promoted) schema
+    val none = sources.TxTable.snapshot(spark, root).filter(col("k") > 99)
+    assert(plannedAt(root, v, col("k") > 99)._1.isEmpty,
+      "k > 99 must prune every file")
+    assert(none.schema == want && none.count() == 0)
   }
 
   test("append replans when a metadata commit (promote) lands between " +
@@ -1547,35 +1575,50 @@ class LayoutSpec extends AnyFunSuite with SparkFixture {
       "reverted by the append's stale props (ADVICE r18)") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    val root = graft.Scratch.dir("txtable", "spec_metarace")
-    graft.Scratch.deleteRec(new java.io.File(root))
-    sources.TxTable.init(root)
-    sources.TxTable.append(spark, root, Seq((1, 5)).toDF("k", "v"))
-    // a UDF that fires a CONCURRENT promote while the append is staging
-    // its files — i.e. after the append planned its schema props but
-    // before its commit attempt (local mode: the UDF runs in-JVM)
-    val fired = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val sneak = udf { (x: Int) =>
-      if (fired.compareAndSet(false, true)) {
-        sources.TxTable.promoteColumnType(spark, root, "v", "bigint"): Unit
+    // two layouts through the one append loop: flat, and partitioned by
+    // `p` (a partitioned append replans the same way)
+    for (part <- Seq(false, true)) {
+      val root = graft.Scratch.dir("txtable",
+        if (part) "spec_metarace_part" else "spec_metarace")
+      graft.Scratch.deleteRec(new java.io.File(root))
+      sources.TxTable.init(root)
+      def append(df: org.apache.spark.sql.DataFrame): Int =
+        if (part) sources.TxTable.appendPartitioned(spark, root,
+          df.withColumn("p", lit("a")), "p")
+        else sources.TxTable.append(spark, root, df)
+      append(Seq((1, 5)).toDF("k", "v"))
+      // a UDF that fires a CONCURRENT promote while the append is
+      // staging its files — i.e. after the append planned its schema
+      // props but before its commit attempt (local mode: the UDF runs
+      // in-JVM)
+      val fired = new java.util.concurrent.atomic.AtomicBoolean(false)
+      val sneak = udf { (x: Int) =>
+        if (fired.compareAndSet(false, true)) {
+          sources.TxTable.promoteColumnType(spark, root, "v", "bigint")
+            : Unit
+        }
+        x
       }
-      x
+      val df = Seq((2, 7)).toDF("k", "v")
+        .withColumn("v", sneak(col("v")).cast("int"))
+      append(df)
+      val m = sources.TxTable.readManifest(
+        root, sources.TxTable.currentVersion(root))
+      val schema = sources.TxTable.schemaOf(m).get
+      assert(schema("v").dataType ==
+        org.apache.spark.sql.types.LongType,
+        s"append's stale schema props reverted the concurrent promotion " +
+          s"(partitioned=$part)")
+      if (part) assert(sources.TxTable.dataEntries(m.files)
+        .forall(_.startsWith("data/p=a/")),
+        s"the replanned partitioned append lost its layout: ${m.files}")
+      val got = sources.TxTable.snapshot(spark, root)
+        .select("k", "v").orderBy("k").collect().map(_.toSeq).toSeq
+      assert(got == Seq(Seq(1L, 5L), Seq(2L, 7L))
+        .map(_.map(_.asInstanceOf[Any])) ||
+        got.map(_.map(_.toString)) ==
+          Seq(Seq("1", "5"), Seq("2", "7")))
     }
-    val df = Seq((2, 7)).toDF("k", "v")
-      .withColumn("v", sneak(col("v")).cast("int"))
-    sources.TxTable.append(spark, root, df)
-    val m = sources.TxTable.readManifest(
-      root, sources.TxTable.currentVersion(root))
-    val schema = sources.TxTable.schemaOf(m).get
-    assert(schema("v").dataType ==
-      org.apache.spark.sql.types.LongType,
-      "append's stale schema props reverted the concurrent promotion")
-    val got = sources.TxTable.snapshot(spark, root)
-      .orderBy("k").collect().map(_.toSeq).toSeq
-    assert(got == Seq(Seq(1L, 5L), Seq(2L, 7L))
-      .map(_.map(_.asInstanceOf[Any])) ||
-      got.map(_.map(_.toString)) ==
-        Seq(Seq("1", "5"), Seq("2", "7")))
   }
 
   test("string pruning compares parquet stats in unsigned UTF-8 order, " +
@@ -1595,10 +1638,13 @@ class LayoutSpec extends AnyFunSuite with SparkFixture {
     sources.TxTable.append(spark, root,
       Seq(("aaa", 2L)).toDF("s", "n"))
     val pred = col("s") > "�"
-    val expect = sources.TxTable.snapshot(spark, root).filter(pred).count()
-    assert(expect == 1L, "Spark's own binary order keeps the emoji row")
-    assert(sources.TxTable.snapshotWhere(spark, root, pred).count() ==
-      expect, "unsound pruning: stats skipping dropped a matching file")
+    // Spark's own binary order keeps the emoji row: exactly one match
+    val (kept, all) = plannedAt(root, 2, pred)
+    assert(kept.size == 1 && all.size == 2,
+      s"unsound pruning: planned ${kept.size}/${all.size}")
+    assert(sources.TxTable.snapshot(spark, root).filter(pred)
+      .collect().map(_.toSeq).toSeq == Seq(Seq[Any]("😀", 1L)),
+      "unsound pruning: stats skipping dropped a matching file")
   }
 
   test("a malformed manifest stats line degrades to no-stats instead " +
@@ -2008,12 +2054,13 @@ class LayoutSpec extends AnyFunSuite with SparkFixture {
     // partition predicate plans ONLY that partition's files (the
     // path-segment min=max stats — one mechanism with stats skipping)
     val pred = col("bucket") === 2
-    val (kept, all) = sources.TxTable.pruneDataFilesTree(m,
+    val (kept, all) = sources.TxTable.pruneDataFilesTree(root, m,
       org.apache.spark.sql.graft.PlanBridge.PredCmp("=", "bucket", 2))
     assert(kept.nonEmpty && kept.size < all.size &&
       kept.forall(_.startsWith("data/bucket=2/")),
       s"partition pruning failed: kept $kept of $all")
-    assert(sources.TxTable.snapshotWhere(spark, root, pred).count() ==
+    assert(plannedAt(root, m.version, pred)._1 == kept)
+    assert(sources.TxTable.snapshot(spark, root).filter(pred).count() ==
       expect.filter(pred).count())
     // INSERT INTO keeps routing new rows into partition directories
     spark.sql("""INSERT INTO ctas_tx.db.po
@@ -2064,9 +2111,9 @@ class LayoutSpec extends AnyFunSuite with SparkFixture {
     def rows(d: org.apache.spark.sql.DataFrame) =
       d.select(cols.map(col): _*).orderBy("o_orderkey")
         .collect().map(_.toSeq).toSeq
-    assert(rows(df) ==
-      rows(sources.TxTable.snapshotWhere(spark, root, pred)),
-      "partition-pruned DSv2 read diverged from the library path")
+    assert(rows(df) == rows(Tables.orders(spark, sf0001)
+        .filter(col("o_orderkey") % 3 < 2).filter(pred)),
+      "partition-pruned DSv2 read diverged from the source recompute")
   }
 
   test("aggregate pushdown: COUNT(*)/MIN/MAX answer from manifest " +

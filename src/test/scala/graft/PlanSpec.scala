@@ -252,7 +252,11 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
   }
 
   /** Spark jobs and shuffle bytes of one collected call of `key`. */
-  private def callCost(key: String, dir: String): (Int, Long) = {
+  private def callCost(key: String, dir: String): (Int, Long) =
+    costOf(SparkEntry.queries(key)(spark, dir).collect(): Unit)
+
+  /** Spark jobs and shuffle bytes `run` starts. */
+  private def costOf(run: => Unit): (Int, Long) = {
     import org.apache.spark.scheduler._
     import org.apache.spark.sql.graftprobe.BusProbe
     val sc = spark.sparkContext
@@ -268,7 +272,7 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     BusProbe.drain(sc)
     sc.addSparkListener(counter)
     try {
-      SparkEntry.queries(key)(spark, dir).collect()
+      run
       BusProbe.drain(sc)
     } finally sc.removeSparkListener(counter)
     (jobs.get, shuffle.get)
@@ -844,6 +848,146 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
       s"CDC anti-join degraded to sort-merge:\n$changes")
     // the key-manifest delete is SQL DML; its plan is pinned by the
     // q_delete_execute test below
+  }
+
+  test("every txtable read plans as the txtable BatchScan: the " +
+      "q_table_* keys and q_delete_execute never read a table's data/ " +
+      "files through a parquet FileScan") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec,
+      QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
+      QueryStageExec}
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    import org.apache.spark.sql.graftprobe.BusProbe
+    import org.apache.spark.sql.util.QueryExecutionListener
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case other => other +: (other.children ++ other.subqueries)
+        .flatMap(nodes)
+    }
+    def txScans(p: SparkPlan): Seq[BatchScanExec] = nodes(p).collect {
+      case b: BatchScanExec if b.scan.getClass.getName
+        .startsWith("graft.streaming.Tx") => b
+    }
+    // parquet scans over a table's data files (data/…); the
+    // position-delete files (deletes/…) are read as plain parquet
+    def dataFileScans(p: SparkPlan): Seq[String] = nodes(p).collect {
+      case f: FileSourceScanExec => f.relation.location.rootPaths
+        .map(_.toString).filter(_.contains("/data/"))
+    }.flatten
+    // every plan a key executes — its internal reads (DV addresses,
+    // change sets, compaction and DML inputs) as well as its result
+    val executed = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(fn: String, qe: QueryExecution,
+          ns: Long): Unit = executed.add(qe.executedPlan): Unit
+      override def onFailure(fn: String, qe: QueryExecution,
+          e: Exception): Unit = ()
+    }
+    val keys = sources.TxTable.queries.toSeq.sortBy(_._1) :+
+      ("q_delete_execute" -> (llm.Governance.qDeleteExecute _))
+    // result plans that read no table: the aggregate answers from
+    // manifest stats (a LocalScan), the stream key from its memory sink
+    val noTableRead = Set("q_table_agg_pushdown", "q_table_stream")
+    import scala.jdk.CollectionConverters._
+    keys.foreach { case (key, fn) =>
+      executed.clear()
+      spark.listenerManager.register(listener)
+      val df = try {
+        val d = fn(spark, sf0001)
+        d.collect()
+        d
+      } finally {
+        BusProbe.drain(spark.sparkContext)
+        spark.listenerManager.unregister(listener)
+      }
+      val plans = df.queryExecution.executedPlan +: executed.asScala.toSeq
+      plans.foreach { p =>
+        assert(dataFileScans(p).isEmpty,
+          s"$key read table data files through a parquet FileScan: " +
+            s"${dataFileScans(p)}\n$p")
+      }
+      if (!noTableRead(key))
+        assert(txScans(df.queryExecution.executedPlan).nonEmpty,
+          s"$key's table read is not a txtable BatchScan:\n" +
+            df.queryExecution.executedPlan)
+    }
+  }
+
+  test("q_table_changes plans exactly each side's changed files: the " +
+      "_tx_file IN predicate selects files in the scan") {
+    import org.apache.spark.sql.functions._
+    import graft.streaming.TxScanProbe
+    val root = sources.TxTable.ensureDemoTable(spark, sf0001)
+    def data(v: Int): Set[String] = sources.TxTable.dataEntries(
+      sources.TxTable.readManifest(root, v).files).toSet
+    // v1→v2 appends, v2→v3 rewrites (the copy-on-write GDPR delete)
+    Seq(1 -> 2, 2 -> 3).foreach { case (p, c) =>
+      val added = data(c) -- data(p)
+      val removed = data(p) -- data(c)
+      val (ins, del, upd) = sources.TxTable.changeSets(spark, root, p, c)
+      val planned = (ins ++ del ++ upd).toSeq.flatMap(TxScanProbe.scans)
+      assert(planned.nonEmpty, s"v$p→v$c planned no txtable scan")
+      planned.foreach { case (kept, listed) =>
+        assert(kept.toSet == added || kept.toSet == removed,
+          s"v$p→v$c: a side planned ${kept.size} of ${listed.size} " +
+            s"files, not its ${added.size} added / ${removed.size} " +
+            "removed files")
+      }
+      assert(planned.exists(_._1.toSet == added) &&
+        (removed.isEmpty || planned.exists(_._1.toSet == removed)))
+    }
+    // a position-delete commit: the DV side plans only the target files
+    val dv = graft.Scratch.dir("txtable", "spec_plan_cdc_dv")
+    graft.Scratch.deleteRec(new java.io.File(dv))
+    sources.TxTable.appendDemoLoads(spark, dv, sf0001)
+    val (v3, dvFiles) = sources.TxTable.deleteVector(spark, dv,
+      col("o_custkey") % 97 === 0)
+    val targets = spark.read.parquet(dvFiles.map(f => s"$dv/$f"): _*)
+      .select("fname").distinct().collect().map(_.getString(0)).toSet
+    val (_, del, _) = sources.TxTable.changeSets(spark, dv, v3 - 1, v3)
+    val dvScans = TxScanProbe.scans(del.get)
+    assert(dvScans.nonEmpty && dvScans.forall { case (kept, listed) =>
+      kept.map(f => f.substring(f.lastIndexOf('/') + 1)).toSet == targets &&
+        kept.size < listed.size
+    }, s"the DV side must plan exactly the ${targets.size} target " +
+      s"files: ${dvScans.map(s => (s._1.size, s._2.size))}")
+    assert(del.get.count() == sources.TxTable.snapshot(spark, dv, v3 - 1)
+      .filter(col("o_custkey") % 97 === 0).count())
+  }
+
+  test("CALL tx.system.optimize on a 10k-row catalog table stays within " +
+      "its Spark-job cap") {
+    // serve's maintenance write: its snapshot read is the txtable scan.
+    // The cap is the count measured on the second call; a change that
+    // lowers the count lowers the cap, and no cap is raised to pass
+    import org.apache.spark.sql.functions._
+    val wh = graft.Scratch.dir("txtable", "spec_optcap")
+    graft.Scratch.deleteRec(new java.io.File(wh))
+    new java.io.File(wh).mkdirs()
+    spark.conf.set("spark.sql.catalog.optcap_tx",
+      classOf[graft.streaming.TxTableCatalog].getName)
+    spark.conf.set("spark.sql.catalog.optcap_tx.warehouse", wh)
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS optcap_tx.db")
+    spark.sql("CREATE TABLE optcap_tx.db.t (k BIGINT, g BIGINT)")
+    spark.range(0, 10000)
+      .select(col("id").as("k"), (col("id") * 7919 % 1000).as("g"))
+      .createOrReplaceTempView("optcap_src")
+    spark.sql("INSERT INTO optcap_tx.db.t SELECT * FROM optcap_src " +
+      "WHERE k % 2 = 0")
+    spark.sql("INSERT INTO optcap_tx.db.t SELECT * FROM optcap_src " +
+      "WHERE k % 2 = 1")
+    def optimize(): Unit = spark.sql(
+      "CALL optcap_tx.system.optimize('db.t', 'k', 'g', 4)").collect(): Unit
+    val (cold, _) = costOf(optimize())
+    val (warm, _) = costOf(optimize())
+    info(s"CALL optimize: $cold jobs cold, $warm jobs warm")
+    val maxJobs = 4
+    assert(warm <= maxJobs, s"CALL optimize ran $warm jobs (cap $maxJobs)")
+    assert(spark.sql("SELECT count(*), sum(k) FROM optcap_tx.db.t")
+      .collect()(0).toSeq == Seq(10000L, 49995000L))
+    spark.sql("DROP TABLE optcap_tx.db.t")
   }
 
   test("q_delete_execute's key-manifest DELETE keeps the request " +

@@ -192,14 +192,14 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
       "batch run (VERDICT r16 item 2)") {
     // Closes the sink half of the pinned Kafka contract: the source half
     // (durable offsets, restart-from-checkpoint, rate limiting) is the
-    // test above; here the sink is TxTable.commitBatch — each micro-batch
-    // lands as ONE atomic, batchId-tagged commit, so the crash window
-    // exactly-once exists for (batch committed, checkpoint commit log not
-    // yet written → Spark REPLAYS the same batchId on restart) dedupes to
-    // a no-op instead of double-writing.
+    // test above; here the sink is writeStream.format("txtable") — each
+    // micro-batch lands as ONE atomic, batchId-tagged commit
+    // (TxTable.commitEpoch), so the crash window exactly-once exists for
+    // (batch committed, checkpoint commit log not yet written → Spark
+    // REPLAYS the same batchId on restart) dedupes to a no-op instead of
+    // double-writing.
     import spark.implicits._
     val root = graft.Scratch.dir("txtable", "stream_sink")
-    sources.TxTable.init(root)
     val base = graft.Scratch.dir("stream", "tx_sink")
     val src = s"$base/src"; val ckpt = s"$base/ckpt"
     new java.io.File(src).mkdirs()
@@ -210,25 +210,28 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
     def transform(df: org.apache.spark.sql.DataFrame) =
       df.select(col("event_id"), col("user_id"),
         (col("value") * 2).as("v2"))
+    // the sink target exists before the stream (CREATE-then-write):
+    // v1 is the create commit, so batch k lands as version k + 2
+    sources.TxTable.createEmpty(root,
+      transform(spark.read.schema(sch).parquet(src)).schema): Unit
     def startQuery() = spark.readStream.schema(sch)
       .option("maxFilesPerTrigger", 1).parquet(src)
       .transform(transform)
-      .writeStream
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-        sources.TxTable.commitBatch(b.sparkSession, root, id, b): Unit
-      }
+      .writeStream.format("txtable")
+      .option("path", root)
       .option("checkpointLocation", ckpt).start()
     def dataFiles(): Int = new java.io.File(root, "data").list().length
     // run 1: three files, one per rate-limited micro-batch → 3 commits
     addFile(0 until 4); addFile(4 until 8); addFile(8 until 12)
     val q1 = startQuery(); q1.processAllAvailable(); q1.stop()
-    assert(sources.TxTable.versions(root) == Seq(1, 2, 3))
+    assert(sources.TxTable.versions(root) == Seq(1, 2, 3, 4))
     // REPLAY: re-delivering an already-committed batchId (the
     // crash-between-commit-and-checkpoint window) must commit NOTHING —
-    // zero new versions, zero new data files
+    // zero new versions, zero new data files (its staged files reclaimed)
     val before = (sources.TxTable.currentVersion(root), dataFiles())
-    val committed = sources.TxTable.commitBatch(spark, root, 2L,
+    val replayed = sources.TxTable.writeData(spark, root,
       transform(spark.read.schema(sch).parquet(src)))
+    val committed = sources.TxTable.commitEpoch(root, 2L, replayed)
     assert(!committed, "replayed batchId was committed again")
     assert((sources.TxTable.currentVersion(root), dataFiles()) == before,
       "replayed batch changed the table")
@@ -237,8 +240,8 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
     // lands exactly one further commit
     addFile(12 until 16); addFile(16 until 20)
     val q2 = startQuery(); q2.processAllAvailable(); q2.stop()
-    assert(sources.TxTable.versions(root) == Seq(1, 2, 3, 4, 5))
-    assert(sources.TxTable.versions(root).map(v =>
+    assert(sources.TxTable.versions(root) == Seq(1, 2, 3, 4, 5, 6))
+    assert(sources.TxTable.versions(root).drop(1).map(v =>
       sources.TxTable.readManifest(root, v).props("batch")) ==
       Seq("0", "1", "2", "3", "4"),
       "batchIds did not continue across the restart")
@@ -1242,10 +1245,11 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
       s"all three partitions must be populated: $data")
     assert(sources.TxTable.snapshot(spark, dst).count() == 300L)
     // partition pruning works on the streamed layout too
-    assert(sources.TxTable.snapshotWhere(spark, dst,
-      col("b") === 1).count() == 100L)
-    val (kept, all) = sources.TxTable.lastSkip.get()
-    assert(kept < all, s"partition predicate must prune: $kept/$all")
+    val b1 = sources.TxTable.snapshot(spark, dst).filter(col("b") === 1)
+    assert(b1.count() == 100L)
+    val (kept, all) = graft.streaming.TxScanProbe.planned(b1)
+    assert(kept.size < all.size,
+      s"partition predicate must prune: ${kept.size}/${all.size}")
     spark.sql("DROP TABLE psink_tx.db.t")
   }
 }

@@ -42,13 +42,16 @@ class DvShipSpec extends AnyFunSuite with graft.SparkFixture {
         "partition carries no delete files despite outstanding DVs")
     }
 
-    // results identical to the library snapshot (which applies DVs via
-    // the address anti-join) and to the direct recompute
+    // results identical to the driver-side expected rows, on the path
+    // read and on the library snapshot
+    val expected = (0L until 2000L)
+      .filter(k => k % 10 != 3 && k % 10 != 7)
+      .map(k => Seq[Any](k, k % 97))
     val dsv2 = spark.read.format("txtable").load(root)
     val lib = TxTable.snapshot(spark, root)
-    assert(dsv2.count() == lib.count())
-    assert(dsv2.orderBy("k").collect().map(_.toSeq).toSeq ==
-      lib.orderBy("k").collect().map(_.toSeq).toSeq)
+    assert(dsv2.count() == expected.size)
+    assert(dsv2.orderBy("k").collect().map(_.toSeq).toSeq == expected)
+    assert(lib.orderBy("k").collect().map(_.toSeq).toSeq == expected)
     assert(dsv2.filter(col("k") % 10 === 3).count() == 0)
     assert(dsv2.filter(col("k") % 10 === 7).count() == 0)
 
@@ -57,13 +60,57 @@ class DvShipSpec extends AnyFunSuite with graft.SparkFixture {
     val prunedRead = spark.read.format("txtable").load(root)
       .filter(col("k") >= 1500)
     assert(prunedRead.count() ==
-      lib.filter(col("k") >= 1500).count())
+      expected.count(_.head.asInstanceOf[Long] >= 1500))
 
     // post-skipping statistics subtract ALL dv rows when every file is
     // planned (footer row counts, no address materialization)
     val stats = scan.asInstanceOf[TxTableScan].estimateStatistics()
     assert(stats.numRows.isPresent &&
-      stats.numRows.getAsLong == lib.count(),
-      s"reported ${stats.numRows} vs actual ${lib.count()}")
+      stats.numRows.getAsLong == expected.size,
+      s"reported ${stats.numRows} vs actual ${expected.size}")
+  }
+
+  test("_tx_pos addresses: a DV delete writes exactly the (file, row " +
+      "index) pairs a _tx_pos read selects, in the parquet row-index " +
+      "numbering, and the post-delete read skips exactly those rows") {
+    val root = graft.Scratch.dir("txtable", "spec_txpos")
+    graft.Scratch.deleteRec(new java.io.File(root))
+    TxTable.init(root)
+    TxTable.append(spark, root, spark.range(0, 900).repartition(3)
+      .select(col("id").as("k"), (col("id") % 11).as("v")))
+    def addrs(df: org.apache.spark.sql.DataFrame): Set[(String, Long)] =
+      df.select(regexp_extract(col("_tx_file"), "[^/]+$", 0),
+          col("_tx_pos"))
+        .collect().map(r => (r.getString(0), r.getLong(1))).toSet
+    val v1 = TxTable.currentVersion(root)
+    val before = TxTable.snapshot(spark, root, v1)
+      .select(col("k"), col("_tx_file"), col("_tx_pos"))
+    // _tx_pos is the row's index in its file: per file, the same
+    // numbering Spark's own parquet reader reports as row_index
+    TxTable.dataEntries(TxTable.readManifest(root, v1).files).foreach { f =>
+      val ours = before.filter(col("_tx_file") === s"$root/$f")
+        .select("k", "_tx_pos").collect().map(r => (r.getLong(0),
+          r.getLong(1))).toSet
+      val spark0 = spark.read.parquet(s"$root/$f")
+        .select(col("k"), col("_metadata.row_index")).collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(ours.nonEmpty && ours == spark0,
+        s"_tx_pos disagrees with the parquet row index in $f")
+    }
+    val want = addrs(before.filter(col("k") % 7 === 0))
+    val (v2, dvFiles) = TxTable.deleteVector(spark, root, col("k") % 7 === 0)
+    assert(v2 == v1 + 1 && dvFiles.nonEmpty)
+    // the address files hold exactly the _tx_pos addresses
+    val written = spark.read.parquet(dvFiles.map(f => s"$root/$f"): _*)
+      .collect().map(r => (r.getAs[String]("fname"), r.getAs[Long]("pos")))
+    assert(written.length == want.size && written.toSet == want,
+      "the DV addresses are not the _tx_pos addresses of the matches")
+    // post-delete: positions keep their pre-delete numbering, and exactly
+    // the addressed rows are gone
+    val after = TxTable.snapshot(spark, root, v2)
+      .select(col("k"), col("_tx_file"), col("_tx_pos"))
+    assert(addrs(after) == addrs(before) -- want)
+    assert(after.filter(col("k") % 7 === 0).count() == 0 &&
+      after.count() == 900 - want.size)
   }
 }

@@ -46,7 +46,7 @@ class HardeningSpec extends AnyFunSuite with graft.SparkFixture {
     assert(got == vals.toSet, s"reader surfaced escaped values: $got")
     // 2. an equality predicate on the unescaped literal keeps the
     //    matching file (manifest part stats now store decoded values)
-    val (kept, all) = TxTable.pruneDataFilesTree(m,
+    val (kept, all) = TxTable.pruneDataFilesTree(root, m,
       org.apache.spark.sql.graft.PlanBridge.PredCmp("=", "pc",
         "2024-01-01 10:30:00"))
     assert(kept.nonEmpty && kept.size < all.size &&
@@ -55,8 +55,8 @@ class HardeningSpec extends AnyFunSuite with graft.SparkFixture {
     // 3. end-to-end: the pushed-down equality read returns the rows
     assert(spark.read.format("txtable").load(root)
       .filter(col("pc") === "2024-01-01 10:30:00").count() == 10)
-    assert(TxTable.snapshotWhere(spark, root,
-      col("pc") === "a=b").count() == 10)
+    assert(TxTable.snapshot(spark, root)
+      .filter(col("pc") === "a=b").count() == 10)
     spark.sql("DROP TABLE esc_tx.db.t")
   }
 
@@ -212,15 +212,17 @@ class HardeningSpec extends AnyFunSuite with graft.SparkFixture {
     }
     // an equality predicate prunes the default dir (NULL never matches
     // a comparison); IS NULL keeps it (unconvertible → sound)
-    val (kept, all) = TxTable.pruneDataFilesTree(m,
+    val (kept, all) = TxTable.pruneDataFilesTree(root, m,
       org.apache.spark.sql.graft.PlanBridge.PredCmp("=", "pc", "g1"))
     assert(kept.nonEmpty && kept.size < all.size &&
       kept.forall(!_.contains("__HIVE_DEFAULT_PARTITION__")),
       s"default dir not pruned: $kept")
-    assert(TxTable.snapshotWhere(spark, root,
-      col("pc") === "g1").count() == 10)
-    assert(TxTable.snapshotWhere(spark, root,
-      col("pc").isNull).count() == 10)
+    assert(TxScanProbe.planned(TxTable.snapshot(spark, root)
+      .filter(col("pc") === "g1")) == (kept, all))
+    assert(TxTable.snapshot(spark, root)
+      .filter(col("pc") === "g1").count() == 10)
+    assert(TxTable.snapshot(spark, root)
+      .filter(col("pc").isNull).count() == 10)
     spark.sql("DROP TABLE np_tx.db.t")
   }
 
@@ -262,15 +264,16 @@ class HardeningSpec extends AnyFunSuite with graft.SparkFixture {
     }
     // pruning composes per column: region alone, tier alone, both
     import org.apache.spark.sql.graft.PlanBridge._
-    val (kr, all) = TxTable.pruneDataFilesTree(m,
+    val (kr, all) = TxTable.pruneDataFilesTree(root, m,
       PredCmp("=", "region", "r1"))
     assert(kr.nonEmpty && kr.size < all.size &&
       kr.forall(_.contains("region=r1/")))
-    val (kt, _) = TxTable.pruneDataFilesTree(m, PredCmp("=", "tier", 2))
+    val (kt, _) = TxTable.pruneDataFilesTree(root, m,
+      PredCmp("=", "tier", 2))
     assert(kt.nonEmpty && kt.forall(_.contains("/tier=2/")) &&
       kt.forall(!_.contains("__HIVE_DEFAULT_PARTITION__")),
       s"tier pruning kept $kt")
-    val (kb, _) = TxTable.pruneDataFilesTree(m,
+    val (kb, _) = TxTable.pruneDataFilesTree(root, m,
       PredAnd(PredCmp("=", "region", "r2"), PredCmp("=", "tier", 3)))
     assert(kb.nonEmpty &&
       kb.forall(f => f.contains("region=r2/") && f.contains("/tier=3/")))

@@ -45,7 +45,7 @@ class ManifestPagingSpec extends AnyFunSuite with graft.SparkFixture {
         "paged manifest body must be reference lines")
       // stats ride the pages: skipping still prunes
       assert(m1.stats.size == 12, "page-carried stats lost")
-      val (kept, all) = TxTable.pruneDataFilesTree(m1,
+      val (kept, all) = TxTable.pruneDataFilesTree(root, m1,
         org.apache.spark.sql.graft.PlanBridge.PredCmp("<", "k", 100))
       assert(kept.nonEmpty && kept.size < all.size,
         s"paged stats must prune: $kept of ${all.size}")
@@ -64,8 +64,8 @@ class ManifestPagingSpec extends AnyFunSuite with graft.SparkFixture {
         m2.files.toSet.size == 16)
       // the snapshot protocol is unchanged: reads equal the recompute
       assert(TxTable.snapshot(spark, root).count() == 1600)
-      assert(TxTable.snapshotWhere(spark, root,
-        col("k") < 100).count() == 100)
+      assert(TxTable.snapshot(spark, root)
+        .filter(col("k") < 100).count() == 100)
       // v3 rewrite (delete): only the pages holding victims drop. The
       // victims live in the low-range files; the modulo conjunct converts
       // to no source filter, so this is the group rewrite, not a DV
