@@ -21,8 +21,8 @@ import graft.{Q, Tables}
   * Layout:
   * {{{
   *   <root>/data/<part>.parquet   — immutable data files (never mutated;
-  *                                  part names embed Spark's per-job UUID
-  *                                  so names can never collide)
+  *                                  part names embed the write's UUID
+  *                                  and task id so names never collide)
   *   <root>/_txlog/v<N>           — commit N's manifest: one header line
   *                                  of key=value props, then the COMPLETE
   *                                  relative file list of snapshot N
@@ -30,9 +30,9 @@ import graft.{Q, Tables}
   *
   * Invariants that make every read old-or-new, never torn:
   *  1. data files become visible ONLY by being listed in a committed
-  *     manifest, and are written (staging dir + rename into data/) BEFORE
-  *     the manifest that lists them — a manifest never names a missing or
-  *     partial file;
+  *     manifest, and are written (hidden file + rename at task commit)
+  *     BEFORE the manifest that lists them — a manifest never names a
+  *     missing or partial file;
   *  2. the manifest itself lands via write-tmp + hardlink-create
   *     ([[tryCommit]]): `link(2)` is atomic and FAILS if v<N> exists, so a
   *     commit appears complete-or-not-at-all AND exactly one committer can
@@ -512,36 +512,63 @@ object TxTable {
     } finally rd.close()
   }
 
-  /** Stage df's rows as immutable files in data/, returning their
-    * root-relative names. NOT yet part of any snapshot — files become
-    * visible only when a commit's manifest lists them, which is what
-    * makes a concurrent reader's world old-or-new. Staged via a write to
-    * a dot-dir (never matched by any manifest) + per-file rename into
-    * data/ (same filesystem → metadata-only). */
-  private def writeStaged(s: SparkSession, root: String,
-      df: DataFrame, sub: String): Seq[String] = {
-    val staging = new java.io.File(root,
-      s".staging-${java.util.UUID.randomUUID}")
-    df.write.mode("overwrite").parquet(staging.getPath)
-    val target = new java.io.File(root, sub)
-    val names = staging.listFiles()
-      .filter(f => f.getName.startsWith("part-") &&
-        f.getName.endsWith(".parquet"))
-      .map { f =>
-        java.nio.file.Files.move(f.toPath,
-          target.toPath.resolve(f.getName)): Unit
-        s"$sub/${f.getName}"
-      }.toSeq.sorted
-    graft.Scratch.deleteRec(staging)
-    names
-  }
-
+  /** Stage df's rows (PHYSICAL names, declared types) as immutable
+    * files under `root/<dir>` — `data`, or `deletes` for position-delete
+    * files (rows of `fname` string, `pos` long) — laid out like the
+    * table: flat, partition-preserving under `data/<col>=<v>/` for
+    * `partCols` (so a rewrite of a partitioned table keeps its
+    * directory-derived columns), or under `data/__bucket=<b>/` for
+    * `bucket`. Returns the root-relative names. NOT yet part of any
+    * snapshot — files become visible only when a commit's manifest lists
+    * them, which is what makes a concurrent reader's world old-or-new.
+    *
+    * One Spark job, under a SQL execution id so listeners see it like
+    * `df.write`, runs the table's one file writer
+    * ([[graft.streaming.TxTableDataWriter]], the writer SQL writes use)
+    * through Spark's V2 writing task and its commit coordinator: a task
+    * that fails deletes its files, and a failed job's staged files are
+    * deleted before the error surfaces. A partitioned or bucketed frame
+    * is sorted within each partition by its routing key, so a task holds
+    * one open file at a time; a flat write's first task stages a file
+    * even when it has no rows, the layout Spark's own `df.write` gives. */
   private[graft] def writeData(s: SparkSession, root: String,
-      df: DataFrame): Seq[String] = writeStaged(s, root, df, "data")
-
-  /** Stage position-delete files (rows of `fname` string, `pos` long). */
-  private[graft] def writeDeletes(s: SparkSession, root: String,
-      df: DataFrame): Seq[String] = writeStaged(s, root, df, "deletes")
+      df: DataFrame, partCols: Seq[String] = Nil,
+      bucket: Option[(String, Int)] = None,
+      dir: String = "data"): Seq[String] = {
+    import graft.streaming.{TxBucket, TxFileCommitMessage, TxWriteCol,
+      TxWriterFactory, TxWritePlan}
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.execution.datasources.v2.DataWritingSparkTask
+    import org.apache.spark.sql.graft.{ParquetEncoder, PlanBridge}
+    val cols = df.schema.fields.toSeq.zipWithIndex.map { case (f, i) =>
+      TxWriteCol(i, f.name, f.dataType, f.dataType)
+    }
+    def colOf(n: String): TxWriteCol = cols.find(_.phys == n).getOrElse(
+      sys.error(s"txtable stage: frame lacks routing column '$n'"))
+    val parts = partCols.map(colOf)
+    val bucketCol = bucket.map { case (c, n) => (colOf(c), n) }
+    val plan = TxWritePlan(root, cols.filterNot(parts.contains), parts,
+      distCols = Nil, numFields = cols.size, bucket = bucketCol, dir = dir)
+    val routing = parts.map(c => col(c.phys)) ++ bucketCol.map {
+      case (c, n) => TxBucket.column(col(c.phys), c.incoming, n)
+    }
+    val input =
+      if (routing.isEmpty) df else df.sortWithinPartitions(routing: _*)
+    val factory = TxWriterFactory(plan, ParquetEncoder(s, plan.fileSchema),
+      library = true)
+    val messages = PlanBridge.withExecution(input, "txtable stage") { rdd0 =>
+      // an input without partitions still stages its one (empty) file
+      val rdd = if (rdd0.partitions.nonEmpty) rdd0
+        else s.sparkContext.parallelize(Seq.empty[InternalRow], 1)
+      try s.sparkContext.runJob(rdd,
+        (ctx: org.apache.spark.TaskContext, it: Iterator[InternalRow]) =>
+          DataWritingSparkTask.run(factory, ctx, it,
+            useCommitCoordinator = true, Map.empty).writerCommitMessage)
+      catch { case e: Throwable => factory.discardAll(); throw e }
+    }
+    messages.toSeq.collect { case TxFileCommitMessage(ns) => ns }
+      .flatten.sorted
+  }
 
   /** Snapshot read pinned at `version` (−1 = the current version, pinned
     * at call time): a `versionAsOf` load of the DSv2 scan, the table's
@@ -560,9 +587,9 @@ object TxTable {
       if (version < 0) currentVersion(root) else version).load(root)
 
   /** Basename of a row's `_tx_file` path: the position-delete address
-    * names the file by basename, unique because Spark embeds a per-job
-    * UUID in part names — so a table whose root moved still resolves
-    * its own deletes. */
+    * names the file by basename, unique because the writer embeds the
+    * write's UUID and the task id in part names — so a table whose root
+    * moved still resolves its own deletes. */
   private def fnameOf(c: Column): Column =
     regexp_extract(c, "[^/]+$", 0)
 
@@ -959,58 +986,6 @@ object TxTable {
     seqs.headOption.getOrElse(Nil).filterNot(_ == "__bucket")
   }
 
-  /** Stage rows like the table is laid out: flat via [[writeData]], or
-    * partition-preserving (each row lands under its
-    * `data/<col>=<v>/` directory) so a REWRITE of a partitioned table
-    * keeps the directory-derived column instead of flattening it away
-    * (round 18 — closes the partitioned-rewrite guard). */
-  private def writeDataLike(s: SparkSession, root: String,
-      df: DataFrame, partCols: Seq[String],
-      bucket: Option[(String, Int)] = None): Seq[String] =
-    (partCols, bucket) match {
-      case (_, Some((c, n))) => stageBucketed(s, root, df, c, n)
-      case (Nil, _) => writeData(s, root, df)
-      case (cs, _) => stagePartitioned(s, root, df, cs)
-    }
-
-  /** The library-side bucket routing expression — a null-refusing UDF
-    * over [[graft.streaming.TxBucket]] (the SAME hash the DSv2 writer,
-    * the scan's grouping, and the catalog's `bucket` function use; a
-    * UDF is fine here — it runs only on rewrite/append staging, never
-    * in a read path). */
-  private def bucketColumn(c: Column, dt: DataType, n: Int): Column = {
-    def nn[T](v: T): T = {
-      require(v != null,
-        "txtable bucketed write: NULL bucket value refused")
-      v
-    }
-    dt match {
-      case LongType => udf((v: java.lang.Long) =>
-        graft.streaming.TxBucket.ofLong(nn(v).longValue, n)).apply(c)
-      case IntegerType => udf((v: java.lang.Integer) =>
-        graft.streaming.TxBucket.ofLong(nn(v).longValue, n)).apply(c)
-      case org.apache.spark.sql.types.StringType => udf((v: String) =>
-        graft.streaming.TxBucket.ofString(nn(v), n)).apply(c)
-      case other => sys.error(
-        s"txtable bucket column must be int/bigint/string, got $other")
-    }
-  }
-
-  /** Stage rows of a BUCKETED table: compute each row's bucket id with
-    * the shared hash, lay files out under `data/__bucket=<b>/`. The
-    * bucket column itself STAYS in the files (unlike an identity
-    * partition column, whose value lives only in the path) — the
-    * synthetic `__bucket` routing column is what partitionBy strips. */
-  private def stageBucketed(s: SparkSession, root: String,
-      df: DataFrame, physCol: String, n: Int): Seq[String] = {
-    require(df.columns.contains(physCol),
-      s"bucketed stage: frame lacks bucket column '$physCol'")
-    stagePartitioned(s, root,
-      df.withColumn("__bucket",
-        bucketColumn(col(physCol), df.schema(physCol).dataType, n)),
-      Seq("__bucket"))
-  }
-
   // --- data skipping (round 18, VERDICT r17 item 1) -------------------
 
   /** Can a file with these stats possibly hold a row matching `e`?
@@ -1243,10 +1218,10 @@ object TxTable {
     * plans only matching partitions' files with zero extra machinery).
     * The reader fills the partition column from the directory segment.
     * The rewrite paths (delete/merge/compact) re-stage survivors
-    * PARTITION-PRESERVING ([[writeDataLike]]): the read carries the
-    * directory column in, `partitionBy` lays it back out,
-    * and a single-partition predicate's rewrite touches only that
-    * partition's files (LayoutSpec pins it). */
+    * PARTITION-PRESERVING: the read carries the directory column in,
+    * the writer routes it back out, and a single-partition predicate's
+    * rewrite touches only that partition's files (LayoutSpec pins
+    * it). */
   private[graft] def appendPartitioned(s: SparkSession, root: String,
       df: DataFrame, partCol: String,
       extraProps: Map[String, String] = Map.empty): Int =
@@ -1301,7 +1276,7 @@ object TxTable {
       // recorded table schema (adds evolve, narrower numerics cast up,
       // wider ones fail loudly pointing at promoteColumnType)
       val (physCast, schemaProps) = withTblSchema(m, phys)
-      val added = writeDataLike(s, root, physCast, physParts,
+      val added = writeData(s, root, physCast, physParts,
         m.flatMap(bucketSpecOf))
       try {
         return commitChecked(root, "append", _ ++ added,
@@ -1320,36 +1295,6 @@ object TxTable {
       }
     }
     -1 // unreachable
-  }
-
-  /** Partition-preserving staging core behind [[appendPartitioned]] and
-    * the rewrite paths' [[writeDataLike]]: write
-    * `partitionBy(partCols…)` into a dot-dir, move each (possibly
-    * nested) partition directory's files under `data/a=…/b=…/`,
-    * return the root-relative names. */
-  private def stagePartitioned(s: SparkSession, root: String,
-      df: DataFrame, partCols: Seq[String]): Seq[String] = {
-    val staging = new java.io.File(root,
-      s".staging-${java.util.UUID.randomUUID}")
-    df.write.mode("overwrite").partitionBy(partCols: _*)
-      .parquet(staging.getPath)
-    def walk(dir: java.io.File, rel: Seq[String]): Seq[String] =
-      Option(dir.listFiles()).toSeq.flatten.flatMap {
-        case d if d.isDirectory && d.getName.contains('=') =>
-          walk(d, rel :+ d.getName)
-        case f if rel.nonEmpty && f.getName.startsWith("part-") &&
-            f.getName.endsWith(".parquet") =>
-          val target = new java.io.File(dataDir(root),
-            rel.mkString("/"))
-          target.mkdirs(): Unit
-          java.nio.file.Files.move(f.toPath,
-            target.toPath.resolve(f.getName)): Unit
-          Seq(s"data/${rel.mkString("/")}/${f.getName}")
-        case _ => Nil
-      }
-    val added = walk(staging, Nil).sorted
-    graft.Scratch.deleteRec(staging)
-    added
   }
 
   /** First commit over pre-staged files (e.g. hardlinked-in snapshots of
@@ -1430,10 +1375,11 @@ object TxTable {
       if (matching.isEmpty) return (currentVersion(root), Seq.empty)
       // conflict-check targets by their FULL manifest path (a
       // partitioned entry is data/k=v/name); the DV address itself
-      // stays the basename — unique via Spark's per-job UUID
+      // stays the basename — unique via the write's UUID in it
       val targets = matching.select("file").distinct()
         .collect().map(r => r.getString(0).stripPrefix(s"$root/")).toSet
-      val dvFiles = writeDeletes(s, root, matching.select("fname", "pos"))
+      val dvFiles = writeData(s, root, matching.select("fname", "pos"),
+        dir = "deletes")
       hook(); hook = () => ()
       try {
         val v = commit(root, "delete-dv", { prev =>
@@ -1802,7 +1748,7 @@ object TxTable {
     val root = ensureDemoTable(s, dir, "compacttbl")
     val v0 = currentVersion(root)
     val f0 = readManifest(root, v0).files
-    val rewritten = writeDataLike(s, root,
+    val rewritten = writeData(s, root,
       toPhysical(snapshot(s, root, v0).repartitionByRange(4,
           col("o_custkey"), col("o_orderkey")),
         colMapOf(readManifest(root, v0))),

@@ -1,6 +1,11 @@
 package graft.streaming
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{ApplyFunctionExpression,
+  Literal}
+import org.apache.spark.sql.functions.when
+import org.apache.spark.sql.graft.PlanBridge
 import org.apache.spark.sql.connector.catalog.functions.{BoundFunction,
   ScalarFunction, UnboundFunction}
 import org.apache.spark.sql.types.{DataType, IntegerType, LongType,
@@ -10,8 +15,8 @@ import org.apache.spark.sql.types.{DataType, IntegerType, LongType,
   * item 1 — storage-partitioned joins): one deterministic
   * value → bucket-id mapping shared by every surface that must agree —
   *
-  *  - the DSv2 writer routes each row to `data/__bucket=<b>/`,
-  *  - the rewrite paths re-stage survivors under their buckets,
+  *  - the table's one file writer routes each row to
+  *    `data/__bucket=<b>/` (and the library stager sorts by it),
   *  - the scan groups planned files per bucket and reports
   *    `KeyGroupedPartitioning(bucket(n, col))`,
   *  - the [[TxTableCatalog]] FunctionCatalog serves this same function
@@ -53,6 +58,13 @@ private[graft] object TxBucket {
   def ofString(v: String, n: Int): Int =
     java.lang.Math.floorMod(fnv1a64(
       v.getBytes(java.nio.charset.StandardCharsets.UTF_8)), n.toLong).toInt
+
+  /** `c`'s bucket id as a Column: the key the library stager sorts a
+    * bucketed write by, so each task writes one bucket's file at a
+    * time. NULL stays NULL; the writer refuses it. */
+  def column(c: Column, dt: DataType, n: Int): Column =
+    when(c.isNotNull, PlanBridge.column(ApplyFunctionExpression(
+      new TxBucketBound(dt), Seq(Literal(n), PlanBridge.expression(c)))))
 
   /** Supported bucket-column types (mirrors the partition-column set). */
   def supported(dt: DataType): Boolean =

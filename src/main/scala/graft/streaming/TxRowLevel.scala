@@ -170,22 +170,17 @@ private[streaming] class TxGroupReplaceWrite(root: String,
     }
     if (kept.isEmpty && staged.isEmpty) return // nothing matched: no-op
     val keptSet = kept.toSet
-    try {
-      TxTable.commitChecked(root, opName, { prev =>
-        require(kept.forall(prev.toSet),
-          s"concurrent rewrite conflict at $root: a file this $opName " +
-            "read is no longer in the current snapshot — retry")
-        require(TxTable.deleteEntries(prev) == g.dvs,
-          s"concurrent position-delete conflict at $root: the delete " +
-            s"set changed since this $opName read its input — " +
-            "committing would resurrect freshly-deleted rows; retry")
-        prev.filterNot(keptSet) ++ staged
-      }, Map.empty, checkMeta): Unit
-    } catch {
-      case e: Throwable =>
-        staged.foreach(f => java.nio.file.Files.deleteIfExists(
-          java.nio.file.Paths.get(root, f)): Unit)
-        throw e
-    }
+    // a refused commit throws; Spark then aborts the write, which
+    // deletes the staged files
+    TxTable.commitChecked(root, opName, { prev =>
+      require(kept.forall(prev.toSet),
+        s"concurrent rewrite conflict at $root: a file this $opName " +
+          "read is no longer in the current snapshot — retry")
+      require(TxTable.deleteEntries(prev) == g.dvs,
+        s"concurrent position-delete conflict at $root: the delete " +
+          s"set changed since this $opName read its input — " +
+          "committing would resurrect freshly-deleted rows; retry")
+      prev.filterNot(keptSet) ++ staged
+    }, Map.empty, checkMeta): Unit
   }
 }

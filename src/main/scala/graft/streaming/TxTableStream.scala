@@ -426,15 +426,10 @@ private[streaming] object TxTableMicroBatchStream {
 
 private[streaming] case class TxFilePartition(version: Int, path: String,
     logToPhys: Map[String, String] = Map.empty,
-    deleted: Array[Long] = TxFilePartition.NoDeletes,
     dvFiles: Seq[String] = Nil)
     extends InputPartition
 
 private[streaming] object TxFilePartition {
-  /** Shared empty delete vector (streaming partitions are append-only
-    * adds and never carry one). */
-  val NoDeletes: Array[Long] = Array.empty
-
   /** EXECUTOR-SIDE position-delete resolution (round 19): read the
     * partition's candidate delete files (parquet of `fname` string,
     * `pos` long — pre-filtered driver-side by footer fname range) and
@@ -442,7 +437,7 @@ private[streaming] object TxFilePartition {
     * materializes an address; each task reads the KB-scale delete
     * files it actually needs — the Iceberg delete-file hand-off. */
   def readDeleted(dvFiles: Seq[String], fname: String): Array[Long] = {
-    if (dvFiles.isEmpty) return NoDeletes
+    if (dvFiles.isEmpty) return Array.emptyLongArray
     val out = Array.newBuilder[Long]
     dvFiles.foreach { p =>
       val conf = new org.apache.hadoop.conf.Configuration()
@@ -616,10 +611,8 @@ private[streaming] class TxFilePartitionReader(part: TxFilePartition,
   // resolved to sorted ordinals HERE on the executor; the vectorized
   // reader emits rows in file order, so the running row index is the
   // `_tx_pos` address [[TxTable.deleteVector]] wrote)
-  private val deleted: Array[Long] =
-    if (part.dvFiles.isEmpty) part.deleted
-    else (part.deleted ++ TxFilePartition.readDeleted(part.dvFiles,
-      part.path.substring(part.path.lastIndexOf('/') + 1))).sorted
+  private val deleted: Array[Long] = TxFilePartition.readDeleted(
+    part.dvFiles, part.path.substring(part.path.lastIndexOf('/') + 1))
   private var rowIdx: Long = -1L
   private var delPtr: Int = 0
   override def next(): Boolean = {

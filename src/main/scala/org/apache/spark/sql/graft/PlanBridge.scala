@@ -32,6 +32,16 @@ object PlanBridge {
       LogicalRDD.fromDataset(rdd, ds, isStreaming = false)), rdd)
   }
 
+  /** Run `job` over `df`'s rows under a new SQL execution id, as
+    * `df.write` does, so listeners see the write as one query
+    * execution (its jobs, plan and metrics). */
+  def withExecution[T](df: DataFrame, name: String)(
+      job: RDD[InternalRow] => T): T = {
+    val qe = df.asInstanceOf[classic.Dataset[Row]].queryExecution
+    org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe,
+      Some(name))(job(qe.toRdd))
+  }
+
   /** Column ⇄ Expression doorway (Spark 4's Column wraps a ColumnNode;
     * both converters are `private[sql]`). Needed by expressions that are
     * constructed programmatically with non-Expression state — e.g. the

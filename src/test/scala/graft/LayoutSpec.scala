@@ -1301,6 +1301,64 @@ class LayoutSpec extends AnyFunSuite with SparkFixture {
         s"files: ${mPart.files}")
   }
 
+  test("one file encoder: the same rows staged by a DSv2 INSERT and by " +
+      "library writeData carry the session codec, one physical schema " +
+      "and INT64 TIMESTAMP_MICROS timestamps with min/max stats") {
+    import org.apache.spark.sql.functions._
+    import scala.jdk.CollectionConverters._
+    import org.apache.parquet.schema.LogicalTypeAnnotation
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+    val root = mkTable("one_encoder")
+    val rows = spark.range(0, 500).select(col("id").as("k"),
+      (col("id") * 0.5).as("v"), concat(lit("s"), col("id")).as("s"),
+      timestamp_seconds(col("id") * 3600).as("ts")).coalesce(1)
+    rows.createOrReplaceTempView("one_encoder_src")
+    sources.TxTable.createEmpty(root, rows.schema): Unit
+    spark.sql(s"INSERT INTO ${sources.TxTable.pathTable(spark, root)} " +
+      "SELECT * FROM one_encoder_src")
+    val dsv2 = sources.TxTable.dataEntries(sources.TxTable.readManifest(
+      root, sources.TxTable.currentVersion(root)).files)
+    val lib = sources.TxTable.writeData(spark, root, rows)
+    assert(dsv2.size == 1 && lib.size == 1,
+      s"one task must stage one file per path: $dsv2 / $lib")
+    def footer(rel: String) = {
+      val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(s"$root/$rel"),
+          new org.apache.hadoop.conf.Configuration()))
+      try rd.getFooter finally rd.close()
+    }
+    val codec = org.apache.parquet.hadoop.metadata.CompressionCodecName
+      .valueOf(spark.conf.get("spark.sql.parquet.compression.codec")
+        .toUpperCase)
+    assert(codec.name == "SNAPPY", s"session codec is $codec, not the default")
+    val footers = Seq(dsv2.head, lib.head).map(footer)
+    footers.foreach { f =>
+      val chunks = f.getBlocks.asScala.flatMap(_.getColumns.asScala)
+      assert(chunks.nonEmpty && chunks.forall(_.getCodec == codec),
+        s"file codecs ${chunks.map(_.getCodec).distinct} != $codec")
+      val ts = f.getFileMetaData.getSchema.getFields.asScala
+        .find(_.getName == "ts").get.asPrimitiveType
+      assert(ts.getPrimitiveTypeName == PrimitiveTypeName.INT64 &&
+        ts.getLogicalTypeAnnotation == LogicalTypeAnnotation.timestampType(
+          true, LogicalTypeAnnotation.TimeUnit.MICROS),
+        s"timestamp column written as $ts")
+      val st = chunks.find(_.getPath.toDotString == "ts").get.getStatistics
+      assert(st.hasNonNullValue &&
+        st.genericGetMin == 0L && st.genericGetMax == 499L * 3600000000L,
+        s"timestamp min/max stats missing or wrong: $st")
+    }
+    assert(footers(0).getFileMetaData.getSchema ==
+      footers(1).getFileMetaData.getSchema,
+      "the two write paths staged different physical schemas")
+    // the DSv2 file is the committed one; the library file is staged
+    // only, so it commits too and both read back as the same rows
+    sources.TxTable.commit(root, "append", _ ++ lib): Unit
+    val back = sources.TxTable.snapshot(spark, root)
+      .groupBy("k", "v", "s", "ts").count()
+    assert(back.count() == 500 && back.filter(col("count") =!= 2).isEmpty)
+  }
+
   test("TxTable OPTIMIZE ZORDER: the cluster commit is content-neutral, " +
       "improves the pruning fraction on the scattered dimension, and " +
       "keeps the other dimension pruning") {

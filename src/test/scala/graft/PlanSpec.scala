@@ -990,6 +990,54 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     spark.sql("DROP TABLE optcap_tx.db.t")
   }
 
+  test("serve's SQL writes and a library append on a 10k-row catalog " +
+      "table stay within their Spark-job caps") {
+    // INSERT, MERGE, UPDATE and a position-delete DELETE, each run twice
+    // on fresh keys; the caps are the warm (second-run) counts measured
+    // before the writers shared one parquet encoder, and no cap is
+    // raised to pass
+    import org.apache.spark.sql.functions._
+    val wh = graft.Scratch.dir("txtable", "spec_optcap_w")
+    graft.Scratch.deleteRec(new java.io.File(wh))
+    new java.io.File(wh).mkdirs()
+    spark.conf.set("spark.sql.catalog.optcapw_tx",
+      classOf[graft.streaming.TxTableCatalog].getName)
+    spark.conf.set("spark.sql.catalog.optcapw_tx.warehouse", wh)
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS optcapw_tx.db")
+    spark.sql("CREATE TABLE optcapw_tx.db.w (k BIGINT, g BIGINT)")
+    spark.range(0, 10000)
+      .select(col("id").as("k"), (col("id") * 7919 % 1000).as("g"))
+      .createOrReplaceTempView("optcap_w_src")
+    spark.sql("INSERT INTO optcapw_tx.db.w SELECT * FROM optcap_w_src")
+    val root = s"$wh/db/w"
+    // (statement, warm-run cap, run i ∈ {0, 1})
+    val writes: Seq[(String, Int, Int => Unit)] = Seq(
+      ("INSERT", 1, i => spark.sql("INSERT INTO optcapw_tx.db.w SELECT " +
+        s"k + ${10000 + 200 * i}, g FROM optcap_w_src WHERE k < 200"): Unit),
+      ("MERGE", 6, i => spark.sql("MERGE INTO optcapw_tx.db.w t USING " +
+        s"(SELECT k * 50 + $i AS k, g + 1 AS g FROM optcap_w_src " +
+        "WHERE k < 200) s ON t.k = s.k WHEN MATCHED THEN UPDATE SET " +
+        "g = s.g WHEN NOT MATCHED THEN INSERT *"): Unit),
+      ("UPDATE", 3, i => spark.sql("UPDATE optcapw_tx.db.w SET g = g + 1 " +
+        s"WHERE k >= ${100 * i} AND k < ${100 * i + 100}"): Unit),
+      ("DV DELETE", 5, i => spark.sql("DELETE FROM optcapw_tx.db.w WHERE " +
+        s"k >= ${5000 + 100 * i} AND k < ${5100 + 100 * i}"): Unit),
+      ("library append", 1, i => sources.TxTable.append(spark, root,
+        spark.table("optcap_w_src").filter(col("k") < 200)
+          .select((col("k") + 20000 + 200 * i).as("k"), col("g"))): Unit))
+    writes.foreach { case (name, cap, run) =>
+      val (cold, _) = costOf(run(0))
+      val (warm, _) = costOf(run(1))
+      info(s"$name: $cold jobs cold, $warm jobs warm (cap $cap)")
+      assert(warm <= cap, s"$name ran $warm jobs (cap $cap)")
+    }
+    // 10k + 2×200 inserted + 2×200 appended − 2×100 deleted; the MERGE
+    // keys (k·50 + i, k < 200) all exist, so it inserts nothing
+    assert(spark.sql("SELECT count(*) FROM optcapw_tx.db.w")
+      .collect()(0).getLong(0) == 10600L)
+    spark.sql("DROP TABLE optcapw_tx.db.w")
+  }
+
   test("q_delete_execute's key-manifest DELETE keeps the request " +
       "manifest on a broadcast even when statistics cannot size it") {
     import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}

@@ -498,4 +498,61 @@ class HardeningSpec extends AnyFunSuite with graft.SparkFixture {
     spark.sql("DROP TABLE rl_tx.db.t")
     spark.sql("DROP TABLE rl_tx.db.serial"): Unit
   }
+
+  test("a write whose stage fails mid-job leaves the head version, the " +
+      "rows and the directory tree as they were: library append and " +
+      "DSv2 INSERT") {
+    val root = graft.Scratch.dir("txtable", "spec_failstage")
+    graft.Scratch.deleteRec(new java.io.File(root))
+    TxTable.init(root)
+    TxTable.append(spark, root, spark.range(0, 100)
+      .select(col("id").as("k"), (col("id") * 2).as("v"))): Unit
+    // one row of one task (k = 1234 lies in the first of 4 tasks) throws
+    val boom = udf { (k: Long) =>
+      if (k == 1234L) throw new IllegalStateException("injected failure")
+      k
+    }
+    val input = spark.range(1000, 2000, 1, 4)
+      .select(boom(col("id")).as("k"), (col("id") * 2).as("v"))
+    input.createOrReplaceTempView("failstage_src")
+    def rows = TxTable.snapshot(spark, root).orderBy("k").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val before = rows
+    // every file outside the log must be one some manifest lists: no
+    // visible or hidden part file, no staging directory
+    def unlisted: Seq[String] = {
+      val listed = TxTable.versions(root)
+        .flatMap(v => TxTable.readManifest(root, v).files).toSet
+      def walk(d: java.io.File, rel: String): Seq[String] =
+        Option(d.listFiles()).toSeq.flatten.flatMap { f =>
+          val r = if (rel.isEmpty) f.getName else s"$rel/${f.getName}"
+          if (f.isDirectory) {
+            if (r == "_txlog") Nil
+            else if (f.getName.startsWith(".staging-")) Seq(r + "/")
+            else walk(f, r)
+          } else Seq(r).filterNot(listed)
+        }
+      walk(new java.io.File(root), "")
+    }
+    assert(unlisted.isEmpty, s"fixture left unlisted files: $unlisted")
+    val writes: Seq[(String, () => Unit)] = Seq(
+      "library append" -> (() =>
+        TxTable.append(spark, root, input): Unit),
+      "DSv2 INSERT" -> (() => spark.sql(
+        s"INSERT INTO ${TxTable.pathTable(spark, root)} " +
+          "SELECT * FROM failstage_src"): Unit))
+    writes.foreach { case (name, write) =>
+      val v0 = TxTable.currentVersion(root)
+      val e = intercept[Exception](write())
+      assert(Iterator.iterate[Throwable](e)(_.getCause)
+        .takeWhile(_ != null)
+        .exists(t => String.valueOf(t.getMessage).contains(
+          "injected failure")),
+        s"$name failed for another reason: $e")
+      assert(TxTable.currentVersion(root) == v0,
+        s"$name moved the head version")
+      assert(rows == before, s"$name changed the table's rows")
+      assert(unlisted.isEmpty, s"$name left files behind: $unlisted")
+    }
+  }
 }

@@ -61,6 +61,41 @@ class SpjSpec extends AnyFunSuite with graft.SparkFixture {
     }
   }
 
+  test("a library append to a bucketed table routes with the shared " +
+      "hash, one file per bucket per task, and refuses a NULL bucket " +
+      "value") {
+    wh: Unit
+    spark.sql("CREATE TABLE spj_tx.db.lib (k BIGINT, g BIGINT, v DOUBLE) " +
+      "PARTITIONED BY (bucket(8, k))")
+    val root = s"$wh/db/lib"
+    val in = spark.table("spj_src").repartition(2)
+    TxTable.append(spark, root, in): Unit
+    val entries = TxTable.dataEntries(TxTable.readManifest(root,
+      TxTable.currentVersion(root)).files)
+    // each task's rows arrive sorted by bucket id, so it writes each
+    // bucket it sees exactly once: 2 tasks × 8 buckets
+    assert(entries.size == 16 &&
+      entries.forall(_.matches("data/__bucket=\\d+/.*\\.parquet")),
+      s"library bucketed layout: $entries")
+    entries.groupBy(_.split("/")(1).split("=")(1).toInt)
+      .foreach { case (b, fs) =>
+        val ks = spark.read.parquet(fs.map(f => s"$root/$f"): _*)
+          .select("k").collect().map(_.getLong(0))
+        assert(ks.nonEmpty && ks.forall(TxBucket.ofLong(_, 8) == b),
+          s"bucket $b dir holds foreign keys")
+      }
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("k", "g", "v").orderBy("k").collect().map(_.toSeq).toSeq
+    assert(rows(TxTable.snapshot(spark, root)) == rows(in))
+    val e = intercept[Exception](TxTable.append(spark, root,
+      in.limit(3).withColumn("k", lit(null).cast("bigint"))))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage)
+        .contains("NULL bucket value refused")),
+      s"a NULL bucket value must be refused: $e")
+    spark.sql("DROP TABLE spj_tx.db.lib")
+  }
+
   test("a join of two co-bucketed txtables plans with ZERO Exchange " +
       "(storage-partitioned join) and equal results to the shuffled " +
       "plan") {
