@@ -363,8 +363,9 @@ object TxTable {
       // parent-manifest stats verbatim (a staged file is immutable, so
       // its stats are too); files the parent doesn't know get ONE
       // driver-side parquet-footer read each — commit-bounded, the
-      // Delta/Iceberg write-time-stats discipline. deletes/ entries are
-      // position-delete address files; nothing prunes on those.
+      // Delta/Iceberg write-time-stats discipline. deletes/ entries get
+      // theirs too: a scan plans which delete files each data file
+      // needs from their `fname` range, so it reads no delete footer.
       // stats are ADVISORY: a file whose footer can't be read (the
       // concurrency specs commit synthetic entries; a real table could
       // hold a corrupt-footer file) gets NO stats line and is simply
@@ -373,7 +374,7 @@ object TxTable {
       // (they're tiny independent metadata I/Os; a large init commit
       // over hundreds of files would otherwise serialize its plan-time
       // savings into commit-time latency).
-      val missing = dataEntries(newFiles).filterNot(f =>
+      val missing = newFiles.filterNot(f =>
         curStats.contains(f) || statsCache.contains(f) || noStats(f))
       if (missing.nonEmpty) {
         import scala.jdk.CollectionConverters._
@@ -386,7 +387,7 @@ object TxTable {
         statsCache ++= computed.asScala
         noStats ++= missing.filterNot(computed.containsKey)
       }
-      val stats = dataEntries(newFiles).flatMap { f =>
+      val stats = newFiles.flatMap { f =>
         curStats.get(f).orElse(statsCache.get(f)).map(f -> _)
       }.toMap
       // paged manifests (round 20): above the page threshold, entries
@@ -513,33 +514,23 @@ object TxTable {
   }
 
   /** Stage df's rows (PHYSICAL names, declared types) as immutable
-    * files under `root/<dir>` — `data`, or `deletes` for position-delete
-    * files (rows of `fname` string, `pos` long) — laid out like the
-    * table: flat, partition-preserving under `data/<col>=<v>/` for
-    * `partCols` (so a rewrite of a partitioned table keeps its
-    * directory-derived columns), or under `data/__bucket=<b>/` for
-    * `bucket`. Returns the root-relative names. NOT yet part of any
-    * snapshot — files become visible only when a commit's manifest lists
-    * them, which is what makes a concurrent reader's world old-or-new.
+    * files under `root/data`, laid out like the table: flat,
+    * partition-preserving under `data/<col>=<v>/` for `partCols` (so a
+    * rewrite of a partitioned table keeps its directory-derived
+    * columns), or under `data/__bucket=<b>/` for `bucket`. Returns the
+    * root-relative names. NOT yet part of any snapshot — files become
+    * visible only when a commit's manifest lists them, which is what
+    * makes a concurrent reader's world old-or-new.
     *
-    * One Spark job, under a SQL execution id so listeners see it like
-    * `df.write`, runs the table's one file writer
-    * ([[graft.streaming.TxTableDataWriter]], the writer SQL writes use)
-    * through Spark's V2 writing task and its commit coordinator: a task
-    * that fails deletes its files, and a failed job's staged files are
-    * deleted before the error surfaces. A partitioned or bucketed frame
-    * is sorted within each partition by its routing key, so a task holds
-    * one open file at a time; a flat write's first task stages a file
-    * even when it has no rows, the layout Spark's own `df.write` gives. */
+    * One Spark job ([[stage]]) runs the table's one file writer. A
+    * partitioned or bucketed frame is sorted within each partition by
+    * its routing key, so a task holds one open file at a time; a flat
+    * write's first task stages a file even when it has no rows, the
+    * layout Spark's own `df.write` gives. */
   private[graft] def writeData(s: SparkSession, root: String,
       df: DataFrame, partCols: Seq[String] = Nil,
-      bucket: Option[(String, Int)] = None,
-      dir: String = "data"): Seq[String] = {
-    import graft.streaming.{TxBucket, TxFileCommitMessage, TxWriteCol,
-      TxWriterFactory, TxWritePlan}
-    import org.apache.spark.sql.catalyst.InternalRow
-    import org.apache.spark.sql.execution.datasources.v2.DataWritingSparkTask
-    import org.apache.spark.sql.graft.{ParquetEncoder, PlanBridge}
+      bucket: Option[(String, Int)] = None): Seq[String] = {
+    import graft.streaming.{TxBucket, TxWriteCol, TxWritePlan}
     val cols = df.schema.fields.toSeq.zipWithIndex.map { case (f, i) =>
       TxWriteCol(i, f.name, f.dataType, f.dataType)
     }
@@ -548,12 +539,41 @@ object TxTable {
     val parts = partCols.map(colOf)
     val bucketCol = bucket.map { case (c, n) => (colOf(c), n) }
     val plan = TxWritePlan(root, cols.filterNot(parts.contains), parts,
-      distCols = Nil, numFields = cols.size, bucket = bucketCol, dir = dir)
+      distCols = Nil, numFields = cols.size, bucket = bucketCol)
     val routing = parts.map(c => col(c.phys)) ++ bucketCol.map {
       case (c, n) => TxBucket.column(col(c.phys), c.incoming, n)
     }
     val input =
       if (routing.isEmpty) df else df.sortWithinPartitions(routing: _*)
+    stage(s, input, plan).flatMap(_.names).sorted
+  }
+
+  /** Stage position deletes under `root/deletes` from `addresses`, a
+    * frame of (`_tx_file`, `_tx_pos`) row addresses — a filtered
+    * snapshot's own metadata columns. One Spark job; no address reaches
+    * the driver. Returns the staged names and the distinct root-relative
+    * data files the addresses target, each task reporting its own. No
+    * address, no file. */
+  private[graft] def writeDeletes(s: SparkSession, root: String,
+      addresses: DataFrame): (Seq[String], Set[String]) = {
+    val messages = stage(s, addresses,
+      graft.streaming.TxWritePlan.deletes(root))
+    (messages.flatMap(_.names).sorted, messages.flatMap(_.targets).toSet)
+  }
+
+  /** One Spark job, under a SQL execution id so listeners see it like
+    * `df.write`, runs the table's one file writer
+    * ([[graft.streaming.TxTableDataWriter]], the writer SQL writes use)
+    * over `input` through Spark's V2 writing task and its commit
+    * coordinator: a task that fails deletes its files, and a failed
+    * job's staged files are deleted before the error surfaces. */
+  private def stage(s: SparkSession, input: DataFrame,
+      plan: graft.streaming.TxWritePlan)
+      : Seq[graft.streaming.TxFileCommitMessage] = {
+    import graft.streaming.{TxFileCommitMessage, TxWriterFactory}
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.execution.datasources.v2.DataWritingSparkTask
+    import org.apache.spark.sql.graft.{ParquetEncoder, PlanBridge}
     val factory = TxWriterFactory(plan, ParquetEncoder(s, plan.fileSchema),
       library = true)
     val messages = PlanBridge.withExecution(input, "txtable stage") { rdd0 =>
@@ -566,8 +586,7 @@ object TxTable {
             useCommitCoordinator = true, Map.empty).writerCommitMessage)
       catch { case e: Throwable => factory.discardAll(); throw e }
     }
-    messages.toSeq.collect { case TxFileCommitMessage(ns) => ns }
-      .flatten.sorted
+    messages.toSeq.collect { case m: TxFileCommitMessage => m }
   }
 
   /** Snapshot read pinned at `version` (−1 = the current version, pinned
@@ -1331,59 +1350,66 @@ object TxTable {
     * task reads its file's delete entries and skips those row indexes
     * until a compaction materializes them away ([[qTableCompact]]'s
     * rewrite publishes a data-only manifest). The addresses are the
-    * scan's own `_tx_pos` numbering, so the address written here and
-    * the delete the reader applies can never disagree. Matching is
-    * evaluated on the DV-applied snapshot, so a second pass over the
-    * same predicate addresses nothing and commits nothing (convergent,
-    * like the rewrite delete). Conflict check: the commit closure requires every
-    * TARGET file is still a listed data entry — a concurrent rewrite
-    * that replaced a target would otherwise carry the matching rows
-    * into a new file our addresses don't cover, silently losing the
-    * delete (r17 review; the rewrite paths carry the mirror-image
-    * check on the delete-entry set). The only surviving stale case is
-    * DV entries whose targets a LATER rewrite removes — those
+    * scan's own `_tx_file`/`_tx_pos` metadata columns, so the address
+    * written here and the delete the reader applies can never disagree.
+    * Matching is evaluated on the DV-applied snapshot, so a second pass
+    * over the same predicate addresses nothing and commits nothing
+    * (convergent, like the rewrite delete).
+    *
+    * ONE Spark job: the filtered snapshot streams straight into
+    * [[writeDeletes]], whose tasks report the target files they
+    * addressed — nothing is checkpointed, counted or collected first.
+    * No match → no file and no commit; returns (current version, Nil).
+    *
+    * OCC AUTO-RETRY (round 20): a DV commit is mechanically rebasable
+    * — its addresses are a pure function of the predicate and the
+    * snapshot it read — so it discards the staged addresses and
+    * RECOMPUTES against the new head, at most 5 times, when a commit
+    * since the one it read
+    *  - removed a target file (compact/merge/delete rewrote it: the
+    *    matching rows now sit in a file the addresses do not cover), or
+    *  - added delete files whose footer `fname` range covers a target (a
+    *    concurrent DV delete or merge-on-read UPDATE; the UPDATE moves a
+    *    matching row into a new file without removing its target, so
+    *    committing the stale addresses would let that row survive).
+    * Each retry means some other writer committed, and the matching
+    * re-evaluates on the DV-applied new snapshot, so retries converge.
+    * Copy-on-write rewrites stay loud — their conflict means losing
+    * someone else's rows, a human decision. The only surviving stale
+    * case is DV entries whose targets a LATER rewrite removes — those
     * addresses dangle harmlessly (the rewrite input applied them) and
-    * drop at the next compaction. Returns (version, delete-file
-    * entries); no matches → no commit. */
-  /** OCC AUTO-RETRY (round 20, VERDICT r19 item 5): a DV commit is
-    * mechanically rebasable — its addresses are a pure function of the
-    * predicate and the snapshot it read — so a rewrite conflict
-    * (compact/merge/delete replaced a target file mid-flight) discards
-    * the staged addresses and RECOMPUTES against the new head instead
-    * of surfacing to the user. Bounded: each retry means some other
-    * writer's rewrite committed; the matching re-evaluates on the
-    * DV-applied new snapshot, so retries stay convergent (an address
-    * already deleted by the winner simply stops matching). Copy-on-
-    * write rewrites stay loud — their conflict means losing someone
-    * else's rows, a human decision. `testRaceHook` runs once between
-    * address computation and commit (spec injection point for a
-    * deterministic conflict). */
+    * drop at the next compaction. `testRaceHook` runs once between
+    * address staging and commit (spec injection point for a
+    * deterministic conflict). Returns (version, delete-file entries). */
   private[graft] def deleteVector(s: SparkSession, root: String,
       pred: Column,
       testRaceHook: () => Unit = () => ()): (Int, Seq[String]) = {
     var hook = testRaceHook
     var attempt = 0
+    // footer fname range per delete file (None = unreadable, covers
+    // everything); files are immutable, so one read per file per call
+    val dvRange = scala.collection.mutable.Map
+      .empty[String, Option[(String, String)]]
+    def covers(dv: String, fnames: Set[String]): Boolean =
+      dvRange.getOrElseUpdate(dv, scala.util.Try(computeStats(root, dv))
+          .toOption.flatMap(_.cols.get("fname").map(c => (c.min, c.max))))
+        .forall { case (mn, mx) => fnames.exists(f => mn <= f && f <= mx) }
     while (true) {
       val cur = currentVersion(root)
-      // addresses come from the scan's own row numbering (`_tx_pos`,
-      // counted before deletes — the ordinal the reader skips), read on
-      // the DV-applied snapshot
-      val matching = snapshot(s, root, cur).filter(pred)
-        .select(fnameOf(col("_tx_file")).as("fname"),
-          col("_tx_pos").as("pos"), col("_tx_file").as("file"))
-        .localCheckpoint(true) // bounded by the delete size; one eval
-      if (matching.isEmpty) return (currentVersion(root), Seq.empty)
-      // conflict-check targets by their FULL manifest path (a
-      // partitioned entry is data/k=v/name); the DV address itself
-      // stays the basename — unique via the write's UUID in it
-      val targets = matching.select("file").distinct()
-        .collect().map(r => r.getString(0).stripPrefix(s"$root/")).toSet
-      val dvFiles = writeData(s, root, matching.select("fname", "pos"),
-        dir = "deletes")
+      val (dvFiles, targets) = writeDeletes(s, root,
+        snapshot(s, root, cur).filter(pred)
+          .select(col("_tx_file"), col("_tx_pos")))
+      if (targets.isEmpty) return (currentVersion(root), Seq.empty)
       hook(); hook = () => ()
+      val readDvs =
+        if (cur == 0) Set.empty[String]
+        else deleteEntries(readManifest(root, cur).files).toSet
+      val targetNames = targets.map(f => f.substring(f.lastIndexOf('/') + 1))
       try {
         val v = commit(root, "delete-dv", { prev =>
-          if (!targets.subsetOf(dataEntries(prev).toSet))
+          if (!targets.subsetOf(dataEntries(prev).toSet) ||
+              deleteEntries(prev).exists(f =>
+                !readDvs(f) && covers(f, targetNames)))
             throw new DvRebase
           prev ++ dvFiles
         })
@@ -1393,8 +1419,8 @@ object TxTable {
           discardStaged(root, dvFiles)
           attempt += 1
           if (attempt >= 5) sys.error(
-            s"txtable delete-dv at $root lost 5 consecutive rewrite " +
-              "races — giving up (a rewrite storm; retry when quiet)")
+            s"txtable delete-dv at $root lost 5 consecutive rebase " +
+              "races — giving up (a write storm; retry when quiet)")
         case e: Throwable =>
           discardStaged(root, dvFiles); throw e
       }
@@ -1402,10 +1428,11 @@ object TxTable {
     sys.error("unreachable")
   }
 
-  /** Internal signal: a DV commit's target was rewritten underneath it
-    * — recompute addresses on the new head ([[deleteVector]]). */
+  /** Internal signal: a DV commit's target was rewritten or newly
+    * position-deleted underneath it — recompute addresses on the new
+    * head ([[deleteVector]]). */
   private class DvRebase extends RuntimeException(
-    "txtable delete-dv: target file rewritten — rebasing")
+    "txtable delete-dv: target file changed — rebasing")
 
   /** Retention prune: keep the newest `retain` manifests, delete older
     * ones, then delete data files referenced by NO retained manifest.
@@ -1627,10 +1654,12 @@ object TxTable {
 
   /** File-diff change sets between two consecutive manifests: rows in
     * added-only files are candidate inserts, rows in removed-only files
-    * candidate deletes. Cancellation is by FULL ROW, not key (ADVICE
+    * and rows the commit's new position deletes address are candidate
+    * deletes. Cancellation is by FULL ROW, not key (ADVICE
     * r17): a rewrite carries survivors verbatim, so identical rows on
     * both sides cancel, while a key present on both sides with a
-    * CHANGED payload is an UPDATE (a merge commit rewrote it) and is
+    * CHANGED payload is an UPDATE (a merge commit rewrote it, or a
+    * merge-on-read UPDATE position-deleted it and re-added it) and is
     * emitted as such — key-only cancellation silently swallowed updates.
     * Each side is a snapshot read narrowed by a `_tx_file` IN predicate,
     * which the scan plans as an exact file selection — so a side plans
@@ -1662,12 +1691,11 @@ object TxTable {
     // input was DV-applied, so they are absent from `added` and the
     // anti-join cannot cancel them)
     val added = filesAt(cur, cf -- pf)
-    val removed = filesAt(prev, pf -- cf)
     // position-delete entries added by this commit address rows by
-    // (file name, row index): those rows are CDC deletes — read ONLY
+    // (file name, row index): those rows left the table too — read ONLY
     // their target files at prev, semi-join the broadcast address set
     val addedDv = (deleteEntries(cm).toSet -- deleteEntries(pm)).toSeq.sorted
-    val dvDeletes =
+    val dvDeleted =
       if (addedDv.isEmpty) None
       else {
         val dv = s.read.parquet(addedDv.map(f => s"$root/$f"): _*)
@@ -1676,12 +1704,22 @@ object TxTable {
           .collect().map(_.getString(0)).toSet
         filesAt(prev, pf.filter(f =>
             targets(f.substring(f.lastIndexOf('/') + 1))))
-          .map(_.select(col("o_orderkey"), col("o_custkey"),
-              fnameOf(col("_tx_file")).as("__tx_fname"), col("_tx_pos"))
-            .join(broadcast(dv), Seq("__tx_fname", "_tx_pos"), "left_semi")
-            .select("o_orderkey", "o_custkey"))
+          .map { df =>
+            val cols = df.columns.toSeq
+            df.select(cols.map(col) :+ fnameOf(col("_tx_file"))
+                .as("__tx_fname") :+ col("_tx_pos"): _*)
+              .join(broadcast(dv), Seq("__tx_fname", "_tx_pos"), "left_semi")
+              .select(cols.map(col): _*)
+          }
       }
-    val (ins, rewriteDel, upd) = (added, removed) match {
+    // the REMOVED side: rows of removed files and position-deleted rows.
+    // A merge-on-read UPDATE removes no file — it position-deletes each
+    // old row and adds its new one — so both kinds must meet the added
+    // side in one full-row cancellation, or its updates would surface
+    // as an insert plus a delete
+    val removed = (filesAt(prev, pf -- cf) ++ dvDeleted)
+      .reduceOption(_ unionByName _)
+    val (ins, del, upd) = (added, removed) match {
       case (Some(a0), Some(r0)) =>
         // full-row cancel on the columns BOTH sides carry (a schema-
         // evolved commit's new column exists only on the added side)
@@ -1699,8 +1737,7 @@ object TxTable {
       case (a, r) => (a, r, None)
     }
     def keyed(df: DataFrame) = df.select("o_orderkey", "o_custkey")
-    val del = (rewriteDel.map(keyed) ++ dvDeletes).reduceOption(_ unionByName _)
-    (ins.map(keyed), del, upd.map(keyed))
+    (ins.map(keyed), del.map(keyed), upd.map(keyed))
   }
 
   /** q_table_changes — incremental read / change-data-feed between

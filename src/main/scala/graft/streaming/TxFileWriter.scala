@@ -10,8 +10,11 @@ import org.apache.spark.sql.types._
 
 /** Names of the files ONE task staged and made visible at task commit.
   * A flat-table task stages one; a partitioned or bucketed task stages
-  * one per routing directory it saw. */
-private[graft] case class TxFileCommitMessage(names: Seq[String])
+  * one per routing directory it saw. A position-delete write also
+  * reports its TARGETS: the distinct root-relative data files its
+  * addresses point into, which the commit's conflict checks need. */
+private[graft] case class TxFileCommitMessage(names: Seq[String],
+    targets: Seq[String] = Nil)
     extends WriterCommitMessage
 
 /** One incoming column's write shape: its ordinal in the incoming row,
@@ -27,7 +30,7 @@ private[graft] case class TxWriteCol(rowIdx: Int, phys: String,
   * columns (outermost first) or the bucket spec, the FRAME column names
   * the DSv2 write distribution clusters on, the incoming row arity, and
   * the top-level directory (`data`, or `deletes` for position-delete
-  * files). */
+  * files — see [[TxWritePlan.deletes]]). */
 private[graft] case class TxWritePlan(root: String,
     fileCols: Seq[TxWriteCol], parts: Seq[TxWriteCol],
     distCols: Seq[String], numFields: Int,
@@ -45,6 +48,21 @@ private[graft] case class TxWritePlan(root: String,
 
   def fileSchema: StructType =
     StructType(fileCols.map(c => StructField(c.phys, c.declared)))
+
+  /** A position-delete write: its incoming rows are row addresses. */
+  def addresses: Boolean = dir == "deletes"
+}
+
+private[graft] object TxWritePlan {
+  /** The position-delete plan. Its incoming rows are row addresses,
+    * (`_tx_file`, `_tx_pos`) — the scan's own metadata columns, which is
+    * also the row id a merge-on-read UPDATE hands its writer. The file
+    * stores (`fname` = the target's basename, `pos`); the writer reports
+    * the distinct targets in its commit message. */
+  def deletes(root: String): TxWritePlan = TxWritePlan(root,
+    Seq(TxWriteCol(0, "fname", StringType, StringType),
+      TxWriteCol(1, "pos", LongType, LongType)),
+    parts = Nil, distCols = Nil, numFields = 2, dir = "deletes")
 }
 
 /** The one writer factory of the table format, batch and streaming:
@@ -52,8 +70,9 @@ private[graft] case class TxWritePlan(root: String,
   * library stager ([[graft.sources.TxTable.writeData]]) runs it, and the
   * write's id, which every file it stages carries in its name. The
   * library stager sorts each task's input by routing directory, and
-  * keeps the layout Spark's own `df.write` gives: a flat write's first
-  * task stages a file even when it has no rows. */
+  * keeps the layout Spark's own `df.write` gives: a flat data write's
+  * first task stages a file even when it has no rows. A position-delete
+  * write never stages an empty file. */
 private[graft] case class TxWriterFactory(plan: TxWritePlan,
     encoder: ParquetEncoder, library: Boolean = false,
     writeId: String = java.util.UUID.randomUUID.toString)
@@ -85,15 +104,19 @@ private[graft] case class TxWriterFactory(plan: TxWritePlan,
 /** THE file writer of the table format: every data file and every
   * position-delete file is written by one of these, run by Spark's own
   * V2 writing task. SQL and DataFrame writes and the streaming sink
-  * reach it through [[TxTableBatchWrite]]; library appends, compaction,
-  * OPTIMIZE and DV files through [[graft.sources.TxTable.writeData]].
+  * reach it through [[TxTableBatchWrite]], a merge-on-read UPDATE
+  * through two of them ([[TxDeltaWriter]]); library appends,
+  * compaction, OPTIMIZE and DV DELETE files through
+  * [[graft.sources.TxTable.writeData]] and
+  * [[graft.sources.TxTable.writeDeletes]].
   *
   * Each row routes to its directory (`<dir>` flat, `data/<k>=<v>/…`
   * partitioned with path escaping and `__HIVE_DEFAULT_PARTITION__` for
   * NULL, `data/__bucket=<b>/` bucketed by the shared [[TxBucket]] hash,
   * a NULL bucket value refused), is projected to the file columns by one
   * UnsafeProjection that Casts narrower numerics up to the declared
-  * type, and is encoded by Spark's parquet OutputWriter
+  * type (and cuts an address row's path to its basename), and is
+  * encoded by Spark's parquet OutputWriter
   * ([[ParquetEncoder]]): the session codec, Spark's encodings and the
   * footer min/max stats that commit-time stats lifting prunes on. A file
   * is written hidden (`.part-…`, invisible to every manifest and
@@ -110,15 +133,24 @@ private[graft] case class TxWriterFactory(plan: TxWritePlan,
 private[graft] class TxTableDataWriter(factory: TxWriterFactory,
     partitionId: Int, taskId: Long) extends DataWriter[InternalRow] {
   import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast,
-    UnsafeProjection}
+    Literal, SubstringIndex, UnsafeProjection}
   import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 
   private val plan = factory.plan
 
   private val toFile = UnsafeProjection.create(plan.fileCols.map { c =>
     val in = BoundReference(c.rowIdx, c.incoming, nullable = true)
-    if (c.incoming == c.declared) in else Cast(in, c.declared)
+    if (plan.addresses && c.phys == "fname")
+      SubstringIndex(in, Literal("/"), Literal(-1)) // the basename
+    else if (c.incoming == c.declared) in else Cast(in, c.declared)
   })
+
+  /** Position-delete writes: the distinct target paths seen so far.
+    * Addresses arrive grouped by file, so comparing with the last one
+    * keeps the set lookups to one per target file. */
+  private val targets = scala.collection.mutable.HashSet
+    .empty[org.apache.spark.unsafe.types.UTF8String]
+  private var lastTarget: org.apache.spark.unsafe.types.UTF8String = _
 
   private var seq = 0
 
@@ -174,6 +206,13 @@ private[graft] class TxTableDataWriter(factory: TxWriterFactory,
     require(row.numFields == plan.numFields,
       s"txtable writer: row has ${row.numFields} fields, plan " +
         s"expects ${plan.numFields} — row layout drifted")
+    if (plan.addresses) {
+      val t = row.getUTF8String(0)
+      if (t != lastTarget) {
+        lastTarget = t.clone() // the incoming row's buffer is reused
+        targets += lastTarget
+      }
+    }
     val dir = dirOf(row)
     val f = open.getOrElse(dir, {
       if (factory.library) {
@@ -187,9 +226,9 @@ private[graft] class TxTableDataWriter(factory: TxWriterFactory,
     f.writer.write(toFile(row))
   }
 
-  override def commit(): WriterCommitMessage = {
+  override def commit(): TxFileCommitMessage = {
     if (factory.library && partitionId == 0 && open.isEmpty &&
-        plan.parts.isEmpty && plan.bucket.isEmpty)
+        plan.parts.isEmpty && plan.bucket.isEmpty && !plan.addresses)
       open(plan.dir) = new OneFile(plan.dir)
     open.values.foreach(_.writer.close())
     val names = (closed ++ open.values).toSeq.map { f =>
@@ -197,7 +236,8 @@ private[graft] class TxTableDataWriter(factory: TxWriterFactory,
       java.nio.file.Files.deleteIfExists(f.crc.toPath): Unit
       f.rel
     }
-    TxFileCommitMessage(names)
+    TxFileCommitMessage(names,
+      targets.toSeq.map(_.toString.stripPrefix(s"${plan.root}/")))
   }
 
   override def abort(): Unit = {

@@ -571,17 +571,20 @@ private[streaming] class TxTableScan(required: StructType,
 
   /** Per delete file: absolute path, the fname [min, max] its footer
     * stats cover (None = stats unreadable — the file then covers
-    * everything, sound by omission), and its row count. FOOTER METADATA
-    * ONLY, never rows: the driver plans which delete files each scan
+    * everything, sound by omission), and its row count. METADATA ONLY,
+    * never rows: the driver plans which delete files each scan
     * partition must consult; the addresses themselves are read
-    * executor-side by the partition reader. Cached — planning and
-    * statistics estimation share one read. */
+    * executor-side by the partition reader. The stats come from the
+    * manifest (lifted at commit); a delete file committed before
+    * manifests carried them costs one footer read. Cached — planning
+    * and statistics estimation share one read. */
   private lazy val dvRanges
       : Seq[(String, Option[(String, String)], Long)] = manifest match {
     case None => Nil
     case Some(m) =>
       TxTable.deleteEntries(m.files).map { f =>
-        val st = scala.util.Try(TxTable.computeStats(root, f)).toOption
+        val st = m.stats.get(f).orElse(
+          scala.util.Try(TxTable.computeStats(root, f)).toOption)
         (s"$root/$f",
           st.flatMap(_.cols.get("fname").map(c => (c.min, c.max))),
           st.map(_.rows).getOrElse(0L))
@@ -762,7 +765,7 @@ private[streaming] class TxTableBatchWrite(root: String,
   override def commit(epochId: Long,
       messages: Array[WriterCommitMessage]): Unit =
     TxTable.commitEpoch(root, epochId, messages.collect {
-      case TxFileCommitMessage(ns) => ns
+      case m: TxFileCommitMessage => m.names
     }.toSeq.flatten.sorted, checkMeta): Unit
   override def abort(epochId: Long,
       messages: Array[WriterCommitMessage]): Unit =
@@ -911,7 +914,7 @@ private[streaming] class TxTableBatchWrite(root: String,
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val staged = messages.collect {
-      case TxFileCommitMessage(ns) => ns
+      case m: TxFileCommitMessage => m.names
     }.toSeq.flatten.sorted
     if (overwrite)
       TxTable.commitChecked(root, "overwrite", _ => staged,

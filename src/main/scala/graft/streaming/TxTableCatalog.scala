@@ -46,16 +46,37 @@ class TxTableCatalog extends TableCatalog with SupportsNamespaces
     with org.apache.spark.sql.connector.catalog.FunctionCatalog
     with org.apache.spark.sql.connector.catalog.ProcedureCatalog {
   private var catalogName: String = _
-  private var warehouse: String = _
+  private var initWarehouse: String = _
 
   override def initialize(name: String,
       options: CaseInsensitiveStringMap): Unit = {
     catalogName = name
-    warehouse = Option(options.get("warehouse")).getOrElse(sys.error(
+    initWarehouse = Option(options.get("warehouse")).getOrElse(sys.error(
       s"txtable catalog '$name' requires spark.sql.catalog.$name" +
         ".warehouse"))
   }
   override def name(): String = catalogName
+
+  /** The warehouse this catalog was initialized with. Spark initializes
+    * a session's catalog once, at its first use, so a later change of
+    * `spark.sql.catalog.<name>.warehouse` would otherwise be ignored
+    * without a word: SQL would keep writing under the old path while
+    * library calls address the new one. Every use re-reads the setting
+    * and fails naming both paths. */
+  private def warehouse: String = {
+    val key = s"spark.sql.catalog.$catalogName.warehouse"
+    org.apache.spark.sql.SparkSession.getActiveSession
+      .flatMap(_.conf.getOption(key))
+      .filter(_ != initWarehouse)
+      .foreach { now =>
+        throw new IllegalStateException(
+          s"txtable catalog '$catalogName' serves the warehouse " +
+            s"$initWarehouse it was first used with, but $key is now " +
+            s"$now: a catalog's warehouse cannot change within a " +
+            "session — register the new path under a new catalog name")
+      }
+    initWarehouse
+  }
 
   private def checkSeg(s: String): String = {
     require(s.matches("[A-Za-z0-9_]+"),

@@ -28,8 +28,9 @@ import graft.sources.TxTable
   *    start+1..end; batch planning is a manifest DIFF per commit —
   *    O(commit), never O(table) — and each ADDED file becomes one input
   *    partition, read in parallel on executors.
-  *  - APPEND-ONLY BY DEFAULT. A commit that REMOVES files changed or
-  *    deleted rows that were already streamed; replaying them would
+  *  - APPEND-ONLY BY DEFAULT. A commit that REMOVES files, or ADDS
+  *    position-delete files, changed or deleted rows that were already
+  *    streamed; replaying them would
   *    double-count and silently dropping them would lie, so the stream
   *    FAILS LOUDLY on such a commit unless `skipChangeCommits=true`
   *    (then the whole commit is skipped, appends included — exactly
@@ -37,8 +38,8 @@ import graft.sources.TxTable
   *    streamed long ago without removing anything — by file diff alone
   *    it looks like a fresh append — so the manifest's op header
   *    classifies it as a change commit too (the role Delta's typed log
-  *    actions play). A pure-append commit never removes or republishes
-  *    files, so the common ingest path streams clean.
+  *    actions play). A pure-append commit never removes, position-
+  *    deletes or republishes, so the common ingest path streams clean.
   *  - EXACTLY-ONCE ACROSS RESTARTS. The checkpoint's offset log stores
   *    the last committed version; a restart resumes from it, re-planning
   *    only unfinished batches (Structured Streaming's replay contract —
@@ -135,7 +136,10 @@ private[streaming] class TxTableTable(userSchema: StructType,
     *  - `_tx_pos` — the row's index in its file BEFORE position deletes:
     *    the ordinal the reader counts to apply deletes, so an address
     *    read here and a delete applied there use ONE numbering.
-    * Nullable: a MERGE's inserted rows come from no file. */
+    * Together they are the merge-on-read UPDATE's row id, which Spark
+    * requires NOT NULL — true of every scanned row. (A MERGE's inserted
+    * rows come from no file; its plan types those columns nullable
+    * itself.) */
   override def metadataColumns()
       : Array[org.apache.spark.sql.connector.catalog.MetadataColumn] =
     Array(
@@ -234,7 +238,7 @@ private[streaming] object TxTableTable {
     new org.apache.spark.sql.connector.catalog.MetadataColumn {
       override def name(): String = n
       override def dataType(): DataType = t
-      override def isNullable: Boolean = true
+      override def isNullable: Boolean = false
       override def comment(): String = doc
     }
 }
@@ -361,11 +365,13 @@ private[streaming] class TxTableMicroBatchStream(schema: StructType,
     * forward); no data moves until executors open the files.
     *
     * A CHANGE commit is one that removed files (delete/compact/merge —
-    * rows already streamed were rewritten) OR whose op header says
-    * `rollback`: a rollback RE-ADDS files streamed long ago without
-    * removing anything, so its diff is indistinguishable from a fresh
-    * append by file names alone — the op classification is what stops
-    * it replaying old rows (r17 review). */
+    * rows already streamed were rewritten), added position-delete files
+    * (a DV delete, or a merge-on-read UPDATE whose new rows replace
+    * streamed ones), OR whose op header says `rollback`: a rollback
+    * RE-ADDS files streamed long ago without removing anything, so its
+    * diff is indistinguishable from a fresh append by file names alone
+    * — the op classification is what stops it replaying old rows (r17
+    * review). */
   override def planInputPartitions(start: Offset, end: Offset)
       : Array[InputPartition] = {
     val s = start.asInstanceOf[TxVersionOffset].v
@@ -378,10 +384,13 @@ private[streaming] class TxTableMicroBatchStream(schema: StructType,
       val cur = m.files.toSet
       val removed = prev -- cur
       // change commit = removed files (delete/compact/merge rewrote
-      // streamed rows), a rollback (re-adds streamed files with an
-      // append-shaped diff), or a position-delete commit (removes
-      // nothing but marks streamed rows deleted) — op-classified
+      // streamed rows), added delete files (a DV delete or a
+      // merge-on-read UPDATE removes nothing but marks streamed rows
+      // deleted — the UPDATE's new rows would otherwise stream as
+      // appends), or a rollback (re-adds streamed files with an
+      // append-shaped diff — op-classified)
       val isChange = removed.nonEmpty ||
+        TxTable.deleteEntries((cur -- prev).toSeq).nonEmpty ||
         m.props.get("op").exists(TxTableMicroBatchStream.ChangeOps)
       if (isChange) {
         if (!skipChangeCommits) throw new IllegalStateException(
@@ -418,10 +427,11 @@ private[streaming] class TxTableMicroBatchStream(schema: StructType,
 }
 
 private[streaming] object TxTableMicroBatchStream {
-  /** Ops whose commits change already-streamed rows without necessarily
-    * removing a file: rollback republishes streamed files, delete-dv
-    * marks streamed rows deleted via position-delete entries. */
-  val ChangeOps: Set[String] = Set("rollback", "delete-dv")
+  /** Ops whose commits change already-streamed rows although their file
+    * diff looks like an append: rollback republishes streamed files.
+    * (Position-delete commits are recognised by content: they add
+    * `deletes/` entries.) */
+  val ChangeOps: Set[String] = Set("rollback")
 }
 
 private[streaming] case class TxFilePartition(version: Int, path: String,

@@ -304,6 +304,31 @@ class LayoutSpec extends AnyFunSuite with SparkFixture {
       .orderBy("o_orderkey").collect().map(_.toSeq).toSeq == preRows)
   }
 
+  test("changeSets across a SQL UPDATE of 50 keys reports exactly those " +
+      "keys as updates: no inserts, no deletes") {
+    import org.apache.spark.sql.functions._
+    val root = graft.Scratch.dir("txtable", "spec_cdf_update")
+    graft.Scratch.deleteRec(new java.io.File(root))
+    sources.TxTable.init(root)
+    sources.TxTable.appendDemoLoads(spark, root, sf0001)
+    val v0 = sources.TxTable.currentVersion(root)
+    val keys = sources.TxTable.snapshot(spark, root).select("o_orderkey")
+      .orderBy("o_orderkey").limit(50).collect().map(_.getLong(0)).toSet
+    assert(keys.size == 50)
+    val (v, _) = txDml(root)(t => s"UPDATE $t SET o_totalprice = " +
+      s"o_totalprice + 1.0 WHERE o_orderkey IN (${keys.mkString(", ")})")
+    assert(v == v0 + 1 && sources.TxTable.readManifest(root, v)
+      .props.get("op").contains("update"))
+    val (ins, del, upd) = sources.TxTable.changeSets(spark, root, v0, v)
+    assert(ins.map(_.count()).getOrElse(0L) == 0L,
+      "an updated key surfaced as an insert")
+    assert(del.map(_.count()).getOrElse(0L) == 0L,
+      "an updated key surfaced as a delete")
+    assert(upd.map(_.select("o_orderkey").collect().map(_.getLong(0))
+      .toSet).getOrElse(Set.empty) == keys)
+    assert(upd.get.count() == 50L)
+  }
+
   test("q_table_compact bounds versions via in-key vacuum and " +
       "q_table_rollback keeps the bad version as evidence") {
     import org.apache.spark.sql.functions._
@@ -1820,9 +1845,10 @@ class LayoutSpec extends AnyFunSuite with SparkFixture {
     assert(rows(spark.sql("SELECT * FROM dml_tx.db.t")) ==
       expect.sortBy(_._1).map(t => Seq[Any](t._1, t._2, t._3)))
 
-    // 3. UPDATE — and the group selection is FILE PRUNING: make the
+    // 3. UPDATE — merge-on-read, and its scan is FILE PRUNING: make the
     //    table multi-file with disjoint key ranges first, then update
     //    one range and check untouched ranges' files survive verbatim
+    //    and only the matching file is addressed
     spark.sql("""UPDATE dml_tx.db.t SET o_totalprice = o_totalprice * 2
                 |WHERE o_orderkey % 5 = 0""".stripMargin)
     expect = expect.map(t =>
@@ -1841,6 +1867,9 @@ class LayoutSpec extends AnyFunSuite with SparkFixture {
     spark.sql("""INSERT INTO dml_tx.db.t
                 |SELECT o_orderkey + 900000000, o_custkey, o_totalprice
                 |FROM spec_dml_src LIMIT 50""".stripMargin)
+    val mIns = sources.TxTable.readManifest(
+      root, sources.TxTable.currentVersion(root))
+    val highFile = mIns.files.filter(_.startsWith("data/")).toSet -- preFiles
     spark.sql("""UPDATE dml_tx.db.t SET o_totalprice = 0.0
                 |WHERE o_orderkey >= 900000000""".stripMargin)
     val mUpd2 = sources.TxTable.readManifest(
@@ -1849,6 +1878,12 @@ class LayoutSpec extends AnyFunSuite with SparkFixture {
       mUpd2.files.filter(_.startsWith("data/")).toSet),
       "an UPDATE outside the old files' key ranges must not rewrite " +
         "them (group selection = stats pruning)")
+    val newDvs = sources.TxTable.deleteEntries(mUpd2.files).toSet --
+      sources.TxTable.deleteEntries(mIns.files)
+    assert(highFile.size == 1 && newDvs.nonEmpty && newDvs.forall { f =>
+      val c = sources.TxTable.computeStats(root, f).cols("fname")
+      Set(c.min, c.max) == highFile.map(_.stripPrefix("data/"))
+    }, "the UPDATE must address only the file holding its keys")
     spark.sql("DELETE FROM dml_tx.db.t WHERE o_orderkey >= 900000000")
 
     // 4. MERGE INTO == the library-computed expectation: updates hit,

@@ -994,7 +994,8 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
       "table stay within their Spark-job caps") {
     // INSERT, MERGE, UPDATE and a position-delete DELETE, each run twice
     // on fresh keys; the caps are the warm (second-run) counts measured
-    // before the writers shared one parquet encoder, and no cap is
+    // before the writers shared one parquet encoder, the UPDATE's and
+    // the DELETE's once each became one merge-on-read job; no cap is
     // raised to pass
     import org.apache.spark.sql.functions._
     val wh = graft.Scratch.dir("txtable", "spec_optcap_w")
@@ -1018,9 +1019,9 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
         s"(SELECT k * 50 + $i AS k, g + 1 AS g FROM optcap_w_src " +
         "WHERE k < 200) s ON t.k = s.k WHEN MATCHED THEN UPDATE SET " +
         "g = s.g WHEN NOT MATCHED THEN INSERT *"): Unit),
-      ("UPDATE", 3, i => spark.sql("UPDATE optcapw_tx.db.w SET g = g + 1 " +
+      ("UPDATE", 1, i => spark.sql("UPDATE optcapw_tx.db.w SET g = g + 1 " +
         s"WHERE k >= ${100 * i} AND k < ${100 * i + 100}"): Unit),
-      ("DV DELETE", 5, i => spark.sql("DELETE FROM optcapw_tx.db.w WHERE " +
+      ("DV DELETE", 1, i => spark.sql("DELETE FROM optcapw_tx.db.w WHERE " +
         s"k >= ${5000 + 100 * i} AND k < ${5100 + 100 * i}"): Unit),
       ("library append", 1, i => sources.TxTable.append(spark, root,
         spark.table("optcap_w_src").filter(col("k") < 200)
@@ -1033,6 +1034,21 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
     }
     // 10k + 2×200 inserted + 2×200 appended − 2×100 deleted; the MERGE
     // keys (k·50 + i, k < 200) all exist, so it inserts nothing
+    assert(spark.sql("SELECT count(*) FROM optcapw_tx.db.w")
+      .collect()(0).getLong(0) == 10600L)
+    // a 50-key UPDATE writes only what changed: it removes no data file,
+    // and the data files it adds hold exactly the matched rows
+    def dataAt(v: Int) = sources.TxTable.dataEntries(
+      sources.TxTable.readManifest(root, v).files).toSet
+    val v0 = sources.TxTable.currentVersion(root)
+    spark.sql("UPDATE optcapw_tx.db.w SET g = g + 1 " +
+      "WHERE k >= 300 AND k < 350")
+    val v1 = sources.TxTable.currentVersion(root)
+    assert(v1 == v0 + 1 && dataAt(v0).subsetOf(dataAt(v1)),
+      "the UPDATE removed a data file")
+    val m1 = sources.TxTable.readManifest(root, v1)
+    assert((dataAt(v1) -- dataAt(v0)).toSeq.map(m1.stats(_).rows).sum == 50L,
+      "the UPDATE's new data files must hold exactly its 50 matched rows")
     assert(spark.sql("SELECT count(*) FROM optcapw_tx.db.w")
       .collect()(0).getLong(0) == 10600L)
     spark.sql("DROP TABLE optcapw_tx.db.w")

@@ -697,6 +697,50 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
     assert(run(skip = true) == 10)
   }
 
+  test("txtable streaming SOURCE: a SQL UPDATE is a CHANGE commit even " +
+      "though it removes no files") {
+    import org.apache.spark.sql.types._
+    import org.apache.spark.sql.functions._
+    val root = graft.Scratch.dir("txtable", "stream_upd")
+    graft.Scratch.deleteRec(new java.io.File(root))
+    sources.TxTable.init(root)
+    sources.TxTable.append(spark, root,
+      spark.range(0, 10).select(col("id").as("k"),
+        (col("id") * 2.0).as("v")).repartition(1)): Unit
+    val before = sources.TxTable.readManifest(root, 1).files.toSet
+    val (v, removed) = txDml(root)(t => s"UPDATE $t SET v = -1.0 WHERE k < 3")
+    // merge-on-read: the commit removes nothing and adds a delete file
+    // next to the updated rows' new data file — an append by file names
+    val after = sources.TxTable.readManifest(root, v).files.toSet
+    assert(removed.isEmpty && before.subsetOf(after) &&
+      sources.TxTable.deleteEntries((after -- before).toSeq).nonEmpty)
+    val sch = StructType(Seq(StructField("k", LongType),
+      StructField("v", DoubleType)))
+    def run(skip: Boolean): Seq[(Long, Double)] = {
+      val qn = s"txsrc_upd_$skip"
+      val q = spark.readStream.format("txtable").schema(sch)
+        .option("skipChangeCommits", skip.toString).load(root)
+        .writeStream.format("memory").queryName(qn)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+      q.awaitTermination()
+      val got = spark.table(qn).collect()
+        .map(r => (r.getLong(0), r.getDouble(1))).toSeq
+      spark.catalog.dropTempView(qn): Unit
+      got
+    }
+    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      run(skip = false)
+    }
+    def causes(t: Throwable): Seq[Throwable] =
+      if (t == null) Nil else t +: causes(t.getCause)
+    assert(causes(e).exists(c =>
+      Option(c.getMessage).exists(_.contains("append-only"))),
+      s"the UPDATE commit did not fail the append-only stream: $e")
+    // skipped: v1's 10 rows stream once, the UPDATE's new rows never
+    assert(run(skip = true).sorted == (0L until 10L).map(k => (k, k * 2.0)))
+  }
+
   test("txtable streaming SOURCE: a change commit fails the stream " +
       "loudly unless skipChangeCommits, which skips it entirely") {
     import org.apache.spark.sql.types._

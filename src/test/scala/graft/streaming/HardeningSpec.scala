@@ -324,6 +324,77 @@ class HardeningSpec extends AnyFunSuite with graft.SparkFixture {
       s"rebased DV diverged: $got")
   }
 
+  test("DV commit auto-retry: a SQL UPDATE of a matching key landing " +
+      "mid-flight triggers a rebase, the key is deleted, and the table " +
+      "equals the serial replay") {
+    def load(name: String): String = {
+      val root = graft.Scratch.dir("txtable", name)
+      graft.Scratch.deleteRec(new java.io.File(root))
+      TxTable.init(root)
+      TxTable.append(spark, root, spark.range(0, 100)
+        .select(col("id").as("k"), (col("id") * 2.0).as("v"))
+        .repartition(2)): Unit
+      root
+    }
+    val update = (t: String) => s"UPDATE $t SET v = -v WHERE k = 40"
+    val root = load("spec_dvrebase_upd")
+    val vBefore = TxTable.currentVersion(root)
+    // the hook fires between address staging and the DV commit: the
+    // UPDATE moves key 40 into a new file and position-deletes its old
+    // row, so the staged address of key 40 goes stale without any
+    // target file leaving the snapshot
+    var hookRan = false
+    val (v, dvFiles) = TxTable.deleteVector(spark, root,
+      col("k") % 10 === 0,
+      () => { hookRan = true; txDml(root)(update): Unit })
+    assert(hookRan)
+    assert(dvFiles.nonEmpty && v == vBefore + 2,
+      s"expected the UPDATE commit + a rebased DV commit, at v$v")
+    assert((vBefore + 1 to v).map(x => TxTable.readManifest(root, x)
+      .props("op")) == Seq("update", "delete-dv"))
+    def rows(r: String) = TxTable.snapshot(spark, r).orderBy("k")
+      .collect().map(x => (x.getLong(0), x.getDouble(1))).toSeq
+    val got = rows(root)
+    assert(!got.exists(_._1 == 40L), "the updated key survived the DELETE")
+    // the serial replay: the UPDATE, then the DELETE
+    val serial = load("spec_dvrebase_upd_serial")
+    txDml(serial)(update): Unit
+    TxTable.deleteVector(spark, serial, col("k") % 10 === 0): Unit
+    assert(got == rows(serial), "the rebased DELETE diverged from the " +
+      "serial replay")
+    assert(got.map(_._1) == (0L until 100L).filter(_ % 10 != 0))
+  }
+
+  test("a txtable catalog whose warehouse setting changes after its " +
+      "first use fails loudly, naming both paths, and writes nothing " +
+      "under the new one") {
+    val wh = graft.Scratch.dir("txtable", "spec_wh_first")
+    val moved = graft.Scratch.dir("txtable", "spec_wh_moved")
+    Seq(wh, moved).foreach { d =>
+      graft.Scratch.deleteRec(new java.io.File(d))
+      new java.io.File(d).mkdirs()
+    }
+    spark.conf.set("spark.sql.catalog.whc_tx",
+      classOf[TxTableCatalog].getName)
+    spark.conf.set("spark.sql.catalog.whc_tx.warehouse", wh)
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS whc_tx.db")
+    spark.sql("CREATE TABLE whc_tx.db.t (k BIGINT)")
+    spark.conf.set("spark.sql.catalog.whc_tx.warehouse", moved)
+    try {
+      val e = intercept[Exception](
+        spark.sql("INSERT INTO whc_tx.db.t VALUES (1)").collect())
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause)
+        .takeWhile(_ != null).flatMap(c => Option(c.getMessage)).toSeq
+      assert(msgs.exists(m => m.contains(wh) && m.contains(moved)),
+        s"the error must name both warehouses: $msgs")
+      assert(Option(new java.io.File(moved).list()).forall(_.isEmpty),
+        "a write landed under the new warehouse")
+    } finally spark.conf.set("spark.sql.catalog.whc_tx.warehouse", wh)
+    assert(spark.sql("SELECT count(*) FROM whc_tx.db.t").collect()(0)
+      .getLong(0) == 0L)
+    spark.sql("DROP TABLE whc_tx.db.t"): Unit
+  }
+
   test("DSv2 append rebases across a concurrent rename + promote " +
       "instead of aborting: staged narrow files land under the new " +
       "metadata and read-widen (round 20, OCC auto-retry)") {

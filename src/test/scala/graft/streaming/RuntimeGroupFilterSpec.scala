@@ -141,18 +141,31 @@ class RuntimeGroupFilterSpec extends AnyFunSuite with graft.SparkFixture {
     spark.sql("DELETE FROM rgf_dv.db.t WHERE k >= 90")
     assert(TxTable.readManifest(root, TxTable.currentVersion(root))
       .props.get("op").contains("delete-dv"))
-    // then a COPY-ON-WRITE update over the same file (subquery forces
-    // the group rewrite, which must absorb the outstanding DV)
+    // then a COPY-ON-WRITE update over the same file (a MERGE is a
+    // group rewrite, which must absorb the outstanding DV)
     spark.range(0, 10).select(col("id").as("k"))
       .createOrReplaceTempView("rgf_dv_keys")
-    spark.sql("""UPDATE rgf_dv.db.t SET v = -1.0
-                |WHERE k IN (SELECT k FROM rgf_dv_keys)""".stripMargin)
-    val got = spark.sql("SELECT * FROM rgf_dv.db.t").orderBy("k")
+    val dvRead = TxTable.deleteEntries(TxTable.readManifest(root,
+      TxTable.currentVersion(root)).files)
+    spark.sql("""MERGE INTO rgf_dv.db.t t USING rgf_dv_keys s
+                |ON t.k = s.k WHEN MATCHED THEN UPDATE SET v = -1.0"""
+      .stripMargin)
+    val mMerge = TxTable.readManifest(root, TxTable.currentVersion(root))
+    assert(mMerge.props.get("op").contains("merge") &&
+      TxTable.deleteEntries(mMerge.files) == dvRead,
+      "the rewrite must commit over exactly the DV set it read")
+    def rows() = spark.sql("SELECT * FROM rgf_dv.db.t").orderBy("k")
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    val got = rows()
     assert(got.size == 90, s"DV-deleted rows resurrected: ${got.size}")
     assert(got.takeWhile(_._1 < 10).forall(_._2 == -1.0))
     assert(got.filter(t => t._1 >= 10 && t._1 < 90)
       .forall(t => t._2 == t._1 * 1.0))
+    // a merge-on-read UPDATE (subquery condition) over the same
+    // outstanding DVs keeps them gone too
+    spark.sql("""UPDATE rgf_dv.db.t SET v = -2.0
+                |WHERE k IN (SELECT k FROM rgf_dv_keys)""".stripMargin)
+    assert(rows() == got.map(t => if (t._1 < 10) (t._1, -2.0) else t))
     spark.sql("DROP TABLE rgf_dv.db.t")
   }
 
@@ -218,13 +231,16 @@ class RuntimeGroupFilterSpec extends AnyFunSuite with graft.SparkFixture {
     assert(got.count() == 99L, "the concurrent DV delete must hold")
     assert(got.filter(col("v") >= 100.0).count() == 0,
       "the aborted UPDATE must not be partially applied")
-    val visible = Option(new java.io.File(root, "data").listFiles())
-      .toSeq.flatten.filterNot(_.getName.startsWith(".")).map(_.getName)
-      .toSet
-    val listed = m.files.filter(_.startsWith("data/"))
-      .map(_.stripPrefix("data/")).toSet
-    assert(visible == listed,
-      s"aborted rewrite leaked staged files: ${visible -- listed}")
+    // (data files and the UPDATE's position-delete files alike)
+    Seq("data", "deletes").foreach { dir =>
+      val visible = Option(new java.io.File(root, dir).listFiles())
+        .toSeq.flatten.filterNot(_.getName.startsWith(".")).map(_.getName)
+        .toSet
+      val listed = m.files.filter(_.startsWith(s"$dir/"))
+        .map(_.stripPrefix(s"$dir/")).toSet
+      assert(visible == listed,
+        s"aborted UPDATE leaked staged files: ${visible -- listed}")
+    }
     spark.sql("DROP TABLE rgf_race.db.t")
   }
 
