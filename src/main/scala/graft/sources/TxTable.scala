@@ -380,8 +380,9 @@ object TxTable {
         import scala.jdk.CollectionConverters._
         val computed =
           new java.util.concurrent.ConcurrentHashMap[String, FileStats]
+        val conf = org.apache.spark.sql.graft.ParquetDecoder.hadoopConf()
         missing.asJava.parallelStream().forEach { f =>
-          scala.util.Try(computeStats(root, f))
+          scala.util.Try(computeStats(root, f, conf))
             .foreach(computed.put(f, _)): Unit
         }
         statsCache ++= computed.asScala
@@ -419,12 +420,12 @@ object TxTable {
     * stats-less columns are skipped, so they can never prune (sound by
     * omission). Partition path segments (`k=v` directories under
     * data/) are recorded as exact min = max = v with type "part". */
-  private[graft] def computeStats(root: String, rel: String): FileStats = {
+  private[graft] def computeStats(root: String, rel: String,
+      conf: org.apache.hadoop.conf.Configuration): FileStats = {
     import org.apache.parquet.schema.LogicalTypeAnnotation
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
     val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(s"$root/$rel"),
-      new org.apache.hadoop.conf.Configuration())
+      new org.apache.hadoop.fs.Path(s"$root/$rel"), conf)
     val rd = org.apache.parquet.hadoop.ParquetFileReader.open(in)
     try {
       import scala.jdk.CollectionConverters._
@@ -1390,9 +1391,11 @@ object TxTable {
     // everything); files are immutable, so one read per file per call
     val dvRange = scala.collection.mutable.Map
       .empty[String, Option[(String, String)]]
+    lazy val conf = org.apache.spark.sql.graft.ParquetDecoder.hadoopConf()
     def covers(dv: String, fnames: Set[String]): Boolean =
-      dvRange.getOrElseUpdate(dv, scala.util.Try(computeStats(root, dv))
-          .toOption.flatMap(_.cols.get("fname").map(c => (c.min, c.max))))
+      dvRange.getOrElseUpdate(dv,
+        scala.util.Try(computeStats(root, dv, conf)).toOption
+          .flatMap(_.cols.get("fname").map(c => (c.min, c.max))))
         .forall { case (mn, mx) => fnames.exists(f => mn <= f && f <= mx) }
     while (true) {
       val cur = currentVersion(root)

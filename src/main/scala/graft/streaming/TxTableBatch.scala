@@ -33,14 +33,14 @@ import graft.sources.TxTable
   *    pruning rides for free (partition path segments are min=max
   *    "part" stats — one mechanism), and a `_tx_file` `=`/`IN` leaf
   *    selects files exactly (the path is constant within a file).
-  *  - COLUMN PRUNING. `pruneColumns` narrows the read schema; the
-  *    per-file reader projects each parquet file to exactly the
-  *    surviving columns it physically carries (footer-resolved), so an
-  *    unused column's pages are never decoded.
+  *  - COLUMN PRUNING. `pruneColumns` narrows the read schema; Spark's
+  *    parquet reader decodes only the surviving columns' pages, and the
+  *    pushed filters also prune row groups inside each kept file by
+  *    their parquet statistics.
   *  - MERGE-ON-READ deletes apply IN THE READER: each planned file's
   *    position-delete files ride its [[TxFilePartition]], and the
-  *    reader skips the addressed ordinals while iterating (the
-  *    `_tx_pos` numbering). No join above the scan.
+  *    reader skips the rows whose parquet row index (`_tx_pos`) they
+  *    address. No join above the scan.
   *  - TIME TRAVEL via `option("versionAsOf", v)`; each version reads
   *    under its own column mapping and tracked schema (a pre-rename
   *    snapshot serves pre-rename names, a pre-promotion snapshot the
@@ -55,9 +55,11 @@ import graft.sources.TxTable
   *
   * Scale shape: planning is driver-side manifest arithmetic
   * (commit-bounded name lists + stats lines); each kept file is one
-  * input partition opened on executors by the vectorized parquet
-  * reader. At 100 TB a selective predicate plans the handful of files
-  * its ranges touch — the scan never lists, opens, or footers the rest.
+  * input partition opened on executors by Spark's parquet reader (one
+  * broadcast conf per scan, one footer read per file, row groups
+  * pruned inside large files). At 100 TB a selective predicate plans
+  * the handful of files its ranges touch — the scan never lists, opens,
+  * or footers the rest.
   */
 private[streaming] class TxTableScanBuilder(declared: StructType,
     root: String, versionAsOf: Option[Int], skipChange: Boolean,
@@ -395,8 +397,6 @@ private[streaming] class TxTableScan(required: StructType,
         // which files the write removes (ADVICE r19).
         recorder.foreach(_.planned = Some(TxPlannedGroups(readVersion,
           kept0, TxTable.deleteEntries(m.files))))
-        val logToPhys = TxTable.colMapOf(m)
-          .map(_.logToPhys).getOrElse(Map.empty[String, String])
         def mkFile(f: String): TxFilePartition = {
           val fname = f.substring(f.lastIndexOf('/') + 1)
           val covering = dvRanges.collect {
@@ -404,8 +404,7 @@ private[streaming] class TxTableScan(required: StructType,
                 if range.forall { case (mn, mx) =>
                   mn <= fname && fname <= mx } => dvPath
           }
-          TxFilePartition(readVersion, s"$root/$f", logToPhys,
-            dvFiles = covering)
+          TxFilePartition(readVersion, s"$root/$f", dvFiles = covering)
         }
         bucketGroups(kept) match {
           case Some(groups) => groups.map { case (b, fs) =>
@@ -582,17 +581,31 @@ private[streaming] class TxTableScan(required: StructType,
       : Seq[(String, Option[(String, String)], Long)] = manifest match {
     case None => Nil
     case Some(m) =>
+      lazy val conf = org.apache.spark.sql.graft.ParquetDecoder.hadoopConf()
       TxTable.deleteEntries(m.files).map { f =>
         val st = m.stats.get(f).orElse(
-          scala.util.Try(TxTable.computeStats(root, f)).toOption)
+          scala.util.Try(TxTable.computeStats(root, f, conf)).toOption)
         (s"$root/$f",
           st.flatMap(_.cols.get("fname").map(c => (c.min, c.max))),
           st.map(_.rows).getOrElse(0L))
       }
   }
 
+  /** Spark's parquet reader for this scan's files (one broadcast conf
+    * per scan), with the pushed filters for row-group pruning. */
   override def createReaderFactory(): PartitionReaderFactory =
-    TxTableReaderFactory(required)
+    TxTableReaderFactory(required, manifest.flatMap(TxTable.colMapOf)
+        .map(_.logToPhys).getOrElse(Map.empty),
+      manifest.map(TxTable.partitionColumns).getOrElse(Nil), pushed,
+      withDeletes = dvRanges.nonEmpty)
+
+  // rows only: declared so that planning never builds the reader to ask
+  override def columnarSupportMode(): Scan.ColumnarSupportMode =
+    Scan.ColumnarSupportMode.UNSUPPORTED
+
+  override def supportedCustomMetrics()
+      : Array[org.apache.spark.sql.connector.metric.CustomMetric] =
+    TxScanMetrics.all
 
   /** Post-skipping cardinality from manifest stats: row counts summed
     * over the PLANNED files only (minus their delete-vector ordinals),

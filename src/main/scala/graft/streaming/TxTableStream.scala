@@ -6,9 +6,12 @@ import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapabil
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsTriggerAvailableNow}
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.{InternalRow, ProjectingInternalRow}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.sources.DataSourceRegister
+import org.apache.spark.sql.connector.metric.{CustomMetric, CustomSumMetric,
+  CustomTaskMetric}
+import org.apache.spark.sql.graft.ParquetDecoder
+import org.apache.spark.sql.sources.{And, DataSourceRegister, EqualTo, Filter}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -48,12 +51,12 @@ import graft.sources.TxTable
   *  - An optional `_commit_version` INT column in the user schema is
   *    filled from the commit that added each file (the CDF-style
   *    provenance column); all other schema fields resolve against the
-  *    parquet footers by NAME, absent columns reading as NULL (the same
+  *    parquet files by NAME, absent columns reading as NULL (the same
   *    add-column evolution contract as the batch snapshot read).
   *
   * Scale shape: planning is manifest arithmetic on the driver (file
   * NAMES, commit-sized); row work is per-added-file partitions on
-  * executors via the parquet-hadoop reader, so a 1000-executor cluster
+  * executors via Spark's parquet reader, so a 1000-executor cluster
   * drains a backlog at scan parallelism. Retention is the consumer
   * lease: a consumer lagging past [[TxTable.vacuum]]'s window fails
   * loudly on the pruned manifest (the same reader-lease bound as every
@@ -74,14 +77,12 @@ import graft.sources.TxTable
   *    the same name). Starting past the retention window fails loudly
   *    at stream start (the diff base v(N−1) must be a retained
   *    manifest), not silently from the wrong base.
-  *  - the per-file reader now drives Spark's VECTORIZED parquet reader
-  *    (`VectorizedParquetRecordReader`, batch size 4096): column
-  *    decoding is batched and columnar instead of the parquet-hadoop
-  *    example Group API's per-row materialization, so a backlog drain
-  *    pays page-decode cost, not per-row object churn. Schema evolution
-  *    is preserved by projecting each file to the DECLARED columns it
-  *    actually contains (footer-read at open) and NULL-backfilling the
-  *    rest at emission.
+  *  - files are read by Spark's own parquet reader
+  *    ([[TxTableReaderFactory]]): column decoding is batched and
+  *    columnar, so a backlog drain pays page-decode cost, not per-row
+  *    object churn. The declared columns are requested by physical name
+  *    and declared type, so a file written before ADD COLUMN reads them
+  *    as NULL and a pre-promotion file's narrow pages widen.
   */
 class TxTableSourceProvider extends TableProvider with DataSourceRegister {
   override def shortName(): String = "txtable"
@@ -403,7 +404,7 @@ private[streaming] class TxTableMicroBatchStream(schema: StructType,
       } else {
         (cur -- prev).toSeq.sorted
           .filter(_.startsWith("data/")) // never stream delete files
-          .foreach(f => out += TxFilePartition(v, s"$root/$f", headMap))
+          .foreach(f => out += TxFilePartition(v, s"$root/$f"))
       }
       prev = cur
     }
@@ -416,14 +417,15 @@ private[streaming] class TxTableMicroBatchStream(schema: StructType,
     * physical columns through the newest mapping — the Delta
     * column-mapping streaming contract (per-commit mappings would
     * surface renamed-era names inconsistently mid-stream). */
-  private lazy val headMap: Map[String, String] = {
-    val vs = TxTable.versions(root)
-    vs.lastOption.map(v => TxTable.colMapOf(TxTable.readManifest(root, v))
-      .map(_.logToPhys).getOrElse(Map.empty)).getOrElse(Map.empty)
-  }
+  private lazy val head: Option[TxTable.Manifest] =
+    TxTable.versions(root).lastOption.map(TxTable.readManifest(root, _))
+  private lazy val headMap: Map[String, String] =
+    head.flatMap(TxTable.colMapOf).map(_.logToPhys).getOrElse(Map.empty)
 
   override def createReaderFactory(): PartitionReaderFactory =
-    TxTableReaderFactory(schema)
+    TxTableReaderFactory(schema, headMap,
+      head.map(TxTable.partitionColumns).getOrElse(Nil), Array.empty,
+      withDeletes = false)
 }
 
 private[streaming] object TxTableMicroBatchStream {
@@ -434,39 +436,13 @@ private[streaming] object TxTableMicroBatchStream {
   val ChangeOps: Set[String] = Set("rollback")
 }
 
+
+/** One data file of a scan: its path, the commit that added it (the
+  * streaming `_commit_version`), and the position-delete files whose
+  * footer `fname` range covers it (batch scans only). */
 private[streaming] case class TxFilePartition(version: Int, path: String,
-    logToPhys: Map[String, String] = Map.empty,
     dvFiles: Seq[String] = Nil)
     extends InputPartition
-
-private[streaming] object TxFilePartition {
-  /** EXECUTOR-SIDE position-delete resolution (round 19): read the
-    * partition's candidate delete files (parquet of `fname` string,
-    * `pos` long — pre-filtered driver-side by footer fname range) and
-    * keep the ordinals addressing THIS file. The driver never
-    * materializes an address; each task reads the KB-scale delete
-    * files it actually needs — the Iceberg delete-file hand-off. */
-  def readDeleted(dvFiles: Seq[String], fname: String): Array[Long] = {
-    if (dvFiles.isEmpty) return Array.emptyLongArray
-    val out = Array.newBuilder[Long]
-    dvFiles.foreach { p =>
-      val conf = new org.apache.hadoop.conf.Configuration()
-      val rd = org.apache.parquet.hadoop.ParquetReader
-        .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(),
-          new org.apache.hadoop.fs.Path(p))
-        .withConf(conf).build()
-      try {
-        var g = rd.read()
-        while (g != null) {
-          if (g.getString("fname", 0) == fname)
-            out += g.getLong("pos", 0)
-          g = rd.read()
-        }
-      } finally rd.close()
-    }
-    out.result().sorted
-  }
-}
 
 /** One BUCKET of a bucketed table's scan: every planned file of bucket
   * id `bucket`, read as ONE input partition. [[org.apache.spark.sql
@@ -494,210 +470,218 @@ private[streaming] case class TxKeyedPartition(keyVals: Seq[Any],
     new GenericInternalRow(keyVals.toArray)
 }
 
-private[streaming] case class TxTableReaderFactory(schema: StructType)
+/** How a scan decodes its files, built once per scan on the driver:
+  * Spark's parquet reader ([[ParquetDecoder]], one broadcast conf) for
+  * the data files and, when the scan has position deletes, one for the
+  * delete files over the same conf. What a data file's reader returns,
+  * in order:
+  *  - `data`'s fields: the scan's file columns under their PHYSICAL
+  *    names (column mapping) and DECLARED types (the reader widens a
+  *    pre-promotion int32/float file), all nullable (a file written
+  *    before ADD COLUMN reads NULL), then the reader's row index when
+  *    `_tx_pos` is selected or deletes apply;
+  *  - per-file constants: the partition directory values (typed, the
+  *    Hive default partition as NULL), `_tx_file`, `_commit_version`.
+  * `ordinals` maps each field of `schema` to its slot in that row. */
+private[streaming] case class TxTableReaderFactory(schema: StructType,
+    data: ParquetDecoder, deletes: Option[ParquetDecoder],
+    ordinals: IndexedSeq[Int], rowIndex: Int,
+    partCols: Seq[(String, DataType)], txFile: Boolean,
+    commitVersion: Option[DataType])
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition)
       : PartitionReader[InternalRow] = partition match {
-    case p: TxFilePartition => new TxFilePartitionReader(p, schema)
-    case b: TxBucketPartition => new TxChainedReader(b.files, schema)
-    case k: TxKeyedPartition => new TxChainedReader(k.files, schema)
+    case p: TxFilePartition => new TxFilesReader(Seq(p), this)
+    case b: TxBucketPartition => new TxFilesReader(b.files, this)
+    case k: TxKeyedPartition => new TxFilesReader(k.files, this)
     case other => sys.error(s"unexpected partition type $other")
+  }
+
+  /** The per-file constant columns of `p`. Partition values were
+    * path-escaped by the writers, so they are unescaped here. */
+  def constants(p: TxFilePartition): InternalRow = {
+    val utils = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+    val segs = p.path.split("/").dropRight(1).filter(_.contains('='))
+      .map { seg => val Array(k, v) = seg.split("=", 2); k -> v }.toMap
+    val parts = partCols.map { case (phys, dt) =>
+      segs.get(phys).filter(_ != utils.DEFAULT_PARTITION_NAME)
+        .map(utils.unescapePathName).map[Any] { v => dt match {
+          case IntegerType => v.toInt
+          case LongType => v.toLong
+          case DoubleType => v.toDouble
+          case _ => UTF8String.fromString(v)
+        } }.orNull
+    }
+    val file = if (txFile) Seq(UTF8String.fromString(p.path)) else Nil
+    val version = commitVersion.map[Any] {
+      case IntegerType => p.version
+      case _ => p.version.toLong
+    }
+    new GenericInternalRow((parts ++ file ++ version).toArray)
+  }
+
+  /** Sorted row indexes of the data file named `fname` that the delete
+    * files `dvFiles` (parquet of `fname` string, `pos` long) address.
+    * `fname = <fname>` is pushed into the reader, so row groups of other
+    * files' addresses are skipped. */
+  def deleted(dvFiles: Seq[String], fname: String): Array[Long] =
+    if (dvFiles.isEmpty) Array.emptyLongArray
+    else {
+      val dec = deletes.get.withFilters(Array(EqualTo("fname", fname)))
+      val want = UTF8String.fromString(fname)
+      val out = Array.newBuilder[Long]
+      dvFiles.foreach { dv =>
+        val r = dec.open(dv, InternalRow.empty)
+        try while (r.next()) {
+          val row = r.get()
+          if (row.getUTF8String(0) == want) out += row.getLong(1)
+        } finally r.close()
+      }
+      val a = out.result()
+      java.util.Arrays.sort(a)
+      a
+    }
+}
+
+private[streaming] object TxTableReaderFactory {
+  private val Meta = Set("_commit_version", "_tx_file", "_tx_pos")
+
+  /** The reader of `schema` over files laid out under `logToPhys` and
+    * the PHYSICAL partition columns `partPhys`. `pushed` (logical
+    * names) prunes row groups, every row stays filtered above the scan;
+    * `withDeletes` = some file has position deletes. */
+  def apply(schema: StructType, logToPhys: Map[String, String],
+      partPhys: Seq[String], pushed: Array[Filter],
+      withDeletes: Boolean): TxTableReaderFactory = {
+    def phys(n: String): String = logToPhys.getOrElse(n, n)
+    def expect(name: String, ok: DataType => Boolean, want: String)
+        : Option[DataType] =
+      schema.find(_.name == name).map { f =>
+        require(ok(f.dataType), s"txtable reader: $name must be declared " +
+          s"$want, got ${f.dataType}")
+        f.dataType
+      }
+    val commitVersion = expect("_commit_version",
+      t => t == IntegerType || t == LongType, "int or bigint")
+    val txFile = expect("_tx_file", _ == StringType, "string").isDefined
+    val txPos = expect("_tx_pos", _ == LongType, "bigint").isDefined
+    val (parts, cols) = schema.fields.toSeq.filterNot(f => Meta(f.name))
+      .partition(f => partPhys.contains(phys(f.name)))
+    parts.foreach(f => require(
+      Seq(IntegerType, LongType, DoubleType, StringType).contains(f.dataType),
+      s"txtable reader: partition column ${f.name} declared as " +
+        s"unsupported type ${f.dataType} (supported: int/long/double/string)"))
+    val rowIndex = if (txPos || withDeletes) cols.size else -1
+    val read = StructType(
+      cols.map(f => StructField(phys(f.name), f.dataType, nullable = true)) ++
+        (if (rowIndex >= 0) Seq(ParquetDecoder.RowIndexField) else Nil))
+    val constants = StructType(parts ++
+      (if (txFile) Seq(StructField("_tx_file", StringType)) else Nil) ++
+      commitVersion.map(StructField("_commit_version", _)))
+    val slot: Map[String, Int] =
+      (cols.map(_.name) ++ (if (rowIndex >= 0) Seq("_tx_pos") else Nil) ++
+        constants.fieldNames).zipWithIndex.toMap
+    // row-group pruning by the conjuncts over file columns whose name
+    // is not mapped (a renamed column's logical name can be another
+    // column's physical one)
+    val direct = cols.map(_.name).filter(n => phys(n) == n).toSet
+    def conjuncts(f: Filter): Seq[Filter] = f match {
+      case And(l, r) => conjuncts(l) ++ conjuncts(r)
+      case other => Seq(other)
+    }
+    val data = ParquetDecoder(org.apache.spark.sql.SparkSession.active,
+      read, constants,
+      pushed.flatMap(conjuncts).filter(_.references.forall(direct)))
+    TxTableReaderFactory(schema, data,
+      if (withDeletes) Some(data.reading(new StructType()
+        .add("fname", StringType).add("pos", LongType))) else None,
+      schema.fieldNames.toIndexedSeq.map(slot), rowIndex,
+      parts.map(f => (phys(f.name), f.dataType)), txFile, commitVersion)
   }
 }
 
-/** Sequential reader over one bucket's files — files open lazily, one
-  * at a time (a bucket of K files costs one open reader, not K). */
-private[streaming] class TxChainedReader(parts: Seq[TxFilePartition],
-    schema: StructType) extends PartitionReader[InternalRow] {
-  private val it = parts.iterator
-  private var cur: TxFilePartitionReader = null
+/** Executor-side reader of one partition's files, one at a time (a
+  * bucket of K files holds one open file). Each file's rows come from
+  * [[ParquetDecoder.open]]; its position deletes are resolved to sorted
+  * row indexes first ([[TxTableReaderFactory.deleted]]), and a row whose
+  * index — the reader's own row index, `_tx_pos` — is among them is
+  * skipped. Row indexes rise through a file, so one pointer walks the
+  * deletes. */
+private[streaming] class TxFilesReader(files: Seq[TxFilePartition],
+    f: TxTableReaderFactory) extends PartitionReader[InternalRow] {
+  private val it = files.iterator
+  private var cur: PartitionReader[InternalRow] = null
+  private var deleted: Array[Long] = Array.emptyLongArray
+  private var delPtr = 0
+  private val out = ProjectingInternalRow(f.schema, f.ordinals)
+  private var filesRead = 0L
+  private var deleteFilesRead = 0L
+  private var rowsDeleted = 0L
+
+  private def open(p: TxFilePartition): Unit = {
+    deleted = f.deleted(p.dvFiles,
+      p.path.substring(p.path.lastIndexOf('/') + 1))
+    delPtr = 0
+    deleteFilesRead += p.dvFiles.size
+    cur = f.data.open(p.path, f.constants(p))
+    filesRead += 1
+  }
+
   override def next(): Boolean = {
     while (true) {
       if (cur == null) {
         if (!it.hasNext) return false
-        cur = new TxFilePartitionReader(it.next(), schema)
+        open(it.next())
       }
-      if (cur.next()) return true
+      while (cur.next()) {
+        if (delPtr >= deleted.length) return true
+        val pos = cur.get().getLong(f.rowIndex)
+        while (delPtr < deleted.length && deleted(delPtr) < pos) delPtr += 1
+        if (delPtr < deleted.length && deleted(delPtr) == pos) rowsDeleted += 1
+        else return true
+      }
       cur.close(); cur = null
     }
     false // unreachable
   }
-  override def get(): InternalRow = cur.get()
+
+  override def get(): InternalRow = { out.project(cur.get()); out }
   override def close(): Unit = if (cur != null) cur.close()
+
+  override def currentMetricsValues(): Array[CustomTaskMetric] =
+    Array(TxScanMetrics.task("filesRead", filesRead),
+      TxScanMetrics.task("deleteFilesRead", deleteFilesRead),
+      TxScanMetrics.task("rowsDeleted", rowsDeleted))
+  // a key-grouped partition's readers run in sequence: carry the totals
+  override def initMetricsValues(metrics: Array[CustomTaskMetric]): Unit =
+    metrics.foreach { m => m.name match {
+      case "filesRead" => filesRead = m.value
+      case "deleteFilesRead" => deleteFilesRead = m.value
+      case "rowsDeleted" => rowsDeleted = m.value
+      case _ =>
+    } }
 }
 
-/** Executor-side reader: one added parquet file → InternalRows via
-  * Spark's VECTORIZED parquet reader (round 18, VERDICT r17 item 5 —
-  * replacing the row-at-a-time parquet-hadoop Group materialization):
-  * column pages decode in 4096-row columnar batches, the dominant cost
-  * of a backlog drain. Fields resolve by NAME against the file's own
-  * footer schema — the file is PROJECTED to the declared columns it
-  * actually contains (footer read once at open; column pruning for
-  * free), a field the file predates reads as NULL (add-column
-  * evolution), and a `_commit_version` field is filled from the
-  * partition's commit (int or long declared type — anything else fails
-  * loudly like every other unsupported field, ADVICE r17: the old
-  * fallback boxed a Long under e.g. a declared StringType, corrupting
-  * the InternalRow instead of erroring). */
-private[streaming] class TxFilePartitionReader(part: TxFilePartition,
-    schema: StructType) extends PartitionReader[InternalRow] {
-  import org.apache.spark.sql.execution.datasources.parquet.VectorizedParquetRecordReader
-
-  // footer read: which declared fields does THIS file carry, in file
-  // order (the projection order the vectorized reader will emit), plus
-  // each one's PHYSICAL primitive type — a type-promoted table's older
-  // files carry the narrow pre-promotion type (int32 under a declared
-  // bigint, float under a declared double) and must extract through the
-  // narrow getter, widened here (the format-reader mediation type
-  // promotion requires)
-  private val fileSchema: Seq[(String, String)] = {
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(part.path),
-      new org.apache.hadoop.conf.Configuration())
-    val rd = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-    try {
-      import scala.jdk.CollectionConverters._
-      rd.getFileMetaData.getSchema.getFields.asScala.map { f =>
-        f.getName -> (if (f.isPrimitive)
-          f.asPrimitiveType().getPrimitiveTypeName.name else "group")
-      }.toSeq
-    } finally rd.close()
+/** The txtable scan's custom metrics, summed over tasks: data files
+  * opened, delete files read for them, and rows position deletes
+  * removed. */
+private[streaming] object TxScanMetrics {
+  def task(n: String, v: Long): CustomTaskMetric = new CustomTaskMetric {
+    override def name(): String = n
+    override def value(): Long = v
   }
-  private val fileFields: Seq[String] = fileSchema.map(_._1)
-  private val filePrimTypes: Map[String, String] = fileSchema.toMap
-  private val declared = schema.fields.filter(f =>
-    f.name != "_commit_version" && f.name != "_tx_file" &&
-      f.name != "_tx_pos")
-  // declared names are LOGICAL; files carry PHYSICAL columns — resolve
-  // through the commit's column mapping (identity when unmapped)
-  private def physOf(logical: String): String =
-    part.logToPhys.getOrElse(logical, logical)
-  private val present: Seq[String] =
-    fileFields.filter(declared.map(f => physOf(f.name)).toSet)
-  private val presentIdx: Map[String, Int] = present.zipWithIndex.toMap
-
-  // a PARTITIONED table's entries live under data/<col>=<v>/…: the
-  // column exists only as a path segment, so fill it as a per-file
-  // constant (typed like _commit_version — unparseable declared types
-  // fail loudly, never NULL-backfill a value the path carries)
-  // values were path-escaped by the writers (escapePathName) — decode,
-  // so ':' '%' '=' etc. in a string partition value round-trip exactly
-  // (ADVICE r19: the raw segment surfaced escaped values to readers).
-  // The Hive default-partition marker reads back as NULL (round 20) —
-  // the entry is simply omitted, so the field falls to the NULL arm.
-  private val partValues: Map[String, Any] = part.path.split("/")
-    .dropRight(1).filter(_.contains('=')).map { seg =>
-      val Array(k, v) = seg.split("=", 2)
-      k -> org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-        .unescapePathName(v)
-    }.toMap.filter(_._2 != org.apache.spark.sql.catalyst.catalog
-      .ExternalCatalogUtils.DEFAULT_PARTITION_NAME).collect {
-      // the path segment carries the PHYSICAL name; key the map by the
-      // declared LOGICAL name it resolves to
-      case (k, v) if declared.exists(f => physOf(f.name) == k) =>
-        val lf = declared.find(f => physOf(f.name) == k).get
-        val dt = lf.dataType
-        lf.name -> (dt match {
-          case IntegerType => java.lang.Integer.valueOf(v.toInt)
-          case LongType => java.lang.Long.valueOf(v.toLong)
-          case DoubleType => java.lang.Double.valueOf(v.toDouble)
-          case StringType => UTF8String.fromString(v)
-          case other => sys.error(
-            s"txtable reader: partition column $k declared " +
-              s"as unsupported type $other (supported: int/long/" +
-              "double/string)")
-        })
-    }
-
-  private val reader = new VectorizedParquetRecordReader(
-    /* useOffHeap = */ false, /* capacity = */ 4096)
-  locally {
-    import scala.jdk.CollectionConverters._
-    reader.initialize(part.path, present.asJava)
-  }
-
-  // merge-on-read: skip this file's position-delete ordinals while
-  // iterating (the batch scan ships DELETE-FILE PATHS in the partition,
-  // resolved to sorted ordinals HERE on the executor; the vectorized
-  // reader emits rows in file order, so the running row index is the
-  // `_tx_pos` address [[TxTable.deleteVector]] wrote)
-  private val deleted: Array[Long] = TxFilePartition.readDeleted(
-    part.dvFiles, part.path.substring(part.path.lastIndexOf('/') + 1))
-  private var rowIdx: Long = -1L
-  private var delPtr: Int = 0
-  override def next(): Boolean = {
-    while (reader.nextKeyValue()) {
-      rowIdx += 1
-      while (delPtr < deleted.length && deleted(delPtr) < rowIdx)
-        delPtr += 1
-      if (delPtr >= deleted.length || deleted(delPtr) != rowIdx)
-        return true
-    }
-    false
-  }
-
-  override def get(): InternalRow = {
-    // the batch row is backed by reused column-vector memory — extract
-    // and box per field (UTF8String COPIED out of the vector buffer)
-    val row = reader.getCurrentValue.asInstanceOf[InternalRow]
-    val vals = schema.fields.map { f =>
-      // explicit boxing: Scala harmonizes Int/Long match branches to
-      // Long, which would put a boxed Long under an IntegerType ordinal
-      if (f.name == "_commit_version") f.dataType match {
-        case IntegerType => java.lang.Integer.valueOf(part.version)
-        case LongType => java.lang.Long.valueOf(part.version.toLong)
-        case dt => sys.error(
-          s"txtable reader: _commit_version must be declared " +
-            s"int or bigint, got $dt")
-      }
-      // file-provenance metadata column (round 19): the absolute path
-      // of the file this row came from — group-constant by definition,
-      // which is what makes it the runtime group-filter attribute for
-      // row-level DML ([[TxRuntimeFilteredScan]])
-      else if (f.name == "_tx_file") f.dataType match {
-        case StringType => UTF8String.fromString(part.path)
-        case dt => sys.error(
-          s"txtable reader: _tx_file must be declared string, got $dt")
-      }
-      // row address (the index the delete vector above is matched on)
-      else if (f.name == "_tx_pos") f.dataType match {
-        case LongType => java.lang.Long.valueOf(rowIdx)
-        case dt => sys.error(
-          s"txtable reader: _tx_pos must be declared bigint, got $dt")
-      }
-      else presentIdx.get(physOf(f.name)) match {
-        case None => partValues.getOrElse(f.name, null) // partition dir value, or pre-evolution file
-        case Some(i) if row.isNullAt(i) => null // NULL cell
-        case Some(i) => (f.dataType, filePrimTypes(physOf(f.name))) match {
-          // type promotion: a pre-promotion file's narrow physical page
-          // extracts through the NARROW getter and widens here —
-          // reading the wide getter over a narrow vector is undefined
-          case (LongType, "INT32") =>
-            java.lang.Long.valueOf(row.getInt(i).toLong)
-          case (DoubleType, "FLOAT") =>
-            java.lang.Double.valueOf(row.getFloat(i).toDouble)
-          case (LongType, _) => java.lang.Long.valueOf(row.getLong(i))
-          case (IntegerType, _) =>
-            java.lang.Integer.valueOf(row.getInt(i))
-          case (DoubleType, _) =>
-            java.lang.Double.valueOf(row.getDouble(i))
-          case (FloatType, _) => java.lang.Float.valueOf(row.getFloat(i))
-          case (BooleanType, _) =>
-            java.lang.Boolean.valueOf(row.getBoolean(i))
-          case (StringType, _) => row.getUTF8String(i).copy()
-          // the vectors already hold days / microseconds
-          case (DateType, _) => java.lang.Integer.valueOf(row.getInt(i))
-          case (TimestampType | TimestampNTZType, _) =>
-            java.lang.Long.valueOf(row.getLong(i))
-          case (dt, _) => sys.error(
-            s"txtable reader: unsupported field type $dt " +
-              s"for ${f.name} (supported: long/int/double/float/" +
-              "boolean/string/date/timestamp/timestamp_ntz)")
-        }
-      }
-    }
-    new GenericInternalRow(vals.asInstanceOf[Array[Any]])
-  }
-
-  override def close(): Unit = reader.close()
+  val all: Array[CustomMetric] = Array(new TxFilesReadMetric,
+    new TxDeleteFilesReadMetric, new TxRowsDeletedMetric)
+}
+private[streaming] class TxFilesReadMetric extends CustomSumMetric {
+  override def name(): String = "filesRead"
+  override def description(): String = "data files read"
+}
+private[streaming] class TxDeleteFilesReadMetric extends CustomSumMetric {
+  override def name(): String = "deleteFilesRead"
+  override def description(): String = "delete files read"
+}
+private[streaming] class TxRowsDeletedMetric extends CustomSumMetric {
+  override def name(): String = "rowsDeleted"
+  override def description(): String = "rows removed by position deletes"
 }

@@ -1881,7 +1881,8 @@ class LayoutSpec extends AnyFunSuite with SparkFixture {
     val newDvs = sources.TxTable.deleteEntries(mUpd2.files).toSet --
       sources.TxTable.deleteEntries(mIns.files)
     assert(highFile.size == 1 && newDvs.nonEmpty && newDvs.forall { f =>
-      val c = sources.TxTable.computeStats(root, f).cols("fname")
+      val c = sources.TxTable.computeStats(root, f,
+        spark.sparkContext.hadoopConfiguration).cols("fname")
       Set(c.min, c.max) == highFile.map(_.stripPrefix("data/"))
     }, "the UPDATE must address only the file holding its keys")
     spark.sql("DELETE FROM dml_tx.db.t WHERE o_orderkey >= 900000000")
@@ -2336,5 +2337,78 @@ class LayoutSpec extends AnyFunSuite with SparkFixture {
         .agg(min("pc"), max("pc"), count(lit(1))).collect()(0).toSeq,
       "pushed MIN/MAX over a NULL-partitioned string column diverged")
     spark.sql("DROP TABLE apn_tx.db.t")
+  }
+
+  test("txtable schema evolution, combined: one table holds a file " +
+      "written before ADD COLUMN, pre-promotion int32 pages, a renamed " +
+      "column and an escaped string partition value; the batch snapshot " +
+      "and a readStream both widen, NULL-fill, resolve the rename and " +
+      "unescape") {
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.types._
+    val root = graft.Scratch.dir("txtable", "spec_evo_combined")
+    graft.Scratch.deleteRec(new java.io.File(root))
+    sources.TxTable.init(root)
+    val odd = "a:b/c%d=e" // escapes to a%3Ab%2Fc%25d%3De on disk
+    def part(id: org.apache.spark.sql.Column) =
+      when(id % 2 === 0, lit(odd)).otherwise(lit("plain")).as("p")
+    // v1: int `n`, string `old`, partitioned by string `p`
+    val v1 = sources.TxTable.appendPartitioned(spark, root,
+      spark.range(0, 40).select(col("id").as("k"),
+        col("id").cast("int").as("n"),
+        concat(lit("o"), col("id").cast("string")).as("old"),
+        part(col("id"))), "p")
+    sources.TxTable.promoteColumnType(spark, root, "n", "bigint"): Unit
+    sources.TxTable.renameColumn(spark, root, "old", "renamed"): Unit
+    sources.TxTable.addColumn(root, "extra", LongType): Unit
+    // post-evolution rows: n beyond 32 bits, `extra` set
+    val v5 = sources.TxTable.appendPartitioned(spark, root,
+      spark.range(40, 60).select(col("id").as("k"),
+        (col("id") + 3000000000L).as("n"),
+        concat(lit("o"), col("id").cast("string")).as("renamed"),
+        part(col("id")), (col("id") * 10).as("extra")), "p")
+    // the cases this test is about are really on disk
+    val v1Files = sources.TxTable.dataEntries(
+      sources.TxTable.readManifest(root, v1).files)
+    assert(v1Files.exists(_.contains("p=a%3Ab%2Fc%25d%3De/")),
+      s"no escaped partition directory: $v1Files")
+    v1Files.foreach { f =>
+      val sch = spark.read.parquet(s"$root/$f").schema
+      assert(sch("n").dataType == IntegerType &&
+        sch.fieldNames.contains("old") && !sch.fieldNames.contains("extra"),
+        s"$f is not a pre-evolution file: $sch")
+    }
+
+    val want = (0L until 60L).map { k =>
+      Seq[Any](k, if (k < 40) k else k + 3000000000L, s"o$k",
+        if (k % 2 == 0) odd else "plain",
+        if (k < 40) null else k * 10, if (k < 40) v1 else v5)
+    }
+    val cols = Seq("k", "n", "renamed", "p", "extra")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("k").collect().map(_.toSeq).toSeq
+    val snap = sources.TxTable.snapshot(spark, root)
+    assert(snap.schema("n").dataType == LongType)
+    assert(rows(snap.select(cols.map(col): _*)) == want.map(_.init),
+      "the batch snapshot diverged from the model")
+    // filters on evolved columns (pushed into the file reader too)
+    assert(snap.filter(col("n") < 3000000000L).count() == 40)
+    assert(snap.filter(col("n") >= 3000000050L).count() == 10)
+    assert(snap.filter(col("renamed") === "o7").select("k")
+      .collect().map(_.getLong(0)).toSeq == Seq(7L))
+    assert(snap.filter(col("p") === odd).count() == 30)
+    assert(snap.filter(col("extra").isNull).count() == 40)
+
+    val sch = StructType(Seq(StructField("k", LongType),
+      StructField("n", LongType), StructField("renamed", StringType),
+      StructField("p", StringType), StructField("extra", LongType),
+      StructField("_commit_version", IntegerType)))
+    val q = spark.readStream.format("txtable").schema(sch).load(root)
+      .writeStream.format("memory").queryName("evo_combined_stream")
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
+    try q.awaitTermination() finally q.stop()
+    assert(rows(spark.table("evo_combined_stream")) == want,
+      "the stream diverged from the model")
   }
 }

@@ -112,4 +112,74 @@ class DvShipSpec extends AnyFunSuite with graft.SparkFixture {
     assert(after.filter(col("k") % 7 === 0).count() == 0 &&
       after.count() == 900 - want.size)
   }
+
+  test("row-group skipping keeps position deletes and _tx_pos exact: a " +
+      "predicate whose parquet stats skip the first row groups of a " +
+      "file still drops the deleted rows of its last row group, and " +
+      "_tx_pos equals Spark's own row_index") {
+    val root = graft.Scratch.dir("txtable", "spec_rowgroups")
+    graft.Scratch.deleteRec(new java.io.File(root))
+    TxTable.init(root)
+    // a small parquet block size: the one data file gets several row
+    // groups, k ascending through them
+    spark.conf.set("parquet.block.size", "1024")
+    try TxTable.append(spark, root, spark.range(0, 3000).coalesce(1)
+      .select(col("id").as("k"), (col("id") % 13).as("v"))): Unit
+    finally spark.conf.unset("parquet.block.size")
+    val files = TxTable.dataEntries(
+      TxTable.readManifest(root, TxTable.currentVersion(root)).files)
+    assert(files.size == 1)
+    val path = s"$root/${files.head}"
+    val kRanges: Seq[(Long, Long)] = {
+      import scala.jdk.CollectionConverters._
+      val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(path),
+          spark.sparkContext.hadoopConfiguration))
+      try rd.getFooter.getBlocks.asScala.toSeq.map { b =>
+        val st = b.getColumns.asScala.find(_.getPath.toDotString == "k")
+          .get.getStatistics
+        (st.genericGetMin.asInstanceOf[java.lang.Long].longValue,
+          st.genericGetMax.asInstanceOf[java.lang.Long].longValue)
+      } finally rd.close()
+    }
+    val lastMin = kRanges.last._1
+    assert(kRanges.size >= 3 && kRanges.init.forall(_._2 < lastMin),
+      s"want >= 3 row groups, the last above the others: $kRanges")
+
+    // delete rows of the last row group only
+    val (_, dvFiles) = TxTable.deleteVector(spark, root,
+      col("k") >= lastMin && col("k") % 5 === 0)
+    assert(dvFiles.nonEmpty)
+    val rowIndex = spark.read.parquet(path)
+      .select(col("k"), col("_metadata.row_index")).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val read = TxTable.snapshot(spark, root)
+      .filter(col("k") >= lastMin).select("k", "_tx_pos").collect()
+      .map(r => (r.getLong(0), r.getLong(1)))
+    assert(!read.exists(_._1 % 5 == 0), "a deleted row came back")
+    assert(read.forall { case (k, pos) => rowIndex(k) == pos },
+      "_tx_pos disagrees with the parquet row index under row-group " +
+        "skipping")
+    assert(read.length == (lastMin until 3000L).count(_ % 5 != 0))
+  }
+
+  test("the scan reports filesRead, deleteFilesRead and rowsDeleted as " +
+      "custom metrics") {
+    val root = graft.Scratch.dir("txtable", "spec_scanmetrics")
+    graft.Scratch.deleteRec(new java.io.File(root))
+    TxTable.init(root)
+    TxTable.append(spark, root, spark.range(0, 500).coalesce(1)
+      .select(col("id").as("k"), (col("id") % 7).as("v"))): Unit
+    // two delete files addressing the one data file: N = 100 rows
+    TxTable.deleteVector(spark, root, col("k") % 10 === 1): Unit
+    TxTable.deleteVector(spark, root, col("k") % 10 === 2): Unit
+    val df = spark.read.format("txtable").load(root)
+    assert(df.collect().length == 400)
+    val metrics = TxScanProbe.metrics(df)
+    assert(metrics.size == 1, s"expected one txtable scan: $metrics")
+    val m = metrics.head
+    assert(m("filesRead") == 1 && m("deleteFilesRead") == 2 &&
+      m("rowsDeleted") == 100, s"scan metrics: $m")
+  }
 }

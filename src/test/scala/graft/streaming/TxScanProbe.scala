@@ -32,4 +32,13 @@ object TxScanProbe {
     require(all.size == 1, s"expected one txtable scan, got ${all.size}")
     all.head
   }
+
+  /** The custom metric values of every txtable scan `df` executed, in
+    * plan order (run `df` first). */
+  def metrics(df: DataFrame): Seq[Map[String, Long]] =
+    nodes(df.queryExecution.executedPlan).collect {
+      case b: BatchScanExec if b.scan.isInstanceOf[TxTableScan] =>
+        b.scan.supportedCustomMetrics.map(_.name)
+          .map(n => n -> b.metrics(n).value).toMap
+    }
 }
