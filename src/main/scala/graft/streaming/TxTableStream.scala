@@ -436,7 +436,6 @@ private[streaming] object TxTableMicroBatchStream {
   val ChangeOps: Set[String] = Set("rollback")
 }
 
-
 /** One data file of a scan: its path, the commit that added it (the
   * streaming `_commit_version`), and the position-delete files whose
   * footer `fname` range covers it (batch scans only). */
