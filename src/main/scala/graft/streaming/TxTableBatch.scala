@@ -56,8 +56,8 @@ import graft.sources.TxTable
   * Scale shape: planning is driver-side manifest arithmetic
   * (commit-bounded name lists + stats lines); each kept file is one
   * input partition opened on executors by Spark's parquet reader (one
-  * broadcast Hadoop conf, one footer read per file, row groups pruned
-  * inside large files). At 100 TB a selective predicate plans
+  * broadcast conf per scan, one footer read per file, row groups
+  * pruned inside large files). At 100 TB a selective predicate plans
   * the handful of files its ranges touch — the scan never lists, opens,
   * or footers the rest.
   */
@@ -591,8 +591,8 @@ private[streaming] class TxTableScan(required: StructType,
       }
   }
 
-  /** Spark's parquet reader for this scan's files, with the pushed
-    * filters for row-group pruning. */
+  /** Spark's parquet reader for this scan's files (one broadcast conf
+    * per scan), with the pushed filters for row-group pruning. */
   override def createReaderFactory(): PartitionReaderFactory =
     TxTableReaderFactory(required, manifest.flatMap(TxTable.colMapOf)
         .map(_.logToPhys).getOrElse(Map.empty),

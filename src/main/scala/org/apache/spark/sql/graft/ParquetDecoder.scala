@@ -2,7 +2,6 @@ package org.apache.spark.sql.graft
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.parquet.hadoop.ParquetInputFormat
-import org.apache.spark.SparkContext
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.deploy.SparkHadoopUtil
 import org.apache.spark.paths.SparkPath
@@ -24,12 +23,11 @@ import org.apache.spark.util.SerializableConfiguration
 /** Spark's own parquet file reader for one read schema, prepared on the
   * driver and shipped to tasks — the read twin of [[ParquetEncoder]]:
   * the `ParquetPartitionReaderFactory` that `spark.read.parquet`'s DSv2
-  * scan runs, over ONE broadcast Hadoop conf, shared by every scan while
-  * the session's Hadoop conf is unchanged. Spark's reader takes the
-  * requested schema from that conf, so each decoder's tasks copy the
-  * broadcast value once and request their schema in the copy; tasks
-  * open files through [[open]] at the cost of one footer read each.
-  * What the reader does per file:
+  * scan runs, over ONE broadcast Hadoop conf. Spark's reader takes the
+  * requested schema from that conf, so a decoder serves one schema
+  * ([[reading]] derives another from the same broadcast); tasks open
+  * files through [[open]] at the cost of one footer read each. What the
+  * reader does per file:
   *  - columns resolve by name; a column the file lacks reads as NULL
   *    (request every field nullable);
   *  - int32 and float pages widen to a requested bigint and double;
@@ -41,26 +39,27 @@ import org.apache.spark.util.SerializableConfiguration
   * The conf travels as Spark's `private[spark]` SerializableConfiguration
   * and the factory is `private[sql]`-built, hence this bridge. */
 final class ParquetDecoder private (
-    factory: ParquetPartitionReaderFactory,
-    conf: Broadcast[SerializableConfiguration]) extends Serializable {
+    factory: ParquetPartitionReaderFactory) extends Serializable {
 
   /** A decoder of `readSchema` (no constant columns) over this one's
-    * broadcast conf: no second conf is broadcast. */
+    * broadcast conf: no second conf is broadcast. Its conf — a copy of
+    * the broadcast one requesting `readSchema` — is made once per
+    * deserialized copy, i.e. once per task. */
   def reading(readSchema: StructType): ParquetDecoder =
     new ParquetDecoder(factory.copy(
-      broadcastedConf = new ParquetDecoder.Requesting(conf, readSchema.json),
+      broadcastedConf = new ParquetDecoder.Requesting(
+        factory.broadcastedConf, readSchema.json),
       dataSchema = readSchema, readDataSchema = readSchema,
-      partitionSchema = new StructType(), filters = Array.empty), conf)
+      partitionSchema = new StructType(), filters = Array.empty))
 
   /** This decoder with other row-group filters (same schema, same
     * broadcast conf), made inside a task: cheap enough to call per file.
     * The factory re-reads its settings from the task's SQL conf: the
     * driver's conf and options arrive without their (transient) maps. */
   def withFilters(filters: Array[Filter]): ParquetDecoder = {
-    val sqlConf = SQLConf.get
-    new ParquetDecoder(factory.copy(sqlConf = sqlConf, filters = filters,
-      options = new ParquetOptions(Map.empty[String, String], sqlConf)),
-      conf)
+    val conf = SQLConf.get
+    new ParquetDecoder(factory.copy(sqlConf = conf, filters = filters,
+      options = new ParquetOptions(Map.empty[String, String], conf)))
   }
 
   /** The rows of the file at `path`: the requested columns, then
@@ -89,30 +88,11 @@ object ParquetDecoder {
       : ParquetDecoder = {
     val s = spark.asInstanceOf[classic.SparkSession]
     val sqlConf = s.sessionState.conf
-    val conf = broadcastConf(s)
-    new ParquetDecoder(ParquetPartitionReaderFactory(sqlConf,
-      new Requesting(conf, readSchema.json), readSchema, readSchema,
-      partitionSchema, filters, None,
-      new ParquetOptions(Map.empty[String, String], sqlConf)), conf)
-  }
-
-  /** The last few broadcast confs, newest first, each with the context
-    * and the content it was made from (child sessions with their own
-    * SQL confs read tables too, hence more than one). */
-  private var recent = List.empty[(SparkContext, java.util.Map[String, String],
-    Broadcast[SerializableConfiguration])]
-
-  /** The session's Hadoop conf with the keys Spark's own parquet scan
-    * sets before it broadcasts (all but the requested schema), broadcast
-    * once and reused while its content is unchanged: serializing and
-    * broadcasting the ~1,100-entry conf costs more driver time than a
-    * small scan's tasks take, and comparing it costs a map copy. */
-  private def broadcastConf(s: classic.SparkSession)
-      : Broadcast[SerializableConfiguration] = {
-    val sqlConf = s.sessionState.conf
     val conf = s.sessionState.newHadoopConf()
+    // the keys Spark's own parquet scan sets before it broadcasts
     conf.set(ParquetInputFormat.READ_SUPPORT_CLASS,
       classOf[ParquetReadSupport].getName)
+    request(conf, readSchema.json)
     conf.set(SQLConf.SESSION_LOCAL_TIMEZONE.key,
       sqlConf.sessionLocalTimeZone)
     conf.setBoolean(SQLConf.NESTED_SCHEMA_PRUNING_ENABLED.key,
@@ -126,30 +106,27 @@ object ParquetDecoder {
       sqlConf.parquetInferTimestampNTZEnabled)
     conf.setBoolean(SQLConf.LEGACY_PARQUET_NANOS_AS_LONG.key,
       sqlConf.legacyParquetNanosAsLong)
-    val content = new java.util.HashMap[String, String]
-    conf.forEach(e => content.put(e.getKey, e.getValue))
-    val sc = s.sparkContext
-    synchronized {
-      val hit = recent.find(r => (r._1 eq sc) && r._2 == content)
-      val entry = hit.getOrElse(
-        (sc, content, SerializableConfiguration.broadcast(sc, conf)))
-      recent = (entry :: recent.filter(r => (r ne entry) && !r._1.isStopped))
-        .take(4)
-      entry._3
-    }
+    val bc = SerializableConfiguration.broadcast(s.sparkContext, conf)
+    new ParquetDecoder(ParquetPartitionReaderFactory(sqlConf, bc,
+      readSchema, readSchema, partitionSchema, filters, None,
+      new ParquetOptions(Map.empty[String, String], sqlConf)))
   }
 
-  /** `base`'s conf requesting a schema, copied from the broadcast value
-    * where it is first used — once per deserialized copy, i.e. once per
-    * task (a copy, not a fresh conf: no resources are parsed).
-    * Serialized with the task, so it ships the schema only. */
+  private def request(conf: Configuration, schemaJson: String): Unit = {
+    conf.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, schemaJson)
+    conf.set(ParquetWriteSupport.SPARK_ROW_SCHEMA, schemaJson)
+  }
+
+  /** `base`'s conf requesting another schema, copied from the broadcast
+    * value where it is first used (a copy, not a fresh conf: no
+    * resources are parsed). Serialized with the task, so it ships the
+    * schema only. */
   private final class Requesting(
       base: Broadcast[SerializableConfiguration], schemaJson: String)
       extends Broadcast[SerializableConfiguration](base.id) {
     @transient private lazy val conf = {
       val c = new Configuration(base.value.value)
-      c.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, schemaJson)
-      c.set(ParquetWriteSupport.SPARK_ROW_SCHEMA, schemaJson)
+      request(c, schemaJson)
       new SerializableConfiguration(c)
     }
     override protected def getValue(): SerializableConfiguration = conf
