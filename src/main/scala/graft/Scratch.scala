@@ -63,6 +63,22 @@ object Scratch {
     d.getPath
   }
 
+  private val invocations = new java.util.concurrent.ConcurrentHashMap[
+    String, java.util.concurrent.atomic.AtomicInteger]
+
+  /** A fresh root per invocation for a key that rebuilds its state on
+    * every call: runs `body` on `<area>/<key>_i<n>` (n counts this
+    * JVM's calls per (area, key)), then deletes the root of invocation
+    * n − 2 — by then no spec or in-flight reader can still reference
+    * it, so scratch stays bounded at two roots per key. */
+  def rotating[T](area: String, key: String)(body: String => T): T = {
+    val n = invocations.computeIfAbsent(s"$area/$key",
+      _ => new java.util.concurrent.atomic.AtomicInteger).incrementAndGet()
+    val out = body(dir(area, s"${key}_i$n"))
+    if (n > 2) deleteRec(new java.io.File(dir(area, s"${key}_i${n - 2}")))
+    out
+  }
+
   /** Build-once-then-adopt: if `root/_GRAFT_DONE` exists the artifact is
     * complete — serve it. Otherwise run `build` against `<root>.staging`
     * (any STALE staging left by a crashed earlier attempt is deleted

@@ -312,8 +312,6 @@ object Governance {
     * files); production sizes files by bytes like q_write_compact. */
   private[graft] val DeleteLayoutFiles = 64
 
-  private val execInvocation = new java.util.concurrent.atomic.AtomicInteger
-
   /** Hardlink the pristine layout's parquet parts into a TxTable's data
     * dir — the per-invocation v1 snapshot [[qDeleteExecute]] deletes
     * from, so every invocation (bench re-runs included) starts from the
@@ -435,49 +433,44 @@ object Governance {
     // hardlink-seeded table, so re-runs measure the same real delete,
     // not a no-op
     val (ordPristine, liPristine) = ensureDeletableLayouts(s, dir)
-    val inv = execInvocation.incrementAndGet()
-    // the request manifest for both tables' DELETEs; without CBO its
-    // size estimate is the customer table's, so only the hint keeps the
-    // probe a broadcast at scale (PlanSpec pins it)
-    val delView = s"graft_delete_exec_req_$inv"
-    broadcast(Tables.customer(s, dir)
-      .filter(col("c_custkey") % 97 === 0)
-      .select(col("c_custkey").as("owner"))
-      .localCheckpoint(true))
-      .createOrReplaceTempView(delView)
-    // the two tables are INDEPENDENT (own roots, own commit logs): their
-    // snapshot→delete→convergence sequences run as two concurrent driver
-    // threads so each table's scheduling tail back-fills the other's
-    // executor slack (guide §2.6 overlap-independent-jobs; round 21 —
-    // serial, this key was 4.2 s wall / 32 cpu-s). Per-table ordering —
-    // link snapshot, delete commit, convergence proof — is unchanged, so
-    // the result and the commit discipline are identical.
-    val outcome = Similarity.parTabulate(2) { i =>
-      val (pristine, name) =
-        if (i == 0) (ordPristine, "orders") else (liPristine, "lineitem")
-      val root = layoutAsTable(s, pristine,
-        graft.Scratch.dir("deleteexec", s"inv${inv}_$name"))
-      val delete = s"DELETE FROM ${TxTable.pathTable(s, root)} " +
-        s"WHERE owner IN (SELECT owner FROM $delView)"
-      s.sql(delete)
-      val v = TxTable.currentVersion(root)
-      s.sql(delete)
-      require(TxTable.currentVersion(root) == v,
-        s"delete did not converge: the second pass committed at $root")
-      root
+    // each invocation's two tables live under one rotating root, so
+    // scratch stays bounded across invocations
+    val (ordRoot, liRoot) = graft.Scratch.rotating("deleteexec", "exec") {
+      invRoot =>
+        // the request manifest for both tables' DELETEs; without CBO its
+        // size estimate is the customer table's, so only the hint keeps
+        // the probe a broadcast at scale (PlanSpec pins it)
+        val delView =
+          s"graft_delete_exec_req_${new java.io.File(invRoot).getName}"
+        broadcast(Tables.customer(s, dir)
+          .filter(col("c_custkey") % 97 === 0)
+          .select(col("c_custkey").as("owner"))
+          .localCheckpoint(true))
+          .createOrReplaceTempView(delView)
+        // the two tables are INDEPENDENT (own roots, own commit logs):
+        // their snapshot→delete→convergence sequences run as two
+        // concurrent driver threads so each table's scheduling tail
+        // back-fills the other's executor slack (serial, this key took
+        // 4.2 s wall / 32 cpu-s). Per-table ordering — link snapshot,
+        // delete commit, convergence proof — is unchanged, so the
+        // result and the commit discipline are identical.
+        val outcome = Similarity.parTabulate(2) { i =>
+          val (pristine, name) =
+            if (i == 0) (ordPristine, "orders") else (liPristine, "lineitem")
+          val root = layoutAsTable(s, pristine, s"$invRoot/$name")
+          val delete = s"DELETE FROM ${TxTable.pathTable(s, root)} " +
+            s"WHERE owner IN (SELECT owner FROM $delView)"
+          s.sql(delete)
+          val v = TxTable.currentVersion(root)
+          s.sql(delete)
+          require(TxTable.currentVersion(root) == v,
+            s"delete did not converge: the second pass committed at $root")
+          root
+        }
+        s.catalog.dropTempView(delView): Unit
+        (outcome(0), outcome(1))
     }
-    s.catalog.dropTempView(delView): Unit
-    val Array(ordRoot, liRoot) = outcome
     lastDeleteRoots.set((ordRoot, liRoot))
-    // bound scratch growth across invocations (ADVICE r16): the two-back
-    // invocation's tables can no longer be referenced by any spec or
-    // in-flight reader — mirror the index rebuild's retention discipline
-    if (inv > 2) {
-      Seq("orders", "lineitem").foreach { n =>
-        graft.Scratch.deleteRec(new java.io.File(
-          graft.Scratch.dir("deleteexec", s"inv${inv - 2}_$n")))
-      }
-    }
     val ord = TxTable.snapshot(s, ordRoot)
       .select(lit("orders").as("tbl"), col("o_orderkey").as("k1"),
         lit(0L).as("k2"))

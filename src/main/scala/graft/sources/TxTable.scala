@@ -301,9 +301,8 @@ object TxTable {
   }
 
   /** Commit with optimistic-concurrency retry: `update` maps the current
-    * snapshot's file list to the new COMPLETE list (and may `require` its
-    * own conflict invariants — row-level DML asserts the files it read
-    * are still current, [[graft.streaming.TxGroupReplaceWrite]]). On a
+    * snapshot's file list to the new COMPLETE list (writes that remove
+    * or address existing files go through [[commitReplace]] instead). On a
     * lost race only the tiny manifest write repeats; already-staged
     * data files in data/ stay valid because their names are
     * collision-free. Returns the committed version. */
@@ -321,6 +320,15 @@ object TxTable {
   private[graft] def commitChecked(root: String, op: String,
       update: Seq[String] => Seq[String],
       extraProps: Map[String, String],
+      checkProps: Map[String, String] => Unit): Int =
+    commitOn(root, op, m => update(m.files), extraProps, checkProps)
+
+  /** The OCC loop behind [[commitChecked]]: `update` sees the whole head
+    * manifest (version 0 with no files for a table without commits), so
+    * [[commitReplace]] can read the head's delete-file stats. */
+  private def commitOn(root: String, op: String,
+      update: Manifest => Seq[String],
+      extraProps: Map[String, String],
       checkProps: Map[String, String] => Unit): Int = {
     // the retry bound only guards against a pathological store (e.g. a
     // version file that can never be created); it must comfortably
@@ -337,11 +345,8 @@ object TxTable {
     while (attempt < 1000) {
       val cur = currentVersion(root)
       val parent = if (cur == 0) None else Some(readManifest(root, cur))
-      val (curFiles, curStats, curProps) = parent match {
-        case None => (Seq.empty[String], Map.empty[String, FileStats],
-          Map.empty[String, String])
-        case Some(m) => (m.files, m.stats, m.props)
-      }
+      val head = parent.getOrElse(Manifest(0, Map.empty, Nil))
+      val (curStats, curProps) = (head.stats, head.props)
       // column-mapping props are TABLE STATE, not per-commit metadata:
       // inherit them from the parent manifest unless this commit
       // changes them (round 18 — the Delta metadata-carry discipline)
@@ -358,7 +363,7 @@ object TxTable {
       val ts = math.max(System.currentTimeMillis(), parentTs)
       val props = Map("op" -> op, "parent" -> cur.toString,
         "ts" -> ts.toString) ++ inherited ++ extraProps
-      val newFiles = update(curFiles)
+      val newFiles = update(head)
       // skipping stats (VERDICT r17 item 1): carried files keep their
       // parent-manifest stats verbatim (a staged file is immutable, so
       // its stats are too); files the parent doesn't know get ONE
@@ -409,6 +414,83 @@ object TxTable {
       attempt += 1
     }
     sys.error(s"commit lost 1000 consecutive races at $root")
+  }
+
+  /** A refused [[commitReplace]]: another writer committed first on a
+    * file this write removes or addresses. Retryable — re-running the
+    * write on the new head decides afresh. */
+  private[graft] class TxConflict(msg: String) extends RuntimeException(msg)
+
+  /** The commit of every write that removes or addresses existing
+    * files: copy-on-write rewrites, the merge-on-read UPDATE,
+    * [[deleteVector]], compaction and OPTIMIZE. ONE rule: the first
+    * committer wins on every file a commit removes or addresses —
+    * snapshot isolation at file grain, what INSERT races already get.
+    * `touched` are the data files the write removes or addresses, as
+    * read at `readVersion`. On every OCC attempt the commit refuses with
+    * a [[TxConflict]] when
+    *  - a touched file is gone from the head: `concurrent rewrite
+    *    conflict`;
+    *  - the delete files covering a touched file differ from those at
+    *    `readVersion` — one landed (a DELETE or UPDATE of a row the
+    *    write read) or left (a rollback revived rows the write read as
+    *    deleted): `concurrent position-delete conflict`.
+    * Otherwise it lands `head − removed ++ added`, keeping whatever a
+    * concurrent commit did to other files. With no concurrent commit
+    * nothing is compared and no second manifest is read. */
+  private[graft] def commitReplace(root: String, op: String,
+      readVersion: Int, touched: Set[String], removed: Set[String],
+      added: Seq[String], checkMeta: Map[String, String] => Unit): Int = {
+    lazy val read =
+      if (readVersion == 0) Manifest(0, Map.empty, Nil)
+      else readManifest(root, readVersion)
+    commitOn(root, op, { head =>
+      if (head.version != readVersion) {
+        val now = head.files.toSet
+        if (!touched.forall(now)) throw new TxConflict(
+          s"concurrent rewrite conflict at $root: a file this $op read " +
+            "is no longer in the current snapshot — retry")
+        val before = deleteEntries(read.files).toSet
+        val after = deleteEntries(head.files).toSet
+        val changed = deleteFiles(root, head, (after -- before).toSeq) ++
+          deleteFiles(root, read, (before -- after).toSeq)
+        if (changed.exists(d => touched.exists(d.covers)))
+          throw new TxConflict(s"concurrent position-delete conflict at " +
+            s"$root: the delete files covering a file this $op read " +
+            "changed since it read them — committing would resurrect or " +
+            "keep deleted rows; retry")
+      }
+      head.files.filterNot(removed) ++ added
+    }, Map.empty, checkMeta)
+  }
+
+  /** A position-delete file of a snapshot: its entry, the range of
+    * data-file basenames (`fname`) its addresses span, and its row
+    * count. */
+  private[graft] case class DeleteFile(entry: String,
+      range: Option[(String, String)], rows: Long) {
+    /** May this file address rows of `dataFile` (an entry or a path)?
+      * An unknown range covers every file — sound by omission. */
+    def covers(dataFile: String): Boolean = {
+      val n = dataFile.substring(dataFile.lastIndexOf('/') + 1)
+      range.forall { case (mn, mx) => mn <= n && n <= mx }
+    }
+  }
+
+  /** The [[DeleteFile]]s of delete entries `entries` of snapshot `m`,
+    * from the manifest's stats lines. An entry without one (a delete
+    * file committed before manifests carried their stats) costs one
+    * footer read; an unreadable footer leaves its range unknown. Scan
+    * planning and [[commitReplace]] both decide coverage here. */
+  private[graft] def deleteFiles(root: String, m: Manifest,
+      entries: Seq[String]): Seq[DeleteFile] = {
+    lazy val conf = org.apache.spark.sql.graft.ParquetDecoder.hadoopConf()
+    entries.map { f =>
+      val st = m.stats.get(f).orElse(
+        scala.util.Try(computeStats(root, f, conf)).toOption)
+      DeleteFile(f, st.flatMap(_.cols.get("fname").map(c => (c.min, c.max))),
+        st.map(_.rows).getOrElse(0L))
+    }
   }
 
   /** Lift a data file's parquet-footer statistics into manifest stats:
@@ -1247,19 +1329,7 @@ object TxTable {
       extraProps: Map[String, String] = Map.empty): Int =
     appendLike(s, root, df, Seq(partCol), extraProps)
 
-  /** Multi-column twin of [[appendPartitioned]] (round 20): rows land
-    * under nested `data/a=…/b=…/` directories, outermost column
-    * first; every column's path segment lifts into exact min = max
-    * stats, so pruning composes per column with zero extra
-    * machinery. */
-  private[graft] def appendPartitionedCols(s: SparkSession, root: String,
-      df: DataFrame, partCols: Seq[String],
-      extraProps: Map[String, String] = Map.empty): Int = {
-    require(partCols.nonEmpty)
-    appendLike(s, root, df, partCols, extraProps)
-  }
-
-  /** The one append loop behind [[append]] and [[appendPartitionedCols]]
+  /** The one append loop behind [[append]] and [[appendPartitioned]]
     * (`partCols` LOGICAL, outermost first; Nil = flat or bucketed).
     * Metadata-race replan (ADVICE r18): the schema/colmap props are
     * computed from the CURRENT manifest, but commit runs its own OCC
@@ -1364,22 +1434,17 @@ object TxTable {
     *
     * OCC AUTO-RETRY (round 20): a DV commit is mechanically rebasable
     * — its addresses are a pure function of the predicate and the
-    * snapshot it read — so it discards the staged addresses and
-    * RECOMPUTES against the new head, at most 5 times, when a commit
-    * since the one it read
-    *  - removed a target file (compact/merge/delete rewrote it: the
-    *    matching rows now sit in a file the addresses do not cover), or
-    *  - added delete files whose footer `fname` range covers a target (a
-    *    concurrent DV delete or merge-on-read UPDATE; the UPDATE moves a
-    *    matching row into a new file without removing its target, so
-    *    committing the stale addresses would let that row survive).
-    * Each retry means some other writer committed, and the matching
-    * re-evaluates on the DV-applied new snapshot, so retries converge.
-    * Copy-on-write rewrites stay loud — their conflict means losing
-    * someone else's rows, a human decision. The only surviving stale
-    * case is DV entries whose targets a LATER rewrite removes — those
-    * addresses dangle harmlessly (the rewrite input applied them) and
-    * drop at the next compaction. `testRaceHook` runs once between
+    * snapshot it read — so when [[commitReplace]] refuses it (touched =
+    * its target files: one was rewritten away, or the delete files
+    * covering one changed — a concurrent DV delete, a merge-on-read
+    * UPDATE moving a matching row to a new file, a rollback reviving
+    * rows this read saw deleted) it discards the staged addresses and
+    * RECOMPUTES against the new head, at most 5 times. Each retry means
+    * some other writer committed, and the matching re-evaluates on the
+    * DV-applied new snapshot, so retries converge. The only surviving
+    * stale case is DV entries whose targets a LATER rewrite removes —
+    * those addresses dangle harmlessly (the rewrite input applied them)
+    * and drop at the next compaction. `testRaceHook` runs once between
     * address staging and commit (spec injection point for a
     * deterministic conflict). Returns (version, delete-file entries). */
   private[graft] def deleteVector(s: SparkSession, root: String,
@@ -1387,16 +1452,6 @@ object TxTable {
       testRaceHook: () => Unit = () => ()): (Int, Seq[String]) = {
     var hook = testRaceHook
     var attempt = 0
-    // footer fname range per delete file (None = unreadable, covers
-    // everything); files are immutable, so one read per file per call
-    val dvRange = scala.collection.mutable.Map
-      .empty[String, Option[(String, String)]]
-    lazy val conf = org.apache.spark.sql.graft.ParquetDecoder.hadoopConf()
-    def covers(dv: String, fnames: Set[String]): Boolean =
-      dvRange.getOrElseUpdate(dv,
-        scala.util.Try(computeStats(root, dv, conf)).toOption
-          .flatMap(_.cols.get("fname").map(c => (c.min, c.max))))
-        .forall { case (mn, mx) => fnames.exists(f => mn <= f && f <= mx) }
     while (true) {
       val cur = currentVersion(root)
       val (dvFiles, targets) = writeDeletes(s, root,
@@ -1404,21 +1459,12 @@ object TxTable {
           .select(col("_tx_file"), col("_tx_pos")))
       if (targets.isEmpty) return (currentVersion(root), Seq.empty)
       hook(); hook = () => ()
-      val readDvs =
-        if (cur == 0) Set.empty[String]
-        else deleteEntries(readManifest(root, cur).files).toSet
-      val targetNames = targets.map(f => f.substring(f.lastIndexOf('/') + 1))
       try {
-        val v = commit(root, "delete-dv", { prev =>
-          if (!targets.subsetOf(dataEntries(prev).toSet) ||
-              deleteEntries(prev).exists(f =>
-                !readDvs(f) && covers(f, targetNames)))
-            throw new DvRebase
-          prev ++ dvFiles
-        })
+        val v = commitReplace(root, "delete-dv", cur, targets, Set.empty,
+          dvFiles, _ => ())
         return (v, dvFiles)
       } catch {
-        case _: DvRebase =>
+        case _: TxConflict =>
           discardStaged(root, dvFiles)
           attempt += 1
           if (attempt >= 5) sys.error(
@@ -1430,12 +1476,6 @@ object TxTable {
     }
     sys.error("unreachable")
   }
-
-  /** Internal signal: a DV commit's target was rewritten or newly
-    * position-deleted underneath it — recompute addresses on the new
-    * head ([[deleteVector]]). */
-  private class DvRebase extends RuntimeException(
-    "txtable delete-dv: target file changed — rebasing")
 
   /** Retention prune: keep the newest `retain` manifests, delete older
     * ones, then delete data files referenced by NO retained manifest.
@@ -1539,11 +1579,6 @@ object TxTable {
     s.sql(s"DELETE FROM ${pathTable(s, root)} WHERE o_custkey % 97 = 0"): Unit
   }
 
-  // per-dir invocation counters (a global counter with per-dir paths
-  // could prune another dir's previous root — the rebuild's r16 lesson)
-  private val commitInvocations = new java.util.concurrent.ConcurrentHashMap[
-    String, java.util.concurrent.atomic.AtomicInteger]
-
   /** Root of the most recent [[qTableCommit]] invocation (spec hook). */
   private[graft] val lastCommitRoot =
     new java.util.concurrent.atomic.AtomicReference[String]()
@@ -1562,23 +1597,19 @@ object TxTable {
     * old-or-new reader isolation, commit-race exclusion, affected-file
     * minimality — are pinned by LayoutSpec. */
   def qTableCommit(s: SparkSession, dir: String): DataFrame = {
-    val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
-    // counter keyed by the SANITIZED tag, the same key the scratch path
-    // uses: keying by raw `dir` would give two dirs that sanitize
-    // identically independent counters colliding on one root (the exact
-    // bug class the per-dir-counter comment above warns about; r17
-    // review)
-    val inv = commitInvocations.computeIfAbsent(tag,
-      _ => new java.util.concurrent.atomic.AtomicInteger).incrementAndGet()
-    val root = graft.Scratch.dir("txtable", s"commit_${tag}_i$inv")
-    buildDemoHistory(s, root, dir)
-    lastCommitRoot.set(root)
-    if (inv > 2) {
-      graft.Scratch.deleteRec(new java.io.File(
-        graft.Scratch.dir("txtable", s"commit_${tag}_i${inv - 2}")))
+    // keyed by the SANITIZED dir, the name the root carries: two dirs
+    // that sanitize identically share one rotation instead of colliding
+    // on one root
+    val root = graft.Scratch.rotating("txtable", s"commit_${dirTag(dir)}") {
+      root => buildDemoHistory(s, root, dir); root
     }
+    lastCommitRoot.set(root)
     snapshot(s, root).orderBy("o_orderkey")
   }
+
+  /** `dir` sanitized for use in a scratch root's name. */
+  private def dirTag(dir: String): String =
+    dir.replaceAll("[^a-zA-Z0-9]", "_")
 
   /** Root of the most recent [[qTableDeleteVector]] invocation (spec
     * hook). */
@@ -1601,17 +1632,13 @@ object TxTable {
     * second-pass no-op, compaction materializing the DVs away, and a
     * merge on the DV'd table not resurrecting deleted rows. */
   def qTableDeleteVector(s: SparkSession, dir: String): DataFrame = {
-    val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
-    val inv = commitInvocations.computeIfAbsent(s"dv_$tag",
-      _ => new java.util.concurrent.atomic.AtomicInteger).incrementAndGet()
-    val root = graft.Scratch.dir("txtable", s"dv_${tag}_i$inv")
-    appendDemoLoads(s, root, dir)
-    deleteVector(s, root, col("o_custkey") % 97 === 0): Unit
-    lastDvRoot.set(root)
-    if (inv > 2) {
-      graft.Scratch.deleteRec(new java.io.File(
-        graft.Scratch.dir("txtable", s"dv_${tag}_i${inv - 2}")))
+    val root = graft.Scratch.rotating("txtable", s"dv_${dirTag(dir)}") {
+      root =>
+        appendDemoLoads(s, root, dir)
+        deleteVector(s, root, col("o_custkey") % 97 === 0): Unit
+        root
     }
+    lastDvRoot.set(root)
     snapshot(s, root).orderBy("o_orderkey")
   }
 
@@ -1627,8 +1654,7 @@ object TxTable {
       sub: String = "demo",
       build: (SparkSession, String, String) => Unit = buildDemoHistory)
       : String = {
-    val tag = dir.replaceAll("[^a-zA-Z0-9]", "_") + "_" +
-      graft.Scratch.fingerprint(dir, "orders")
+    val tag = dirTag(dir) + "_" + graft.Scratch.fingerprint(dir, "orders")
     graft.Scratch.buildOnce(graft.Scratch.dir("txtable", s"${sub}_$tag")) {
       staging => build(s, staging, dir)
     }
@@ -1772,13 +1798,35 @@ object TxTable {
   // versions bounded across invocations by the in-key vacuum below
   private[graft] val CompactRetain = 3
 
+  /** The snapshot rewrite behind compaction and OPTIMIZE: read version
+    * v0, let `shape` lay out its DV-applied snapshot (LOGICAL names; it
+    * also gets v0's manifest), stage the frame with [[writeData]] under
+    * v0's column mapping, partitioning and bucketing, and publish it as
+    * one `op` [[commitReplace]] — touched = v0's data files, removed =
+    * every v0 entry. Position deletes materialize away; a concurrent
+    * commit on other files (an INSERT) is kept; one that rewrote or
+    * position-deleted a file this rewrite read refuses it, and the
+    * staged files are discarded (vacuum can only reclaim files some
+    * manifest listed). Returns the committed version. */
+  private[graft] def rewriteSnapshot(s: SparkSession, root: String,
+      op: String)(shape: (DataFrame, Manifest) => DataFrame): Int = {
+    val v0 = currentVersion(root)
+    val m0 = readManifest(root, v0)
+    val staged = writeData(s, root,
+      toPhysical(shape(snapshot(s, root, v0), m0), colMapOf(m0)),
+      partColsOf(dataEntries(m0.files)), bucketSpecOf(m0))
+    try commitReplace(root, op, v0, dataEntries(m0.files).toSet,
+      m0.files.toSet, staged, _ => ())
+    catch { case e: Throwable => discardStaged(root, staged); throw e }
+  }
+
   /** q_table_compact — compaction under a conflict-checked commit (round
     * 17): rewrite the CURRENT snapshot's files (15-ish commit-sized
     * parts after the demo history) into 4 owner-range files and publish
-    * them as one atomic `compact` commit whose update closure REQUIRES
-    * the manifest it read is still current — a concurrent commit aborts
-    * the compaction instead of being silently dropped (the table-format
-    * conflict check; rows are never lost to a race). Readers pinned on
+    * them as one atomic `compact` commit ([[rewriteSnapshot]]): a
+    * concurrent commit that rewrote or position-deleted a file it read
+    * aborts the compaction; any other lands beside it (rows are never
+    * lost to a race). Readers pinned on
     * pre-compact versions are untouched; the file diff of a compaction
     * is content-neutral (CDC = zero changes, LayoutSpec). Each
     * invocation re-compacts and then VACUUMS to the newest
@@ -1786,33 +1834,18 @@ object TxTable {
     * Oracle: identity — compaction must change bytes-on-disk shape ONLY. */
   def qTableCompact(s: SparkSession, dir: String): DataFrame = {
     val root = ensureDemoTable(s, dir, "compacttbl")
-    val v0 = currentVersion(root)
-    val f0 = readManifest(root, v0).files
-    val rewritten = writeData(s, root,
-      toPhysical(snapshot(s, root, v0).repartitionByRange(4,
-          col("o_custkey"), col("o_orderkey")),
-        colMapOf(readManifest(root, v0))),
-      partColsOf(dataEntries(f0)),
-      bucketSpecOf(readManifest(root, v0)))
-    // abort path reclaims the staged rewrite like every other write
-    // path (ADVICE r17): a refused compact commit would otherwise leak
-    // its never-listed files forever — vacuum can only reclaim files
-    // some manifest listed
-    try commit(root, "compact", { prev =>
-      require(prev == f0,
-        s"concurrent commit during compaction of $root — aborting " +
-          "instead of dropping it")
-      rewritten
-    }): Unit
-    catch { case e: Throwable => discardStaged(root, rewritten); throw e }
+    rewriteSnapshot(s, root, "compact") { (snap, _) =>
+      snap.repartitionByRange(4, col("o_custkey"), col("o_orderkey"))
+    }: Unit
     vacuum(root, CompactRetain): Unit
     snapshot(s, root).orderBy("o_orderkey")
   }
 
   /** OPTIMIZE ZORDER BY (round 18): rewrite the CURRENT snapshot with
     * rows ordered along a bit-interleaved Z-curve over two numeric
-    * dimensions, published as one conflict-checked `cluster` commit —
-    * the lakehouse OPTIMIZE ZORDER command under this commit protocol.
+    * dimensions, published as one conflict-checked `cluster` commit
+    * ([[rewriteSnapshot]]) — the lakehouse OPTIMIZE ZORDER command
+    * under this commit protocol.
     * Each dimension normalizes to an 8-bit rank bucket from a broadcast
     * 1-row stats frame, the interleave is [[Layout.zvalue]]'s MSB-first
     * alternation (pure column bit arithmetic — whole-stage codegen),
@@ -1821,47 +1854,32 @@ object TxTable {
     * manifest's commit-time stats then prune on: clustering exists FOR
     * data skipping, and here the two mechanisms share one commit. The
     * rewrite is content-neutral (the input is the DV-applied snapshot,
-    * so position deletes materialize away like compaction); the update
-    * closure requires the manifest it read is still current (a
-    * concurrent commit aborts the optimize, never loses rows); an
-    * aborted commit reclaims its staged files. Flat tables only —
-    * Z-ordering WITHIN partitions is a further refinement a real
+    * so position deletes materialize away like compaction). Flat tables
+    * only — Z-ordering WITHIN partitions is a further refinement a real
     * OPTIMIZE offers per-partition. */
   private[graft] def clusterBy(s: SparkSession, root: String,
-      colA: String, colB: String, nFiles: Int): Int = {
-    val v0 = currentVersion(root)
-    val m0 = readManifest(root, v0)
-    require(partColOf(dataEntries(m0.files)).isEmpty,
-      s"clusterBy targets flat tables; $root is partitioned")
-    require(bucketSpecOf(m0).isEmpty,
-      s"clusterBy targets flat tables; $root is bucketed (Z-order " +
-        "WITHIN buckets is a per-partition OPTIMIZE refinement)")
-    val snap = snapshot(s, root, v0)
-    val st = snap.agg(
-      min(colA).as("__amn"), max(colA).as("__amx"),
-      min(colB).as("__bmn"), max(colB).as("__bmx"))
-    val z = snap.crossJoin(broadcast(st))
-      .withColumn("__za", least(lit(255L), floor(
-        (col(colA) - col("__amn")) * 256 /
-          (col("__amx") - col("__amn") + 1))))
-      .withColumn("__zb", least(lit(255L), floor(
-        (col(colB) - col("__bmn")) * 256 /
-          (col("__bmx") - col("__bmn") + 1))))
-      .withColumn("__zv", Layout.zvalue(col("__za"), 8, col("__zb"), 8))
-    val clustered = toPhysical(
-      z.repartitionByRange(nFiles, col("__zv"))
+      colA: String, colB: String, nFiles: Int): Int =
+    rewriteSnapshot(s, root, "cluster") { (snap, m0) =>
+      require(partColOf(dataEntries(m0.files)).isEmpty,
+        s"clusterBy targets flat tables; $root is partitioned")
+      require(bucketSpecOf(m0).isEmpty,
+        s"clusterBy targets flat tables; $root is bucketed (Z-order " +
+          "WITHIN buckets is a per-partition OPTIMIZE refinement)")
+      val st = snap.agg(
+        min(colA).as("__amn"), max(colA).as("__amx"),
+        min(colB).as("__bmn"), max(colB).as("__bmx"))
+      snap.crossJoin(broadcast(st))
+        .withColumn("__za", least(lit(255L), floor(
+          (col(colA) - col("__amn")) * 256 /
+            (col("__amx") - col("__amn") + 1))))
+        .withColumn("__zb", least(lit(255L), floor(
+          (col(colB) - col("__bmn")) * 256 /
+            (col("__bmx") - col("__bmn") + 1))))
+        .withColumn("__zv", Layout.zvalue(col("__za"), 8, col("__zb"), 8))
+        .repartitionByRange(nFiles, col("__zv"))
         .sortWithinPartitions("__zv")
-        .drop("__amn", "__amx", "__bmn", "__bmx", "__za", "__zb", "__zv"),
-      colMapOf(m0))
-    val staged = writeData(s, root, clustered)
-    try commit(root, "cluster", { prev =>
-      require(prev == m0.files,
-        s"concurrent commit during OPTIMIZE of $root — aborting " +
-          "instead of dropping it")
-      staged
-    })
-    catch { case e: Throwable => discardStaged(root, staged); throw e }
-  }
+        .drop("__amn", "__amx", "__bmn", "__bmx", "__za", "__zb", "__zv")
+    }
 
   /** Two ingest-ordered loads (8 files each, range-laid by o_orderkey —
     * the natural arrival order, which leaves o_custkey SCATTERED across
@@ -2221,20 +2239,16 @@ object TxTable {
     * fresh/partitioned-table refusals, widening refusal, and the
     * DSv2-read round trip. */
   def qTableDsv2Write(s: SparkSession, dir: String): DataFrame = {
-    val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
-    val inv = commitInvocations.computeIfAbsent(s"dsv2w_$tag",
-      _ => new java.util.concurrent.atomic.AtomicInteger).incrementAndGet()
-    val root = graft.Scratch.dir("txtable", s"dsv2w_${tag}_i$inv")
-    init(root)
-    val orders = Tables.orders(s, dir)
-      .select("o_orderkey", "o_custkey", "o_totalprice")
-    append(s, root,
-      ownerClustered(orders.filter(col("o_orderkey") % 3 === 0))): Unit
-    orders.filter(col("o_orderkey") % 3 === 1)
-      .write.format("txtable").mode("append").save(root)
-    if (inv > 2) {
-      graft.Scratch.deleteRec(new java.io.File(
-        graft.Scratch.dir("txtable", s"dsv2w_${tag}_i${inv - 2}")))
+    val root = graft.Scratch.rotating("txtable", s"dsv2w_${dirTag(dir)}") {
+      root =>
+        init(root)
+        val orders = Tables.orders(s, dir)
+          .select("o_orderkey", "o_custkey", "o_totalprice")
+        append(s, root,
+          ownerClustered(orders.filter(col("o_orderkey") % 3 === 0))): Unit
+        orders.filter(col("o_orderkey") % 3 === 1)
+          .write.format("txtable").mode("append").save(root)
+        root
     }
     snapshot(s, root).orderBy("o_orderkey")
   }
@@ -2254,25 +2268,21 @@ object TxTable {
   def qTableStreamSink(s: SparkSession, dir: String): DataFrame = {
     val src = ensureDemoTable(s, dir, "sinksrc",
       (s2, root, d) => appendDemoLoads(s2, root, d))
-    val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
-    val inv = commitInvocations.computeIfAbsent(s"sink_$tag",
-      _ => new java.util.concurrent.atomic.AtomicInteger).incrementAndGet()
-    val dst = graft.Scratch.dir("txtable", s"sink_${tag}_i$inv")
-    init(dst)
-    // schema bootstrap: an empty v1 append records tblschema, the
-    // CREATE-then-write flow the DSv2 write contract requires
-    append(s, dst, Tables.orders(s, dir)
-      .select("o_orderkey", "o_custkey", "o_totalprice").limit(0)): Unit
-    val q = s.readStream.format("txtable").load(src)
-      .writeStream.format("txtable")
-      .option("path", dst)
-      .option("checkpointLocation", s"$dst/_checkpoint")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    if (inv > 2) {
-      graft.Scratch.deleteRec(new java.io.File(
-        graft.Scratch.dir("txtable", s"sink_${tag}_i${inv - 2}")))
+    val dst = graft.Scratch.rotating("txtable", s"sink_${dirTag(dir)}") {
+      dst =>
+        init(dst)
+        // schema bootstrap: an empty v1 append records tblschema, the
+        // CREATE-then-write flow the DSv2 write contract requires
+        append(s, dst, Tables.orders(s, dir)
+          .select("o_orderkey", "o_custkey", "o_totalprice").limit(0)): Unit
+        val q = s.readStream.format("txtable").load(src)
+          .writeStream.format("txtable")
+          .option("path", dst)
+          .option("checkpointLocation", s"$dst/_checkpoint")
+          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+          .start()
+        q.awaitTermination()
+        dst
     }
     snapshot(s, dst).orderBy("o_orderkey")
   }

@@ -50,21 +50,15 @@ import graft.sources.TxTable
   *    rewrite.
   *
   * THE SCAN AND THE WRITE SHARE ONE OPERATION INSTANCE: the scan pins
-  * the version it read and records the files it planned (the groups)
-  * and the position-delete set it applied; the write's commit checks,
-  * on every commit attempt,
-  *  - that every file it replaces (copy-on-write) or addresses
-  *    (merge-on-read) is still current, else `concurrent rewrite
-  *    conflict`;
-  *  - that the position-delete set is the one the scan applied, else
-  *    `concurrent position-delete conflict` — a DV commit removes no
-  *    data file, so only this check stops a rewrite resurrecting its
-  *    rows or an UPDATE re-adding a row deleted meanwhile;
-  *  - that the schema props are still compatible with the staged files
-  *    ([[TxTableBatchWrite.checkMeta]]).
-  * The two conflicts are retryable: re-run the statement on the new
-  * snapshot. A refused commit makes Spark abort the write, which
-  * deletes every file it staged.
+  * the version it read and records the files it planned (the groups);
+  * the write commits through [[TxTable.commitReplace]] with the files
+  * it replaces (copy-on-write) or addresses (merge-on-read) as touched
+  * and [[TxTableBatchWrite.checkMeta]] as its schema check — the first
+  * committer wins on every file a commit removes or addresses. Its two
+  * conflicts (`concurrent rewrite conflict`, `concurrent
+  * position-delete conflict`) are retryable: re-run the statement on
+  * the new snapshot. A refused commit makes Spark abort the write,
+  * which deletes every file it staged.
   *
   * Scale shape: group planning is driver-side manifest arithmetic; a
   * copy-on-write recomputation is a distributed scan+write of ONLY the
@@ -79,11 +73,10 @@ private[streaming] class TxRowLevelOperationBuilder(root: String,
   }
 }
 
-/** What the row-level scan planned: the read version, the kept data
-  * files (= the groups the write replaces), and the delete-entry set
-  * the recomputation applied. */
+/** What the row-level scan planned: the read version and the kept data
+  * files (= the groups the write replaces). */
 private[streaming] case class TxPlannedGroups(version: Int,
-    kept: Seq[String], dvs: Seq[String])
+    kept: Seq[String])
 
 private[streaming] class TxRowLevelOperation(root: String,
     cmd: RowLevelOperation.Command) extends RowLevelOperation {
@@ -154,9 +147,9 @@ private[streaming] class TxRowLevelOperation(root: String,
 
 /** The ReplaceData write: stages the recomputed rows with the ordinary
   * DSv2 writer (schema contract, partitioned routing and all) and
-  * commits `prev − plannedGroups ++ staged` — one atomic version, with
-  * the scan-to-commit conflict checks spelled out on
-  * [[TxRowLevelOperationBuilder]]. */
+  * commits `prev − plannedGroups ++ staged` — one atomic version whose
+  * touched and removed files are both the final groups
+  * ([[TxRowLevelOperationBuilder]]). */
 private[streaming] class TxGroupReplaceWrite(root: String,
     querySchema: org.apache.spark.sql.types.StructType,
     op: TxRowLevelOperation)
@@ -193,29 +186,19 @@ private[streaming] class TxGroupReplaceWrite(root: String,
       case Some(paths) => g.kept.filter(f => paths(s"$root/$f"))
     }
     if (kept.isEmpty && staged.isEmpty) return // nothing matched: no-op
-    val keptSet = kept.toSet
     // a refused commit throws; Spark then aborts the write, which
     // deletes the staged files
-    TxTable.commitChecked(root, opName, { prev =>
-      require(kept.forall(prev.toSet),
-        s"concurrent rewrite conflict at $root: a file this $opName " +
-          "read is no longer in the current snapshot — retry")
-      require(TxTable.deleteEntries(prev) == g.dvs,
-        s"concurrent position-delete conflict at $root: the delete " +
-          s"set changed since this $opName read its input — " +
-          "committing would resurrect freshly-deleted rows; retry")
-      prev.filterNot(keptSet) ++ staged
-    }, Map.empty, checkMeta): Unit
+    TxTable.commitReplace(root, opName, g.version, kept.toSet, kept.toSet,
+      staged, checkMeta): Unit
   }
 }
 
 /** The merge-on-read UPDATE (see [[TxRowLevelOperationBuilder]]): Spark's
   * WriteDelta plan over the row id (`_tx_file`, `_tx_pos`) — the scan's
   * own address columns, so the position delete this writes and the one
-  * the reader applies use one numbering. It pins one read version and
-  * records the delete set its scan applied like the copy-on-write
-  * operation, but takes no runtime group filter: the scan feeds the
-  * write directly, one Spark job. */
+  * the reader applies use one numbering. It pins one read version like
+  * the copy-on-write operation, but takes no runtime group filter: the
+  * scan feeds the write directly, one Spark job. */
 private[streaming] class TxDeltaOperation(root: String)
     extends TxRowLevelOperation(root, RowLevelOperation.Command.UPDATE)
     with SupportsDelta {
@@ -241,8 +224,9 @@ private[streaming] class TxDeltaOperation(root: String)
   * the table's file writers — the ordinary DSv2 plan for the new rows
   * (schema contract, partitioned and bucketed routing and all) and the
   * position-delete plan for the old rows' addresses. The commit is one
-  * `update` version, `prev ++ data ++ deletes`, under the checks on
-  * [[TxRowLevelOperationBuilder]]. No matched row → no file, no commit. */
+  * `update` version, `prev ++ data ++ deletes`, touching the data files
+  * the addresses point into ([[TxRowLevelOperationBuilder]]). No
+  * matched row → no file, no commit. */
 private[streaming] class TxDeltaWrite(root: String,
     querySchema: org.apache.spark.sql.types.StructType,
     op: TxDeltaOperation)
@@ -272,16 +256,8 @@ private[streaming] class TxDeltaWrite(root: String,
         "contract shares one operation instance between scan and write"))
     // a refused commit throws; Spark then aborts the write, which
     // deletes the staged files
-    TxTable.commitChecked(root, "update", { prev =>
-      require(targets.subsetOf(TxTable.dataEntries(prev).toSet),
-        s"concurrent rewrite conflict at $root: a file this update " +
-          "read is no longer in the current snapshot — retry")
-      require(TxTable.deleteEntries(prev) == g.dvs,
-        s"concurrent position-delete conflict at $root: the delete " +
-          "set changed since this update read its input — committing " +
-          "would re-add freshly-deleted rows; retry")
-      prev ++ staged
-    }, Map.empty, checkMeta): Unit
+    TxTable.commitReplace(root, "update", g.version, targets, Set.empty,
+      staged, checkMeta): Unit
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =

@@ -366,11 +366,11 @@ private[streaming] class TxTableScan(required: StructType,
 
   /** One kept data file → one partition, carrying the read version's
     * column mapping and the PATHS of the position-delete files whose
-    * fname range may address it (footer min/max, driver-side metadata
-    * only) — the reader opens those files EXECUTOR-SIDE and skips the
-    * matching ordinals while iterating (round 19, VERDICT r18 item 6:
-    * the Iceberg shape of shipping delete-file paths per InputPartition
-    * instead of collecting every (fname, pos) address to the driver —
+    * fname range may address it ([[TxTable.deleteFiles]], driver-side
+    * metadata only) — the reader opens those files EXECUTOR-SIDE and
+    * skips the matching ordinals while iterating (the Iceberg shape of
+    * shipping delete-file paths per InputPartition instead of
+    * collecting every (fname, pos) address to the driver —
     * a month of un-compacted GDPR deletes no longer inflates driver
     * memory or task binaries). */
   override def planInputPartitions(): Array[InputPartition] = {
@@ -381,31 +381,25 @@ private[streaming] class TxTableScan(required: StructType,
     manifest match {
       case None =>
         recorder.foreach(_.planned =
-          Some(TxPlannedGroups(readVersion, Nil, Nil)))
+          Some(TxPlannedGroups(readVersion, Nil)))
         Array.empty
       case Some(m) =>
         val (kept0, _) = pruned
         val kept = applyRuntimeKeep(kept0)
         // row-level ops (round 19): the files this scan PLANS are the
         // GROUPS the companion ReplaceData write must replace — record
-        // the STATS-PRUNED set (plus the version and DV set the
-        // recomputation read, for the commit-time conflict checks) on
-        // the shared operation. The runtime group filter is NOT folded
+        // the STATS-PRUNED set (plus the version the recomputation
+        // read, for the commit-time conflict check) on the shared
+        // operation. The runtime group filter is NOT folded
         // in here: the commit derives final groups as pruned ∩ the
         // filter's own recorded state ([[TxRowLevelOperation
         // .runtimeKeep]]), so planning-call ORDER can never change
         // which files the write removes (ADVICE r19).
-        recorder.foreach(_.planned = Some(TxPlannedGroups(readVersion,
-          kept0, TxTable.deleteEntries(m.files))))
-        def mkFile(f: String): TxFilePartition = {
-          val fname = f.substring(f.lastIndexOf('/') + 1)
-          val covering = dvRanges.collect {
-            case (dvPath, range, _)
-                if range.forall { case (mn, mx) =>
-                  mn <= fname && fname <= mx } => dvPath
-          }
-          TxFilePartition(readVersion, s"$root/$f", dvFiles = covering)
-        }
+        recorder.foreach(_.planned =
+          Some(TxPlannedGroups(readVersion, kept0)))
+        def mkFile(f: String): TxFilePartition =
+          TxFilePartition(readVersion, s"$root/$f", dvFiles =
+            deletes.filter(_.covers(f)).map(d => s"$root/${d.entry}"))
         bucketGroups(kept) match {
           case Some(groups) => groups.map { case (b, fs) =>
             TxBucketPartition(b, fs.map(mkFile))
@@ -568,28 +562,14 @@ private[streaming] class TxTableScan(required: StructType,
     }
   }
 
-  /** Per delete file: absolute path, the fname [min, max] its footer
-    * stats cover (None = stats unreadable — the file then covers
-    * everything, sound by omission), and its row count. METADATA ONLY,
-    * never rows: the driver plans which delete files each scan
-    * partition must consult; the addresses themselves are read
-    * executor-side by the partition reader. The stats come from the
-    * manifest (lifted at commit); a delete file committed before
-    * manifests carried them costs one footer read. Cached — planning
-    * and statistics estimation share one read. */
-  private lazy val dvRanges
-      : Seq[(String, Option[(String, String)], Long)] = manifest match {
-    case None => Nil
-    case Some(m) =>
-      lazy val conf = org.apache.spark.sql.graft.ParquetDecoder.hadoopConf()
-      TxTable.deleteEntries(m.files).map { f =>
-        val st = m.stats.get(f).orElse(
-          scala.util.Try(TxTable.computeStats(root, f, conf)).toOption)
-        (s"$root/$f",
-          st.flatMap(_.cols.get("fname").map(c => (c.min, c.max))),
-          st.map(_.rows).getOrElse(0L))
-      }
-  }
+  /** The read version's delete files with the fname range each covers
+    * ([[TxTable.deleteFiles]]). METADATA ONLY, never rows: the driver
+    * plans which delete files each scan partition must consult; the
+    * addresses themselves are read executor-side by the partition
+    * reader. Cached — planning and statistics estimation share it. */
+  private lazy val deletes: Seq[TxTable.DeleteFile] =
+    manifest.fold(Seq.empty[TxTable.DeleteFile])(m =>
+      TxTable.deleteFiles(root, m, TxTable.deleteEntries(m.files)))
 
   /** Spark's parquet reader for this scan's files (one broadcast conf
     * per scan), with the pushed filters for row-group pruning. */
@@ -597,7 +577,7 @@ private[streaming] class TxTableScan(required: StructType,
     TxTableReaderFactory(required, manifest.flatMap(TxTable.colMapOf)
         .map(_.logToPhys).getOrElse(Map.empty),
       manifest.map(TxTable.partitionColumns).getOrElse(Nil), pushed,
-      withDeletes = dvRanges.nonEmpty)
+      withDeletes = deletes.nonEmpty)
 
   // rows only: declared so that planning never builds the reader to ask
   override def columnarSupportMode(): Scan.ColumnarSupportMode =
@@ -619,7 +599,7 @@ private[streaming] class TxTableScan(required: StructType,
       if (st.exists(_.isEmpty)) None
       else {
         // subtract delete ordinals that PROVABLY target planned files —
-        // from footer metadata alone (fname ranges), never materialized
+        // from manifest metadata alone (fname ranges), never materialized
         // addresses: when every data file is planned all DV rows
         // subtract; otherwise only single-target DV files whose target
         // is planned. A multi-target DV over a pruned set stays
@@ -628,9 +608,9 @@ private[streaming] class TxTableScan(required: StructType,
         val keptNames = kept
           .map(f => f.substring(f.lastIndexOf('/') + 1)).toSet
         val allPlanned = kept.size == pruned._2.size
-        val dvDeleted = dvRanges.collect {
-          case (_, _, n) if allPlanned => n
-          case (_, Some((mn, mx)), n)
+        val dvDeleted = deletes.collect {
+          case d if allPlanned => d.rows
+          case TxTable.DeleteFile(_, Some((mn, mx)), n)
               if mn == mx && keptNames(mn) => n
         }.sum
         Some(st.flatten.map(_.rows).sum - dvDeleted)

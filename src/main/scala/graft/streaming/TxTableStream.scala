@@ -437,8 +437,8 @@ private[streaming] object TxTableMicroBatchStream {
 }
 
 /** One data file of a scan: its path, the commit that added it (the
-  * streaming `_commit_version`), and the position-delete files whose
-  * footer `fname` range covers it (batch scans only). */
+  * streaming `_commit_version`), and the position-delete files that
+  * cover it ([[graft.sources.TxTable.DeleteFile]]; batch scans only). */
 private[streaming] case class TxFilePartition(version: Int, path: String,
     dvFiles: Seq[String] = Nil)
     extends InputPartition

@@ -114,7 +114,7 @@ class HardeningSpec extends AnyFunSuite with graft.SparkFixture {
     // filter's admitted file
     val op = new TxRowLevelOperation(root,
       org.apache.spark.sql.connector.write.RowLevelOperation.Command.UPDATE)
-    op.planned = Some(TxPlannedGroups(v0, dataFiles, Nil))
+    op.planned = Some(TxPlannedGroups(v0, dataFiles))
     op.runtimeKeep = Some(Set(s"$root/$target"))
     // a staged replacement for the one admitted group
     val staged = TxTable.writeData(spark, root, spark.range(0, 10)
